@@ -5,16 +5,19 @@ index (db/mod.rs:217-305) → row-group selection via zone maps + blooms
 (data_provider.rs:185-333) → projected parallel column decode
 (data_provider.rs:112-119). Here:
 
-- partition pruning is DISTRIBUTED: zone-map predicates run as DataFrame
-  filters over the lineage table and bloom probes run executor-side in a
-  vectorized pass; only the surviving file paths (strings) ever reach the
-  driver — never the bloom blobs. That is the Spark analog of the
-  reference's index SEEK (db/mod.rs:217-305), not an index scan: at 10^6
-  partitions the driver holds a file list, not GBs of filters;
+- partition pruning is DRIVER-LOCAL, the reference's single-node index
+  SEEK (db/mod.rs:217-305): one streamed pyarrow pass over the lineage
+  parquet (`_lineage_survivors`) tests zone maps, the host and lang
+  blooms and the numeric col_stats per partition, skipping whole lineage
+  row groups by their min/max_warc_ts stats on ts-filtered reads. No
+  Spark job is launched. Lineage fits on the driver because it holds one
+  row per PARTITION, not per document — about 10^6 rows at 10^12 docs —
+  and the pass keeps only {partition → file, verdict}, holding the
+  blooms of one lineage row group at a time;
 - per-disjunct pruning (`prune_selections`) mirrors prune_query
-  (handler.rs:187-250): each (hosts, ts_range) selection is tested against
-  every partition's zone maps + bloom, dropping partitions no disjunct
-  can touch;
+  (handler.rs:187-250): each (hosts, langs, ts_range) selection is
+  tested against every partition's zone maps + blooms in the same pass,
+  dropping partitions no disjunct can touch;
 - row-group pruning + projection + EXACT predicate apply happen inside
   the mapInArrow kernel against the part-file footer;
 - decode is vectorized (numpy/pyarrow) per column chunk.
@@ -109,127 +112,6 @@ def hot_tail_files(out_dir: str) -> list[str]:
     return [f for f in list_part_files(out_dir) if f not in recorded]
 
 
-def _lineage_keep_expr(host_eq: str | None,
-                       ts_range: tuple[int, int] | None):
-    """Zone-map survival predicate over lineage columns (JVM-side)."""
-    keep = F.lit(True)
-    if ts_range is not None:
-        lo_us, hi_us = int(ts_range[0]), int(ts_range[1])
-        keep = keep & (
-            F.col("min_warc_ts").isNull()
-            | ~((F.unix_micros(F.col("min_warc_ts")) >= F.lit(hi_us))
-                | (F.unix_micros(F.col("max_warc_ts")) < F.lit(lo_us))))
-    return keep
-
-
-def _bloom_probe_udf(hosts: list[str]):
-    """Vectorized executor-side bloom probe: True if ANY host in `hosts`
-    might be in the partition's bloom (null bloom → can't prune)."""
-    import pandas as pd
-
-    from skar_spark.engine.bloom import bloom_might_contain
-
-    def might(blobs):
-        # one probe per PARTITION (metadata row), not per data row
-        return pd.Series([
-            b is None or any(bloom_might_contain(bytes(b), h)
-                             for h in hosts)
-            for b in blobs])
-
-    # annotate at runtime (the module-level `from __future__ import
-    # annotations` would stringify inline hints, which pandas_udf rejects)
-    might.__annotations__ = {"blobs": pd.Series, "return": pd.Series}
-    return F.pandas_udf(might, "boolean")
-
-
-def prune_partitions(spark: SparkSession, out_dir: str,
-                     host_eq: str | None = None,
-                     ts_range: tuple[int, int] | None = None,
-                     lang_eq: str | None = None,
-                     as_of: float | None = None,
-                     include_hot: bool = False,
-                     col_range: tuple[str, float, float] | None = None
-                     ) -> list[str]:
-    """Distributed partition pruning via lineage zone maps + the host and
-    lang bloom families — the mirror of the folder index seek
-    (db/mod.rs:217-305) + prune_query folder skipping (handler.rs:144-158).
-    Bloom blobs are probed executor-side; the driver only ever sees
-    surviving path strings.
-
-    `as_of` selects the snapshot view (latest attempt committed at or
-    before that unix time per partition — Iceberg time travel on tables
-    encoded with ``retain_superseded``). On a snapshot-retaining table
-    the surviving set always comes from lineage: superseded attempt
-    files still on disk are never returned.
-
-    `include_hot` additionally serves the HOT TAIL — part files whose
-    lineage row has not committed yet (the in-progress streaming epoch)
-    — alongside the committed cold set, the reference's hot-tier union
-    (data_provider.rs:56-105). Hot files carry no pruning metadata, so
-    they always survive pruning; exact predicates still apply inside
-    the read kernel. Plain tables only."""
-    from skar_spark.engine.compact import is_compacted
-    from skar_spark.engine.encode import is_retained
-
-    files = list_part_files(out_dir)
-    hot = set(hot_tail_files(out_dir)) if include_hot else set()
-    no_filters = (host_eq is None and ts_range is None
-                  and lang_eq is None and col_range is None)
-    # fast path: plain full scans resolve membership from the COMMITTED
-    # lineage set read locally (no Spark job) — the same set the stream
-    # reader tails. The raw listing alone would over-approximate by
-    # uncommitted parts (a crashed batch/epoch), making rows appear on a
-    # full scan that vanish once a predicate triggers lineage-resolved
-    # pruning. Lineage-less directories (static/hand-built) keep
-    # listing-only membership; retained/compacted tables (file deletion
-    # possible) always take the full lineage path below.
-    if no_filters and as_of is None and not is_retained(out_dir) \
-            and not is_compacted(out_dir):
-        committed = committed_files_local(out_dir)
-        if committed is None:
-            return files
-        return [f for f in files if f in committed or f in hot]
-    lin = read_lineage(spark, out_dir, latest=True, as_of=as_of)
-    if lin is None:
-        # a table where files may have been deleted (snapshot retention
-        # / compaction) MUST resolve membership through lineage — an
-        # unreadable lineage there (e.g. a vacuum swap in flight) would
-        # otherwise over-approximate to every attempt of every
-        # partition. Fail loudly instead of duplicating rows.
-        if is_retained(out_dir) or is_compacted(out_dir):
-            raise FileNotFoundError(
-                f"lineage unreadable under {out_dir} but the table is "
-                "retained/compacted — membership requires lineage")
-        return files
-    sel = lin.filter(_lineage_keep_expr(host_eq, ts_range))
-    if host_eq is not None:
-        sel = sel.filter(_bloom_probe_udf([host_eq])(F.col("host_bloom")))
-    if lang_eq is not None and "lang_bloom" in lin.columns:
-        sel = sel.filter(_bloom_probe_udf([lang_eq])(F.col("lang_bloom")))
-    if col_range is not None and "col_stats" in lin.columns:
-        # numeric zone maps for non-layout (evolved) columns: keep a
-        # partition when its [min,max] overlaps [lo,hi) — or when it
-        # has NO stats for the column (pre-evolution rows / hand-built
-        # lineage: null-filled values can't match, but the safe default
-        # is to let the caller's exact filter decide)
-        c, lo, hi = col_range
-        mn = F.get_json_object("col_stats", f"$.{c}[0]").cast("double")
-        mx = F.get_json_object("col_stats", f"$.{c}[1]").cast("double")
-        sel = sel.filter(mn.isNull()
-                         | ((mx >= F.lit(float(lo))) & (mn < F.lit(float(hi)))))
-    survived = {r.file for r in sel.select("file").collect()}
-    # lineage is the SOURCE OF TRUTH for table membership: a part file
-    # with no row in the selected view is either superseded (snapshot
-    # retention), outside the as_of snapshot, not yet committed (its
-    # writer re-encodes it on resume — atomic rename makes the eventual
-    # commit idempotent), or orphaned by a crash between a vacuum/
-    # compaction lineage swap and its file deletes. All four must not
-    # be read; readers only ever see committed data exactly once.
-    # (`include_hot` deliberately re-admits the not-yet-committed class
-    # on plain tables — unprunable, exact-filtered in the kernel.)
-    return [f for f in files if f in survived or f in hot]
-
-
 def _iter_lineage_rowgroups(ldir: str, cols: list[str],
                             ts_range: tuple[int, int] | None,
                             seek_stats: dict | None = None):
@@ -246,13 +128,12 @@ def _iter_lineage_rowgroups(ldir: str, cols: list[str],
     row group is skipped only when EVERY row fails the ts test —
     min-of-min_warc_ts ≥ hi (each partition starts at/after the range
     end) or max-of-max_warc_ts < lo (each ends before the range start).
-    Row groups with null stats or null ts rows are always read. Columns
-    missing in older lineage files (schema evolution) are null-filled.
+    Row groups with null stats or null ts rows are always read; with
+    ``ts_range=None`` every row group is read. Columns missing in older
+    lineage files (schema evolution) are null-filled.
 
     `seek_stats`, when given, is filled with {"rg_total", "rg_read"}
     counters (test/observability hook)."""
-    import glob as _glob
-
     import pyarrow.parquet as pq
 
     def _us(v):
@@ -264,8 +145,11 @@ def _iter_lineage_rowgroups(ldir: str, cols: list[str],
             return v.timestamp() * 1e6
         return float(v)
 
+    if seek_stats is not None:
+        seek_stats.setdefault("rg_total", 0)
+        seek_stats.setdefault("rg_read", 0)
     lo_q, hi_q = (ts_range if ts_range is not None else (None, None))
-    for fp in sorted(_glob.glob(os.path.join(ldir, "*.parquet"))):
+    for fp in sorted(glob.glob(os.path.join(ldir, "*.parquet"))):
         pf = pq.ParquetFile(fp)
         md = pf.metadata
         names = [md.row_group(0).column(j).path_in_schema
@@ -278,7 +162,7 @@ def _iter_lineage_rowgroups(ldir: str, cols: list[str],
             else None
         for rg in range(md.num_row_groups):
             if seek_stats is not None:
-                seek_stats["rg_total"] = seek_stats.get("rg_total", 0) + 1
+                seek_stats["rg_total"] += 1
             if ts_range is not None and ci_lo is not None \
                     and ci_hi is not None:
                 s_lo = md.row_group(rg).column(ci_lo).statistics
@@ -290,7 +174,7 @@ def _iter_lineage_rowgroups(ldir: str, cols: list[str],
                              or _us(s_hi.max) < lo_q)):
                     continue  # no partition in this row group survives
             if seek_stats is not None:
-                seek_stats["rg_read"] = seek_stats.get("rg_read", 0) + 1
+                seek_stats["rg_read"] += 1
             t = pf.read_row_group(rg, columns=have)
             for c in cols:  # null-backfill columns older files lack
                 if c not in t.column_names:
@@ -301,191 +185,272 @@ def _iter_lineage_rowgroups(ldir: str, cols: list[str],
             yield from t.select(cols).to_batches()
 
 
-def prune_partitions_local(out_dir: str,
-                           host_eq: str | None = None,
-                           ts_range: tuple[int, int] | None = None,
-                           any_hosts: list[str] | None = None,
-                           lang_eq: str | None = None,
-                           as_of: float | None = None,
-                           include_hot: bool = False,
-                           seek_stats: dict | None = None
-                           ) -> list[str]:
-    """Single-process partition pruning for contexts that cannot launch a
-    Spark job (the Python DataSource planning worker). The analog of the
-    reference's single-node index seek (db/mod.rs:217-305): STREAMS the
-    lineage parquet batch-by-batch (projection: metadata columns + bloom),
-    evaluates zone maps vectorized and blooms per surviving row, and
-    retains only {partition_id → (committed_at, file, keep)} — never all
-    bloom blobs at once, so memory stays O(#partitions) strings even at
-    10^6 partitions.
+def _lineage_survivors(out_dir: str, disjuncts: list[dict],
+                       as_of: float | None = None,
+                       seek_stats: dict | None = None
+                       ) -> dict[str, list[int]] | None:
+    """THE pruning pass: one driver-local stream over the lineage
+    parquet, the analog of the reference's single-node index seek
+    (db/mod.rs:217-305). Returns {file: [indices of the disjuncts the
+    file's partition may satisfy]} for the files at least one disjunct
+    keeps, or None when the table has no readable lineage (the caller
+    applies the listing policy, `_listing_membership`). Lineage is
+    readable when its directory holds at least one parquet file.
 
-    `any_hosts` prunes to partitions whose bloom might contain ANY of the
-    given hosts (used for url-equality and host-IN pruning).
-    """
+    Each disjunct is conjunctive: ``ts_range`` (lo_us, hi_us) against
+    the min/max_warc_ts zone maps; ``blooms``, a list of (lineage bloom
+    column, values) pairs, each passing when the partition's bloom might
+    contain ANY of its values; ``col_range`` (col, lo, hi) against the
+    numeric ``col_stats`` zone maps. Unknown metadata (null zone map,
+    null bloom, missing bloom column, no stats for the column) never
+    prunes.
+
+    Membership is resolved per ``partition_id`` with read_lineage's
+    order — ``committed_at`` desc nulls last, then ``attempt_id`` desc —
+    over the attempts committed at or before `as_of` when given. Only
+    {partition_id → (order key, file, kept disjuncts)} is retained, so
+    memory stays O(#partitions) strings plus one lineage row group's
+    blooms.
+
+    Lineage holds one row per partition (about 10^6 rows at 10^12 docs),
+    so this runs on the driver with no Spark job; ts-filtered passes on
+    live tables also skip whole lineage row groups
+    (`_iter_lineage_rowgroups`)."""
+    import json
+
     import numpy as np
-    import pyarrow.dataset as pads
 
     from skar_spark.engine.bloom import bloom_might_contain
+    from skar_spark.engine.encode import (
+        is_retained,
+        lineage_dir,
+        recover_lineage_swap,
+    )
+
+    recover_lineage_swap(out_dir)  # heal an interrupted vacuum/compact
+    ldir = lineage_dir(out_dir)
+    if not storage.dir_exists(ldir):
+        return None
+    ldir = storage.localize_dir(ldir)
+    if not glob.glob(os.path.join(ldir, "*.parquet")):
+        return None
+    bloom_cols = sorted({c for d in disjuncts for c, _v in d["blooms"]})
+    use_stats = any(d.get("col_range") for d in disjuncts)
+    cols = ["partition_id", "file", "min_warc_ts", "max_warc_ts",
+            "committed_at", "attempt_id", *bloom_cols,
+            *(["col_stats"] if use_stats else [])]
+    # ts-filtered planning on a live table SEEKS via the sorted
+    # lineage's row-group stats when every disjunct bounds ts (their
+    # union's envelope drives the skip — a safe over-approximation: a
+    # skipped row group contains only rows every disjunct's zone-map
+    # test rejects). Retained/as_of reads need every attempt row for
+    # snapshot bookkeeping → full stream.
+    #
+    # INVARIANT the seek depends on (ADVICE r04): on a non-retained
+    # table every attempt for a pid writes the SAME canonical file name
+    # (`part-{pid:06d}.skar`, _kernel_name_fmt), so when the true-latest
+    # attempt row sits in a skipped row group but an older attempt row
+    # survives, `latest` resolving from the superseded row re-admits a
+    # file name identical to the latest attempt's — an exact-filtered
+    # over-read, never a double-read. If per-attempt file naming is ever
+    # extended to non-retained tables, this seek must exclude pids whose
+    # resolved row is not the true latest (or fall back to the full
+    # stream).
+    ranges = [d["ts_range"] for d in disjuncts]
+    seek = None
+    if ranges and all(r is not None for r in ranges) and as_of is None \
+            and not is_retained(out_dir):
+        seek = (min(r[0] for r in ranges), max(r[1] for r in ranges))
+
+    def _ts_us(col):
+        # normalize to microseconds regardless of the stored unit
+        # (sub-µs truncation is exact against integer-µs query bounds)
+        return col.cast(pa.timestamp("us"), safe=False).cast(
+            pa.int64()).to_numpy(zero_copy_only=False).astype("float64")
+
+    def _bloom_ok(blob, values):
+        # one probe per PARTITION (metadata row); a null bloom (or a
+        # bloom column older lineage files lack) can't prune
+        return blob is None or any(bloom_might_contain(bytes(blob), v)
+                                   for v in values)
+
+    def _stats_ok(raw, col_range):
+        c, lo, hi = col_range
+        mm = json.loads(raw).get(c) if raw else None
+        if not mm or mm[0] is None or mm[1] is None:
+            return True  # no stats for the column: can't prune
+        return float(mm[1]) >= lo and float(mm[0]) < hi
+
+    latest: dict[int, tuple[tuple, str, list[int]]] = {}
+    for batch in _iter_lineage_rowgroups(ldir, cols, seek, seek_stats):
+        n = batch.num_rows
+        if n == 0:
+            continue
+        lo, hi = _ts_us(batch.column("min_warc_ts")), \
+            _ts_us(batch.column("max_warc_ts"))
+        known = ~np.isnan(lo)
+        ts_keep = [
+            np.ones(n, dtype=bool) if d["ts_range"] is None
+            else ~known | ~((lo >= d["ts_range"][1])
+                            | (hi < d["ts_range"][0]))
+            for d in disjuncts]
+        row = {c: batch.column(c).to_pylist() for c in
+               ("partition_id", "file", "committed_at", "attempt_id")}
+        if use_stats:
+            row["col_stats"] = batch.column("col_stats").to_pylist()
+        for i in range(n):  # per PARTITION metadata row, not per data row
+            committed = row["committed_at"][i]
+            if as_of is not None and (committed is None
+                                      or committed > as_of):
+                continue  # attempt is outside the requested snapshot
+            attempt = row["attempt_id"][i]
+            key = (committed is not None, committed or 0.0,
+                   attempt is not None, attempt or "")
+            prev = latest.get(row["partition_id"][i])
+            if prev is not None and key < prev[0]:
+                continue  # an older attempt of a resolved partition
+            kept = []
+            for j, d in enumerate(disjuncts):
+                if not ts_keep[j][i]:
+                    continue
+                if not all(_bloom_ok(batch.column(c)[i].as_py(), vals)
+                           for c, vals in d["blooms"]):
+                    continue
+                if d.get("col_range") and not _stats_ok(
+                        row["col_stats"][i], d["col_range"]):
+                    continue
+                kept.append(j)
+            latest[row["partition_id"][i]] = (key, row["file"][i], kept)
+    return {f: kept for (_key, f, kept) in latest.values() if kept}
+
+
+def _listing_membership(out_dir: str) -> list[str]:
+    """Membership of a table without readable lineage: the listing —
+    except on a table where files may have been deleted (snapshot
+    retention / compaction), which MUST resolve membership through
+    lineage; an unreadable lineage there (e.g. a vacuum swap in flight)
+    would otherwise over-approximate to every attempt of every
+    partition. Fail loudly instead of duplicating rows."""
     from skar_spark.engine.compact import is_compacted
-    from skar_spark.engine.encode import is_retained, lineage_dir
+    from skar_spark.engine.encode import is_retained
+
+    if is_retained(out_dir) or is_compacted(out_dir):
+        raise FileNotFoundError(
+            f"lineage unreadable under {out_dir} but the table is "
+            "retained/compacted — membership requires lineage")
+    return list_part_files(out_dir)
+
+
+def prune_partitions(out_dir: str,
+                     host_eq: str | None = None,
+                     ts_range: tuple[int, int] | None = None,
+                     lang_eq: str | None = None,
+                     as_of: float | None = None,
+                     include_hot: bool = False,
+                     col_range: tuple[str, float, float] | None = None,
+                     any_hosts: list[str] | None = None,
+                     seek_stats: dict | None = None) -> list[str]:
+    """Partition pruning via lineage zone maps, the host and lang bloom
+    families and the numeric ``col_stats`` zone maps — the mirror of the
+    folder index seek (db/mod.rs:217-305) + prune_query folder skipping
+    (handler.rs:144-158). Runs driver-local (`_lineage_survivors`), so it
+    launches no Spark job and is safe in DataSource planning workers.
+
+    `host_eq` and `any_hosts` are ANDed: a partition survives when its
+    host bloom might contain `host_eq` AND might contain ANY of
+    `any_hosts` (url-equality and host-IN pruning). `col_range`
+    ``(col, lo, hi)`` keeps partitions whose [min, max] overlaps
+    [lo, hi) or that have no stats for the column.
+
+    `as_of` selects the snapshot view (latest attempt committed at or
+    before that unix time per partition — Iceberg time travel on tables
+    encoded with ``retain_superseded``). On a snapshot-retaining table
+    the surviving set always comes from lineage: superseded attempt
+    files still on disk are never returned.
+
+    `include_hot` additionally serves the HOT TAIL — part files whose
+    lineage row has not committed yet (the in-progress streaming epoch)
+    — alongside the committed cold set, the reference's hot-tier union
+    (data_provider.rs:56-105). Hot files carry no pruning metadata, so
+    they always survive pruning; exact predicates still apply inside
+    the read kernel. Plain tables only.
+
+    `seek_stats` is filled with the lineage row-group counters
+    (`_iter_lineage_rowgroups`) whenever lineage is read."""
+    from skar_spark.engine.compact import is_compacted
+    from skar_spark.engine.encode import is_retained
 
     files = list_part_files(out_dir)
     hot = set(hot_tail_files(out_dir)) if include_hot else set()
-    probes = list(any_hosts or [])
+    blooms = []
     if host_eq is not None:
-        probes = [host_eq]
-    if (not probes and ts_range is None and lang_eq is None
-            and as_of is None and not is_retained(out_dir)
-            and not is_compacted(out_dir)):
-        # same committed-membership fast path as prune_partitions: the
-        # raw listing may contain parts whose lineage append never
-        # committed — those must stay invisible on a full scan too
-        # (unless the caller asked for the hot tail)
+        blooms.append(("host_bloom", [host_eq]))
+    if any_hosts:
+        blooms.append(("host_bloom", list(any_hosts)))
+    if lang_eq is not None:
+        blooms.append(("lang_bloom", [lang_eq]))
+    # fast path: plain full scans resolve membership from the COMMITTED
+    # lineage set read locally — the same set the stream reader tails.
+    # The raw listing alone would over-approximate by uncommitted parts
+    # (a crashed batch/epoch), making rows appear on a full scan that
+    # vanish once a predicate triggers lineage-resolved pruning.
+    # Lineage-less directories (static/hand-built) keep listing-only
+    # membership; retained/compacted tables (file deletion possible)
+    # always take the full lineage pass below.
+    if not blooms and ts_range is None and col_range is None \
+            and as_of is None and not is_retained(out_dir) \
+            and not is_compacted(out_dir):
         committed = committed_files_local(out_dir)
         if committed is None:
             return files
         return [f for f in files if f in committed or f in hot]
-    def _no_lineage():
-        # same policy as prune_partitions: a retained/compacted table
-        # without readable lineage must fail, not over-approximate
-        if is_retained(out_dir) or is_compacted(out_dir):
-            raise FileNotFoundError(
-                f"lineage unreadable under {out_dir} but the table is "
-                "retained/compacted — membership requires lineage")
-        return files
-
-    from skar_spark.engine.encode import recover_lineage_swap
-    recover_lineage_swap(out_dir)  # heal an interrupted vacuum/compact
-    try:
-        d = pads.dataset(storage.localize_dir(lineage_dir(out_dir)),
-                         format="parquet")
-    except Exception:
-        return _no_lineage()
-    cols = ["partition_id", "file", "min_warc_ts", "max_warc_ts",
-            "host_bloom"]
-    names = set(d.schema.names)
-    has_commit = "committed_at" in names
-    if has_commit:
-        cols.append("committed_at")
-    has_lang_bloom = lang_eq is not None and "lang_bloom" in names
-    if has_lang_bloom:
-        cols.append("lang_bloom")
-    if not {"file", "min_warc_ts", "max_warc_ts"} <= names:
-        return _no_lineage()
-    # ts-filtered planning on a plain live table SEEKS via the sorted
-    # lineage's row-group stats instead of streaming every row (safe
-    # over-approximation: a skipped row group contains only rows the
-    # per-row zone-map test below would reject). Retained/as_of reads
-    # need every attempt row for snapshot bookkeeping → full stream.
-    #
-    # INVARIANT the seek path depends on (ADVICE r04): on a
-    # non-retained table every attempt for a pid writes the SAME
-    # canonical file name (`part-{pid:06d}.skar`, _kernel_name_fmt), so
-    # when the true-latest attempt row sits in a skipped row group but
-    # an older attempt row survives, `latest` resolving from the
-    # superseded row re-admits a file name identical to the latest
-    # attempt's — an exact-filtered over-read, never a double-read.
-    # If per-attempt file naming is ever extended to non-retained
-    # tables, this branch must exclude pids whose resolved row is not
-    # the true latest (or fall back to the full stream).
-    if ts_range is not None and as_of is None \
-            and not is_retained(out_dir):
-        batches = _iter_lineage_rowgroups(
-            storage.localize_dir(lineage_dir(out_dir)), cols, ts_range,
-            seek_stats)
-    else:
-        batches = d.to_batches(columns=cols)
-    latest: dict[int, tuple[float, str, bool]] = {}
-    for batch in batches:
-        n = batch.num_rows
-        if n == 0:
-            continue
-        keep = np.ones(n, dtype=bool)
-        if ts_range is not None:
-            # normalize to microseconds regardless of the stored unit
-            lo = batch.column("min_warc_ts").cast(pa.timestamp("us")).cast(
-                pa.int64()).to_numpy(zero_copy_only=False).astype("float64")
-            hi = batch.column("max_warc_ts").cast(pa.timestamp("us")).cast(
-                pa.int64()).to_numpy(zero_copy_only=False).astype("float64")
-            known = ~np.isnan(lo)
-            keep &= ~known | ~((lo >= ts_range[1]) | (hi < ts_range[0]))
-        pids = batch.column("partition_id").to_pylist()
-        fnames = batch.column("file").to_pylist()
-        commits = (batch.column("committed_at").to_pylist()
-                   if has_commit else [None] * n)
-        blooms = batch.column("host_bloom") if probes else None
-        lblooms = batch.column("lang_bloom") if has_lang_bloom else None
-        for i in range(n):  # per PARTITION metadata row, not per data row
-            ts = commits[i] if commits[i] is not None else float("-inf")
-            if as_of is not None and ts > as_of:
-                continue  # attempt is outside the requested snapshot
-            k = bool(keep[i])
-            if k and probes:
-                b = blooms[i].as_py()
-                k = b is None or any(bloom_might_contain(bytes(b), h)
-                                     for h in probes)
-            if k and has_lang_bloom:
-                b = lblooms[i].as_py()
-                k = b is None or bloom_might_contain(bytes(b), lang_eq)
-            prev = latest.get(pids[i])
-            if prev is None or ts >= prev[0]:
-                latest[pids[i]] = (ts, fnames[i], k)
-    survived = {f for (_ts, f, k) in latest.values() if k}
-    # lineage is the source of truth for membership (see
-    # prune_partitions): superseded, out-of-snapshot, uncommitted, and
-    # crash-orphaned files are all excluded — include_hot re-admits the
-    # uncommitted class on plain tables (unprunable, exact-filtered)
+    survived = _lineage_survivors(
+        out_dir, [{"ts_range": ts_range, "blooms": blooms,
+                   "col_range": col_range}], as_of, seek_stats)
+    if survived is None:
+        return _listing_membership(out_dir)
+    # lineage is the SOURCE OF TRUTH for table membership: a part file
+    # with no row in the selected view is either superseded (snapshot
+    # retention), outside the as_of snapshot, not yet committed (its
+    # writer re-encodes it on resume — atomic rename makes the eventual
+    # commit idempotent), or orphaned by a crash between a vacuum/
+    # compaction lineage swap and its file deletes. All four must not
+    # be read; readers only ever see committed data exactly once.
+    # (`include_hot` deliberately re-admits the not-yet-committed class
+    # on plain tables — unprunable, exact-filtered in the kernel.)
     return [f for f in files if f in survived or f in hot]
 
 
-def prune_selections(spark: SparkSession, out_dir: str,
-                     selections: list[dict]) -> dict[str, list[int]]:
+def prune_selections(out_dir: str, selections: list[dict],
+                     seek_stats: dict | None = None
+                     ) -> dict[str, list[int]]:
     """Per-disjunct pruning — the prune_query analog (handler.rs:187-250).
 
     `selections` is a list of disjuncts, each `{"hosts": [...] | None,
     "langs": [...] | None, "ts_range": (lo_us, hi_us) | None}`
     (conjunctive within a disjunct, OR across; langs prune via the
     second bloom family). Returns {file: [surviving disjunct indices]}
-    containing
-    only files at least one disjunct can touch. Evaluation is one
-    distributed pass over the lineage table: zone maps as JVM-side
-    expressions, blooms probed executor-side, per selection.
+    containing only files at least one disjunct can touch, evaluated in
+    the same driver-local lineage pass as `prune_partitions` (latest
+    view; superseded, uncommitted and crash-orphaned files are never
+    returned).
     """
     if not selections:
         # no disjuncts → nothing can match any file (the OR of an empty
-        # set is false); mirror the natural SQL semantics instead of
-        # building an unparsable filter("")
+        # set is false)
         return {}
-    files = set(list_part_files(out_dir))
-    lin = read_lineage(spark, out_dir, latest=True)
-    if lin is None:
-        return {f: list(range(len(selections))) for f in sorted(files)}
-    has_lbloom = "lang_bloom" in lin.columns
-    cols = ["file", "min_warc_ts", "max_warc_ts", "host_bloom"] + \
-        (["lang_bloom"] if has_lbloom else [])
-    sel_df = lin.select(*cols)
-    for i, s in enumerate(selections):
-        hosts = s.get("hosts")
-        langs = s.get("langs")
-        keep = _lineage_keep_expr(None, s.get("ts_range"))
-        if hosts:
-            keep = keep & _bloom_probe_udf(list(hosts))(F.col("host_bloom"))
-        if langs and has_lbloom:
-            # second bloom family: a partition survives this disjunct
-            # only if ANY requested lang might be present
-            keep = keep & _bloom_probe_udf(list(langs))(F.col("lang_bloom"))
-        sel_df = sel_df.withColumn(f"_k{i}", keep)
-    rows = sel_df.filter(
-        " or ".join(f"_k{i}" for i in range(len(selections)))
-    ).select("file", *[f"_k{i}" for i in range(len(selections))]).collect()
-    out = {}
-    for r in rows:
-        if r.file in files:
-            out[r.file] = [i for i in range(len(selections)) if r[f"_k{i}"]]
-    # lineage is the source of truth for membership (see
-    # prune_partitions): files without a latest-view lineage row are
-    # superseded, uncommitted, or crash-orphaned — never read
-    return out
+    disjuncts = [{
+        "ts_range": s.get("ts_range"),
+        "blooms": [(c, list(s[k])) for c, k in
+                   (("host_bloom", "hosts"), ("lang_bloom", "langs"))
+                   if s.get(k)],
+    } for s in selections]
+    survived = _lineage_survivors(out_dir, disjuncts, seek_stats=seek_stats)
+    if survived is None:
+        return {f: list(range(len(selections)))
+                for f in _listing_membership(out_dir)}
+    return {f: survived[f] for f in list_part_files(out_dir)
+            if f in survived}
 
 
 def scan(spark: SparkSession, out_dir: str,
@@ -517,7 +482,7 @@ def scan(spark: SparkSession, out_dir: str,
     predicate pruning above) — the partition-targeted read used by
     merge_updates/delete_rows to decode only the partitions they will
     rewrite."""
-    files = prune_partitions(spark, out_dir, host_eq, ts_range, lang_eq,
+    files = prune_partitions(out_dir, host_eq, ts_range, lang_eq,
                              as_of=as_of, include_hot=include_hot,
                              col_range=col_range)
     if part_ids is not None:
@@ -661,7 +626,7 @@ def scan_paged(spark: SparkSession, out_dir: str,
     callers wanting a full-table DataFrame should use scan() instead;
     this API exists for interactive, bounded-latency reads.
     """
-    files = prune_partitions(spark, out_dir, host_eq, ts_range, lang_eq)
+    files = prune_partitions(out_dir, host_eq, ts_range, lang_eq)
     # cursor order must follow the numeric part index, not lexicographic
     # file order: streaming names (part-e{epoch}-{pid}) sort e10 < e2
     # textually while pids grow with epoch, which would make a resumed

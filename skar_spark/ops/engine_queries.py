@@ -318,8 +318,8 @@ def q_engine_day_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
         return int(_dt.datetime.fromisoformat(s + "+00:00").timestamp()
                    * 1_000_000)
     lo, hi = us("2024-01-04T00:00:00"), us("2024-01-11T00:00:00")
-    pruned = prune_partitions(spark, out, ts_range=(lo, hi))
-    total = prune_partitions(spark, out)
+    pruned = prune_partitions(out, ts_range=(lo, hi))
+    total = prune_partitions(out)
     # the layout must actually prune: the window covers ~1/3 of the days
     assert 0 < len(pruned) < len(total), (len(pruned), len(total))
     dec = scan(spark, out, ts_range=(lo, hi))
@@ -562,9 +562,8 @@ def q_engine_stats_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
                      n_rows=lifted.count())
 
     lo, hi = 3.0, 10.0
-    pruned = prune_partitions(spark, out,
-                              col_range=("quality", lo, hi))
-    total = prune_partitions(spark, out)
+    pruned = prune_partitions(out, col_range=("quality", lo, hi))
+    total = prune_partitions(out)
     assert 0 < len(pruned) < len(total), (len(pruned), len(total))
     # scan's col_range is EXACT: partitions prune via lineage col_stats,
     # row groups via footer nstats, survivors post-filter in the kernel

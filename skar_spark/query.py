@@ -28,8 +28,10 @@ Query dict (every field optional):
 
 Execution mirrors the reference's pipeline stage for stage:
 partition pruning per selection via lineage zone maps + the host AND
-lang bloom families (prune_query, handler.rs:187-250), short-circuit
-when everything prunes (handler.rs:150-158), then a time-limited
+lang bloom families (prune_query, handler.rs:187-250) — a driver-local
+seek over the lineage parquet (engine.decode.prune_selections), so
+planning a query launches no Spark job — short-circuit when everything
+prunes (handler.rs:150-158), then a time-limited
 distributed decode in part-index order with the EXACT residual OR
 filter and the projection applied column-pruned (only the needed
 column chunks are decoded). The row limit, like the reference's
@@ -141,7 +143,7 @@ def run_query(spark: SparkSession, out_dir: str, query: dict) -> dict:
             hosts.append(h)
         prune_sels.append({"hosts": hosts or None, "ts_range": ts_range,
                            "langs": list(s.get("langs") or []) or None})
-    surviving = prune_selections(spark, out_dir, prune_sels)
+    surviving = prune_selections(out_dir, prune_sels)
     members = set(surviving)
     if query.get("include_hot"):
         # hot-tier union (reference data_provider.rs:56-105 /

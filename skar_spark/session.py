@@ -7,18 +7,34 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_heap() -> str:
+    """40% of physical memory: the pinned, pre-touched heap must leave
+    room for the Python workers and the page cache (on a 15 GB host a
+    6 g heap ran the bench and a 10 g one was OOM-killed)."""
+    with open("/proc/meminfo") as f:
+        for line in f:
+            if line.startswith("MemTotal:"):
+                return f"{int(line.split()[1]) * 2 // 5 // 1024}m"
+    raise RuntimeError("MemTotal missing from /proc/meminfo; "
+                       "set SKAR_DRIVER_MEM")
+
+
 def get_spark(cpus: int | None = None, app: str = "skar_spark",
               shuffle_partitions: int | None = None,
               master: str | None = None) -> SparkSession:
-    """`master=None` → local[cpus]. A spark:// URL (or SKAR_MASTER env)
-    targets a standalone cluster — the north-rule deployment shape
-    (spark-submit --py-files at N and 4N executors); `cpus` then means
-    the total executor cores the app should see (shuffle sizing only).
+    """`master=None` → local[cpus]; `cpus` defaults to SPARK_GRAFT_CPUS,
+    else the CPUs this process may run on, and the driver heap to
+    SKAR_DRIVER_MEM, else 40% of physical memory. A spark:// URL (or
+    SKAR_MASTER env) targets a standalone cluster — the north-rule
+    deployment shape (spark-submit --py-files at N and 4N executors);
+    `cpus` then means the total executor cores the app should see
+    (shuffle sizing only).
     """
     if master is None:
         master = os.environ.get("SKAR_MASTER") or None
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS")
+                   or len(os.sched_getaffinity(0)))
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)
     # glibc: without this, every >128 KiB buffer (fsst segments, arrow
@@ -26,7 +42,7 @@ def get_spark(cpus: int | None = None, app: str = "skar_spark",
     # faults are slow and variable; keep allocations in the arenas.
     os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", "1073741824")
     os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", "1073741824")
-    mem = os.environ.get("SKAR_DRIVER_MEM", "24g")
+    mem = os.environ.get("SKAR_DRIVER_MEM") or _default_heap()
     b = (
         SparkSession.builder
         .master(master or f"local[{cpus}]")

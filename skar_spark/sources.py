@@ -15,7 +15,7 @@ format:
 Filter pushdown is automatic (`pushFilters`): equality on the derived
 `host` column, equality on `lang`, and range bounds on `warc_ts` are
 absorbed by the engine — partition pruning via the lineage index (zone
-maps + the host AND lang bloom families, executor-side probe), row-group
+maps + the host AND lang bloom families, probed driver-side), row-group
 pruning + EXACT residual filtering inside each read task. Equality on
 `url` additionally prunes via the host bloom (the filter itself is left
 for Spark to evaluate). This is the mirror of the reference's automatic
@@ -205,11 +205,11 @@ class SkarReader(DataSourceReader):
                 self.ts_hi if self.ts_hi is not None else TS_MAX)
 
     def partitions(self):
-        # planning runs in a Python worker with no SparkSession — prune
-        # via the streaming single-process index seek instead
-        from skar_spark.engine.decode import prune_partitions_local
+        # planning runs in a Python worker with no SparkSession — the
+        # engine's pruner is driver-local, so it runs here as well
+        from skar_spark.engine.decode import prune_partitions
 
-        files = prune_partitions_local(
+        files = prune_partitions(
             self.path, host_eq=self.host_eq, ts_range=self._ts_range(),
             any_hosts=self.prune_hosts or None, lang_eq=self.lang_eq,
             as_of=self.as_of, include_hot=self.include_hot)
@@ -365,10 +365,7 @@ def read_paged(spark, path: str, cursor: int = 0, page_files: int = 64,
     DataFrame and the cursor always agree. Wall-clock budgeting
     (time_limit_ms) lives in engine.decode.scan_paged, which collects
     incrementally; a DataFrame-returning API can only bound volume."""
-    from skar_spark.engine.decode import (
-        _file_part_index,
-        prune_partitions_local,
-    )
+    from skar_spark.engine.decode import _file_part_index, prune_partitions
 
     ts_range = None
     if options.get("ts_lo") or options.get("ts_hi"):
@@ -379,7 +376,7 @@ def read_paged(spark, path: str, cursor: int = 0, page_files: int = 64,
     # file list (e.g. an as_of snapshot read on a retain_superseded
     # table — pruning the latest view here while the reader resolves the
     # snapshot view would make resumed pagination skip/repeat partitions)
-    pruned = prune_partitions_local(
+    pruned = prune_partitions(
         path, host_eq=options.get("host_eq"), ts_range=ts_range,
         lang_eq=options.get("lang_eq"),
         as_of=float(options["as_of"]) if options.get("as_of") else None)

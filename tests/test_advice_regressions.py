@@ -92,7 +92,7 @@ def test_prune_selections_empty_returns_empty(spark, tmp_path):
     out = str(tmp_path / "out")
     docs = synth_documents(spark, 2_000, partitions=4)
     encode_documents(spark, docs, out, CFG, n_rows=2_000)
-    assert prune_selections(spark, out, []) == {}
+    assert prune_selections(out, []) == {}
 
 
 def test_derive_host_coalesces_nonmatching_to_empty():

@@ -20,7 +20,6 @@ from skar_spark.engine.compact import compact_parts, is_compacted
 from skar_spark.engine.decode import (
     list_part_files,
     prune_partitions,
-    prune_partitions_local,
     scan,
 )
 from skar_spark.engine.encode import (
@@ -138,11 +137,10 @@ def test_uncommitted_part_invisible_to_full_scan(spark, tmp_path):
     shutil.copy(files[0], orphan)
 
     assert scan(spark, out).count() == n  # fast path: no duplicate rows
-    assert orphan not in prune_partitions(spark, out)
-    assert orphan not in prune_partitions_local(out)
+    assert orphan not in prune_partitions(out)
     # consistency: filtered and unfiltered membership agree
-    assert set(prune_partitions(spark, out)) \
-        >= set(prune_partitions(spark, out, ts_range=(0, 1 << 62)))
+    assert set(prune_partitions(out)) \
+        >= set(prune_partitions(out, ts_range=(0, 1 << 62)))
 
 
 def test_lineage_less_dir_keeps_listing_membership(spark, tmp_path):
@@ -213,7 +211,7 @@ def test_interrupted_lineage_swap_rolls_forward(spark, tmp_path,
     assert not os.path.isdir(ldir)
 
     # local reader heals it ...
-    assert prune_partitions_local(out, ts_range=(0, 1 << 62))
+    assert prune_partitions(out, ts_range=(0, 1 << 62))
     assert os.path.isdir(ldir)
     assert not os.path.isdir(ldir + tmp_sfx)
     assert not os.path.isdir(ldir + old_sfx)

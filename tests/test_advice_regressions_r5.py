@@ -18,7 +18,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from skar_spark.config import EngineConfig
-from skar_spark.engine.decode import prune_partitions_local, scan
+from skar_spark.engine.decode import prune_partitions, scan
 from skar_spark.engine.encode import encode_documents, lineage_dir
 from skar_spark.synth import synth_documents
 
@@ -79,7 +79,7 @@ def test_orphan_old_dir_cleaned_when_lineage_present(spark, tmp_path):
     ldir = lineage_dir(out)
 
     shutil.copytree(ldir, ldir + ".expired")
-    assert prune_partitions_local(out, ts_range=(0, 1 << 62))
+    assert prune_partitions(out, ts_range=(0, 1 << 62))
     assert not os.path.isdir(ldir + ".expired")
     assert _content(scan(spark, out)) == want
 

@@ -44,7 +44,7 @@ def test_day_hash_encode_and_ts_pruning(spark, docs, tmp_path):
     all_files = list_part_files(out)
     lo = T0_US + 10 * 86_400_000_000   # day 10
     hi = T0_US + 11 * 86_400_000_000
-    kept = prune_partitions(spark, out, ts_range=(lo, hi))
+    kept = prune_partitions(out, ts_range=(lo, hi))
     assert 0 < len(kept) < len(all_files) // 4
 
     got = scan(spark, out, columns=["url", "warc_ts"], ts_range=(lo, hi))

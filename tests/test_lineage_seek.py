@@ -12,7 +12,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from skar_spark.engine.decode import prune_partitions_local
+from skar_spark.engine.decode import prune_partitions
 
 N_PARTS = 50_000
 DAY_US = 86_400_000_000
@@ -57,8 +57,7 @@ def test_seek_reads_fraction_of_rowgroups(big_lineage):
     lo = T0 + 250 * DAY_US
     hi = T0 + 252 * DAY_US
     stats: dict = {}
-    got = prune_partitions_local(out, ts_range=(lo, hi),
-                                 seek_stats=stats)
+    got = prune_partitions(out, ts_range=(lo, hi), seek_stats=stats)
     # [lo, hi) semantics: day 252 starts exactly AT hi → excluded
     want = [f for f, d in zip(files, day) if 250 <= d < 252]
     assert got == sorted(want)
@@ -74,10 +73,9 @@ def test_seek_agrees_with_full_stream(big_lineage):
     lo = T0 + 99 * DAY_US + 1
     hi = T0 + 101 * DAY_US + 1
     stats: dict = {}
-    got = prune_partitions_local(out, ts_range=(lo, hi),
-                                 seek_stats=stats)
+    got = prune_partitions(out, ts_range=(lo, hi), seek_stats=stats)
     # full stream: widen the range to everything, filter manually
-    all_files = prune_partitions_local(out)
+    all_files = prune_partitions(out)
     keep = [f for f, d in zip(files, day)
             if not (T0 + d * DAY_US >= hi or T0 + (d + 1) * DAY_US - 1 < lo)]
     assert got == sorted(keep)
@@ -87,4 +85,4 @@ def test_seek_agrees_with_full_stream(big_lineage):
 
 def test_unfiltered_scan_untouched_by_seek(big_lineage):
     out, _day, files = big_lineage
-    assert prune_partitions_local(out) == sorted(files)
+    assert prune_partitions(out) == sorted(files)

@@ -20,7 +20,7 @@ from skar_spark.config import EngineConfig
 from skar_spark.engine import storage
 from skar_spark.engine.decode import (
     list_part_files,
-    prune_partitions_local,
+    prune_partitions,
     scan,
 )
 from skar_spark.engine.encode import encode_documents, vacuum
@@ -65,7 +65,7 @@ def test_mock_encode_scan_query_roundtrip(spark, mock_table):
     assert all(r.url.split("://")[1].split("/")[0] == host for r in hit)
 
     # local (DataSource-planning) pruner works on the object listing
-    assert set(prune_partitions_local(
+    assert set(prune_partitions(
         mock_table, ts_range=(0, 1 << 62))) <= set(files)
 
 

@@ -94,19 +94,22 @@ def test_datasource_as_of_option(spark, table):
     assert _content(old) == table["v1"]
 
 
-def test_distributed_and_local_pruners_agree_on_snapshots(spark, table):
-    """The Spark pruner (scan) and the single-process pruner (the
-    DataSource planner) must resolve IDENTICAL file sets on a retained
-    table, for the live view and for every time-travel anchor."""
-    from skar_spark.engine.decode import (
-        prune_partitions,
-        prune_partitions_local,
-    )
+def test_pruning_membership_matches_lineage_on_snapshots(spark, table):
+    """On a retained table the pruner's unfiltered file set is exactly
+    the lineage snapshot view, for the live view and for every
+    time-travel anchor; a filtered snapshot read keeps every file of
+    that snapshot holding a matching row."""
+    from skar_spark.engine.decode import prune_partitions
+    from tests.util import assert_sound
+
     out = table["out"]
+    host = next(iter(table["v1"]))[0].split("://")[1].split("/")[0]
     for as_of in (None, table["t_v1"], 1.0):
-        dist = prune_partitions(spark, out, as_of=as_of)
-        loc = prune_partitions_local(out, as_of=as_of)
-        assert dist == loc, f"as_of={as_of}"
+        view = {r.file for r in read_lineage(
+            spark, out, latest=True, as_of=as_of).collect()}
+        assert set(prune_partitions(out, as_of=as_of)) == view, as_of
+        assert_sound(prune_partitions(out, host_eq=host, as_of=as_of),
+                     view, host_eq=host)
 
 
 def test_vacuum_expires_superseded_snapshots(spark, table):

@@ -93,10 +93,10 @@ def test_partition_pruning_via_lineage(spark, docs, tmp_path):
     # a host that exists
     some_host = (plan_partitions(docs, 8, CFG)
                  .select("host").limit(1).collect()[0].host)
-    kept = prune_partitions(spark, out, host_eq=some_host)
+    kept = prune_partitions(out, host_eq=some_host)
     assert 0 < len(kept) <= len(all_files)
     rows = scan(spark, out, columns=["url"], host_eq=some_host).count()
     assert rows > 0
     # absent host prunes everything (bloom has no false negatives)
-    kept_none = prune_partitions(spark, out, host_eq="www.no-such-host.zz")
+    kept_none = prune_partitions(out, host_eq="www.no-such-host.zz")
     assert len(kept_none) <= max(1, len(all_files) // 2)

@@ -16,13 +16,13 @@ from skar_spark.config import EngineConfig
 from skar_spark.engine.decode import (
     list_part_files,
     prune_partitions,
-    prune_partitions_local,
     prune_selections,
     scan,
     validate_output,
 )
 from skar_spark.engine.encode import encode_documents, read_lineage
 from skar_spark.synth import T0_US, synth_documents
+from tests.util import assert_sound, has_rows
 
 pytestmark = pytest.mark.spark
 
@@ -107,32 +107,140 @@ def test_prune_selections_per_disjunct(spark, encoded):
         {"hosts": [host], "ts_range": None},
         {"hosts": ["no-such-host.invalid"], "ts_range": None},
     ]
-    kept = prune_selections(spark, encoded, sels)
+    kept = prune_selections(encoded, sels)
     assert 0 < len(kept) < len(files) + 1
     for f, idxs in kept.items():
         assert 0 in idxs          # only disjunct 0 can survive
         assert 1 not in idxs
     # an impossible pair of disjuncts prunes everything
-    kept_none = prune_selections(spark, encoded, [
+    kept_none = prune_selections(encoded, [
         {"hosts": ["no-such-host.invalid"], "ts_range": None},
         {"hosts": None, "ts_range": (0, 1000)},
     ])
     assert kept_none == {}
 
 
-def test_distributed_and_local_pruning_agree(spark, encoded):
-    ts = (T0_US + 200 * 1_000_000, T0_US + 2_000 * 1_000_000)
-    first = scan(spark, encoded, columns=["url"]).first()["url"]
+def _host_of(url: str) -> str:
     import re
-    host = re.match(r"^[a-z][a-z0-9+.-]*://([^/?#]*)", first).group(1)
-    for kwargs in ({"host_eq": host}, {"ts_range": ts},
-                   {"host_eq": host, "ts_range": ts},
-                   {"host_eq": "no-such-host.invalid"}):
-        dist = prune_partitions(spark, encoded, **kwargs)
-        loc = prune_partitions_local(encoded, **kwargs)
-        assert dist == loc
-    assert prune_partitions_local(
-        encoded, host_eq="no-such-host.invalid") == []
+    return re.match(r"^[a-z][a-z0-9+.-]*://([^/?#]*)", url).group(1)
+
+
+def _latest_files(spark, out: str, as_of: float | None = None) -> set:
+    return {r.file for r in read_lineage(spark, out, latest=True,
+                                         as_of=as_of).collect()}
+
+
+def test_unfiltered_membership_is_latest_lineage(spark, encoded):
+    assert set(prune_partitions(encoded)) == _latest_files(spark, encoded)
+    assert set(prune_selections(encoded, [{}])) == \
+        _latest_files(spark, encoded)
+
+
+def test_pruning_is_sound(spark, encoded):
+    """Independent oracle for the pruner: for a grid of predicates the
+    kept set covers every file whose exact read returns a row."""
+    docs = synth_documents(spark, N_DOCS, partitions=8)
+    counts = {r.lang: r["count"] for r in
+              docs.groupBy("lang").count().collect()}
+    rare = min(counts, key=counts.get)
+    urls = [r.url for r in scan(spark, encoded, columns=["url"])
+            .limit(200).collect()]
+    h1, h2 = _host_of(urls[0]), next(
+        _host_of(u) for u in urls if _host_of(u) != _host_of(urls[0]))
+    ts = (T0_US + 200 * 1_000_000, T0_US + 2_000 * 1_000_000)
+    universe = _latest_files(spark, encoded)
+    grid = [
+        {"host_eq": h1}, {"host_eq": "no-such-host.invalid"},
+        {"any_hosts": [h1, h2]}, {"host_eq": h1, "any_hosts": [h1, h2]},
+        {"lang_eq": rare}, {"ts_range": ts},
+        {"host_eq": h1, "ts_range": ts}, {"lang_eq": rare, "ts_range": ts},
+    ]
+    for pred in grid:
+        assert_sound(prune_partitions(encoded, **pred), universe, **pred)
+    assert prune_partitions(encoded, host_eq="no-such-host.invalid") == []
+    # host_eq and any_hosts are ANDed: an absent IN-list prunes all
+    assert prune_partitions(encoded, host_eq=h1,
+                            any_hosts=["no-such-host.invalid"]) == []
+
+    # two disjuncts: a file is kept for disjunct i whenever i matches
+    sels = [{"hosts": [h1], "ts_range": ts},
+            {"langs": [rare], "ts_range": ts}]
+    kept = prune_selections(encoded, sels)
+    assert set(kept) <= universe
+    for f in sorted(universe):
+        for i, pred in enumerate(({"host_eq": h1, "ts_range": ts},
+                                  {"lang_eq": rare, "ts_range": ts})):
+            if has_rows(f, **pred):
+                assert i in kept.get(f, []), (f, i)
+
+    # include_hot: an unrecorded on-disk file is served (and kept by
+    # every predicate it matches) only when the hot tail is asked for
+    import shutil
+    hot = os.path.join(encoded, "parts", "part-999990.skar")
+    shutil.copy(sorted(universe)[0], hot)
+    assert hot not in prune_partitions(encoded, host_eq=h1)
+    for pred in ({"host_eq": h1}, {"ts_range": ts}):
+        assert_sound(prune_partitions(encoded, include_hot=True, **pred),
+                     universe | {hot}, **pred)
+    assert hot in prune_partitions(encoded, include_hot=True)
+
+
+def test_latest_attempt_order_matches_read_lineage(spark, tmp_path):
+    """Membership per partition follows read_lineage's order: latest
+    committed_at first, ties broken by attempt_id desc, a null commit
+    time ranks last and is outside every as_of snapshot."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    out = tmp_path / "t"
+    (out / "parts").mkdir(parents=True)
+    (out / "lineage").mkdir()
+    rows = [(0, "a", 2.0), (0, "b", 2.0), (0, "z", None), (1, "x", None),
+            (2, "c", 1.0), (2, "d", 3.0)]
+    files = {(p, a): str(out / "parts" / f"part-a{a}-{p:06d}.skar")
+             for p, a, _c in rows}
+    for f in files.values():
+        open(f, "wb").close()
+    ts = pa.array([T0_US] * len(rows), pa.timestamp("us"))
+    pq.write_table(pa.table({
+        "partition_id": pa.array([r[0] for r in rows], pa.int32()),
+        "attempt_id": [r[1] for r in rows],
+        "status": ["committed"] * len(rows),
+        "file": [files[r[0], r[1]] for r in rows],
+        "min_warc_ts": ts, "max_warc_ts": ts,
+        "committed_at": pa.array([r[2] for r in rows], pa.float64()),
+    }), str(out / "lineage" / "batch-0.parquet"))
+    everything = (-(1 << 62), 1 << 62)
+    for as_of, want in ((None, {(0, "b"), (1, "x"), (2, "d")}),
+                        (2.5, {(0, "b"), (2, "c")})):
+        got = set(prune_partitions(str(out), ts_range=everything,
+                                   as_of=as_of))
+        assert got == {files[k] for k in want}
+        assert got == _latest_files(spark, str(out), as_of)
+
+
+def test_pruning_launches_no_spark_job(spark, encoded):
+    """Pruning is driver-local: no Spark job runs under the caller's job
+    group, and a ts-bounded query plan seeks lineage row groups."""
+    host = _host_of(scan(spark, encoded, columns=["url"]).first()["url"])
+    ts = (T0_US, T0_US + 2_000 * 1_000_000)
+    sc = spark.sparkContext
+    group = "prune-no-jobs"
+    sc.setJobGroup(group, "pruning only")
+    try:
+        prune_partitions(encoded, ts_range=ts, host_eq=host)
+        stats: dict = {}
+        prune_selections(encoded, [{"hosts": [host], "ts_range": ts},
+                                   {"hosts": None, "ts_range": ts}],
+                         seek_stats=stats)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        # the check itself sees jobs of this group
+        spark.range(1).count()
+        assert list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert {"rg_total", "rg_read"} <= stats.keys()
+    assert 0 < stats["rg_read"] <= stats["rg_total"]
 
 
 def test_rowgroup_host_bloom_prunes(spark, tmp_path):
@@ -183,16 +291,14 @@ def test_lang_bloom_family_prunes_partitions(spark, encoded):
     n_parts = len(list_part_files(encoded))
     # a lang occurring k times lives in at most k partitions
     assert counts[rare] < n_parts, "pick a rarer lang or more partitions"
-    kept = prune_partitions(spark, encoded, lang_eq=rare)
+    kept = prune_partitions(encoded, lang_eq=rare)
     assert 0 < len(kept) < n_parts
-    # local (DataSource planning) pruning agrees
-    assert prune_partitions_local(encoded, lang_eq=rare) == kept
     got = scan(spark, encoded, lang_eq=rare)
     want = docs.filter(F.col("lang") == rare).select(*got.columns)
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0
     # an impossible lang prunes everything
-    assert prune_partitions_local(encoded, lang_eq="zz-XX") == []
+    assert prune_partitions(encoded, lang_eq="zz-XX") == []
 
 
 def test_rowgroup_lang_bloom_prunes(spark, tmp_path):
@@ -258,13 +364,14 @@ def test_col_stats_zone_maps_prune_partitions(spark, tmp_path):
     encode_documents(spark, lifted, out, cfg, scheme="day_hash",
                      n_rows=240)
 
-    total = prune_partitions(spark, out)
-    mid = prune_partitions(spark, out, col_range=("quality", 2.0, 4.0))
+    total = prune_partitions(out)
+    mid = prune_partitions(out, col_range=("quality", 2.0, 4.0))
     assert 0 < len(mid) < len(total)
-    none = prune_partitions(spark, out, col_range=("quality", 99.0, 100.0))
+    assert_sound(mid, set(total), col_range=("quality", 2.0, 4.0))
+    none = prune_partitions(out, col_range=("quality", 99.0, 100.0))
     assert none == []
     # a column with no recorded stats never prunes
-    unknown = prune_partitions(spark, out, col_range=("nope", 0.0, 1.0))
+    unknown = prune_partitions(out, col_range=("nope", 0.0, 1.0))
     assert sorted(unknown) == sorted(total)
     # scan(col_range=...) is EXACT: equals the brute-force filter
     from skar_spark.engine.decode import scan
