@@ -104,7 +104,7 @@ def main() -> None:
     shutil.rmtree(out + ".warm", ignore_errors=True)
     docs = synth_documents(spark, n_docs, partitions=cpus * 2)
     docs.cache().count()          # materialize: time encode, not generation
-    # untimed warm-up of the applyInArrow encode path (Python daemons,
+    # untimed warm-up of the mapInArrow encode path (Python daemons,
     # Arrow IPC buffers, codec imports)
     warm_sample = docs.filter(F.pmod(F.xxhash64("url"), F.lit(50)) == 0)
     encode_documents(spark, warm_sample, out + ".warm",

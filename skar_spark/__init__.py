@@ -13,7 +13,7 @@ engine `omahs/skar` (Rust, arrow2/Parquet archive indexer — see
 - a Spark encode job: explicit hash/range partitioning with salting for
   skewed hosts, sortWithinPartitions-style clustering (mirror of the
   lexsort at skar/src/write_parquet.rs:22-35,131-153), Arrow-batch
-  kernels via applyInArrow / mapInArrow (never per-row Python)
+  kernels via mapInArrow (never per-row Python)
 - per-partition footer + lineage table with zone maps, split-block bloom
   filters and content checksums (mirror of skar/src/build_parquet_idx.rs
   and skar/src/db/mod.rs) enabling checkpoint-resume (mirror of

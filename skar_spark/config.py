@@ -8,7 +8,7 @@ Spark jobs; every knob that shaped skar's write path has an analog.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -48,7 +48,6 @@ class EngineConfig:
     # --- partitioning & skew (mirror of block-range folders + the
     #     address/topic0 skew noted in SURVEY §1.3) ---
     salt_threshold_rows: int = 100_000        # hosts above this get salted
-    shuffle_partitions: int = 32
 
     # --- resume / lineage (mirror of db.next_block_num resume,
     #     reference skar/src/db/mod.rs:68-86) ---
@@ -69,11 +68,6 @@ class EngineConfig:
     # --- bloom (mirror of sbbf 8 bits/key,
     #     reference skar/src/build_parquet_idx.rs:96-115,181-189) ---
     bloom_bits_per_key: int = 8
-
-    # columns to encode (fixed input schema per BASELINE.json input_hint)
-    sort_keys: tuple[str, ...] = ("host", "warc_ts", "url")
-
-    extra: dict = field(default_factory=dict, compare=False)
 
 
 DEFAULT = EngineConfig()

@@ -47,9 +47,8 @@ from pyspark.sql import functions as F
 
 from skar_spark.config import ARCHIVE, DEFAULT, EngineConfig
 from skar_spark.engine.encode import (
-    FOOTER_DDL,
-    _encode_kernel,
     _meta_dir,
+    encode_footers,
     is_retained,
     lineage_dir,
     read_lineage,
@@ -116,8 +115,8 @@ def compact_parts(spark: SparkSession, out_dir: str,
     from skar_spark.engine import storage
     from skar_spark.engine.decode import (
         _file_part_index,
+        decode_paths,
         list_part_files,
-        read_part_file,
     )
     from skar_spark.engine.decode_schema import spark_ddl_for
     from skar_spark.engine.partfile import read_footer
@@ -148,32 +147,19 @@ def compact_parts(spark: SparkSession, out_dir: str,
     # archival marker below: a table encoded by an older engine version
     # (e.g. lineage without lang_bloom) must fail pre-flight while the
     # table is still writable, not after the marker is durable
-    import pyarrow as pa  # noqa: F401  (mapInArrow contract)
     # merged table schema: an evolved table (engine/schema_evo.py) has
     # parts written before a column existed — decode them null-filled so
     # the compacted parts all carry the CURRENT schema (Iceberg rewrite
     # materializes evolution, same here)
-    from skar_spark.engine.schema_evo import load_table_schema
+    from skar_spark.engine.schema_evo import table_schema
     # the footer read doubles as the pre-flight storage probe: it must
     # run (and be allowed to fail) BEFORE the irreversible archival
     # marker even when the merged schema comes from meta/schema.json
-    footer = read_footer(files[0])
-    ts = load_table_schema(out_dir)
-    if ts is None:
-        ts = (footer["columns"], footer["schema"])
-    tcols, ttypes = ts
-    ddl = spark_ddl_for(ttypes, tcols)
-    fill = {c: ttypes[c] for c in tcols}
-    paths_df = spark.createDataFrame(
-        [(f,) for f in files], "path string").repartition(len(files))
-
-    def decode_fn(batches):
-        for batch in batches:
-            for p in batch.column("path").to_pylist():
-                t = read_part_file(p, columns=tcols, fill_missing=fill)
-                yield from t.to_batches(max_chunksize=16384)
-
-    df = with_host(paths_df.mapInArrow(decode_fn, schema=ddl))
+    read_footer(files[0])
+    tcols, ttypes = table_schema(out_dir, files)
+    df = with_host(decode_paths(
+        spark, files, spark_ddl_for(ttypes, tcols), columns=tcols,
+        fill_missing={c: ttypes[c] for c in tcols}))
     planned = df.withColumn(
         "part_id",
         (F.pmod(F.xxhash64("url"), F.lit(n_new)) + F.lit(hw)).cast("int"))
@@ -185,8 +171,9 @@ def compact_parts(spark: SparkSession, out_dir: str,
         selector_margin_fsst=p.selector_margin_fsst,
         fsst_sample_bytes=p.fsst_sample_bytes,
         fsst_min_pair_count_frac=p.fsst_min_pair_count_frac)
-    new_footers = planned.groupBy("part_id").applyInArrow(
-        _encode_kernel(out_dir, enc_cfg, attempt), FOOTER_DDL)
+    new_footers = encode_footers(planned, list(range(hw, hw + n_new)),
+                                 out_dir, enc_cfg, attempt,
+                                 "part-{pid:06d}.skar")
 
     # one atomic lineage swap: untouched latest rows + compacted rows.
     # allowMissingColumns backfills nulls for footer columns an older

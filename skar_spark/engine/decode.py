@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 from skar_spark.engine import storage
 from skar_spark.engine.decode_schema import spark_ddl_for
 from skar_spark.engine.encode import read_lineage
-from skar_spark.engine.partfile import read_footer, read_part_file
+from skar_spark.engine.partfile import read_part_file
 
 
 def list_part_files(out_dir: str) -> list[str]:
@@ -490,32 +490,31 @@ def scan(spark: SparkSession, out_dir: str,
     # merged table schema (meta/schema.json — one driver-side GET, kept
     # current at every lineage commit; Iceberg add-column semantics).
     # Pre-evolution tables fall back to the first footer (fixed schema).
-    from skar_spark.engine.schema_evo import load_table_schema
-    tschema = load_table_schema(out_dir)
-    if tschema is None:
-        all_files = files or list_part_files(out_dir)
-        if not all_files:
-            raise FileNotFoundError(f"no part files under {out_dir}")
-        footer = read_footer(all_files[0])
-        tschema = (footer["columns"], footer["schema"])
-    tcols, ttypes = tschema
+    from skar_spark.engine.schema_evo import table_schema
+    tcols, ttypes = table_schema(out_dir, files)
     cols = columns or tcols
-    ddl = spark_ddl_for(ttypes, cols)
     # parts written before a column existed null-fill it kernel-side
-    fill = {c: ttypes[c] for c in cols}
+    return decode_paths(spark, files, spark_ddl_for(ttypes, cols),
+                        columns=cols, host_eq=host_eq, ts_range=ts_range,
+                        lang_eq=lang_eq, col_range=col_range,
+                        fill_missing={c: ttypes[c] for c in cols})
 
+
+def decode_paths(spark: SparkSession, files: list[str], ddl: str,
+                 **read_kw) -> DataFrame:
+    """THE decode dispatch: one task per part file, each running
+    read_part_file(path, **read_kw) in a mapInArrow kernel (row-group
+    pruning, projection, exact predicates, null-fill all happen there).
+    Shared by scan, paged_decode_loop and compaction."""
     paths_df = spark.createDataFrame(
-        [(f,) for f in files] or [], "path string").repartition(
+        [(f,) for f in files], "path string").repartition(
         max(1, len(files)))
 
     def decode_fn(batches):
         for batch in batches:
             for p in batch.column("path").to_pylist():
-                t = read_part_file(p, columns=cols, host_eq=host_eq,
-                                   ts_range=ts_range, lang_eq=lang_eq,
-                                   fill_missing=fill, col_range=col_range)
-                for rb in t.to_batches(max_chunksize=16384):
-                    yield rb
+                yield from read_part_file(p, **read_kw).to_batches(
+                    max_chunksize=16384)
 
     return paths_df.mapInArrow(decode_fn, schema=ddl)
 
@@ -635,17 +634,14 @@ def scan_paged(spark: SparkSession, out_dir: str,
                    key=_file_part_index)
     if not files:
         return [], None
-    from skar_spark.engine.schema_evo import load_table_schema
-    ts = load_table_schema(out_dir)
-    if ts is None:
-        footer = read_footer(files[0])
-        ts = (footer["columns"], footer["schema"])
-    cols = columns or ts[0]
-    ddl = spark_ddl_for(ts[1], cols)
+    from skar_spark.engine.schema_evo import table_schema
+    tcols, ttypes = table_schema(out_dir, files)
+    cols = columns or tcols
+    ddl = spark_ddl_for(ttypes, cols)
     return paged_decode_loop(
         spark, files, cols, ddl, host_eq=host_eq, ts_range=ts_range,
         lang_eq=lang_eq, time_limit_ms=time_limit_ms,
-        page_files=page_files, fill={c: ts[1][c] for c in cols})
+        page_files=page_files, fill={c: ttypes[c] for c in cols})
 
 
 def paged_decode_loop(spark: SparkSession, files: list[str],
@@ -674,19 +670,9 @@ def paged_decode_loop(spark: SparkSession, files: list[str],
     pos = 0
     while pos < len(files):
         page = files[pos:pos + page_files]
-        paths_df = spark.createDataFrame(
-            [(f,) for f in page], "path string").repartition(len(page))
-
-        def decode_fn(batches):
-            for batch in batches:
-                for p in batch.column("path").to_pylist():
-                    t = read_part_file(p, columns=stored_cols,
-                                       host_eq=host_eq, ts_range=ts_range,
-                                       lang_eq=lang_eq, fill_missing=fill)
-                    for rb in t.to_batches(max_chunksize=16384):
-                        yield rb
-
-        df = paths_df.mapInArrow(decode_fn, schema=ddl)
+        df = decode_paths(spark, page, ddl, columns=stored_cols,
+                          host_eq=host_eq, ts_range=ts_range,
+                          lang_eq=lang_eq, fill_missing=fill)
         if post is not None:
             df = post(df)
         rows.extend(df.collect())

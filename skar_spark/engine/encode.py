@@ -12,8 +12,9 @@ skar/src/skar_runner.rs:285-353 + write_parquet.rs + build_parquet_idx.rs):
       → deterministic part_id = xxhash64(host, salt) mod P
         (deterministic partition membership is what makes resume exact —
         the analog of skar's block-range folder naming)
-      → groupBy(part_id).applyInArrow(kernel):  [one shuffle — the same
-        single clustering shuffle the golden sort needs]
+      → encode_footers: planned_exchange puts each part_id alone in its
+        task, then mapInArrow(kernel)  [one shuffle — the same single
+        clustering shuffle the golden sort needs]
           lexsort (host, warc_ts, url)          [write_parquet.rs:131-153]
           slice into row groups                 [write_parquet.rs:83-103]
           auto-select codec per column chunk    [our north-star delta]
@@ -44,6 +45,7 @@ from pyspark.sql import functions as F
 from skar_spark.config import DEFAULT, EngineConfig
 from skar_spark.engine import storage
 from skar_spark.engine.partfile import (
+    SORT_KEYS,
     partition_checksum,
     partition_host_bloom,
     write_part_file,
@@ -364,9 +366,9 @@ def _bucket_keys(n: int) -> list[int]:
     """For each bucket b in [0, n): an int32 key whose Spark shuffle hash
     lands EXACTLY in bucket b of an n-way repartition.
 
-    Motivation (measured on the 400k-doc bench): groupBy(part_id) hashes
-    ~2 s-CPU encode groups into shuffle buckets at random — with 64
-    groups in 128 buckets several buckets get 2 groups, and that
+    Motivation (measured on the 400k-doc bench): a hash exchange on
+    part_id places ~2 s-CPU encode groups into buckets at random — with
+    64 groups in 128 buckets several buckets get 2 groups, and that
     collision tail was ~40% of the batch wall. Mapping part_id through
     these keys and repartition(n, "_pk") places one group per task
     deterministically, so the stage tail is the slowest single group,
@@ -384,22 +386,25 @@ def _bucket_keys(n: int) -> list[int]:
 
 
 def _encode_kernel(out_dir: str, cfg: EngineConfig, attempt: str,
-                   name_fmt: str = "part-{pid:06d}.skar"):
-    """Per-partition kernel: one part_id's table in, one footer row out.
-    All columnar — no per-row Python. `name_fmt` lets streaming give each
-    epoch an injective file namespace (part-e{epoch}-{pid}.skar)."""
+                   name_fmt: str):
+    """mapInArrow kernel over a planned exchange (see encode_footers):
+    one footer row out per part_id in the task. All columnar — no
+    per-row Python. The exchange puts each part_id alone in its task; a
+    local split keeps the kernel correct if a task ever holds several.
+    `name_fmt` gives each writer its part-file namespace (streaming:
+    part-e{epoch}-{pid}.skar)."""
 
-    def kernel(table: pa.Table) -> pa.Table:
+    def encode_part(table: pa.Table) -> pa.Table:
         import time as _time
         t0 = _time.time()
         part_id = table["part_id"][0].as_py()
         data_cols = [c for c in table.column_names
                      if c not in ("part_id", "salt", "host")]
-        # lexsort by (host, warc_ts, url): keep host as _host for zone maps
+        # lexsort by SORT_KEYS: keep host as _host for zone maps
         t = table.rename_columns(
             [("_host" if c == "host" else c) for c in table.column_names])
-        t = t.sort_by([("_host", "ascending"), ("warc_ts", "ascending"),
-                       ("url", "ascending")])
+        t = t.sort_by([("_host" if k == "host" else k, "ascending")
+                       for k in SORT_KEYS])
         body = t.select(data_cols + ["_host"])
 
         t_sorted = _time.time()
@@ -411,7 +416,7 @@ def _encode_kernel(out_dir: str, cfg: EngineConfig, attempt: str,
         ts = t["warc_ts"].combine_chunks()
         hosts = t["_host"].combine_chunks()
         n_hosts = len(pc.unique(hosts))
-        footer = pa.table({
+        return pa.table({
             "partition_id": pa.array([part_id], pa.int32()),
             "attempt_id": pa.array([attempt], pa.string()),
             "status": pa.array(["committed"], pa.string()),
@@ -450,19 +455,6 @@ def _encode_kernel(out_dir: str, cfg: EngineConfig, attempt: str,
             # numeric zone maps for non-layout columns ({} when none)
             "col_stats": pa.array([stats["col_stats"]], pa.string()),
         })
-        return footer
-
-    return kernel
-
-
-def _encode_kernel_multi(out_dir: str, cfg: EngineConfig, attempt: str,
-                         name_fmt: str = "part-{pid:06d}.skar"):
-    """mapInArrow kernel over a pre-bucketed exchange: each task holds
-    the rows of exactly one part_id (see _bucket_keys), encoded with the
-    same single-group kernel; a local split handles the (rare) case of
-    several pids sharing a task. Replaces groupBy().applyInArrow with an
-    explicit repartition so group→task placement is deterministic."""
-    one = _encode_kernel(out_dir, cfg, attempt, name_fmt)
 
     def kernel(batches):
         batches = [b for b in batches if b.num_rows]
@@ -473,7 +465,7 @@ def _encode_kernel_multi(out_dir: str, cfg: EngineConfig, attempt: str,
         for pid in pids:
             sub = t.filter(pc.equal(t["part_id"], pid)) \
                 if len(pids) > 1 else t
-            yield from one(sub).to_batches()
+            yield from encode_part(sub).to_batches()
 
     return kernel
 
@@ -500,6 +492,27 @@ def planned_exchange(sub: DataFrame, part_ids: list[int],
         *[F.lit(v) for kv in ranked.items() for v in kv])
     return sub.withColumn("_pk", mapping[F.col("part_id")]) \
         .repartition(num_buckets, "_pk").drop("_pk")
+
+
+def encode_footers(planned: DataFrame, part_ids: list[int], out_dir: str,
+                   cfg: EngineConfig, attempt: str, name_fmt: str,
+                   loads: dict[int, int] | None = None) -> DataFrame:
+    """THE encode dispatch every writer uses: one row shuffle that puts
+    each of `part_ids` alone in its task (planned_exchange), then the
+    encode kernel per task. Returns the lazy footer rows (FOOTER_DDL);
+    append_lineage_rows runs and commits them. `repartition(n, col)`
+    is a fixed-count exchange, so AQE never coalesces the CPU-bound
+    kernel stage. Parts with no rows never reach a task and write no
+    file (_rewrite_partitions writes those driver-side).
+
+    Exchange format was raced at 1M docs on the 4x8-executor standalone
+    cluster (warm workers, same session): row shuffle 43.6s, map-side
+    Arrow-IPC blob pack 89.2s, spill-file exchange 129.8s — packing
+    crosses the Python boundary twice, costing more than the JVM's row
+    machinery saves."""
+    exch = planned_exchange(planned, part_ids, len(part_ids), loads)
+    return exch.mapInArrow(
+        _encode_kernel(out_dir, cfg, attempt, name_fmt), FOOTER_DDL)
 
 
 def lineage_dir(out_dir: str) -> str:
@@ -826,10 +839,9 @@ def append_documents(spark: SparkSession, df: DataFrame, out_dir: str,
     planned = planned.withColumn(
         "part_id", (F.col("part_id") + F.lit(base)).cast("int"))
     tag = _uuid.uuid4().hex[:8]
-    footers = planned.groupBy("part_id").applyInArrow(
-        _encode_kernel(out_dir, cfg, f"append-{tag}",
-                       name_fmt=f"part-x{tag}-{{pid:09d}}.skar"),
-        FOOTER_DDL)
+    footers = encode_footers(planned, list(range(base, base + parts)),
+                             out_dir, cfg, f"append-{tag}",
+                             f"part-x{tag}-{{pid:09d}}.skar")
     return append_lineage_rows(footers, out_dir)
 
 
@@ -880,13 +892,10 @@ def encode_documents(spark: SparkSession, df: DataFrame, out_dir: str,
                 F.sum("count").alias("n")).collect()[0].n or 0
         num_parts = max(1, -(-n_rows // cfg.target_partition_rows))
 
-    # straggler control, both knobs measured on the 300k-doc bench:
-    # (a) the salt threshold must track the actual partition size — a
-    #     threshold far above rows/num_parts lets one salted heavy-host
-    #     chunk dominate a task (worst task 12.9s vs 3.6s avg before);
-    # (b) kernel-stage parallelism == shuffle partitions; groups hashing
-    #     2-to-a-task double the tail, so give groups room (≥ 2×groups),
-    #     and never let AQE coalesce the CPU-bound encode stage.
+    # straggler control (measured on the 300k-doc bench): the salt
+    # threshold must track the actual partition size — a threshold far
+    # above rows/num_parts lets one salted heavy-host chunk dominate a
+    # task (worst task 12.9s vs 3.6s avg before)
     if n_rows is not None and scheme != "day_hash":
         # a QUARTER of the average partition size (r6; was half): on a
         # Zipf host distribution several hosts just under a half-size
@@ -906,13 +915,6 @@ def encode_documents(spark: SparkSession, df: DataFrame, out_dir: str,
             cfg, salt_threshold_rows=min(
                 cfg.salt_threshold_rows,
                 max(500, cfg.target_partition_rows // 2)))
-    sc = spark.sparkContext
-    cores = sc.defaultParallelism
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_coalesce = spark.conf.get(
-        "spark.sql.adaptive.coalescePartitions.enabled")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-
     import sys
     t_plan0 = time.time()
     # the salt map + scheme parameters are PERSISTED so resume and
@@ -965,11 +967,6 @@ def encode_documents(spark: SparkSession, df: DataFrame, out_dir: str,
             "salt_threshold_rows": cfg.salt_threshold_rows,
             "target_partition_rows": cfg.target_partition_rows,
             **(day_meta or {})})
-    # kernel-stage parallelism: >= 2x groups so no task carries two
-    # CPU-bound partitions (straggler tail); set once num_parts is known
-    spark.conf.set("spark.sql.shuffle.partitions",
-                   str(min(4096, max(int(prev_shuffle), cores * 2,
-                                     num_parts * 2))))
     if resume:
         done = completed_part_ids(spark, out_dir)
         if verify and done:
@@ -1004,20 +1001,9 @@ def encode_documents(spark: SparkSession, df: DataFrame, out_dir: str,
             sub = sub.filter(~F.col("part_id").isin(
                 [p for p in range(lo, min(hi, num_parts)) if p in done]))
         t_b0 = time.time()
-        # one ROW shuffle, deterministically placed. Exchange format was
-        # raced at 1M docs on the 4x8-executor standalone cluster (warm
-        # workers, same session): row shuffle 43.6s, map-side Arrow-IPC
-        # blob pack 89.2s, spill-file exchange 129.8s — packing crosses
-        # the Python boundary twice, costing more than the JVM's row
-        # machinery saves. Placement: groupBy(part_id) hashes groups
-        # into buckets at random (two ~2s-CPU groups colliding in one
-        # bucket was ~40% of batch wall); planned_exchange puts one
-        # group per task, so the stage tail is the slowest GROUP.
-        exch = planned_exchange(sub, batch_ids, len(batch_ids), loads)
-        footers = exch.mapInArrow(
-            _encode_kernel_multi(out_dir, cfg, attempt,
-                                 _kernel_name_fmt(cfg, attempt, out_dir)),
-            FOOTER_DDL)
+        footers = encode_footers(sub, batch_ids, out_dir, cfg, attempt,
+                                 _kernel_name_fmt(cfg, attempt, out_dir),
+                                 loads)
         # lineage is written SORTED by min_warc_ts (one file per batch):
         # parquet row-group stats then become a zone-map index over the
         # index itself, and the local pruner seeks instead of streaming
@@ -1031,9 +1017,6 @@ def encode_documents(spark: SparkSession, df: DataFrame, out_dir: str,
               f"({len(batch_ids)} parts)", file=sys.stderr)
         ran += 1
 
-    spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled",
-                   prev_coalesce)
     if host_counts is not None:
         host_counts.unpersist()
     lin = read_lineage(spark, out_dir, latest=True)
@@ -1133,10 +1116,8 @@ def reencode_late(spark: SparkSession, full_df: DataFrame,
     planned_full, _ = _replan_with_stored(spark, full_df, out_dir, cfg)
     sub = planned_full.filter(F.col("part_id").isin(affected))
     attempt = "late-" + uuid.uuid4().hex[:8]
-    footers = sub.groupBy("part_id").applyInArrow(
-        _encode_kernel(out_dir, cfg, attempt,
-                       _kernel_name_fmt(cfg, attempt, out_dir)),
-        FOOTER_DDL)
+    footers = encode_footers(sub, affected, out_dir, cfg, attempt,
+                             _kernel_name_fmt(cfg, attempt, out_dir))
     append_lineage_rows(footers, out_dir)
     return read_lineage(spark, out_dir, latest=True)
 
@@ -1159,10 +1140,9 @@ def _rewrite_partitions(spark: SparkSession, out_dir: str,
     sub = planned.filter(F.col("part_id").isin(affected))
     attempt = f"{tag}-{uuid.uuid4().hex[:8]}"
     name_fmt = _kernel_name_fmt(cfg, attempt, out_dir)
-    footers = sub.groupBy("part_id").applyInArrow(
-        _encode_kernel(out_dir, cfg, attempt, name_fmt), FOOTER_DDL)
-    # groupBy only yields groups that HAVE rows: partitions emptied by a
-    # delete never reach the kernel, so their zero-row parts are written
+    footers = encode_footers(sub, affected, out_dir, cfg, attempt, name_fmt)
+    # only part_ids that HAVE rows reach a kernel task: partitions
+    # emptied by a delete never do, so their zero-row parts are written
     # driver-side (metadata-scale: one small file per emptied pid)
     nonempty = {r.part_id for r in
                 sub.select("part_id").distinct().collect()}
@@ -1184,16 +1164,10 @@ def _empty_part_footer(out_dir: str, cfg: EngineConfig, attempt: str,
     import time as _time
 
     from skar_spark.codecs.framing import type_from_code
-    from skar_spark.engine.schema_evo import load_table_schema
+    from skar_spark.engine.schema_evo import table_schema
 
     t0 = _time.time()
-    tschema = load_table_schema(out_dir)
-    if tschema is None:
-        from skar_spark.engine.decode import list_part_files
-        from skar_spark.engine.partfile import read_footer
-        footer = read_footer(list_part_files(out_dir)[0])
-        tschema = (footer["columns"], footer["schema"])
-    tcols, ttypes = tschema
+    tcols, ttypes = table_schema(out_dir)
     body = pa.table(
         {c: pa.nulls(0, type_from_code(ttypes[c])) for c in tcols}
         | {"_host": pa.nulls(0, pa.string())})

@@ -34,6 +34,10 @@ from skar_spark.engine.bloom import SplitBlockBloom, bloom_from_keys, xxh64
 
 MAGIC = b"SKARSP01"
 
+# the row order inside every part (the encode kernel's lexsort, which
+# the zone maps rely on); recorded in each footer as "sort_keys"
+SORT_KEYS = ("host", "warc_ts", "url")
+
 
 def content_bytes(arr) -> int:
     """Exact logical content size of a (chunked) array: value bytes +
@@ -158,7 +162,7 @@ def write_part_file(path: str, table: pa.Table,
             "rows": n,
             "columns": cols,
             "schema": {c: typecode(table[c].type) for c in cols},
-            "sort_keys": list(cfg.sort_keys),
+            "sort_keys": list(SORT_KEYS),
             "rowgroups": rowgroups,
         }
         fj = json.dumps(footer, separators=(",", ":")).encode()

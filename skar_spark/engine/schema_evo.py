@@ -109,6 +109,23 @@ def load_table_schema(out_dir: str) -> tuple[list[str], dict[str, str]] | None:
     return doc["cols"], doc["types"]
 
 
+def table_schema(out_dir: str, files: list[str] | None = None
+                 ) -> tuple[list[str], dict[str, str]]:
+    """The schema a reader decodes with: the merged table schema, else
+    (pre-evolution tables) the fixed schema of the first part's footer.
+    `files` supplies that part; empty or None lists the table's parts."""
+    ts = load_table_schema(out_dir)
+    if ts is not None:
+        return ts
+    from skar_spark.engine.decode import list_part_files
+    from skar_spark.engine.partfile import read_footer
+    files = files or list_part_files(out_dir)
+    if not files:
+        raise FileNotFoundError(f"no part files under {out_dir}")
+    footer = read_footer(files[0])
+    return footer["columns"], footer["schema"]
+
+
 def update_table_schema(out_dir: str, cols: list[str],
                         types: dict[str, str]) -> tuple[list[str],
                                                         dict[str, str]]:

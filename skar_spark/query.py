@@ -52,7 +52,6 @@ from skar_spark.engine.decode import (
     prune_selections,
 )
 from skar_spark.engine.decode_schema import spark_ddl_for
-from skar_spark.engine.partfile import read_footer
 
 DEFAULT_MAX_ROWS = 50_000      # reference response_num_*_limit default
 DEFAULT_TIME_LIMIT_MS = 5_000  # reference query.time_limit_ms default
@@ -163,12 +162,8 @@ def run_query(spark: SparkSession, out_dir: str, query: dict) -> dict:
     # --- columns: requested fields + whatever the residual needs ------
     # merged table schema on evolved tables (engine/schema_evo.py);
     # first footer otherwise
-    from skar_spark.engine.schema_evo import load_table_schema
-    tsch = load_table_schema(out_dir)
-    if tsch is None:
-        footer = read_footer(files[0])
-        tsch = (footer["columns"], footer["schema"])
-    tcols, ttypes = tsch
+    from skar_spark.engine.schema_evo import table_schema
+    tcols, ttypes = table_schema(out_dir, files)
     fields = list(query.get("field_selection") or tcols + ["host"])
     need = set(fields)
     if any(s.get("hosts") or s.get("url_prefix")

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import PySparkRuntimeError
 from pyspark.sql import SparkSession
 
 
@@ -81,6 +82,13 @@ def get_spark(cpus: int | None = None, app: str = "skar_spark",
                       f"-Xms{exec_mem} -XX:+AlwaysPreTouch")
               .config("spark.driver.host",
                       os.environ.get("SPARK_LOCAL_IP", "127.0.0.1")))
-    spark = b.getOrCreate()
+    try:
+        spark = b.getOrCreate()
+    except PySparkRuntimeError as e:  # e.g. JAVA_GATEWAY_EXITED
+        raise RuntimeError(
+            f"Spark did not start on {master or f'local[{cpus}]'} with a "
+            f"{mem} driver heap ({type(e).__name__}: {e}). If the host "
+            "cannot commit that heap, set SKAR_DRIVER_MEM to a smaller "
+            "one (e.g. 4g); SPARK_GRAFT_CPUS sets the core count.") from e
     spark.sparkContext.setLogLevel("WARN")
     return spark

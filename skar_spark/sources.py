@@ -92,22 +92,12 @@ class SkarDataSource(DataSource):
         return [c.strip() for c in cols.split(",")] if cols else None
 
     def schema(self) -> str:
-        from skar_spark.engine.decode import list_part_files
         from skar_spark.engine.decode_schema import spark_ddl_for
-        from skar_spark.engine.partfile import read_footer
-        from skar_spark.engine.schema_evo import load_table_schema
+        from skar_spark.engine.schema_evo import table_schema
 
         # merged table schema if the table has evolved (Iceberg
         # add-column, engine/schema_evo.py); first footer otherwise
-        ts = load_table_schema(self.options["path"])
-        if ts is None:
-            files = list_part_files(self.options["path"])
-            if not files:
-                raise FileNotFoundError(
-                    f"no part files under {self.options['path']}")
-            footer = read_footer(files[0])
-            ts = (footer["columns"], footer["schema"])
-        tcols, ttypes = ts
+        tcols, ttypes = table_schema(self.options["path"])
         cols = self._cols() or tcols + ["host"]
         stored = [c for c in cols if c != "host"]
         ddl = spark_ddl_for(ttypes, stored)

@@ -6,8 +6,9 @@ flushes to parquet + index, and checkpoint-resume
 (skar/src/skar_runner.rs:107-158, 285-353; T1-T5 in SURVEY §2.7).
 
 Spark realization: `readStream` over the landing directory →
-`foreachBatch` running the same applyInArrow encode kernel per
-micro-batch (the analog of the hot→cold flush), with
+`foreachBatch` running the same encode dispatch as the batch writers
+(`encode.encode_footers`) per micro-batch (the analog of the hot→cold
+flush), with
 
 - exactly-once at the sink via Spark's streaming checkpoint (epoch ids)
   *plus* our per-partition lineage — double bookkeeping exactly like the
@@ -36,8 +37,7 @@ from pyspark.sql import functions as F
 
 from skar_spark.config import DEFAULT, EngineConfig
 from skar_spark.engine.encode import (
-    FOOTER_DDL,
-    _encode_kernel,
+    encode_footers,
     lineage_dir,
     plan_partitions,
 )
@@ -204,11 +204,10 @@ def stream_encode(spark: SparkSession, input_dir: str, out_dir: str,
         planned = plan_partitions(bdf, parts_per_batch, cfg)
         planned = planned.withColumn(
             "part_id", (F.col("part_id") + F.lit(base)).cast("int"))
-        footers = planned.groupBy("part_id").applyInArrow(
-            _encode_kernel(out_dir, cfg, f"epoch-{epoch_id}",
-                           name_fmt=f"part-e{int(epoch_id)}-{{pid:09d}}"
-                                    ".skar"),
-            FOOTER_DDL)
+        footers = encode_footers(
+            planned, list(range(base, base + parts_per_batch)), out_dir,
+            cfg, f"epoch-{epoch_id}",
+            f"part-e{int(epoch_id)}-{{pid:09d}}.skar")
         # sorted append, committed driver-side (metadata rows — see
         # encode.append_lineage_rows): keeps lineage row-group stats
         # usable as a seek index and avoids a per-epoch Spark write job
