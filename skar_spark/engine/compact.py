@@ -17,9 +17,10 @@ Semantics:
   sorting after every existing file), and re-encoded through the same
   codec-auto-selected kernel — blooms, zone maps, and checksums are
   rebuilt per compacted part;
-- the lineage table is rewritten in one atomic swap (temp + rename,
-  the vacuum discipline) to {untouched latest rows} ∪ {compacted
-  rows}, then the superseded small files are deleted;
+- the lineage table is read driver-side (encode.lineage_table) and
+  rewritten in one atomic swap (encode._swap_lineage, the vacuum
+  protocol with its own suffix pair) to {untouched latest rows} ∪
+  {compacted rows}, then the superseded small files are deleted;
 - the table is marked ARCHIVAL (`meta/compacted`) BEFORE any new file
   is written: the marker flips every reader to lineage-resolved
   membership (no directory-listing fast path), making the whole
@@ -39,19 +40,24 @@ Semantics:
 from __future__ import annotations
 
 import os
-import shutil
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from skar_spark.config import ARCHIVE, DEFAULT, EngineConfig
 from skar_spark.engine.encode import (
+    _SWAP_SUFFIXES,
+    LINEAGE_SCHEMA,
+    _conform,
     _meta_dir,
+    _swap_lineage,
     encode_footers,
     is_retained,
-    lineage_dir,
-    read_lineage,
+    latest_lineage,
+    lineage_table,
     with_host,
 )
 
@@ -126,27 +132,28 @@ def compact_parts(spark: SparkSession, out_dir: str,
         raise ValueError("compact_parts does not support "
                          "retain_superseded tables")
     small_rows = small_rows or cfg.target_partition_rows // 2
-    lin = read_lineage(spark, out_dir, latest=True)
+    # the lineage read casts every row to LINEAGE_SCHEMA, so a lineage
+    # of an incompatible older layout fails here, before the marker
+    lin = lineage_table(out_dir)
     if lin is None:
         raise FileNotFoundError(f"no lineage under {out_dir}")
-    lin = lin.filter(F.col("status") == "committed").cache()
-    cand = lin.filter(F.col("row_count") < small_rows) \
-        .select("file", "row_count").collect()
-    if len(cand) < min_parts:
-        lin.unpersist()
+    lin = latest_lineage(lin)
+    lin = lin.filter(pc.equal(lin["status"], "committed"))
+    cand = lin.filter(pc.less(lin["row_count"], small_rows))
+    if cand.num_rows < min_parts:
         return {"compacted_parts": 0, "new_parts": 0, "rows": 0}
-    files = [r.file for r in cand]
-    total_rows = sum(r.row_count for r in cand)
+    files = cand["file"].to_pylist()
+    total_rows = pc.sum(cand["row_count"]).as_py()
     n_new = max(1, -(-total_rows // cfg.target_partition_rows))
     hw = max((_file_part_index(f) for f in list_part_files(out_dir)),
              default=-1) + 1
     attempt = "compact-" + uuid.uuid4().hex[:8]
 
-    # build the ENTIRE lazy plan — including the lineage union, whose
-    # analysis validates schema compatibility — BEFORE the irreversible
-    # archival marker below: a table encoded by an older engine version
-    # (e.g. lineage without lang_bloom) must fail pre-flight while the
-    # table is still writable, not after the marker is durable
+    # build the ENTIRE lazy plan BEFORE the irreversible archival marker
+    # below: a table whose parts or lineage this version cannot read
+    # must fail pre-flight while the table is still writable, not after
+    # the marker is durable (older lineage merely lacking a column, e.g.
+    # lang_bloom, reads null-backfilled)
     # merged table schema: an evolved table (engine/schema_evo.py) has
     # parts written before a column existed — decode them null-filled so
     # the compacted parts all carry the CURRENT schema (Iceberg rewrite
@@ -175,24 +182,14 @@ def compact_parts(spark: SparkSession, out_dir: str,
                                  out_dir, enc_cfg, attempt,
                                  "part-{pid:06d}.skar")
 
-    # one atomic lineage swap: untouched latest rows + compacted rows.
-    # allowMissingColumns backfills nulls for footer columns an older
-    # lineage lacks (readers presence/null-guard every optional column,
-    # e.g. a null lang_bloom just can't prune) — analysis still raises
-    # here, pre-marker, on genuinely incompatible column types.
-    keep = lin.filter(~F.col("file").isin(files))
-    # schema_json is NOT a lineage column (append_lineage_rows strips it
-    # after feeding schema evolution — ADVICE r05): the compacted parts
-    # re-encode the table's already-merged schema (tcols/ttypes above),
-    # so nothing new to merge — drop it so lineage schema stays
-    # identical across write paths
-    newlin = keep.unionByName(new_footers.drop("schema_json"),
-                              allowMissingColumns=True)
+    keep = lin.filter(pc.invert(pc.is_in(lin["file"],
+                                         value_set=pa.array(files))))
 
     # archival marker BEFORE any new part file exists (part files are
-    # written only when `newlin` executes below): from this point every
-    # reader resolves membership through lineage (the directory-listing
-    # fast path is disabled), so in-progress compacted files and
+    # written only when `new_footers` is collected below): from this
+    # point every reader resolves membership through lineage (the
+    # directory-listing fast path is disabled), so in-progress compacted
+    # files and
     # not-yet-deleted small files can never be double-read — including
     # after a mid-compaction crash, where lineage still describes the
     # pre-compaction table exactly and a re-run allocates fresh pids
@@ -206,17 +203,14 @@ def compact_parts(spark: SparkSession, out_dir: str,
         # allocate — recorded so streaming appends can continue above it
         fh.write(json.dumps({"attempt": attempt,
                              "pid_high_water": hw + n_new}) + "\n")
-    path = lineage_dir(out_dir)
-    tmp, old = path + ".compact", path + ".precompact"
-    shutil.rmtree(tmp, ignore_errors=True)
-    # globally sorted by min_warc_ts (range-partitioned files): keeps
-    # the lineage seek index tight after compaction
-    newlin.sort("min_warc_ts").write.mode("overwrite").parquet(tmp)
-    lin.unpersist()
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
+    # one atomic lineage swap: untouched latest rows + compacted rows.
+    # schema_json is NOT a lineage column (ADVICE r05): the compacted
+    # parts re-encode the table's already-merged schema (tcols/ttypes
+    # above), so _conform drops it and the lineage schema stays
+    # identical across write paths
+    new = _conform(new_footers.toArrow(), LINEAGE_SCHEMA.names)
+    _swap_lineage(out_dir, pa.concat_tables([keep, new]),
+                  _SWAP_SUFFIXES[1])
 
     for f in files:
         try:

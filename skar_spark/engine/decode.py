@@ -6,14 +6,16 @@ index (db/mod.rs:217-305) → row-group selection via zone maps + blooms
 (data_provider.rs:112-119). Here:
 
 - partition pruning is DRIVER-LOCAL, the reference's single-node index
-  SEEK (db/mod.rs:217-305): one streamed pyarrow pass over the lineage
-  parquet (`_lineage_survivors`) tests zone maps, the host and lang
-  blooms and the numeric col_stats per partition, skipping whole lineage
-  row groups by their min/max_warc_ts stats on ts-filtered reads. No
-  Spark job is launched. Lineage fits on the driver because it holds one
-  row per PARTITION, not per document — about 10^6 rows at 10^12 docs —
-  and the pass keeps only {partition → file, verdict}, holding the
-  blooms of one lineage row group at a time;
+  SEEK (db/mod.rs:217-305): `_lineage_survivors` streams lineage
+  through the one lineage reader (`encode.lineage_row_groups`) and
+  tests zone maps, the host and lang blooms and the numeric col_stats
+  per partition, skipping whole lineage row groups by their
+  min/max_warc_ts stats on ts-filtered reads; membership follows the
+  one latest-attempt rule (`encode.newest_attempts`). No Spark job is
+  launched. Lineage fits on the driver because it holds one row per
+  PARTITION, not per document — about 10^6 rows at 10^12 docs — and
+  the pass keeps only {partition → file, verdict}, holding the blooms
+  of one lineage row group at a time;
 - per-disjunct pruning (`prune_selections`) mirrors prune_query
   (handler.rs:187-250): each (hosts, langs, ts_range) selection is
   tested against every partition's zone maps + blooms in the same pass,
@@ -26,7 +28,8 @@ Storage: all path IO flows through `engine.storage` (the object-store
 seam, VERDICT r04 item 2) — POSIX roots pass through to open/glob/
 rename; non-POSIX roots route listing, part-file byte IO, and lineage
 parquet through the storage primitives (tested end-to-end on the
-dir-backed ``mock://`` fake). Every layer above works on opaque path
+dir-backed ``mock://`` fake); the lineage reader fetches object-store
+lineage into a local cache. Every layer above works on opaque path
 strings.
 """
 
@@ -58,30 +61,19 @@ def list_part_files(out_dir: str) -> list[str]:
 def lineage_file_sets_local(out_dir: str
                             ) -> tuple[set[str], set[str]] | None:
     """(committed, all-recorded) file sets from lineage, read locally
-    (streamed pyarrow, no Spark job — safe in DataSource planning
+    (encode.lineage_table, no Spark job — safe in DataSource planning
     workers). Returns None when the table has no lineage directory at
     all (a brand-new table or a static hand-built dir, where the listing
     IS the membership); a lineage that exists but can't be read raises —
-    falling back to the raw listing would expose uncommitted files.
-    Heals an interrupted vacuum/compaction lineage swap first."""
-    import pyarrow.dataset as pads
+    falling back to the raw listing would expose uncommitted files."""
+    from skar_spark.engine.encode import lineage_table
 
-    from skar_spark.engine.encode import lineage_dir, recover_lineage_swap
-
-    recover_lineage_swap(out_dir)
-    ldir = lineage_dir(out_dir)
-    if not storage.dir_exists(ldir):
+    lin = lineage_table(out_dir, ["file", "status"])
+    if lin is None:
         return None
-    d = pads.dataset(storage.localize_dir(ldir), format="parquet")
-    committed: set[str] = set()
-    recorded: set[str] = set()
-    for b in d.to_batches(columns=["file", "status"]):
-        for f, s in zip(b.column("file").to_pylist(),
-                        b.column("status").to_pylist()):
-            recorded.add(f)
-            if s == "committed":
-                committed.add(f)
-    return committed, recorded
+    files = lin["file"].to_pylist()
+    return ({f for f, st in zip(files, lin["status"].to_pylist())
+             if st == "committed"}, set(files))
 
 
 def committed_files_local(out_dir: str) -> set[str] | None:
@@ -112,90 +104,17 @@ def hot_tail_files(out_dir: str) -> list[str]:
     return [f for f in list_part_files(out_dir) if f not in recorded]
 
 
-def _iter_lineage_rowgroups(ldir: str, cols: list[str],
-                            ts_range: tuple[int, int] | None,
-                            seek_stats: dict | None = None):
-    """Row-group-seeking lineage reader — the single-node analog of the
-    reference's keyed mdbx range cursor (db/mod.rs:217-305). Lineage is
-    written sorted by ``min_warc_ts`` (per batch/epoch file, globally
-    after vacuum/compaction), so each parquet row group's statistics
-    bound the partitions it describes; a ts-filtered planning pass reads
-    only the row groups that could contain surviving partitions instead
-    of streaming the whole lineage table. At 10^6 partitions this turns
-    per-query planning from O(#partitions) into O(matching row groups).
-
-    Skip rule (safe over-approximation of the per-row zone-map test): a
-    row group is skipped only when EVERY row fails the ts test —
-    min-of-min_warc_ts ≥ hi (each partition starts at/after the range
-    end) or max-of-max_warc_ts < lo (each ends before the range start).
-    Row groups with null stats or null ts rows are always read; with
-    ``ts_range=None`` every row group is read. Columns missing in older
-    lineage files (schema evolution) are null-filled.
-
-    `seek_stats`, when given, is filled with {"rg_total", "rg_read"}
-    counters (test/observability hook)."""
-    import pyarrow.parquet as pq
-
-    def _us(v):
-        # parquet timestamp stats arrive as datetime (tz-aware or not)
-        if hasattr(v, "timestamp"):
-            import datetime as _dt
-            if v.tzinfo is None:
-                v = v.replace(tzinfo=_dt.timezone.utc)
-            return v.timestamp() * 1e6
-        return float(v)
-
-    if seek_stats is not None:
-        seek_stats.setdefault("rg_total", 0)
-        seek_stats.setdefault("rg_read", 0)
-    lo_q, hi_q = (ts_range if ts_range is not None else (None, None))
-    for fp in sorted(glob.glob(os.path.join(ldir, "*.parquet"))):
-        pf = pq.ParquetFile(fp)
-        md = pf.metadata
-        names = [md.row_group(0).column(j).path_in_schema
-                 for j in range(md.num_columns)] if md.num_row_groups \
-            else []
-        have = [c for c in cols if c in names]
-        ci_lo = names.index("min_warc_ts") if "min_warc_ts" in names \
-            else None
-        ci_hi = names.index("max_warc_ts") if "max_warc_ts" in names \
-            else None
-        for rg in range(md.num_row_groups):
-            if seek_stats is not None:
-                seek_stats["rg_total"] += 1
-            if ts_range is not None and ci_lo is not None \
-                    and ci_hi is not None:
-                s_lo = md.row_group(rg).column(ci_lo).statistics
-                s_hi = md.row_group(rg).column(ci_hi).statistics
-                if (s_lo is not None and s_hi is not None
-                        and s_lo.has_min_max and s_hi.has_min_max
-                        and not s_lo.null_count and not s_hi.null_count
-                        and (_us(s_lo.min) >= hi_q
-                             or _us(s_hi.max) < lo_q)):
-                    continue  # no partition in this row group survives
-            if seek_stats is not None:
-                seek_stats["rg_read"] += 1
-            t = pf.read_row_group(rg, columns=have)
-            for c in cols:  # null-backfill columns older files lack
-                if c not in t.column_names:
-                    t = t.append_column(
-                        c, pa.nulls(t.num_rows, pa.binary()
-                                    if c.endswith("bloom")
-                                    else pa.string()))
-            yield from t.select(cols).to_batches()
-
-
 def _lineage_survivors(out_dir: str, disjuncts: list[dict],
                        as_of: float | None = None,
                        seek_stats: dict | None = None
                        ) -> dict[str, list[int]] | None:
     """THE pruning pass: one driver-local stream over the lineage
-    parquet, the analog of the reference's single-node index seek
-    (db/mod.rs:217-305). Returns {file: [indices of the disjuncts the
-    file's partition may satisfy]} for the files at least one disjunct
-    keeps, or None when the table has no readable lineage (the caller
-    applies the listing policy, `_listing_membership`). Lineage is
-    readable when its directory holds at least one parquet file.
+    (encode.lineage_row_groups), the analog of the reference's
+    single-node index seek (db/mod.rs:217-305). Returns {file: [indices
+    of the disjuncts the file's partition may satisfy]} for the files at
+    least one disjunct keeps, or None when the table has no lineage
+    directory (the caller applies the listing policy,
+    `_listing_membership`).
 
     Each disjunct is conjunctive: ``ts_range`` (lo_us, hi_us) against
     the min/max_warc_ts zone maps; ``blooms``, a list of (lineage bloom
@@ -205,17 +124,13 @@ def _lineage_survivors(out_dir: str, disjuncts: list[dict],
     null bloom, missing bloom column, no stats for the column) never
     prunes.
 
-    Membership is resolved per ``partition_id`` with read_lineage's
-    order — ``committed_at`` desc nulls last, then ``attempt_id`` desc —
-    over the attempts committed at or before `as_of` when given. Only
-    {partition_id → (order key, file, kept disjuncts)} is retained, so
+    Membership is resolved per ``partition_id`` by read_lineage's rule
+    (encode.newest_attempts), folded one row group at a time over the
+    attempts committed at or before `as_of` when given. Only
+    {partition_id → (order key, file, kept disjuncts)} is kept, so
     memory stays O(#partitions) strings plus one lineage row group's
-    blooms.
-
-    Lineage holds one row per partition (about 10^6 rows at 10^12 docs),
-    so this runs on the driver with no Spark job; ts-filtered passes on
-    live tables also skip whole lineage row groups
-    (`_iter_lineage_rowgroups`)."""
+    blooms. ts-filtered passes on live tables also skip whole lineage
+    row groups (the reader's seek)."""
     import json
 
     import numpy as np
@@ -223,17 +138,10 @@ def _lineage_survivors(out_dir: str, disjuncts: list[dict],
     from skar_spark.engine.bloom import bloom_might_contain
     from skar_spark.engine.encode import (
         is_retained,
-        lineage_dir,
-        recover_lineage_swap,
+        lineage_row_groups,
+        newest_attempts,
     )
 
-    recover_lineage_swap(out_dir)  # heal an interrupted vacuum/compact
-    ldir = lineage_dir(out_dir)
-    if not storage.dir_exists(ldir):
-        return None
-    ldir = storage.localize_dir(ldir)
-    if not glob.glob(os.path.join(ldir, "*.parquet")):
-        return None
     bloom_cols = sorted({c for d in disjuncts for c, _v in d["blooms"]})
     use_stats = any(d.get("col_range") for d in disjuncts)
     cols = ["partition_id", "file", "min_warc_ts", "max_warc_ts",
@@ -281,8 +189,12 @@ def _lineage_survivors(out_dir: str, disjuncts: list[dict],
             return True  # no stats for the column: can't prune
         return float(mm[1]) >= lo and float(mm[0]) < hi
 
-    latest: dict[int, tuple[tuple, str, list[int]]] = {}
-    for batch in _iter_lineage_rowgroups(ldir, cols, seek, seek_stats):
+    rgs = lineage_row_groups(out_dir, cols, seek, seek_stats)
+    if rgs is None:
+        return None
+    seen: dict[int, tuple] = {}
+    latest: dict[int, tuple[str, list[int]]] = {}
+    for batch in rgs:
         n = batch.num_rows
         if n == 0:
             continue
@@ -294,21 +206,10 @@ def _lineage_survivors(out_dir: str, disjuncts: list[dict],
             else ~known | ~((lo >= d["ts_range"][1])
                             | (hi < d["ts_range"][0]))
             for d in disjuncts]
-        row = {c: batch.column(c).to_pylist() for c in
-               ("partition_id", "file", "committed_at", "attempt_id")}
-        if use_stats:
-            row["col_stats"] = batch.column("col_stats").to_pylist()
-        for i in range(n):  # per PARTITION metadata row, not per data row
-            committed = row["committed_at"][i]
-            if as_of is not None and (committed is None
-                                      or committed > as_of):
-                continue  # attempt is outside the requested snapshot
-            attempt = row["attempt_id"][i]
-            key = (committed is not None, committed or 0.0,
-                   attempt is not None, attempt or "")
-            prev = latest.get(row["partition_id"][i])
-            if prev is not None and key < prev[0]:
-                continue  # an older attempt of a resolved partition
+        files = batch.column("file").to_pylist()
+        stats = batch.column("col_stats").to_pylist() if use_stats else None
+        # per PARTITION metadata row, not per data row
+        for pid, i in newest_attempts(batch, as_of, seen).items():
             kept = []
             for j, d in enumerate(disjuncts):
                 if not ts_keep[j][i]:
@@ -317,19 +218,18 @@ def _lineage_survivors(out_dir: str, disjuncts: list[dict],
                            for c, vals in d["blooms"]):
                     continue
                 if d.get("col_range") and not _stats_ok(
-                        row["col_stats"][i], d["col_range"]):
+                        stats[i], d["col_range"]):
                     continue
                 kept.append(j)
-            latest[row["partition_id"][i]] = (key, row["file"][i], kept)
-    return {f: kept for (_key, f, kept) in latest.values() if kept}
+            latest[pid] = (files[i], kept)
+    return {f: kept for f, kept in latest.values() if kept}
 
 
 def _listing_membership(out_dir: str) -> list[str]:
-    """Membership of a table without readable lineage: the listing —
+    """Membership of a table without a lineage directory: the listing —
     except on a table where files may have been deleted (snapshot
     retention / compaction), which MUST resolve membership through
-    lineage; an unreadable lineage there (e.g. a vacuum swap in flight)
-    would otherwise over-approximate to every attempt of every
+    lineage; a missing lineage there would otherwise over-approximate to every attempt of every
     partition. Fail loudly instead of duplicating rows."""
     from skar_spark.engine.compact import is_compacted
     from skar_spark.engine.encode import is_retained
@@ -376,7 +276,7 @@ def prune_partitions(out_dir: str,
     the read kernel. Plain tables only.
 
     `seek_stats` is filled with the lineage row-group counters
-    (`_iter_lineage_rowgroups`) whenever lineage is read."""
+    (`encode.lineage_row_groups`) whenever lineage is read."""
     from skar_spark.engine.compact import is_compacted
     from skar_spark.engine.encode import is_retained
 

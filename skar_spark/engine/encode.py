@@ -60,8 +60,53 @@ FOOTER_DDL = (
     "sort_sec double, encode_sec double, meta_sec double, file string, "
     "committed_at double, schema_json string, col_stats string"
 )
+# one lineage row per footer row, minus schema_json (merged into
+# meta/schema.json at commit time, never stored in lineage)
+LINEAGE_DDL = ", ".join(f for f in FOOTER_DDL.split(", ")
+                        if not f.startswith("schema_json "))
+SALT_MAP_DDL = "host string, n_salts int, chunk_bytes long"
+
+
+def _arrow_schema(ddl: str) -> pa.Schema:
+    types = {"int": pa.int32(), "long": pa.int64(), "double": pa.float64(),
+             "string": pa.string(), "binary": pa.binary(),
+             "timestamp": pa.timestamp("us", tz="UTC")}
+    return pa.schema([(n, types[t]) for n, t in
+                      (f.split() for f in ddl.split(", "))])
+
+
+LINEAGE_SCHEMA = _arrow_schema(LINEAGE_DDL)
+# rows per lineage parquet row group: each group's min/max_warc_ts
+# stats are one entry of the seek index (lineage_row_groups)
+LINEAGE_ROW_GROUP_ROWS = 1024
 
 HOST_RE = r"^[a-z][a-z0-9+.-]*://([^/?#]*).*$"
+
+
+def _conform(t: pa.Table, cols: list[str]) -> pa.Table:
+    """`t` as the lineage columns `cols` with their declared types.
+    Columns an older lineage file (or a hand-built footer) lacks are
+    null-backfilled; the rest are cast, so an incompatible stored type
+    raises."""
+    return pa.table({
+        c: (t[c].cast(LINEAGE_SCHEMA.field(c).type) if c in t.column_names
+            else pa.nulls(t.num_rows, LINEAGE_SCHEMA.field(c).type))
+        for c in cols})
+
+
+def _put_lineage(path: str, t: pa.Table) -> None:
+    """PUT one lineage parquet object, rows sorted by ``min_warc_ts``
+    (nulls last) so its row-group stats form a seek index over the
+    index itself (lineage_row_groups)."""
+    import io
+
+    import pyarrow.parquet as pq
+
+    buf = io.BytesIO()
+    pq.write_table(t.sort_by("min_warc_ts"), buf,
+                   row_group_size=LINEAGE_ROW_GROUP_ROWS)
+    storage.put_bytes(path, buf.getvalue())
+
 
 def append_lineage_rows(footers: "DataFrame", out_dir: str) -> int:
     """Commit one batch/epoch's lineage rows.
@@ -72,25 +117,16 @@ def append_lineage_rows(footers: "DataFrame", out_dir: str) -> int:
     serial barrier per batch: it costs the same at every cluster size,
     which makes it an Amdahl term the N→4N scaling ratio pays directly
     (measured r5: ~1s × 5 batches ≈ 15% of the 4N leg's 40s wall but
-    only ~5% of the N leg's 130s). Instead: collect the rows (this
-    runs the encode kernel job — the same single job the write used to
-    trigger), sort driver-side by ``min_warc_ts`` (keeps the lineage
-    row-group seek index tight, decode._iter_lineage_rowgroups), and
-    PUT one parquet object through the storage seam (atomic temp+rename
-    / object PUT — and no local spool needed on object stores).
+    only ~5% of the N leg's 130s). Instead: collect the rows as Arrow
+    (this runs the encode kernel job — the same single job the write
+    used to trigger) and PUT them as one sorted parquet object through
+    the storage seam (atomic temp+rename / object PUT — and no local
+    spool needed on object stores).
 
     Returns the number of rows committed."""
-    import datetime as _dt
-    import io
-
-    import pyarrow.parquet as _pq
-
-    rows = footers.collect()   # metadata rows, never data rows
-    if not rows:
+    t = footers.toArrow()   # metadata rows, never data rows
+    if not t.num_rows:
         return 0
-    rows.sort(key=lambda r: (r.min_warc_ts is None,
-                             r.min_warc_ts or _dt.datetime.min))
-
     # schema evolution (engine/schema_evo.py): merge this batch's part
     # schemas into the table schema EXACTLY at commit time — a reader
     # never sees a column before the data carrying it is queryable.
@@ -99,70 +135,15 @@ def append_lineage_rows(footers: "DataFrame", out_dir: str) -> int:
     import json
 
     from skar_spark.engine.schema_evo import update_table_schema
-    for r in rows:
-        sj = getattr(r, "schema_json", None)
-        if sj:
+    if "schema_json" in t.column_names:
+        sj = next((v for v in t["schema_json"].to_pylist() if v), None)
+        if sj:  # one batch shares one input schema
             s = json.loads(sj)
             update_table_schema(out_dir, s["cols"], s["types"])
-            break  # one batch shares one input schema
-
-    def _ts(vals):
-        out = []
-        for v in vals:
-            if v is None:
-                out.append(None)
-            elif v.tzinfo is None:
-                # Spark collects timestamps as naive datetimes in the
-                # session timezone (UTC for this engine)
-                out.append(v.replace(tzinfo=_dt.timezone.utc))
-            else:
-                out.append(v)
-        return pa.array(out, pa.timestamp("us", tz="UTC"))
-
-    def _bin(vals):
-        return pa.array([None if v is None else bytes(v) for v in vals],
-                        pa.binary())
-
-    t = pa.table({
-        "partition_id": pa.array([r.partition_id for r in rows],
-                                 pa.int32()),
-        "attempt_id": pa.array([r.attempt_id for r in rows], pa.string()),
-        "status": pa.array([r.status for r in rows], pa.string()),
-        "row_count": pa.array([r.row_count for r in rows], pa.int64()),
-        "codec_choices": pa.array([r.codec_choices for r in rows],
-                                  pa.string()),
-        "bytes_in": pa.array([r.bytes_in for r in rows], pa.int64()),
-        "bytes_out": pa.array([r.bytes_out for r in rows], pa.int64()),
-        "min_warc_ts": _ts([r.min_warc_ts for r in rows]),
-        "max_warc_ts": _ts([r.max_warc_ts for r in rows]),
-        "n_hosts": pa.array([r.n_hosts for r in rows], pa.int32()),
-        "n_row_groups": pa.array([r.n_row_groups for r in rows],
-                                 pa.int32()),
-        "host_bloom": _bin([r.host_bloom for r in rows]),
-        "lang_bloom": _bin([r.lang_bloom for r in rows]),
-        "text_checksum": _bin([r.text_checksum for r in rows]),
-        "sort_sec": pa.array([r.sort_sec for r in rows], pa.float64()),
-        "encode_sec": pa.array([r.encode_sec for r in rows],
-                               pa.float64()),
-        "meta_sec": pa.array([r.meta_sec for r in rows], pa.float64()),
-        "file": pa.array([r.file for r in rows], pa.string()),
-        "committed_at": pa.array([r.committed_at for r in rows],
-                                 pa.float64()),
-        # numeric zone maps for non-layout columns (None for rows from
-        # pre-evolution kernels/tests — readers treat null as "no
-        # stats, not prunable")
-        "col_stats": pa.array([getattr(r, "col_stats", None)
-                               for r in rows], pa.string()),
-    })
-    buf = io.BytesIO()
-    _pq.write_table(t, buf)
-    storage.put_bytes(
-        os.path.join(lineage_dir(out_dir),
-                     f"batch-{uuid.uuid4().hex[:12]}.parquet"),
-        buf.getvalue())
-    return len(rows)
-
-
+    _put_lineage(os.path.join(lineage_dir(out_dir),
+                              f"batch-{uuid.uuid4().hex[:12]}.parquet"),
+                 _conform(t, LINEAGE_SCHEMA.names))
+    return t.num_rows
 
 
 def with_host(df: DataFrame) -> DataFrame:
@@ -193,11 +174,6 @@ def salt_map(df: DataFrame, cfg: EngineConfig,
     salted chunk) additionally drives deterministic bin-packing of heavy
     chunks across partitions (plan_partitions)."""
     hc = host_counts if host_counts is not None else host_stats(df)
-    if "bytes" not in hc.columns:  # legacy row-count-only stats
-        return (hc.filter(F.col("count") > cfg.salt_threshold_rows)
-                .select("host",
-                        F.ceil(F.col("count") / cfg.salt_threshold_rows)
-                        .cast("int").alias("n_salts")))
     tot = hc.agg(F.sum("count"), F.sum("bytes")).collect()[0]
     avg_row = (tot[1] or 1) / max(tot[0] or 1, 1)
     thr_bytes = float(cfg.salt_threshold_rows) * avg_row
@@ -519,11 +495,10 @@ def lineage_dir(out_dir: str) -> str:
     return os.path.join(out_dir, "lineage")
 
 
-# (tmp, old) directory-name suffixes used by the two lineage-rewrite
-# operations (vacuum and compact_parts). Both swap via
-#   write tmp → rename(path, old) → rename(tmp, path) → rmtree(old)
-# so a crash between the two renames leaves BOTH tmp and old but no
-# lineage dir.
+# (tmp, old) directory-name suffixes of the lineage rewrites
+# (_swap_lineage): vacuum and rollback use the first pair, compact_parts
+# the second. A crash between the two renames leaves BOTH tmp and old
+# but no lineage dir.
 _SWAP_SUFFIXES = ((".vacuum", ".expired"), (".compact", ".precompact"))
 
 
@@ -585,6 +560,27 @@ def recover_lineage_swap(out_dir: str) -> None:
             return
 
 
+def _swap_lineage(out_dir: str, t: pa.Table,
+                  suffixes: tuple[str, str]) -> None:
+    """Atomically replace the lineage table by `t` — THE rewrite of
+    vacuum, rollback and compaction: write tmp → rename(path, old) →
+    rename(tmp, path) → remove old, with the operation's
+    ``_SWAP_SUFFIXES`` pair, so recover_lineage_swap heals a crash at
+    any step. `t` is written sorted by ``min_warc_ts`` in
+    LINEAGE_ROW_GROUP_ROWS-row groups, so the rewritten lineage stays
+    seek-able (lineage_row_groups)."""
+    import shutil
+
+    path = lineage_dir(out_dir)
+    tmp, old = path + suffixes[0], path + suffixes[1]
+    shutil.rmtree(tmp, ignore_errors=True)
+    _put_lineage(os.path.join(tmp, "lineage.parquet"), t)
+    shutil.rmtree(old, ignore_errors=True)
+    os.rename(path, old)
+    os.rename(tmp, path)
+    shutil.rmtree(old, ignore_errors=True)
+
+
 def _meta_dir(out_dir: str) -> str:
     return os.path.join(out_dir, "meta")
 
@@ -605,6 +601,10 @@ def load_plan_meta(out_dir: str) -> dict | None:
         return None
 
 
+def _salt_map_dir(out_dir: str) -> str:
+    return os.path.join(_meta_dir(out_dir), "salt_map")
+
+
 def save_salt_map(spark: SparkSession, out_dir: str,
                   sm: DataFrame) -> list:
     """Persist the salt map and return its collected rows.
@@ -613,67 +613,187 @@ def save_salt_map(spark: SparkSession, out_dir: str,
     write job + read-back just to land it was a fixed ~0.5-1 s serial
     barrier per encode (the append_lineage_rows lesson); instead
     collect the rows and PUT one parquet object through the storage
-    seam. load_salt_map reads the same directory unchanged."""
+    seam."""
     import io
 
     import pyarrow.parquet as _pq
 
     rows = sm.collect()
-    cols: dict = {
-        "host": pa.array([r.host for r in rows], pa.string()),
-        "n_salts": pa.array([r.n_salts for r in rows], pa.int32()),
-    }
-    if "chunk_bytes" in sm.columns:
-        cols["chunk_bytes"] = pa.array(
-            [r.chunk_bytes for r in rows], pa.int64())
     buf = io.BytesIO()
-    _pq.write_table(pa.table(cols), buf)
-    sm_dir = os.path.join(_meta_dir(out_dir), "salt_map")
-    storage.remove_prefix(sm_dir)
-    storage.put_bytes(os.path.join(sm_dir, "salt-map.parquet"),
-                      buf.getvalue())
+    _pq.write_table(pa.Table.from_pylist([r.asDict() for r in rows],
+                                         _arrow_schema(SALT_MAP_DDL)), buf)
+    storage.remove_prefix(_salt_map_dir(out_dir))
+    storage.put_bytes(os.path.join(_salt_map_dir(out_dir),
+                                   "salt-map.parquet"), buf.getvalue())
     return rows
 
 
 def load_salt_map(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    try:
-        return storage.spark_read_parquet(
-            spark, os.path.join(_meta_dir(out_dir), "salt_map"))
-    except Exception:
+    """The persisted salt map, read driver-side (no Spark job), or None.
+    Every parquet object under the salt-map prefix is read, so maps an
+    older version wrote as a Spark parquet directory load too."""
+    import pyarrow.parquet as _pq
+
+    keys = [k for k in storage.list_prefix(_salt_map_dir(out_dir))
+            if k.endswith(".parquet")]
+    if not keys:
         return None
+    return spark.createDataFrame(pa.concat_tables(
+        [_pq.read_table(pa.BufferReader(storage.get_bytes(k)))
+         for k in keys]))
+
+
+def lineage_row_groups(out_dir: str, cols: list[str] | None = None,
+                       ts_range: tuple[int, int] | None = None,
+                       seek_stats: dict | None = None):
+    """THE lineage reader: every lineage read (read_lineage, the pruning
+    pass, the metadata decisions) is one driver-local pass through it,
+    the single-node analog of the reference's keyed mdbx range cursor
+    (db/mod.rs:217-305). Lineage holds one row per PARTITION (about
+    10^6 rows at 10^12 docs), so no Spark job is needed.
+
+    Returns None when the table has no lineage directory (a brand-new
+    table, or a static hand-built dir whose listing IS the membership);
+    otherwise an iterator of one table per lineage parquet row group,
+    with columns `cols` (default: all of LINEAGE_SCHEMA) of their
+    declared types (`_conform`). An interrupted vacuum/rollback/
+    compaction swap is healed first, and object-store lineage is
+    fetched to a local cache.
+
+    Seek: lineage is written sorted by ``min_warc_ts`` (per batch/epoch
+    object, globally after a swap), so each row group's statistics
+    bound the partitions it describes. With `ts_range` (lo_us, hi_us) a
+    row group is skipped only when EVERY row fails the ts test —
+    min-of-min_warc_ts ≥ hi or max-of-max_warc_ts < lo; row groups with
+    null stats or null ts rows are always read. `seek_stats`, when
+    given, is filled with {"rg_total", "rg_read"} counters."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    def _us(v):  # parquet timestamp stats arrive as datetime (tz or not)
+        if not hasattr(v, "timestamp"):
+            return float(v)
+        import datetime as _dt
+        return v.replace(tzinfo=v.tzinfo or _dt.timezone.utc) \
+            .timestamp() * 1e6
+
+    def _row_groups(files, cols):
+        for fp in files:
+            pf = pq.ParquetFile(fp)
+            md = pf.metadata
+            names = [md.schema.column(j).path for j in range(md.num_columns)]
+            ci = [names.index(c) if c in names else None
+                  for c in ("min_warc_ts", "max_warc_ts")]
+            for rg in range(md.num_row_groups):
+                if seek_stats is not None:
+                    seek_stats["rg_total"] += 1
+                if ts_range is not None and None not in ci:
+                    s_lo, s_hi = (md.row_group(rg).column(j).statistics
+                                  for j in ci)
+                    if (s_lo is not None and s_hi is not None
+                            and s_lo.has_min_max and s_hi.has_min_max
+                            and not s_lo.null_count and not s_hi.null_count
+                            and (_us(s_lo.min) >= ts_range[1]
+                                 or _us(s_hi.max) < ts_range[0])):
+                        continue  # no partition in this row group survives
+                if seek_stats is not None:
+                    seek_stats["rg_read"] += 1
+                yield _conform(pf.read_row_group(
+                    rg, columns=[c for c in cols if c in names]), cols)
+
+    recover_lineage_swap(out_dir)  # complete any interrupted swap first
+    ldir = lineage_dir(out_dir)
+    if not storage.dir_exists(ldir):
+        return None
+    if seek_stats is not None:
+        seek_stats.setdefault("rg_total", 0)
+        seek_stats.setdefault("rg_read", 0)
+    return _row_groups(
+        sorted(glob.glob(os.path.join(storage.localize_dir(ldir),
+                                      "*.parquet"))),
+        cols or LINEAGE_SCHEMA.names)
+
+
+def lineage_table(out_dir: str, cols: list[str] | None = None
+                  ) -> pa.Table | None:
+    """Every lineage row (columns `cols`, default all) as one local
+    table; None when the table has no lineage directory."""
+    rgs = lineage_row_groups(out_dir, cols)
+    if rgs is None:
+        return None
+    cols = cols or LINEAGE_SCHEMA.names
+    return pa.concat_tables([LINEAGE_SCHEMA.empty_table().select(cols),
+                             *rgs])
+
+
+def attempt_order(committed_at: float | None, attempt_id: str | None,
+                  as_of: float | None = None) -> tuple | None:
+    """THE latest-attempt rule, as the order key of one lineage row
+    (higher is newer): ``committed_at`` desc with nulls last, then
+    ``attempt_id`` desc; None when the row is outside the `as_of`
+    snapshot (committed after it, or never: a null commit time)."""
+    if as_of is not None and (committed_at is None or committed_at > as_of):
+        return None
+    return (committed_at is not None, committed_at or 0.0,
+            attempt_id is not None, attempt_id or "")
+
+
+def newest_attempts(t: pa.Table, as_of: float | None = None,
+                    seen: dict | None = None) -> dict[int, int]:
+    """{partition_id: row index in `t`} of each partition's newest
+    attempt by `attempt_order`. `seen` (partition_id → order key) carries
+    the winners of earlier row groups across calls, so a streamed pass
+    folds one row group at a time; a partition whose winner so far is
+    newer than all its rows in `t` is absent from the result. Equal keys
+    resolve to the later row."""
+    seen = {} if seen is None else seen
+    out: dict[int, int] = {}
+    for i, (pid, committed, attempt) in enumerate(zip(
+            t["partition_id"].to_pylist(), t["committed_at"].to_pylist(),
+            t["attempt_id"].to_pylist())):
+        key = attempt_order(committed, attempt, as_of)
+        if key is None or (pid in seen and key < seen[pid]):
+            continue
+        seen[pid] = key
+        out[pid] = i
+    return out
+
+
+def latest_lineage(t: pa.Table, as_of: float | None = None) -> pa.Table:
+    """The rows of `t` that are their partition's newest attempt."""
+    return t.take(pa.array(sorted(newest_attempts(t, as_of).values()),
+                           pa.int64()))
 
 
 def read_lineage(spark: SparkSession, out_dir: str,
                  latest: bool = False,
                  as_of: float | None = None) -> DataFrame | None:
-    """Read the lineage table. `latest=True` keeps only the newest
-    committed attempt per partition_id (re-encodes after a failed
-    validation supersede their predecessors by `committed_at`), so
-    aggregates and pruning never double-count a partition.
+    """The lineage table as a DataFrame (LINEAGE_DDL), or None when the
+    table has no lineage directory. `latest=True` keeps only the newest
+    attempt per partition_id (`attempt_order`: re-encodes, late data,
+    merges and deletes supersede their predecessors), so aggregates
+    never double-count a partition.
 
     `as_of` (unix seconds) restricts to attempts committed at or before
     that instant — with `latest=True` this is the snapshot view of the
     table as of that time (Iceberg time-travel semantics, native on the
     lineage table; usable for reads when the table was encoded with
     ``EngineConfig.retain_superseded=True`` so superseded part files
-    still exist)."""
-    recover_lineage_swap(out_dir)  # complete any interrupted swap first
-    path = lineage_dir(out_dir)
-    try:
-        lin = storage.spark_read_parquet(spark, path)
-    except Exception:
+    still exist).
+
+    The rows are read driver-side (lineage_row_groups) when called and
+    handed to Spark as a local relation: no Spark job runs here."""
+    t = lineage_table(out_dir)
+    if t is None:
         return None
-    if as_of is not None:
-        lin = lin.filter(F.col("committed_at").isNotNull()
-                         & (F.col("committed_at") <= F.lit(float(as_of))))
-    if not latest:
-        return lin
-    from pyspark.sql.window import Window
-    w = Window.partitionBy("partition_id").orderBy(
-        F.col("committed_at").desc_nulls_last(),
-        F.col("attempt_id").desc())
-    return (lin.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1).drop("_rn"))
+    if latest:
+        t = latest_lineage(t, as_of)
+    elif as_of is not None:
+        t = t.filter(pa.array(
+            [attempt_order(c, None, as_of) is not None
+             for c in t["committed_at"].to_pylist()], pa.bool_()))
+    return spark.createDataFrame(t, LINEAGE_DDL)
 
 
 def _kernel_name_fmt(cfg: EngineConfig, attempt: str, out_dir: str) -> str:
@@ -738,37 +858,23 @@ def vacuum(spark: SparkSession, out_dir: str) -> list[str]:
     no longer possible afterwards; the current view is untouched. Files
     in the parts directory that lineage never recorded are left alone.
 
-    Crash safety: the lineage rewrite is a temp-dir + two-rename swap;
-    a crash between the renames is healed on the next read by
-    ``recover_lineage_swap`` (roll forward to the fully-written new
-    copy), so lineage is readable at every interruption point. A crash
-    before the file deletes below leaves superseded files on disk as
-    unreferenced orphans — never read (lineage is the membership source
-    of truth); they cost disk space only."""
-    import shutil
-
+    Driver-local: lineage is read once (lineage_table) and rewritten
+    by ``_swap_lineage`` with no Spark job. Crash safety: the swap is a
+    temp-dir + two-rename protocol; a crash between the renames is
+    healed on the next read by ``recover_lineage_swap`` (roll forward to
+    the fully-written new copy), so lineage is readable at every
+    interruption point. A crash before the file deletes below leaves
+    superseded files on disk as unreferenced orphans — never read
+    (lineage is the membership source of truth); they cost disk space
+    only."""
     storage.require_posix(out_dir, "vacuum")
-    lin_all = read_lineage(spark, out_dir)
-    if lin_all is None:
+    lin = lineage_table(out_dir)
+    if lin is None:
         return []
-    latest = read_lineage(spark, out_dir, latest=True)
-    keep = {r.file for r in latest.select("file").distinct().collect()}
-    ever = {r.file for r in lin_all.select("file").distinct().collect()}
-    dead = sorted(ever - keep)
-
-    # rewrite lineage to the latest view via temp-dir + rename (the same
-    # atomic-publish discipline as part files)
-    path = lineage_dir(out_dir)
-    tmp, old = path + ".vacuum", path + ".expired"
-    shutil.rmtree(tmp, ignore_errors=True)
-    # sorted rewrite: keeps lineage row-group stats seek-able (the
-    # mdbx-range-cursor analog in decode._iter_lineage_rowgroups)
-    latest.sort("min_warc_ts").write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
-
+    latest = latest_lineage(lin)
+    dead = sorted(set(lin["file"].to_pylist())
+                  - set(latest["file"].to_pylist()))
+    _swap_lineage(out_dir, latest, _SWAP_SUFFIXES[0])
     for f in dead:
         try:
             os.remove(f)
@@ -778,12 +884,12 @@ def vacuum(spark: SparkSession, out_dir: str) -> list[str]:
 
 
 def completed_part_ids(spark: SparkSession, out_dir: str) -> set[int]:
-    lin = read_lineage(spark, out_dir)
+    lin = lineage_table(out_dir, ["partition_id", "status"])
     if lin is None:
         return set()
-    return {r.partition_id for r in
-            lin.filter(F.col("status") == "committed")
-               .select("partition_id").distinct().collect()}
+    return {p for p, st in zip(lin["partition_id"].to_pylist(),
+                               lin["status"].to_pylist())
+            if st == "committed"}
 
 
 def append_documents(spark: SparkSession, df: DataFrame, out_dir: str,
@@ -808,7 +914,7 @@ def append_documents(spark: SparkSession, df: DataFrame, out_dir: str,
 
     from skar_spark.engine.compact import compaction_high_water
 
-    lin = read_lineage(spark, out_dir)
+    lin = lineage_table(out_dir, ["partition_id"])
     if lin is None:
         raise FileNotFoundError(
             f"{out_dir} has no lineage; append_documents requires an "
@@ -824,8 +930,8 @@ def append_documents(spark: SparkSession, df: DataFrame, out_dir: str,
         raise ValueError(
             "append_documents supports hash-scheme tables only; "
             "day_hash tables take late data via reencode_late")
-    mx = lin.agg(F.max("partition_id").alias("m")).collect()[0].m or 0
-    base = max(int(mx), int(compaction_high_water(out_dir) or 0)) + 1
+    mx = pc.max(lin["partition_id"]).as_py() or 0
+    base = max(mx, int(compaction_high_water(out_dir) or 0)) + 1
     if parts is None:
         n = df.count()
         if n == 0:
@@ -871,7 +977,7 @@ def encode_documents(spark: SparkSession, df: DataFrame, out_dir: str,
     # committed table must not clobber the persisted salt map / plan.json
     # (replan state) with values computed from the NEW input — a later
     # resume/rollback would replan with wrong partition membership
-    if not resume and read_lineage(spark, out_dir) is not None:
+    if not resume and lineage_row_groups(out_dir) is not None:
         raise FileExistsError(
             f"{out_dir} already has lineage; pass resume=True to "
             "continue it, or clear the directory for a fresh encode")
@@ -935,7 +1041,7 @@ def encode_documents(spark: SparkSession, df: DataFrame, out_dir: str,
         if own_stats:
             host_counts.unpersist()
             host_counts = None
-        sm = load_salt_map(spark, out_dir)
+        sm = spark.createDataFrame(sm_rows, SALT_MAP_DDL)
     if stored_meta and scheme != "day_hash":
         num_parts = stored_meta["num_parts"]
     if scheme == "day_hash":
@@ -1007,7 +1113,7 @@ def encode_documents(spark: SparkSession, df: DataFrame, out_dir: str,
         # lineage is written SORTED by min_warc_ts (one file per batch):
         # parquet row-group stats then become a zone-map index over the
         # index itself, and the local pruner seeks instead of streaming
-        # every row (decode._iter_lineage_rowgroups — the analog of the
+        # every row (lineage_row_groups — the analog of the
         # reference's keyed mdbx range cursor, db/mod.rs:217-305).
         # Committed driver-side (collect + one PUT): see
         # append_lineage_rows for why a Spark write job here would be a
@@ -1024,8 +1130,8 @@ def encode_documents(spark: SparkSession, df: DataFrame, out_dir: str,
     return lin
 
 
-def _assert_no_appended_parts(spark: SparkSession, out_dir: str,
-                              op: str, meta: dict | None = None) -> None:
+def _assert_no_appended_parts(out_dir: str, op: str,
+                              meta: dict | None = None) -> None:
     """Refuse row-level ops that locate partitions via the ORIGINAL
     stored plan when the table has appended partitions (ADVICE r05,
     high): append_documents plans its increment from its own stats
@@ -1037,14 +1143,14 @@ def _assert_no_appended_parts(spark: SparkSession, out_dir: str,
     that already loaded the plan metadata skip the duplicate GET."""
     if meta is None:
         meta = load_plan_meta(out_dir)
-    lin = read_lineage(spark, out_dir)
+    lin = lineage_table(out_dir, ["partition_id"])
     if meta is None or lin is None:
         return  # the callers' own meta/lineage guards fire first
-    mx = lin.agg(F.max("partition_id").alias("m")).collect()[0].m
-    if mx is not None and int(mx) >= int(meta["num_parts"]):
+    mx = pc.max(lin["partition_id"]).as_py()
+    if mx is not None and mx >= int(meta["num_parts"]):
         raise NotImplementedError(
             f"{op} requires a table without appended partitions: "
-            f"lineage holds partition id {int(mx)} >= the stored "
+            f"lineage holds partition id {mx} >= the stored "
             f"plan's num_parts {int(meta['num_parts'])}, and appended "
             "rows were planned from their own stats, so the stored "
             "url->partition function cannot locate them. Compact and "
@@ -1098,7 +1204,7 @@ def reencode_late(spark: SparkSession, full_df: DataFrame,
 
     from skar_spark.engine.compact import assert_not_compacted
     assert_not_compacted(out_dir, "late-data rollback")
-    _assert_no_appended_parts(spark, out_dir, "reencode_late")
+    _assert_no_appended_parts(out_dir, "reencode_late")
     planned_late, meta = _replan_with_stored(spark, late_df, out_dir, cfg)
     if meta["scheme"] == "day_hash":
         n_before = planned_late.filter(F.col("part_id") < 0).count()
@@ -1239,7 +1345,7 @@ def merge_updates(spark: SparkSession, updates_df: DataFrame,
             "merge_updates requires the hash partition scheme; on a "
             "day_hash table use reencode_late with the corrected "
             "full dataset")
-    _assert_no_appended_parts(spark, out_dir, "merge_updates", meta)
+    _assert_no_appended_parts(out_dir, "merge_updates", meta)
     planned_upd, _meta = _replan_with_stored(spark, updates_df, out_dir,
                                              cfg)
     affected = [r.part_id for r in
@@ -1278,7 +1384,7 @@ def delete_rows(spark: SparkSession, urls_df: DataFrame, out_dir: str,
             "delete_rows requires the hash partition scheme (day_hash "
             "partition membership depends on warc_ts, which a url set "
             "does not carry)")
-    _assert_no_appended_parts(spark, out_dir, "delete_rows", meta)
+    _assert_no_appended_parts(out_dir, "delete_rows", meta)
     planned_del, _meta = _replan_with_stored(
         spark, urls_df.select("url"), out_dir, cfg)
     affected = [r.part_id for r in
@@ -1321,9 +1427,11 @@ def rollback(spark: SparkSession, out_dir: str, as_of: float,
     Schema: the merged table schema is recomputed from the kept parts'
     footers, so columns introduced after `as_of` disappear from reads
     (one footer read per partition — an admin op, metadata-scale).
-    """
-    import shutil as _sh
 
+    Driver-local like vacuum: one lineage read, the kept/dropped/overlap
+    checks on that local table, and the same ``_swap_lineage`` rewrite
+    (vacuum's suffix pair).
+    """
     from skar_spark.engine.compact import assert_not_compacted
     from skar_spark.engine.partfile import read_footer
     from skar_spark.engine.schema_evo import (load_table_schema,
@@ -1332,50 +1440,35 @@ def rollback(spark: SparkSession, out_dir: str, as_of: float,
 
     storage.require_posix(out_dir, "rollback")
     assert_not_compacted(out_dir, "rollback")
-    lin_all = read_lineage(spark, out_dir)
-    if lin_all is None:
+    lin = lineage_table(out_dir)
+    if lin is None:
         raise FileNotFoundError(f"no lineage under {out_dir}")
-    lin_all = lin_all.cache()
-    kept = lin_all.filter(F.col("committed_at") <= float(as_of))
-    dropped = lin_all.filter(F.col("committed_at") > float(as_of))
-    if dropped.limit(1).count() == 0:
-        lin_all.unpersist()
+    # rows committed after as_of are undone (their files deleted); a row
+    # with no commit time is neither kept nor undone: the rewrite drops
+    # it and leaves its file
+    committed = lin["committed_at"].to_pylist()
+    in_snap = [attempt_order(c, None, as_of) is not None for c in committed]
+    kept = lin.filter(pa.array(in_snap, pa.bool_()))
+    dead = {f for f, c, k in zip(lin["file"].to_pylist(), committed, in_snap)
+            if c is not None and not k}
+    if not dead:
         return read_lineage(spark, out_dir, latest=True)
-    if kept.limit(1).count() == 0:
-        lin_all.unpersist()
+    if kept.num_rows == 0:
         raise ValueError(f"rollback to {as_of} precedes the table's "
                          "first commit")
-    overlap = (dropped.select("file").distinct()
-               .join(kept.select("file").distinct(), "file", "inner"))
-    if overlap.limit(1).count():
-        lin_all.unpersist()
+    if dead & set(kept["file"].to_pylist()):
         raise ValueError(
             "rollback impossible: post-as_of attempts overwrote kept "
             "part files in place (the table was not encoded with "
             "retain_superseded, so the pre-rollback bytes are gone)")
-    dead = [r.file for r in dropped.select("file").distinct().collect()]
-
-    # atomic lineage swap — SAME suffix pair as vacuum, so a crash
-    # between the renames is healed by recover_lineage_swap on the next
-    # read (roll forward to the fully-written new copy)
-    path = lineage_dir(out_dir)
-    tmp, old = path + ".vacuum", path + ".expired"
-    _sh.rmtree(tmp, ignore_errors=True)
-    # sorted rewrite keeps lineage row-group stats seek-able
-    kept.sort("min_warc_ts").write.mode("overwrite").parquet(tmp)
-    lin_all.unpersist()
-    _sh.rmtree(old, ignore_errors=True)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    _sh.rmtree(old, ignore_errors=True)
+    _swap_lineage(out_dir, kept, _SWAP_SUFFIXES[0])
 
     if load_table_schema(out_dir) is not None:
-        latest_kept = read_lineage(spark, out_dir, latest=True)
         cols: list[str] | None = None
         types: dict[str, str] = {}
         # one footer per PARTITION (metadata-scale admin loop)
-        for r in latest_kept.select("file").collect():
-            fo = read_footer(r.file)
+        for f in latest_lineage(kept)["file"].to_pylist():
+            fo = read_footer(f)
             if cols is None:
                 cols, types = list(fo["columns"]), dict(fo["schema"])
             else:

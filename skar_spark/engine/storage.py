@@ -13,10 +13,11 @@ item 2):
   (write_parquet.rs:63-77 buffers the full parquet file before a single
   write);
 - **listing** (`list_prefix`, `dir_exists`): directory = key prefix;
-- **Spark/pyarrow parquet bridges** (`spark_read_parquet`,
-  `spark_write_parquet`, `localize_dir`): metadata tables (lineage,
-  salt map, ann staging) are spooled locally and up/downloaded object
-  by object. Lineage is metadata-sized by design, so the spool is
+- **parquet bridges** (`localize_dir`, `spark_read_parquet`,
+  `spark_write_parquet`): metadata tables are spooled locally and
+  up/downloaded object by object — lineage into a local cache for the
+  driver-side lineage reader (`localize_dir`), ann staging through the
+  Spark bridges. Lineage is metadata-sized by design, so the spool is
   bounded by #partitions, never data rows.
 
 Schemes:
@@ -29,7 +30,7 @@ Schemes:
   mode / single node), which is all a fake needs;
 - anything else (s3://, gs://, …) → NotImplementedError naming this
   seam. Wiring a real store means implementing the six primitives with
-  its SDK; Spark-side lineage IO can instead use the cluster's native
+  its SDK; Spark-side parquet IO can instead use the cluster's native
   Hadoop filesystem (s3a://) by treating the scheme as posix-capable
   here.
 
@@ -159,10 +160,11 @@ def list_prefix(path: str) -> list[str]:
 
 # localize_dir memo: prefix → (listing fingerprint, cache dir),
 # invalidated when the object listing or sizes change. Repeated
-# lineage reads stop re-downloading; superseded dirs are NOT deleted —
-# a lazy DataFrame returned earlier may still reference one — so
-# growth is bounded by listing CHANGES (one dir per committed batch),
-# not by read count.
+# lineage reads stop re-downloading. Superseded dirs are NOT deleted:
+# lineage reads are eager pyarrow passes, but a lazy DataFrame from
+# spark_read_parquet (ann staging) may still reference one — so growth
+# is bounded by listing CHANGES (one dir per committed batch), not by
+# read count.
 _LOCALIZE_CACHE: dict[str, tuple[tuple, str]] = {}
 
 

@@ -121,6 +121,26 @@ def test_failed_preflight_leaves_table_writable(spark, tmp_path,
     assert res["compacted_parts"] > 0
 
 
+def test_incompatible_lineage_fails_before_marker(spark, tmp_path):
+    """A lineage column whose stored type cannot be cast to its declared
+    type fails compaction in the lineage read, before the archival
+    marker: the table stays writable."""
+    import pyarrow.dataset as pads
+    import pyarrow.parquet as pq
+
+    out, _ = _small_parts_table(spark, tmp_path)
+    ldir = lineage_dir(out)
+    t = pads.dataset(ldir, format="parquet").to_table()
+    t = t.set_column(t.schema.get_field_index("row_count"), "row_count",
+                     pa.array(["many"] * t.num_rows))
+    shutil.rmtree(ldir)
+    os.makedirs(ldir)
+    pq.write_table(t, os.path.join(ldir, "part-0.parquet"))
+    with pytest.raises(pa.ArrowInvalid):
+        compact_parts(spark, out, CFG)
+    assert not is_compacted(out)
+
+
 # -- ADVICE r03 #3: full-scan membership == committed lineage set ------
 
 def test_uncommitted_part_invisible_to_full_scan(spark, tmp_path):

@@ -19,11 +19,9 @@ DAY_US = 86_400_000_000
 T0 = 1_700_000_000_000_000  # epoch us
 
 
-@pytest.fixture(scope="module")
-def big_lineage(tmp_path_factory):
+def _build_big_lineage(out: str):
     """50k-partition table: day-ranged partitions (the day_hash layout
     shape), lineage sorted by min_warc_ts, 1000-row row groups."""
-    out = str(tmp_path_factory.mktemp("seek") / "out")
     parts_dir = os.path.join(out, "parts")
     ldir = os.path.join(out, "lineage")
     os.makedirs(parts_dir)
@@ -49,6 +47,11 @@ def big_lineage(tmp_path_factory):
     pq.write_table(t, os.path.join(ldir, "lineage.parquet"),
                    row_group_size=1000)
     return out, day, files
+
+
+@pytest.fixture(scope="module")
+def big_lineage(tmp_path_factory):
+    return _build_big_lineage(str(tmp_path_factory.mktemp("seek") / "out"))
 
 
 def test_seek_reads_fraction_of_rowgroups(big_lineage):
@@ -86,3 +89,19 @@ def test_seek_agrees_with_full_stream(big_lineage):
 def test_unfiltered_scan_untouched_by_seek(big_lineage):
     out, _day, files = big_lineage
     assert prune_partitions(out) == sorted(files)
+
+
+@pytest.mark.spark
+def test_vacuum_keeps_lineage_seekable(spark, tmp_path):
+    """vacuum rewrites this lineage (which has no attempt_id, row_count
+    or col_stats column) to the same ts-pruned file set, and the
+    rewrite still seeks."""
+    from skar_spark.engine.encode import vacuum
+
+    out, _day, _files = _build_big_lineage(str(tmp_path / "out"))
+    ts = (T0 + 250 * DAY_US, T0 + 252 * DAY_US)
+    before = prune_partitions(out, ts_range=ts)
+    assert vacuum(spark, out) == []
+    stats: dict = {}
+    assert prune_partitions(out, ts_range=ts, seek_stats=stats) == before
+    assert stats["rg_read"] < stats["rg_total"], stats

@@ -243,6 +243,67 @@ def test_pruning_launches_no_spark_job(spark, encoded):
     assert 0 < stats["rg_read"] <= stats["rg_total"]
 
 
+def test_lineage_metadata_reads_launch_no_spark_job(spark, encoded):
+    """Lineage is read driver-side: completed_part_ids,
+    _assert_no_appended_parts and the read_lineage call itself run no
+    Spark job under the caller's job group."""
+    from skar_spark.engine.encode import (
+        _assert_no_appended_parts,
+        completed_part_ids,
+    )
+
+    sc = spark.sparkContext
+    group = "lineage-no-jobs"
+    sc.setJobGroup(group, "lineage reads only")
+    try:
+        done = completed_part_ids(spark, encoded)
+        _assert_no_appended_parts(encoded, "test")
+        lin = read_lineage(spark, encoded, latest=True)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert done == {r.partition_id for r in lin.collect()}
+    assert len(done) == len(list_part_files(encoded))
+
+
+def test_old_lineage_reads_with_declared_types(spark, tmp_path):
+    """A lineage written before attempt_id, row_count and col_stats
+    existed reads back with those columns present, null and of their
+    declared types, and vacuum accepts it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from skar_spark.engine.encode import vacuum
+
+    out = tmp_path / "t"
+    (out / "parts").mkdir(parents=True)
+    (out / "lineage").mkdir()
+    files = [str(out / "parts" / f"part-{p:06d}.skar") for p in range(3)]
+    for f in files:
+        open(f, "wb").close()
+    ts = pa.array([T0_US] * 3, pa.timestamp("us"))
+    pq.write_table(pa.table({
+        "partition_id": pa.array(range(3), pa.int32()),
+        "status": ["committed"] * 3,
+        "file": files,
+        "min_warc_ts": ts, "max_warc_ts": ts,
+        "committed_at": pa.array([1.0, 2.0, 3.0]),
+    }), str(out / "lineage" / "batch-0.parquet"))
+
+    lin = read_lineage(spark, str(out))
+    types = dict(lin.dtypes)
+    assert (types["attempt_id"], types["row_count"], types["col_stats"]) \
+        == ("string", "bigint", "string")
+    rows = lin.collect()
+    assert len(rows) == 3
+    assert all(r.attempt_id is None and r.row_count is None
+               and r.col_stats is None for r in rows)
+    assert vacuum(spark, str(out)) == []
+    assert _latest_files(spark, str(out)) == set(files)
+    assert set(prune_partitions(str(out), ts_range=(T0_US, T0_US + 1))) \
+        == set(files)
+
+
 def test_rowgroup_host_bloom_prunes(spark, tmp_path):
     """A host-mixed row group whose (hmin, hmax) range covers a probe
     host that is NOT present: min/max alone can't skip it, the per-rg
