@@ -162,7 +162,7 @@ def _encode_payload(arr: pa.Array, tcode: str, codec: str,
             f, r, w, obuf = P.delta_encode(offs)
             return {"o": [int(f), int(r), int(w)]}, [data, obuf]
         if codec == "fsst":
-            return FSST.encode(offs, data, cfg, arr=arr)
+            return FSST.encode(offs, data, cfg)
         if codec == "dict":
             denc = pc.dictionary_encode(arr)
             idx = denc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
@@ -170,7 +170,7 @@ def _encode_payload(arr: pa.Array, tcode: str, codec: str,
             vals = canonicalize(denc.dictionary)
             # dictionary values: plain vs fsst, keep smaller
             vm_p, vs_p = _encode_payload(vals, tcode, "plain", cfg)
-            vm_f, vs_f = FSST.encode(*P.string_parts(vals), cfg, arr=vals)
+            vm_f, vs_f = FSST.encode(*P.string_parts(vals), cfg)
             if sum(map(len, vs_f)) < sum(map(len, vs_p)):
                 vcodec, vmeta, vsecs = "fsst", vm_f, vs_f
             else:

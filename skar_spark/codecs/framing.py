@@ -140,7 +140,8 @@ def build_blob(codec: str, n: int, tcode: str, nulls: bool, meta: dict,
 
 
 def parse_blob(blob: bytes) -> tuple[dict, list[bytes]]:
-    assert blob[:4] == MAGIC, "bad magic"
+    if blob[:4] != MAGIC:
+        raise ValueError("bad magic")
     hlen = int.from_bytes(blob[4:8], "little")
     header = json.loads(blob[8:8 + hlen])
     pos = 8 + hlen

@@ -17,23 +17,21 @@ from-scratch Python-vectorized design, not a port):
   buffer (exact scatter pass) instead of a dedicated escape byte, so no
   escaping is ever needed and decode is a pure C-speed ``bytes.replace``
   expansion per code;
-- encode is a LEVELED vectorized pair-merger (numpy): merges are grouped
-  into dependency levels (a merge whose pair references a code assigned
-  at level k runs at level k+1), and each level applies ALL of its merges
-  in one simultaneous vectorized pass — match every pair against a 64 Ki
-  lookup table, resolve overlaps greedily left-to-right via run-parity
-  (within a run of consecutive match positions the greedy picks
-  alternate ones), then compact. Encode cost therefore scales with merge
-  DEPTH (2-4 levels in practice), not symbol count — the single-pass
-  property canonical FSST gets from its code-generated longest-match
-  loop, recovered here with numpy whole-buffer passes. Output bytes may
-  differ slightly from a sequential per-symbol replace (overlap ties
-  resolve differently) but decode is exact either way: expansion in
-  reverse learned order is position-independent. Routing is hybrid
-  (measured crossovers, NUMPY_LEVEL_MIN_*): symbol-light levels run as
-  sequential C ``bytes.replace`` passes, and when EVERY level is light
-  the whole chain runs as a per-row Arrow ``replace_substring`` chain
-  (fsst_compress_rows) — whichever is cheapest for the learned table.
+- encode runs over the whole column-chunk buffer, one dependency LEVEL
+  at a time (a merge whose pair references a code assigned at level k
+  runs at level k+1). A level with at least NUMPY_LEVEL_MIN symbols is
+  applied in one simultaneous numpy pass — match every pair against a
+  64 Ki lookup table, resolve overlaps greedily left-to-right via
+  run-parity (within a run of consecutive match positions the greedy
+  picks alternate ones), then compact — so its cost does not grow with
+  its symbol count, the single-pass property canonical FSST gets from
+  its code-generated longest-match loop. A smaller level runs as a
+  sequential Arrow ``replace_substring`` chain over the buffer wrapped
+  as one value, one C++ search per symbol. The two steps may resolve
+  overlap ties differently, but decode is exact either way: expansion
+  of unique code bytes is position-independent;
+- decode is one whole-buffer ``bytes.replace`` chain, deepest level
+  first.
 
 The whole column chunk's concatenated data buffer is compressed as one
 stream; original string offsets are stored delta+bitpacked, so decode
@@ -44,8 +42,13 @@ the north-rule invariant).
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from skar_spark.codecs import primitives as P
+
+SAMPLE_BYTES = 1 << 16       # symbol table built on a <=64 KiB sample
+MIN_PAIR_FRAC = 1 / 400.0    # stop when the best pair is < 0.25% of sample
 
 
 def build_symbol_table(sample: bytes, free_codes: list[int],
@@ -74,24 +77,14 @@ def build_symbol_table(sample: bytes, free_codes: list[int],
     return table
 
 
-SEGMENT = 1 << 18  # 256 KiB — decode segment size (see fsst_decompress)
-
-# vectorized-vs-replace crossover, measured on 49 MB prose: one
-# simultaneous numpy pass ≈ 14 replace passes on the dense first level
-# (31% match positions), ≈ 8 on later levels (smaller buffer, sparser
-# matches make the sparse selection cheaper while replace still pays its
-# full scan) — below these counts sequential C-speed replace wins
-NUMPY_LEVEL_MIN_FIRST = 14
-NUMPY_LEVEL_MIN_REST = 8
-# Decode crossover, measured on sf0.1 documents text (1.49 MB, both
-# profiles): one numpy scatter-expansion pass costs ≈ 30 single-byte
-# bytes.replace passes — decode replaces are memchr-bound SIMD scans
-# (93 MB/s/core DEFAULT chain, 44 ARCHIVE), so unlike ENCODE (2-byte
-# search patterns, shift-heavy) the sequential chain wins at every
-# real level size (largest observed: 26). The scatter path only
-# engages for pathological ≥32-symbol levels; a full-expansion LUT
-# gather decode was also measured (30/40 MB/s) and rejected.
-DECODE_NUMPY_LEVEL_MIN = 32
+# per-level crossover between the two encode steps: a level with at
+# least this many symbols runs as one simultaneous numpy pass, a smaller
+# one as a sequential Arrow ``replace_substring`` chain (one C++ search
+# per symbol). Measured per level on 41 MB of sorted synthetic web text
+# (4-vCPU Xeon, best of 5, both profiles): numpy/chain time is 1.05 at
+# 8-9 symbols and 0.98 at 10-11 on the first level; on later levels
+# numpy is 1.5-4.7x slower below 10 symbols and within ±15% at 12-23.
+NUMPY_LEVEL_MIN = 10
 
 
 def merge_levels(table: list[tuple[int, bytes]]
@@ -116,35 +109,34 @@ def merge_levels(table: list[tuple[int, bytes]]
 
 
 def fsst_compress(data: bytes, table: list[tuple[int, bytes]]) -> bytes:
-    """Leveled vectorized encode: one simultaneous numpy merge pass per
-    dependency level (2-4 in practice), independent of symbol count.
+    """Leveled whole-buffer encode: each dependency level (2-4 in
+    practice) is one numpy pass or one Arrow replace chain, chosen by
+    its symbol count against NUMPY_LEVEL_MIN.
 
-    Per level: match every adjacent byte pair against a 64 Ki LUT,
-    resolve overlapping matches greedily left-to-right (a match is only
+    The numpy pass matches every adjacent byte pair against a 64 Ki LUT,
+    resolves overlapping matches greedily left-to-right (a match is only
     invalidated by a SELECTED match at the previous position, so within
     each run of consecutive match positions the greedy picks alternating
     ones — computable via run-start + parity, no sequential loop), then
-    rewrite selected pair-heads to their codes and drop the consumed
-    second bytes. ~8 streaming O(n) numpy passes per level, vs one
-    search+copy pass per SYMBOL for the old multi-pass bytes.replace —
-    the throughput hot path named by the north rule
-    (reference: skar/src/write_parquet.rs:37-81 leaves compression to
-    the parquet codec; this engine does structural string compression
-    first, so its cost must not scale with the symbol budget)."""
-    if not table or len(data) < 2:
-        return data
+    rewrites selected pair-heads to their codes and drops the consumed
+    second bytes: ~8 streaming O(n) numpy passes, whatever the level's
+    size. The chain costs one C++ search+copy pass per symbol, cheaper
+    below the crossover. This engine does structural string compression
+    before the block codec (reference: skar/src/write_parquet.rs:37-81
+    leaves compression to the parquet codec), so its cost must not
+    scale with the symbol budget."""
     a = np.frombuffer(data, np.uint8)
-    for li, level in enumerate(merge_levels(table)):
-        if len(a) < 2:
-            break
-        if len(level) < (NUMPY_LEVEL_MIN_FIRST if li == 0
-                         else NUMPY_LEVEL_MIN_REST):
-            # small level: sequential C-speed replace per symbol is
-            # cheaper than one vectorized pass (~5 replace-passes' cost)
-            buf = a.tobytes()
+    for level in merge_levels(table):
+        if len(level) < NUMPY_LEVEL_MIN:
+            # small level: the sequential replace chain, run by Arrow's
+            # C++ kernel over the whole buffer wrapped as one value
+            r = pa.Array.from_buffers(pa.large_binary(), 1, [
+                None, pa.py_buffer(np.array([0, len(a)], np.int64)),
+                pa.py_buffer(a)])
             for code, pair in level:
-                buf = buf.replace(pair, bytes([code]))
-            a = np.frombuffer(buf, np.uint8)
+                r = pc.replace_substring(r, pattern=pair,
+                                         replacement=bytes([code]))
+            a = np.frombuffer(r[0].as_buffer(), np.uint8)
             continue
         lut_m = np.zeros(65536, np.bool_)
         lut_c = np.zeros(65536, np.uint8)
@@ -181,68 +173,27 @@ def fsst_compress(data: bytes, table: list[tuple[int, bytes]]) -> bytes:
     return a.tobytes()
 
 
+# perfbench/trace.py wraps the old per-row route by this name; the
+# binding goes once the tracer stops wrapping it
+fsst_compress_rows = fsst_compress
+
+
 def fsst_decompress(data: bytes, table: list[tuple[int, bytes]]) -> bytes:
-    """Expand codes level-by-level, deepest first (VERDICT r04 item 4).
+    """Expand codes with one whole-buffer ``bytes.replace`` chain,
+    deepest level first.
 
-    The per-level router was MEASURED (see DECODE_NUMPY_LEVEL_MIN): the
-    sequential C ``bytes.replace`` chain wins decode at every real
-    level size because expansion searches are single code BYTES —
-    memchr-bound SIMD scans — unlike encode's 2-byte shift-heavy
-    searches where the leveled numpy pass pays off. So in practice this
-    runs the same replace chain as before, grouped by level (same
-    result: a level-L code's pair only contains raw bytes / codes of
-    levels < L, never a same-level code, so any order within/between
-    independent codes reaches the same fixpoint — expansion is a
-    context-free unique-code rewrite).
-
-    The simultaneous scatter pass (LUT-match code bytes, output slot =
-    ``index + #matches-before`` via cumsum, scatter heads + pair-tails)
-    exists for pathological ≥DECODE_NUMPY_LEVEL_MIN-symbol levels and
-    is roundtrip-tested, but measured 2-5× slower on both profiles.
-    Segment-wise for cache residency; safe at any boundary because
-    every search pattern is a single code byte."""
-    if not table:
-        return data
-    levels = merge_levels(table)
-
-    def _expand(seg: np.ndarray) -> np.ndarray:
-        for level in reversed(levels):
-            if len(seg) == 0:
-                break
-            if len(level) < DECODE_NUMPY_LEVEL_MIN:
-                buf = seg.tobytes()
-                for code, pair in reversed(level):
-                    buf = buf.replace(bytes([code]), pair)
-                seg = np.frombuffer(buf, np.uint8)
-                continue
-            lut_m = np.zeros(256, np.bool_)
-            p0 = np.zeros(256, np.uint8)
-            p1 = np.zeros(256, np.uint8)
-            for code, pair in level:
-                lut_m[code] = True
-                p0[code] = pair[0]
-                p1[code] = pair[1]
-            m = lut_m[seg]
-            shift = np.cumsum(m)
-            k = int(shift[-1])
-            if k == 0:
-                continue
-            shift -= m                      # matches strictly before i
-            dst = np.arange(len(seg), dtype=np.int64)
-            dst += shift
-            out = np.empty(len(seg) + k, np.uint8)
-            out[dst] = np.where(m, p0[seg], seg)
-            out[dst[m] + 1] = p1[seg[m]]
-            seg = out
-        return seg
-
-    if len(data) <= SEGMENT:
-        return _expand(np.frombuffer(data, np.uint8)).tobytes()
-    out = []
-    for s in range(0, len(data), SEGMENT):
-        out.append(_expand(
-            np.frombuffer(data[s:s + SEGMENT], np.uint8)).tobytes())
-    return b"".join(out)
+    A level-L code's pair holds only raw bytes and codes of levels < L,
+    so expanding deeper levels first leaves no code unexpanded, and the
+    order within a level does not matter: expansion is a context-free
+    rewrite of unique code bytes, so the result equals the original
+    buffer whatever the encoder's overlap choices were. Each search is a
+    single code byte — a memchr-bound scan — which measured faster than
+    a numpy scatter expansion, a full-expansion LUT gather and the Arrow
+    ``replace_substring`` chain on both profiles."""
+    for level in reversed(merge_levels(table)):
+        for code, pair in reversed(level):
+            data = data.replace(bytes([code]), pair)
+    return data
 
 
 def serialize_table(table: list[tuple[int, bytes]]) -> bytes:
@@ -257,7 +208,7 @@ def deserialize_table(buf: bytes) -> list[tuple[int, bytes]]:
     n = buf[0]
     table = []
     pos = 1
-    for _ in range(n):
+    for _ in range(n):  # symbol table entries (<= 255)
         code = buf[pos]
         pair = bytes(buf[pos + 1:pos + 3])
         table.append((code, pair))
@@ -277,51 +228,18 @@ def free_byte_values(data: bytes, max_codes: int) -> list[int]:
     return [int(v) for v in np.flatnonzero(~present)][:max_codes]
 
 
-def fsst_compress_rows(arr, table: list[tuple[int, bytes]]) -> bytes:
-    """Per-row Arrow-kernel encode: the sequential replace chain run by
-    ``pc.replace_substring`` over the per-row binary array (C++ loop, no
-    Python per pass — measured ~1.5× a ``bytes.replace`` chain). Applied
-    per ROW, a merge never spans row boundaries, so the concatenated
-    result decodes exactly like the buffer-domain output (expansion of
-    single code bytes is position-independent); the only cost is the
-    lost cross-row merges, which the buffer path also forgoes for rows
-    compressed independently. Returns the concatenated data buffer."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    r = arr.cast(pa.large_binary())
-    for code, pair in table:
-        r = pc.replace_substring(r, pattern=pair,
-                                 replacement=bytes([code]))
-    r = r.combine_chunks() if isinstance(r, pa.ChunkedArray) else r
-    offs = np.frombuffer(r.buffers()[1], np.int64,
-                         count=len(r) + 1 + r.offset)[r.offset:]
-    lo, hi = int(offs[0]), int(offs[-1])
-    return r.buffers()[2].slice(lo, hi - lo).to_pybytes()
-
-
 # --- codec interface (meta, sections) ---------------------------------------
 
-def encode(offs_i64: np.ndarray, data: bytes, cfg,
-           arr=None) -> tuple[dict, list[bytes]]:
+def encode(offs_i64: np.ndarray, data: bytes,
+           cfg) -> tuple[dict, list[bytes]]:
     free = free_byte_values(data, cfg.fsst_max_symbols)
-    sample = data[:cfg.fsst_sample_bytes]
-    # stop merging once a round's sample gain drops below the configured
-    # fraction — each extra symbol costs roughly one replace pass at
-    # encode time, so low-gain symbols are net losses on throughput
-    min_count = max(8, int(len(sample) * cfg.fsst_min_pair_count_frac))
+    sample = data[:SAMPLE_BYTES]
+    # stop merging once a round's sample gain drops below MIN_PAIR_FRAC
+    # — each extra symbol costs roughly one replace pass at encode time,
+    # so low-gain symbols are net losses on throughput
+    min_count = max(8, int(len(sample) * MIN_PAIR_FRAC))
     table = build_symbol_table(sample, free, min_count)
-    # route: when every level is below the vectorized crossover the
-    # whole table runs as one per-row Arrow replace chain (fastest);
-    # otherwise the leveled buffer path mixes numpy and replace passes
-    levels = merge_levels(table)
-    all_small = all(
-        len(lv) < (NUMPY_LEVEL_MIN_FIRST if i == 0 else NUMPY_LEVEL_MIN_REST)
-        for i, lv in enumerate(levels))
-    if arr is not None and table and all_small and len(arr):
-        comp = fsst_compress_rows(arr, table)
-    else:
-        comp = fsst_compress(data, table)
+    comp = fsst_compress(data, table)
     f, r, w, obuf = P.delta_encode(offs_i64)
     meta = {"o": [int(f), int(r), int(w)], "raw": len(data)}
     return meta, [serialize_table(table), comp, obuf]

@@ -18,6 +18,11 @@ from skar_spark.codecs.core import canonicalize, codecs_for, encode_array
 from skar_spark.codecs.framing import typecode
 from skar_spark.config import DEFAULT, EngineConfig
 
+SAMPLE_ROWS = 4_096
+SAMPLE_BYTES = 1 << 18   # byte cap on string trial samples
+MARGIN = 0.98            # a structural winner must beat plain by 2%
+MARGIN_FSST = 0.95       # fsst must beat plain by 5%
+
 
 def sample_chunk(arr: pa.Array, rows: int, byte_cap: int = 1 << 20) -> pa.Array:
     """Head/middle/tail contiguous slices (keeps runs representative).
@@ -47,8 +52,7 @@ def choose_codec(arr: pa.Array, cfg: EngineConfig = DEFAULT) -> str:
     cands = list(codecs_for(typecode(arr.type)))
     if len(arr) == 0:
         return cands[0]
-    sample = canonicalize(sample_chunk(arr, cfg.selector_sample_rows,
-                                       cfg.selector_sample_bytes))
+    sample = canonicalize(sample_chunk(arr, SAMPLE_ROWS, SAMPLE_BYTES))
     if "dict" in cands and len(sample) > 32:
         # dict trials re-encode the dictionary (≈ a second fsst pass);
         # skip when the sample is mostly unique — dict can't win there
@@ -61,7 +65,7 @@ def choose_codec(arr: pa.Array, cfg: EngineConfig = DEFAULT) -> str:
     best = min(sizes, key=sizes.get)  # type: ignore[arg-type]
     # structural codecs must beat plain by the margin; fsst needs a larger
     # win because its encode cost is ~4× plain's (throughput-aware guard)
-    margin = cfg.selector_margin_fsst if best == "fsst" else cfg.selector_margin
+    margin = MARGIN_FSST if best == "fsst" else MARGIN
     if best != "plain" and sizes[best] > plain * margin:
         return "plain"
     return best

@@ -26,13 +26,6 @@ class EngineConfig:
     # deeper level where size wins over throughput
     zstd_level: int = 5
 
-    # --- codec auto-selection (no analog in the reference: skar always
-    #     writes Encoding::Plain — write_parquet.rs:49-53; the selector is
-    #     this engine's north-star feature) ---
-    selector_sample_rows: int = 4_096
-    selector_margin: float = 0.98             # winner must beat plain by 2%
-    selector_margin_fsst: float = 0.95        # fsst must beat plain by 5%
-
     # --- FSST-style string codec ---
     # 16 symbols / zstd5 is the r4 throughput operating point (best-of-3
     # single-core race on 210 MB sorted webtext, vs the plain+zstd9
@@ -40,10 +33,10 @@ class EngineConfig:
     # 18.3 MB/s at 0.937× and 24sym+zstd5 = 16.8 MB/s at 0.921×. Encode
     # GB/s is the north rule's first criterion; the ARCHIVE profile
     # below serves the size axis (0.78× at r3-like speed).
+    # (the table's sample size and merge stop rule are constants in
+    # codecs/fsst.py; the codec selector's sample caps and margins are
+    # constants in codecs/selector.py)
     fsst_max_symbols: int = 16                # codes drawn from unused byte values
-    fsst_sample_bytes: int = 1 << 16          # symbol table built on ≤64 KiB sample
-    fsst_min_pair_count_frac: float = 1 / 400.0  # stop when round gain < 0.25%
-    selector_sample_bytes: int = 1 << 18      # byte cap on string trial samples
 
     # --- partitioning & skew (mirror of block-range folders + the
     #     address/topic0 skew noted in SURVEY §1.3) ---
@@ -64,10 +57,6 @@ class EngineConfig:
     # write path overwrites atomically and only the latest snapshot
     # exists on disk.
     retain_superseded: bool = False
-
-    # --- bloom (mirror of sbbf 8 bits/key,
-    #     reference skar/src/build_parquet_idx.rs:96-115,181-189) ---
-    bloom_bits_per_key: int = 8
 
 
 DEFAULT = EngineConfig()

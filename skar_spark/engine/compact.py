@@ -174,10 +174,7 @@ def compact_parts(spark: SparkSession, out_dir: str,
     from dataclasses import replace as _dc_replace
     p = profile if profile is not None else ARCHIVE
     enc_cfg = _dc_replace(
-        cfg, fsst_max_symbols=p.fsst_max_symbols, zstd_level=p.zstd_level,
-        selector_margin_fsst=p.selector_margin_fsst,
-        fsst_sample_bytes=p.fsst_sample_bytes,
-        fsst_min_pair_count_frac=p.fsst_min_pair_count_frac)
+        cfg, fsst_max_symbols=p.fsst_max_symbols, zstd_level=p.zstd_level)
     new_footers = encode_footers(planned, list(range(hw, hw + n_new)),
                                  out_dir, enc_cfg, attempt,
                                  "part-{pid:06d}.skar")

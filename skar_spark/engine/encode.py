@@ -407,15 +407,14 @@ def _encode_kernel(out_dir: str, cfg: EngineConfig, attempt: str,
             "n_hosts": pa.array([n_hosts], pa.int32()),
             "n_row_groups": pa.array([stats["n_row_groups"]], pa.int32()),
             "host_bloom": pa.array(
-                [partition_host_bloom(hosts, cfg.bloom_bits_per_key)],
+                [partition_host_bloom(hosts)],
                 pa.binary()),
             # second partition-level bloom family (lang): lets a
             # lang-filtered scan skip whole partitions where the value
             # never occurs (reference: address AND topic families,
             # build_parquet_idx.rs:89-171)
             "lang_bloom": pa.array(
-                [partition_host_bloom(
-                    t["lang"].combine_chunks(), cfg.bloom_bits_per_key)
+                [partition_host_bloom(t["lang"].combine_chunks())
                  if "lang" in t.column_names and t.num_rows else None],
                 pa.binary()),
             "text_checksum": pa.array([partition_checksum(t)], pa.binary()),
@@ -1282,8 +1281,7 @@ def _empty_part_footer(out_dir: str, cfg: EngineConfig, attempt: str,
     return (pid, attempt, "committed", 0, stats["codec_choices"],
             stats["bytes_in"], stats["bytes_out"], None, None, 0,
             stats["n_row_groups"],
-            partition_host_bloom(pa.chunked_array([[]], pa.string()),
-                                 cfg.bloom_bits_per_key),
+            partition_host_bloom(pa.chunked_array([[]], pa.string())),
             None, partition_checksum(body), 0.0, stats["encode_sec"],
             round(_time.time() - t0, 3), path, _time.time(),
             stats["schema_json"], stats["col_stats"])

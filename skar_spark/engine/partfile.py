@@ -125,8 +125,8 @@ def write_part_file(path: str, table: pa.Table,
                     # build_parquet_idx.rs:96-115,149-152). Single-host
                     # groups skip the bloom: min==max is exact already.
                     import base64
-                    rg["hbloom"] = base64.b64encode(partition_host_bloom(
-                        hsl, cfg.bloom_bits_per_key)).decode()
+                    rg["hbloom"] = base64.b64encode(
+                        partition_host_bloom(hsl)).decode()
             extra_num = [c for c in cols
                          if c not in (zone_col, host_col)
                          and (pa.types.is_integer(table[c].type)
@@ -152,8 +152,8 @@ def write_part_file(path: str, table: pa.Table,
                 # reference's address AND topic0..3 bloom families,
                 # build_parquet_idx.rs:89-171)
                 import base64
-                rg["lbloom"] = base64.b64encode(partition_host_bloom(
-                    sl[lang_col], cfg.bloom_bits_per_key)).decode()
+                rg["lbloom"] = base64.b64encode(
+                    partition_host_bloom(sl[lang_col])).decode()
             rowgroups.append(rg)
             if n == 0:
                 break
@@ -210,7 +210,8 @@ def read_footer(path: str) -> dict:
     with storage.open_read(path) as f:
         f.seek(size - 12)
         tail = f.read(12)
-        assert tail[4:] == MAGIC, f"bad trailing magic in {path}"
+        if tail[4:] != MAGIC:
+            raise ValueError(f"bad trailing magic in {path}")
         flen = int.from_bytes(tail[:4], "little")
         f.seek(size - 12 - flen)
         return json.loads(f.read(flen))
@@ -384,12 +385,11 @@ def partition_checksum(table: pa.Table) -> bytes:
     return h.digest()
 
 
-def partition_host_bloom(hosts: pa.Array | pa.ChunkedArray,
-                         bits_per_key: int = 8) -> bytes:
+def partition_host_bloom(hosts: pa.Array | pa.ChunkedArray) -> bytes:
     import pyarrow.compute as pc
     # nulls carry no key (lang is nullable per DOCS_DDL): a null-bearing
     # row group simply can't be pruned by an equality probe, which is
     # correct — equality with null is never true
     uniq = pc.unique(hosts if isinstance(hosts, pa.Array)
                      else hosts.combine_chunks()).drop_null()
-    return bloom_from_keys([u.as_py().encode() for u in uniq], bits_per_key)
+    return bloom_from_keys([u.as_py().encode() for u in uniq])

@@ -38,9 +38,9 @@ def get_spark(cpus: int | None = None, app: str = "skar_spark",
                    or len(os.sched_getaffinity(0)))
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)
-    # glibc: without this, every >128 KiB buffer (fsst segments, arrow
-    # scratch) is a fresh mmap/munmap — on this hypervisor fresh page
-    # faults are slow and variable; keep allocations in the arenas.
+    # glibc: without this, every >128 KiB buffer (fsst level buffers,
+    # arrow scratch) is a fresh mmap/munmap — under a hypervisor fresh
+    # page faults are slow and variable; keep allocations in the arenas.
     os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", "1073741824")
     os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", "1073741824")
     mem = os.environ.get("SKAR_DRIVER_MEM") or _default_heap()

@@ -118,12 +118,23 @@ def test_rle_split_exact():
     np.testing.assert_array_equal(rl, [3, 2, 1])
 
 
-def test_fsst_scatter_decode_path_bit_identical(monkeypatch):
-    """The numpy scatter-expansion decode path (engaged only for
-    pathological ≥DECODE_NUMPY_LEVEL_MIN-symbol levels) must produce
-    bit-identical output to the C replace chain on both profiles."""
-    import numpy as np
+def _level_replace_chain(data, table):
+    """Sequential reference encode: one ``bytes.replace`` per symbol,
+    level by level."""
+    import skar_spark.codecs.fsst as FS
+    for level in FS.merge_levels(table):
+        for code, pair in level:
+            data = data.replace(pair, bytes([code]))
+    return data
 
+
+def test_fsst_both_level_steps_roundtrip_and_chain_matches_reference(
+        monkeypatch):
+    """Every level through numpy (crossover 0) and every level through
+    the Arrow chain (crossover 10**9) must round-trip exactly on learned
+    tables of both profiles and on a hand-built table with one level of
+    40 symbols; the chain-only output must equal the sequential
+    ``bytes.replace`` chain byte for byte."""
     import skar_spark.codecs.fsst as FS
     from skar_spark.config import ARCHIVE, DEFAULT
 
@@ -131,19 +142,41 @@ def test_fsst_scatter_decode_path_bit_identical(monkeypatch):
     words = [bytes(rng.integers(97, 110, rng.integers(3, 9)).astype("u1"))
              for _ in range(40)]
     data = b" ".join(words[rng.integers(0, 40)] for _ in range(60_000))
+    tables = []
     for cfg in (DEFAULT, ARCHIVE):
         free = FS.free_byte_values(data, cfg.fsst_max_symbols)
-        sample = data[:cfg.fsst_sample_bytes]
-        tbl = FS.build_symbol_table(
-            sample, free, int(len(sample) * cfg.fsst_min_pair_count_frac))
-        if not tbl:
-            continue
-        comp = FS.fsst_compress(data, tbl)
-        chain = FS.fsst_decompress(comp, tbl)
-        assert chain == data
-        monkeypatch.setattr(FS, "DECODE_NUMPY_LEVEL_MIN", 1)
-        assert FS.fsst_decompress(comp, tbl) == data
-        monkeypatch.setattr(FS, "DECODE_NUMPY_LEVEL_MIN", 32)
+        sample = data[:FS.SAMPLE_BYTES]
+        tables.append(FS.build_symbol_table(
+            sample, free, int(len(sample) * FS.MIN_PAIR_FRAC)))
+    a = np.frombuffer(data, np.uint8)
+    counts = np.bincount((a[:-1].astype(np.uint16) << 8) | a[1:],
+                         minlength=65536)
+    top = np.argsort(counts)[::-1][:40]
+    assert counts[top[-1]] > 0
+    wide = [(code, bytes([int(p) >> 8, int(p) & 0xFF]))
+            for code, p in zip(FS.free_byte_values(data, 256), top)]
+    assert [len(lv) for lv in FS.merge_levels(wide)] == [40]
+    tables.append(wide)
+    for tbl in tables:
+        assert tbl
+        for crossover in (FS.NUMPY_LEVEL_MIN, 0, 10**9):
+            monkeypatch.setattr(FS, "NUMPY_LEVEL_MIN", crossover)
+            comp = FS.fsst_compress(data, tbl)
+            assert len(comp) < len(data)
+            assert FS.fsst_decompress(comp, tbl) == data
+            if crossover == 10**9:
+                assert comp == _level_replace_chain(data, tbl)
+
+
+def test_bad_leading_magic_raises_value_error():
+    """The blob's magic check is a raise, not an assert, so it holds
+    under ``python -O`` too."""
+    from skar_spark.codecs.framing import parse_blob
+    blob = encode_array(pa.array(["a", "b"]), "plain")
+    with pytest.raises(ValueError, match="bad magic"):
+        parse_blob(b"X" + blob[1:])
+    with pytest.raises(ValueError, match="bad magic"):
+        decode_array(b"X" + blob[1:])
 
 
 def test_list_float_null_elements_refused():

@@ -93,3 +93,18 @@ def test_partfile_roundtrip_and_exact_predicates(tmp_path_factory, rows,
                                pc.and_(pc.greater_equal(ts, lo),
                                        pc.less(ts, hi))))
     assert got.equals(want)
+
+
+def test_bad_trailing_magic_raises_value_error(tmp_path):
+    """The footer's magic check is a raise, not an assert, so it holds
+    under ``python -O`` too."""
+    import pytest
+
+    from skar_spark.engine.partfile import read_footer
+    path = str(tmp_path / "part-000000.skar")
+    write_part_file(path, _table([("a.com", 1, "x", b"y", "en")]), CFG)
+    with open(path, "r+b") as f:
+        f.seek(-1, os.SEEK_END)
+        f.write(b"\0")
+    with pytest.raises(ValueError, match="bad trailing magic"):
+        read_footer(path)
