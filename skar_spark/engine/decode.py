@@ -20,8 +20,9 @@ index (db/mod.rs:217-305) → row-group selection via zone maps + blooms
   (handler.rs:187-250): each (hosts, langs, ts_range) selection is
   tested against every partition's zone maps + blooms in the same pass,
   dropping partitions no disjunct can touch;
-- row-group pruning + projection + EXACT predicate apply happen inside
-  the mapInArrow kernel against the part-file footer;
+- row-group pruning + projection + EXACT predicate apply happen in
+  `read_part_file` against the part-file footer: in the mapInArrow
+  kernel for scans, on the driver (no Spark job) for bounded reads;
 - decode is vectorized (numpy/pyarrow) per column chunk.
 
 Storage: all path IO flows through `engine.storage` (the object-store
@@ -405,7 +406,7 @@ def decode_paths(spark: SparkSession, files: list[str], ddl: str,
     """THE decode dispatch: one task per part file, each running
     read_part_file(path, **read_kw) in a mapInArrow kernel (row-group
     pruning, projection, exact predicates, null-fill all happen there).
-    Shared by scan, paged_decode_loop and compaction."""
+    Shared by scan and compaction."""
     paths_df = spark.createDataFrame(
         [(f,) for f in files], "path string").repartition(
         max(1, len(files)))
@@ -489,15 +490,17 @@ def scan_changes(spark: SparkSession, out_dir: str,
     Delta CDF without deletion vectors), so consumers must treat a
     re-encoded partition as a replace, not a delta. Predicates compose
     with the normal exact pruning inside the changed set."""
-    lin = read_lineage(spark, out_dir, latest=True, as_of=until)
+    from skar_spark.engine.encode import latest_lineage, lineage_table
+
+    lin = lineage_table(out_dir, ["partition_id", "status",
+                                  "committed_at", "attempt_id"])
     if lin is None:
         raise FileNotFoundError(f"no lineage under {out_dir}; the "
                                 "change feed requires a committed table")
-    sel = lin.filter(F.col("status") == "committed")
-    if since is not None:
-        sel = sel.filter(F.col("committed_at") > float(since))
-    pids = {int(r.partition_id) for r in
-            sel.select("partition_id").collect()}  # metadata-scale
+    # driver-local, metadata-scale
+    pids = {r["partition_id"] for r in latest_lineage(lin, until).to_pylist()
+            if r["status"] == "committed" and (since is None or (
+                r["committed_at"] is not None and r["committed_at"] > since))}
     if _stats is not None:
         _stats["n_changed_parts"] = len(pids)
     return scan(spark, out_dir, columns=columns, host_eq=host_eq,
@@ -519,12 +522,14 @@ def scan_paged(spark: SparkSession, out_dir: str,
     `next_block` cursor (query/handler.rs:104-129, config.rs:22-29).
 
     Partitions are processed in file order starting at `cursor`
-    (a partition index), `page_files` per distributed page. Returns
+    (a partition index), `page_files` per driver-side page. Returns
     (rows, next_cursor): `next_cursor` is None when the scan completed,
-    otherwise pass it back to continue. Rows are collected per page —
-    callers wanting a full-table DataFrame should use scan() instead;
-    this API exists for interactive, bounded-latency reads.
+    otherwise pass it back to continue. Rows are decoded on the driver
+    with no Spark job — callers wanting a full-table DataFrame should
+    use scan() instead; this API exists for bounded-latency reads.
     """
+    from pyspark.sql import Row
+
     files = prune_partitions(out_dir, host_eq, ts_range, lang_eq)
     # cursor order must follow the numeric part index, not lexicographic
     # file order: streaming names (part-e{epoch}-{pid}) sort e10 < e2
@@ -536,16 +541,32 @@ def scan_paged(spark: SparkSession, out_dir: str,
         return [], None
     from skar_spark.engine.schema_evo import table_schema
     tcols, ttypes = table_schema(out_dir, files)
-    cols = columns or tcols
-    ddl = spark_ddl_for(ttypes, cols)
-    return paged_decode_loop(
-        spark, files, cols, ddl, host_eq=host_eq, ts_range=ts_range,
+    rows, nxt = paged_decode_loop(
+        spark, files, columns or tcols, host_eq=host_eq, ts_range=ts_range,
         lang_eq=lang_eq, time_limit_ms=time_limit_ms,
-        page_files=page_files, fill={c: ttypes[c] for c in cols})
+        page_files=page_files, fill=ttypes)
+    return [Row(**d) for d in rows], nxt
+
+
+def read_part_table(path: str, columns: list[str] | None = None,
+                    **read_kw) -> pa.Table:
+    """read_part_file(path, **read_kw) projected to `columns` (default:
+    every stored column + `host`), `host` derived from `url` Arrow-side —
+    the per-file read of the DataSource tasks and paged_decode_loop."""
+    from skar_spark.engine.partfile import _derive_host, read_footer
+
+    want = columns or read_footer(path)["columns"] + ["host"]
+    inner = [c for c in want if c != "host"]
+    if "host" in want and "url" not in inner:
+        inner.append("url")
+    t = read_part_file(path, columns=inner, **read_kw)
+    if "host" in want:
+        t = t.append_column("host", _derive_host(t["url"]))
+    return t.select(want)
 
 
 def paged_decode_loop(spark: SparkSession, files: list[str],
-                      stored_cols: list[str], ddl: str, *,
+                      columns: list[str], *,
                       host_eq: str | None = None,
                       ts_range: tuple[int, int] | None = None,
                       lang_eq: str | None = None,
@@ -554,28 +575,32 @@ def paged_decode_loop(spark: SparkSession, files: list[str],
                       row_limit: int | None = None,
                       post=None,
                       fill: dict[str, str] | None = None
-                      ) -> tuple[list, int | None]:
+                      ) -> tuple[list[dict], int | None]:
     """THE page/cursor/budget loop — shared by scan_paged and the JSON
     query handler so the folder-granular truncation semantics exist in
     exactly one place. Decodes `files` (already pruned + part-index
-    sorted) page by page, optionally pipes each page's DataFrame
-    through `post` (filter/projection) before collecting, and stops
-    when the wall-clock budget or row bound is reached — always at a
-    page boundary, so the returned next_cursor never skips or re-reads
-    rows. Returns (rows, next_cursor)."""
+    sorted) on the driver, page by page (no Spark job), optionally
+    pipes each page's table through `post` (filter/projection), and
+    stops when the wall-clock budget or row bound is reached — always
+    at a page boundary, so the returned next_cursor never skips or
+    re-reads rows. Returns (row dicts, next_cursor); timestamps are
+    naive UTC, as a collect under the session's UTC zone returns them.
+    `spark` is unused: perfbench/trace.py reads `files` as argument 1."""
     import time as _time
 
     t0 = _time.time()
-    rows: list = []
+    rows: list[dict] = []
     pos = 0
     while pos < len(files):
         page = files[pos:pos + page_files]
-        df = decode_paths(spark, page, ddl, columns=stored_cols,
-                          host_eq=host_eq, ts_range=ts_range,
-                          lang_eq=lang_eq, fill_missing=fill)
+        t = pa.concat_tables([read_part_table(
+            f, columns, host_eq=host_eq, ts_range=ts_range,
+            lang_eq=lang_eq, fill_missing=fill) for f in page])
         if post is not None:
-            df = post(df)
-        rows.extend(df.collect())
+            t = post(t)
+        rows.extend(t.cast(pa.schema(
+            [(f.name, pa.timestamp("us")) if pa.types.is_timestamp(f.type)
+             else f for f in t.schema]), safe=False).to_pylist())
         pos += len(page)
         if row_limit is not None and len(rows) >= row_limit:
             break

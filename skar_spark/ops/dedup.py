@@ -448,9 +448,9 @@ _CC_MAX_ITERS = 25
 # components are computed by one union-find on the driver — the edge
 # list is metadata-scale next to the corpus (the salt-map/codebook
 # class of driver work), and the distributed loop's per-round jobs are
-# pure overhead for it. Above the bound (or with SKAR_CC_DISTRIBUTED=1)
-# the pointer-jumping loop below runs unchanged — it remains the
-# at-scale path and is exercised by the forced-mode pytest.
+# pure overhead for it. Above the bound the pointer-jumping loop below
+# runs unchanged — it remains the at-scale path; the tests force it by
+# lowering the bound.
 _CC_DRIVER_MAX_EDGES = 2_000_000
 
 
@@ -480,8 +480,7 @@ def q_dedup_clusters(spark, sf, _stats: dict | None = None):
              .localCheckpoint(eager=True))
     n_edges = pairs.count()
     docs = load(spark, sf, "documents").select("doc_id")
-    if (n_edges <= _CC_DRIVER_MAX_EDGES
-            and not os.environ.get("SKAR_CC_DISTRIBUTED")):
+    if n_edges <= _CC_DRIVER_MAX_EDGES:
         if _stats is not None:
             _stats["mode"] = "driver"
         # Arrow collect: two flat int64 columns instead of py4j Row

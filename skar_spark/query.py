@@ -31,10 +31,10 @@ partition pruning per selection via lineage zone maps + the host AND
 lang bloom families (prune_query, handler.rs:187-250) — a driver-local
 seek over the lineage parquet (engine.decode.prune_selections), so
 planning a query launches no Spark job — short-circuit when everything
-prunes (handler.rs:150-158), then a time-limited
-distributed decode in part-index order with the EXACT residual OR
-filter and the projection applied column-pruned (only the needed
-column chunks are decoded). The row limit, like the reference's
+prunes (handler.rs:150-158), then a time-limited driver-side decode
+(no Spark job) in part-index order with the EXACT residual OR filter
+and the projection applied column-pruned (only the needed column
+chunks are decoded). The row limit, like the reference's
 response_num_*_limit, truncates at folder (part-file) granularity so
 `next_cursor` never skips or re-reads rows.
 """
@@ -42,16 +42,17 @@ response_num_*_limit, truncates at folder (part-file) granularity so
 from __future__ import annotations
 
 import datetime as _dt
+import functools
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from skar_spark.engine.decode import (
     _file_part_index,
     list_part_files,
     prune_selections,
 )
-from skar_spark.engine.decode_schema import spark_ddl_for
 
 DEFAULT_MAX_ROWS = 50_000      # reference response_num_*_limit default
 DEFAULT_TIME_LIMIT_MS = 5_000  # reference query.time_limit_ms default
@@ -74,26 +75,25 @@ def _host_of_prefix(prefix: str) -> str | None:
     return m.group(1) if m else None
 
 
-def _residual_expr(selections: list[dict], ts_range):
-    """EXACT OR-of-conjuncts filter over decoded rows (JVM-side)."""
+def _residual_filter(t: pa.Table, selections: list[dict]) -> pa.Table:
+    """EXACT OR-of-conjuncts filter over decoded rows. Kleene AND/OR
+    (a null term is unknown, not false), so `true OR null` keeps its
+    row like Spark's Column logic; the ts range is already exact in
+    read_part_file."""
     keep = None
-    for s in selections or [{}]:
-        e = F.lit(True)
-        if s.get("hosts"):
-            e = e & F.col("host").isin(list(s["hosts"]))
-        if s.get("langs"):
-            e = e & F.col("lang").isin(list(s["langs"]))
+    for s in selections:
+        terms = [pc.is_in(t[c], value_set=pa.array(list(s[k])))
+                 for c, k in (("host", "hosts"), ("lang", "langs"))
+                 if s.get(k)]
         if s.get("url_prefix"):
-            pre = None
-            for p in s["url_prefix"]:
-                term = F.col("url").startswith(p)
-                pre = term if pre is None else pre | term
-            e = e & pre
-        keep = e if keep is None else keep | e
-    if ts_range is not None:
-        keep = keep & (F.unix_micros(F.col("warc_ts")) >= ts_range[0]) \
-            & (F.unix_micros(F.col("warc_ts")) < ts_range[1])
-    return keep
+            pre = [pc.starts_with(t["url"], pattern=p)
+                   for p in s["url_prefix"]]
+            terms.append(functools.reduce(pc.or_kleene, pre))
+        if not terms:
+            return t  # an unconstrained selection matches every row
+        e = functools.reduce(pc.and_kleene, terms)
+        keep = e if keep is None else pc.or_kleene(keep, e)
+    return t if keep is None else t.filter(keep)
 
 
 def _json_safe(v):
@@ -166,38 +166,28 @@ def run_query(spark: SparkSession, out_dir: str, query: dict) -> dict:
     tcols, ttypes = table_schema(out_dir, files)
     fields = list(query.get("field_selection") or tcols + ["host"])
     need = set(fields)
-    if any(s.get("hosts") or s.get("url_prefix")
-           for s in selections) or "host" in need:
-        need |= {"url", "host"}
-    if any(s.get("langs") for s in selections):
-        need.add("lang")
-    if ts_range is not None:
-        need.add("warc_ts")
-    stored = [c for c in tcols if c in need]
-    ddl = spark_ddl_for(ttypes, stored)
+    for c, k in (("host", "hosts"), ("lang", "langs"),
+                 ("url", "url_prefix")):
+        if any(s.get(k) for s in selections):
+            need.add(c)
+    # `host` is derived from url per file (decode.read_part_table)
+    read_cols = [c for c in tcols if c in need and c != "host"] + \
+        (["host"] if "host" in need else [])
 
     # --- time-limited decode in part-index order, exact residual ------
     # (the page/cursor/budget mechanics live in decode.paged_decode_loop,
     # shared with scan_paged; only the residual + projection differ)
     from skar_spark.engine.decode import paged_decode_loop
-    from skar_spark.engine.encode import with_host
-
-    residual = _residual_expr(selections, ts_range)
-
-    def post(df):
-        if "host" in need and "host" not in stored:
-            df = with_host(df)
-        return df.filter(residual).select(*fields)
 
     rows, next_cursor = paged_decode_loop(
-        spark, files, stored, ddl, ts_range=ts_range,
+        spark, files, read_cols, ts_range=ts_range,
         time_limit_ms=time_limit_ms,
         page_files=int(query.get("page_files", 64)),
-        row_limit=max_rows, post=post,
-        fill={c: ttypes[c] for c in stored})
+        row_limit=max_rows,
+        post=lambda t: _residual_filter(t, selections).select(fields),
+        fill=ttypes)
     return {
-        "rows": [{k: _json_safe(v) for k, v in r.asDict().items()}
-                 for r in rows],
+        "rows": [{k: _json_safe(v) for k, v in r.items()} for r in rows],
         "num_rows": len(rows),
         "truncated": next_cursor is not None,
         "next_cursor": next_cursor,

@@ -14,9 +14,9 @@ Endpoints:
                     → 400 {"error": ...} on a malformed query
     GET  /height    → 200 {"archive_height": N}   (archive_height poll)
 
-Queries execute on the driver's SparkSession one at a time (the
-handler is intentionally single-threaded: one Spark driver, one
-query at a time — the reference's query concurrency also bounds on a
+Queries decode on the driver itself, with no Spark job, one at a time
+(the handler is intentionally single-threaded: one driver, one query
+at a time — the reference's query concurrency also bounds on a
 semaphore, server.rs). `serve(...)` returns the live HTTPServer;
 call `.shutdown()` to stop it. For production-scale concurrency run
 several servers over the same table directory — all state is on disk.

@@ -212,35 +212,19 @@ class SkarReader(DataSourceReader):
         yield from _read_part_batches(
             partition.path, self.cols, host_eq=self.host_eq,
             ts_range=self._ts_range(), lang_eq=self.lang_eq,
-            table_cols=self.table_cols, fill=self.fill)
+            table_cols=self.table_cols, fill_missing=self.fill)
 
 
-def _read_part_batches(path: str, cols, host_eq=None, ts_range=None,
-                       lang_eq=None, table_cols=None, fill=None):
-    """Decode one part file to Arrow batches with the derived `host`
-    column — the shared read-task body of the batch and stream readers.
-    `table_cols`/`fill` carry the merged schema of an evolved table so
-    columns a part predates come back null-filled."""
-    from skar_spark.engine.partfile import (
-        _derive_host,
-        read_footer,
-        read_part_file,
-    )
+def _read_part_batches(path: str, cols, table_cols=None, **read_kw):
+    """One part file as Arrow batches with the derived `host` column
+    (engine.decode.read_part_table) — the shared read-task body of the
+    batch and stream readers. `table_cols`/`fill_missing` carry the
+    merged schema of an evolved table so columns a part predates come
+    back null-filled."""
+    from skar_spark.engine.decode import read_part_table
 
-    want = cols or table_cols
-    if want is None:
-        want = read_footer(path)["columns"] + ["host"]
-    stored = [c for c in want if c != "host"]
-    inner = list(stored)
-    if "host" in want and "url" not in inner:
-        inner.append("url")
-    t = read_part_file(path, columns=inner, host_eq=host_eq,
-                       ts_range=ts_range, lang_eq=lang_eq,
-                       fill_missing=fill)
-    if "host" in want:
-        t = t.append_column("host", _derive_host(t["url"]))
-    t = t.select(want)
-    yield from t.to_batches(max_chunksize=16384)
+    yield from read_part_table(path, cols or table_cols,
+                               **read_kw).to_batches(max_chunksize=16384)
 
 
 class SkarStreamReader(DataSourceStreamReader):
@@ -323,7 +307,7 @@ class SkarStreamReader(DataSourceStreamReader):
             return
         yield from _read_part_batches(partition.path, self.cols,
                                       table_cols=self.table_cols,
-                                      fill=self.fill)
+                                      fill_missing=self.fill)
 
     def commit(self, end: dict) -> None:
         pass  # progress is tracked by Spark's streaming checkpoint

@@ -64,10 +64,14 @@ def test_time_range_inclusive_exclusive(spark, table):
         "from_ts": lo.isoformat(), "to_ts": hi.isoformat(),
         "field_selection": ["url", "warc_ts"],
     })
-    want = _expected(docs, (F.col("warc_ts") >= F.lit(lo))
-                     & (F.col("warc_ts") < F.lit(hi)))
+    in_range = (F.col("warc_ts") >= F.lit(lo)) & (F.col("warc_ts") < F.lit(hi))
+    want = _expected(docs, in_range)
     assert {(r["url"],) for r in res["rows"]} == want
     assert 0 < res["num_rows"] < N_DOCS
+    # JSON timestamps are the naive-UTC isoformat a collect returns
+    want_ts = {r.url: r.warc_ts.isoformat() for r in
+               docs.filter(in_range).select("url", "warc_ts").collect()}
+    assert all(r["warc_ts"] == want_ts[r["url"]] for r in res["rows"])
 
 
 def test_url_prefix_selection(spark, table):
@@ -127,3 +131,73 @@ def test_lang_selection_prunes_partitions(spark, table):
     want = _expected(docs, F.col("lang") == "de")
     assert {(r["url"],) for r in res["rows"]} == want
     assert all(r["lang"] == "de" for r in res["rows"])
+
+
+def test_null_lang_follows_kleene_or(spark, tmp_path):
+    """A null `lang` is unknown, not false: a selection that fails only
+    on it loses the row, while another selection that matches the row
+    keeps it (`null OR true` is true, as in Spark's Column logic)."""
+    import datetime as dt
+    import os
+
+    import pyarrow as pa
+
+    from skar_spark.engine.partfile import write_part_file
+
+    out = str(tmp_path / "out")
+    os.makedirs(os.path.join(out, "parts"))
+    h = "h.example"
+    t = pa.table({
+        "url": [f"https://{h}/a", f"https://{h}/b", "https://o.example/c"],
+        "warc_ts": pa.array([dt.datetime(2024, 1, 1, 0, 0, i)
+                             for i in range(3)], pa.timestamp("us")),
+        "lang": [None, "en", "de"],
+        "text": ["x", "y", "z"],
+        "_host": [h, h, "o.example"],
+    })
+    write_part_file(os.path.join(out, "parts", "part-000000.skar"), t,
+                    EngineConfig(max_row_group_size=100))
+    null_url = f"https://{h}/a"
+
+    def urls(selections):
+        res = run_query(spark, out, {"selections": selections,
+                                     "field_selection": ["url"]})
+        return {r["url"] for r in res["rows"]}
+
+    assert null_url in urls([{"langs": ["de"]}, {"hosts": [h]}])
+    assert urls([{"hosts": [h], "langs": ["de"]}]) == set()
+
+
+def test_bounded_reads_launch_no_spark_job(spark, table):
+    """Bounded reads decode on the driver: run_query, a multi-page
+    scan_paged and building the scan_changes DataFrame run no Spark job
+    under the caller's job group."""
+    from skar_spark.engine.decode import scan_changes, scan_paged
+
+    out, docs = table
+    first = docs.select("url", "lang").first()
+    host = first.url.split("/")[2]
+    sc = spark.sparkContext
+    group = "bounded-read-no-jobs"
+    sc.setJobGroup(group, "bounded reads only")
+    try:
+        res = run_query(spark, out, {
+            "selections": [{"hosts": [host], "langs": [first.lang]}],
+            "field_selection": ["url", "text"]})
+        cursor, pages, n = 0, 0, 0
+        while cursor is not None:
+            rows, cursor = scan_paged(spark, out, columns=["url"],
+                                      cursor=cursor, time_limit_ms=0,
+                                      page_files=2)
+            pages += 1
+            n += len(rows)
+        scan_changes(spark, out)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        # the check itself sees jobs of this group
+        spark.range(1).count()
+        assert list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert res["num_rows"] > 0
+    assert all(set(r) == {"url", "text"} for r in res["rows"])
+    assert pages > 1 and n == N_DOCS
