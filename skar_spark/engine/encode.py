@@ -33,6 +33,7 @@ shuffle is on a uniform hashed key (salting bounds any partition's size).
 
 from __future__ import annotations
 
+import functools
 import os
 import time
 import uuid
@@ -151,48 +152,69 @@ def with_host(df: DataFrame) -> DataFrame:
     return df.withColumn("host", F.regexp_extract("url", HOST_RE, 1))
 
 
+def _row_bytes():
+    """A row's payload bytes: the planning measure of document size."""
+    return sum(F.coalesce(F.octet_length(F.col(c)), F.lit(0))
+               for c in ("url", "text", "html", "lang"))
+
+
 def host_stats(df: DataFrame) -> DataFrame:
     """Per-host (count, bytes) in one map-side-combinable pass — the
     planning statistic for salting. Bytes matter as much as rows: web
     hosts skew in DOCUMENT SIZE too (a host of 10× average-length pages
     makes a 10×-CPU encode chunk at equal row count), and the straggler
     tail is CPU ∝ bytes, not rows."""
-    return df.groupBy("host").agg(
-        F.count("*").alias("count"),
-        F.sum(sum(F.coalesce(F.octet_length(F.col(c)), F.lit(0))
-                  for c in ("url", "text", "html", "lang"))
-              ).alias("bytes"))
+    return df.groupBy("host").agg(F.count("*").alias("count"),
+                                  F.sum(_row_bytes()).alias("bytes"))
 
 
-def salt_map(df: DataFrame, cfg: EngineConfig,
-             host_counts: DataFrame | None = None) -> DataFrame:
-    """The heavy-host map (host → n_salts, chunk_bytes): hosts above the
-    salt threshold in ROWS or BYTES are split into enough salts that
-    every chunk fits both bounds. Small by construction (broadcastable).
-    Persisted by encode_documents so late-data rollback replans with
-    IDENTICAL partition membership; `chunk_bytes` (estimated bytes per
-    salted chunk) additionally drives deterministic bin-packing of heavy
-    chunks across partitions (plan_partitions)."""
-    hc = host_counts if host_counts is not None else host_stats(df)
-    tot = hc.agg(F.sum("count"), F.sum("bytes")).collect()[0]
-    avg_row = (tot[1] or 1) / max(tot[0] or 1, 1)
-    thr_bytes = float(cfg.salt_threshold_rows) * avg_row
-    return (hc.filter((F.col("count") > cfg.salt_threshold_rows)
+def plan_totals(df: DataFrame) -> dict:
+    """THE totals action of every plan: one ``df.agg`` giving
+    ``n_rows``, ``n_bytes`` (the host_stats byte measure, summed) and
+    the day range ``d0``/``d1`` of ``warc_ts``."""
+    return df.agg(F.count("*").alias("n_rows"),
+                  F.sum(_row_bytes()).alias("n_bytes"),
+                  F.min(F.to_date("warc_ts")).alias("d0"),
+                  F.max(F.to_date("warc_ts")).alias("d1")
+                  ).collect()[0].asDict()
+
+
+def salt_rows(df: DataFrame, threshold_rows: int, totals: dict) -> pa.Table:
+    """The heavy-host map (SALT_MAP_DDL, sorted by host): hosts above
+    `threshold_rows` in ROWS or in BYTES (the threshold times the
+    average row size from `totals`) are split into enough salts that
+    every chunk fits both bounds; `chunk_bytes` (estimated bytes per
+    salted chunk) drives the bin-packing of heavy chunks
+    (plan_partitions). One action, and only heavy candidates reach the
+    driver. None can exist when the COUNTED rows are below the
+    threshold (no host has more rows than the input, and the byte
+    bound then exceeds the input's bytes), so that case runs no job."""
+    schema = _arrow_schema(SALT_MAP_DDL)
+    if totals["n_rows"] < threshold_rows:
+        return schema.empty_table()
+    avg_row = (totals["n_bytes"] or 1) / max(totals["n_rows"] or 1, 1)
+    thr_bytes = float(threshold_rows) * avg_row
+    n_salts = F.ceil(F.greatest(F.col("count") / threshold_rows,
+                                F.col("bytes") / thr_bytes))
+    hc = host_stats(with_host(df))
+    return (hc.filter((F.col("count") > threshold_rows)
                       | (F.col("bytes") > thr_bytes))
-            .select("host",
-                    F.ceil(F.greatest(
-                        F.col("count") / cfg.salt_threshold_rows,
-                        F.col("bytes") / thr_bytes))
-                    .cast("int").alias("n_salts"),
-                    (F.col("bytes") / F.ceil(F.greatest(
-                        F.col("count") / cfg.salt_threshold_rows,
-                        F.col("bytes") / thr_bytes)))
-                    .cast("long").alias("chunk_bytes")))
+            .select("host", n_salts.cast("int").alias("n_salts"),
+                    (F.col("bytes") / n_salts).cast("long")
+                    .alias("chunk_bytes"))
+            .toArrow().cast(schema).sort_by("host"))
 
 
-def _apply_salt(df: DataFrame, heavy: DataFrame) -> DataFrame:
-    df = df.join(F.broadcast(heavy.select("host", "n_salts")),
-                 "host", "left")
+def _apply_salt(df: DataFrame, salt: pa.Table) -> DataFrame:
+    """Attach ``salt`` = xxhash64(url) mod n_salts for the hosts of the
+    heavy-host table `salt`, 0 otherwise, through ONE broadcast of it;
+    its other columns but chunk_bytes (e.g. the packed ``_parts``) come
+    along. An empty table needs no join."""
+    if not salt.num_rows:
+        return df.withColumn("salt", F.lit(0))
+    heavy = df.sparkSession.createDataFrame(
+        salt.select([c for c in salt.column_names if c != "chunk_bytes"]))
+    df = df.join(F.broadcast(heavy), "host", "left")
     return df.withColumn(
         "salt",
         F.when(F.col("n_salts").isNotNull(),
@@ -200,122 +222,90 @@ def _apply_salt(df: DataFrame, heavy: DataFrame) -> DataFrame:
         .otherwise(F.lit(0)).cast("int")).drop("n_salts")
 
 
-def _with_salt(df: DataFrame, cfg: EngineConfig,
-               host_counts: DataFrame | None = None,
-               salt: DataFrame | None = None) -> DataFrame:
-    """Heavy-host salting; `salt` (a salt_map result) overrides the
-    computed map so replans are membership-stable."""
-    return _apply_salt(df, salt if salt is not None
-                       else salt_map(df, cfg, host_counts))
-
-
-def plan_partitions_day_hash(df: DataFrame, target_rows: int,
-                             cfg: EngineConfig = DEFAULT,
-                             fixed: tuple | None = None,
-                             salt: DataFrame | None = None
-                             ) -> tuple[DataFrame, int, tuple]:
-    """Range × hash layout: part_id = (day(warc_ts) − min_day) · B +
+def plan_partitions_day_hash(df: DataFrame, salt: pa.Table,
+                             layout: tuple) -> DataFrame:
+    """Range × hash layout: part_id = (day(warc_ts) − d0) · B +
     bucket(host, salt) — the Iceberg `days(warc_ts) × bucket(url)`
     layout from SURVEY §1.3 (mirror of skar's block-range folders,
     which ARE its time-range partitions). Each partition covers one
     day, so lineage min/max warc_ts zone maps prune whole partitions
     for time-windowed scans — the capability the flat hash scheme
-    lacks. Returns (planned_df, num_parts).
-
-    The day-stats aggregation is one map-side-combined pass (3 longs
-    out); at 10^12 docs it is metadata-cheap next to the main shuffle.
-    """
-    df = with_host(df)
-    if fixed is not None:
-        d0, buckets, num_parts = fixed
-    else:
-        stats = df.agg(
-            F.min(F.to_date("warc_ts")).alias("d0"),
-            F.max(F.to_date("warc_ts")).alias("d1"),
-            F.count("*").alias("n")).collect()[0]
-        n_days = (stats.d1 - stats.d0).days + 1
-        buckets = max(1, -(-int(stats.n) // n_days // target_rows))
-        num_parts = n_days * buckets
-        d0 = stats.d0
-    import dataclasses
-    cfg = dataclasses.replace(
-        cfg, salt_threshold_rows=min(cfg.salt_threshold_rows,
-                                     max(500, target_rows // 2)))
-    df = _with_salt(df, cfg, salt=salt)
+    lacks. `layout` is (d0, B, num_parts), from the plan totals or the
+    stored plan; no Spark action runs here."""
+    d0, buckets, _num_parts = layout
+    df = _apply_salt(with_host(df), salt)
     day_idx = F.datediff(F.to_date("warc_ts"), F.lit(d0))
     return df.withColumn(
         "part_id",
         (day_idx * buckets
          + F.pmod(F.xxhash64("host", "salt"), F.lit(buckets)))
-        .cast("int")), num_parts, (d0, buckets, num_parts)
+        .cast("int"))
 
 
-def _pack_heavy_chunks(sm_rows, num_parts: int
-                       ) -> tuple[list[tuple], dict[int, int]]:
+def _pack_heavy_chunks(salt: pa.Table, num_parts: int
+                       ) -> tuple[list[list[int]], dict[int, int]]:
     """Greedy bin-packing of the known heavy (host, salt) chunks across
     partitions: biggest chunk first into the least-loaded partition.
-    Deterministic given the persisted salt map (sort keys break ties by
-    host), so resume/rollback replans place chunks identically. Returns
-    ([(host, salt, part_id)], {part_id: packed_bytes}) — the load map
-    feeds planned_exchange's largest-first task placement. Driver-side
-    but METADATA-sized: one entry per heavy chunk, not per row — at
-    10^12 docs the salt map is KBs."""
+    Deterministic given the salt map (sort keys break ties by host), so
+    resume/rollback replans place chunks identically. Returns (the part
+    id of each salt, per row of `salt`; {part_id: packed_bytes}) — the
+    load map feeds planned_exchange's largest-first task placement.
+    Driver-side but METADATA-sized: one entry per heavy chunk, not per
+    row — at 10^12 docs the salt map is KBs."""
     import heapq
 
-    chunks = []
-    for r in sm_rows:
-        per = (r.chunk_bytes if r.chunk_bytes is not None else 0)
-        for s in range(r.n_salts):
-            chunks.append((per, r.host, s))
-    chunks.sort(key=lambda c: (-c[0], c[1], c[2]))
+    hosts = salt["host"].to_pylist()
+    n_salts = salt["n_salts"].to_pylist()
+    chunks = []  # (bytes, salt-map row, salt) per heavy chunk: metadata
+    for i, per in enumerate(salt["chunk_bytes"].to_pylist()):
+        chunks += [(per or 0, i, s) for s in range(n_salts[i])]
+    chunks.sort(key=lambda c: (-c[0], hosts[c[1]], c[2]))
     heap = [(0, p) for p in range(num_parts)]  # (load, part_id)
-    out = []
+    parts = [[0] * n for n in n_salts]
     loads: dict[int, int] = {}
-    for per, host, s in chunks:
+    for per, i, s in chunks:
         load, p = heapq.heappop(heap)
-        out.append((host, s, p))
+        parts[i][s] = p
         loads[p] = load + per
         heapq.heappush(heap, (load + per, p))
-    return out, loads
+    return parts, loads
 
 
 def plan_partitions(df: DataFrame, num_parts: int,
                     cfg: EngineConfig = DEFAULT,
-                    host_counts: DataFrame | None = None,
-                    salt: DataFrame | None = None,
-                    packed: list[tuple] | None = None) -> DataFrame:
+                    salt: pa.Table | None = None,
+                    loads: dict | None = None) -> DataFrame:
     """Attach deterministic `part_id` with heavy-host salting.
 
-    Three-phase: (1) per-host (count, bytes) stats (map-side combinable
-    agg; cheap — hosts are low-cardinality vs rows), kept above the salt
-    threshold in rows OR bytes; (2) broadcast-join that small map and
-    compute salt = xxhash64(url) mod n_salts for heavy hosts, 0
-    otherwise; (3) KNOWN heavy chunks get explicit bin-packed part ids
-    (largest-first into least-loaded — the only chunks big enough to
-    matter are exactly the ones the salt map enumerates), light hosts
-    hash uniformly. Packing removes the Poisson tail of several heavy
-    chunks hashing into one partition, which measured as a 3× max/median
-    task-time straggler on the encode stage.
+    `salt` is the heavy-host table (salt_rows, or a persisted map);
+    None derives it from `df` at ``cfg.salt_threshold_rows`` (the
+    totals action plus at most one heavy-host action). Given a table,
+    no Spark action runs: the KNOWN heavy chunks get bin-packed part ids
+    on the driver (largest-first into least-loaded — the only chunks
+    big enough to matter are exactly the ones the salt map enumerates),
+    one broadcast attaches salt and packed parts, and light hosts hash
+    uniformly: part_id = xxhash64(host, salt) mod num_parts. Packing
+    removes the Poisson tail of several heavy chunks hashing into one
+    partition, which measured as a 3× max/median task-time straggler on
+    the encode stage. `loads`, when given, is filled with the packing's
+    {part_id: packed bytes} for encode_footers. A legacy map without
+    chunk_bytes is hash-only.
     """
-    df = with_host(df)
-    sm = salt if salt is not None else salt_map(df, cfg, host_counts)
-    df = _apply_salt(df, sm)
-    hash_part = F.pmod(F.xxhash64("host", "salt"), F.lit(num_parts)) \
+    if salt is None:
+        salt = salt_rows(df, cfg.salt_threshold_rows, plan_totals(df))
+    if "chunk_bytes" in salt.column_names and salt.num_rows:
+        parts, chunk_loads = _pack_heavy_chunks(salt, num_parts)
+        if loads is not None:
+            loads.update(chunk_loads)
+        salt = salt.append_column(
+            "_parts", pa.array(parts, pa.list_(pa.int32())))
+    df = _apply_salt(with_host(df), salt)
+    part_id = F.pmod(F.xxhash64("host", "salt"), F.lit(num_parts)) \
         .cast("int")
-    if "chunk_bytes" not in sm.columns:
-        return df.withColumn("part_id", hash_part)
-    spark = df.sparkSession
-    if packed is None:
-        packed, _loads = _pack_heavy_chunks(
-            sm.orderBy("host").collect(), num_parts)
-    if not packed:
-        return df.withColumn("part_id", hash_part)
-    pdf = spark.createDataFrame(
-        packed, "host string, salt int, _packed_part int")
-    df = df.join(F.broadcast(pdf), ["host", "salt"], "left")
-    return df.withColumn(
-        "part_id", F.coalesce(F.col("_packed_part"), hash_part)) \
-        .drop("_packed_part")
+    if "_parts" in salt.column_names:
+        part_id = F.coalesce(F.element_at("_parts", F.col("salt") + 1),
+                             part_id)
+    return df.withColumn("part_id", part_id).drop("_parts")
 
 
 def _murmur3_int32(x: int, seed: int = 42) -> int:
@@ -604,42 +594,34 @@ def _salt_map_dir(out_dir: str) -> str:
     return os.path.join(_meta_dir(out_dir), "salt_map")
 
 
-def save_salt_map(spark: SparkSession, out_dir: str,
-                  sm: DataFrame) -> list:
-    """Persist the salt map and return its collected rows.
-
-    The map is metadata (one row per heavy host) — a Spark parquet
-    write job + read-back just to land it was a fixed ~0.5-1 s serial
-    barrier per encode (the append_lineage_rows lesson); instead
-    collect the rows and PUT one parquet object through the storage
-    seam."""
+def save_salt_map(out_dir: str, salt: pa.Table) -> None:
+    """Persist the heavy-host table (salt_rows) as one parquet object
+    through the storage seam — metadata, one row per heavy host, so no
+    Spark job."""
     import io
 
     import pyarrow.parquet as _pq
 
-    rows = sm.collect()
     buf = io.BytesIO()
-    _pq.write_table(pa.Table.from_pylist([r.asDict() for r in rows],
-                                         _arrow_schema(SALT_MAP_DDL)), buf)
+    _pq.write_table(salt, buf)
     storage.remove_prefix(_salt_map_dir(out_dir))
     storage.put_bytes(os.path.join(_salt_map_dir(out_dir),
                                    "salt-map.parquet"), buf.getvalue())
-    return rows
 
 
-def load_salt_map(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    """The persisted salt map, read driver-side (no Spark job), or None.
-    Every parquet object under the salt-map prefix is read, so maps an
-    older version wrote as a Spark parquet directory load too."""
+def load_salt_map(out_dir: str) -> pa.Table | None:
+    """The persisted salt map as a local table, or None. Every parquet
+    object under the salt-map prefix is read, so maps an older version
+    wrote as a Spark parquet directory load too."""
     import pyarrow.parquet as _pq
 
     keys = [k for k in storage.list_prefix(_salt_map_dir(out_dir))
             if k.endswith(".parquet")]
     if not keys:
         return None
-    return spark.createDataFrame(pa.concat_tables(
+    return pa.concat_tables(
         [_pq.read_table(pa.BufferReader(storage.get_bytes(k)))
-         for k in keys]))
+         for k in keys])
 
 
 def lineage_row_groups(out_dir: str, cols: list[str] | None = None,
@@ -905,10 +887,12 @@ def append_documents(spark: SparkSession, df: DataFrame, out_dir: str,
     the number of parts appended.
 
     Unlike ``encode_documents(resume=True)`` (which FINISHES a planned
-    table), append re-plans from the increment's own stats: partition
-    count and heavy-host salting derive from the new rows only — at
-    10^12-doc table sizes the increment must never pay a planning pass
-    over history."""
+    table), append re-plans from the increment's own stats: one totals
+    action over the new rows gives the partition count, and the heavy
+    hosts (salted at ``cfg.salt_threshold_rows``) come from at most one
+    more — none when the increment has fewer rows than the threshold.
+    At 10^12-doc table sizes the increment must never pay a planning
+    pass over history."""
     import uuid as _uuid
 
     from skar_spark.engine.compact import compaction_high_water
@@ -931,22 +915,26 @@ def append_documents(spark: SparkSession, df: DataFrame, out_dir: str,
             "day_hash tables take late data via reencode_late")
     mx = pc.max(lin["partition_id"]).as_py() or 0
     base = max(mx, int(compaction_high_water(out_dir) or 0)) + 1
+    totals = plan_totals(df)
     if parts is None:
-        n = df.count()
-        if n == 0:
+        if totals["n_rows"] == 0:
             return 0  # empty increment: no parts, no lineage batch
-        parts = max(1, -(-n // cfg.target_partition_rows))
+        parts = max(1, -(-totals["n_rows"] // cfg.target_partition_rows))
     if base + parts >= 2 ** 31:
         raise OverflowError(
             f"append would exceed the int32 part-id namespace at base "
             f"{base}; rotate out_dir or widen partition_id to long")
-    planned = plan_partitions(df, parts, cfg)
+    loads: dict[int, int] = {}
+    planned = plan_partitions(
+        df, parts, cfg, salt_rows(df, cfg.salt_threshold_rows, totals),
+        loads)
     planned = planned.withColumn(
         "part_id", (F.col("part_id") + F.lit(base)).cast("int"))
     tag = _uuid.uuid4().hex[:8]
     footers = encode_footers(planned, list(range(base, base + parts)),
                              out_dir, cfg, f"append-{tag}",
-                             f"part-x{tag}-{{pid:09d}}.skar")
+                             f"part-x{tag}-{{pid:09d}}.skar",
+                             {p + base: b for p, b in loads.items()})
     return append_lineage_rows(footers, out_dir)
 
 
@@ -984,88 +972,67 @@ def encode_documents(spark: SparkSession, df: DataFrame, out_dir: str,
         from skar_spark.engine.compact import assert_not_compacted
         assert_not_compacted(out_dir, "encode resume")
     storage.makedirs(os.path.join(out_dir, "parts"))
-    host_counts = None
-    day_meta = None
-    if scheme == "day_hash":
-        pass  # planned below, after the salt map exists
-    elif num_parts is None:
-        if n_rows is None:
-            # one pass serves both: total rows for partition planning AND
-            # the per-host (count, bytes) stats salting needs
-            host_counts = host_stats(with_host(df)).cache()
-            n_rows = host_counts.agg(
-                F.sum("count").alias("n")).collect()[0].n or 0
-        num_parts = max(1, -(-n_rows // cfg.target_partition_rows))
-
-    # straggler control (measured on the 300k-doc bench): the salt
-    # threshold must track the actual partition size — a threshold far
-    # above rows/num_parts lets one salted heavy-host chunk dominate a
-    # task (worst task 12.9s vs 3.6s avg before)
-    if n_rows is not None and scheme != "day_hash":
-        # a QUARTER of the average partition size (r6; was half): on a
-        # Zipf host distribution several hosts just under a half-size
-        # threshold can clump into one partition (measured 54 MB max vs
-        # 32 MB median part, a 3× encode-task straggler); quarter-size
-        # chunks all enter the deterministic bin-packing and the part
-        # profile flattens (46 MB max, worst task 5.6 s → 3.7 s) for
-        # +0.15% encoded bytes (split hosts lose cross-chunk locality)
-        eff_thr = min(cfg.salt_threshold_rows,
-                      max(500, n_rows // max(num_parts, 1) // 4))
-        if eff_thr != cfg.salt_threshold_rows:
-            import dataclasses
-            cfg = dataclasses.replace(cfg, salt_threshold_rows=eff_thr)
-    elif scheme == "day_hash":
-        import dataclasses
-        cfg = dataclasses.replace(
-            cfg, salt_threshold_rows=min(
-                cfg.salt_threshold_rows,
-                max(500, cfg.target_partition_rows // 2)))
+    import dataclasses
     import sys
     t_plan0 = time.time()
     # the salt map + scheme parameters are PERSISTED so resume and
     # late-data rollback replan with identical partition membership even
-    # if the input's host distribution has drifted
-    sm = load_salt_map(spark, out_dir) if resume else None
-    sm_rows = None
+    # if the input's host distribution has drifted; a resume that finds
+    # both plans with no Spark job
+    salt = load_salt_map(out_dir) if resume else None
     stored_meta = load_plan_meta(out_dir) if resume else None
-    if sm is None:
-        # cache the host stats: salt_map both aggregates them (global
-        # avg row bytes) and filters them, and the save below would
-        # otherwise recompute the full scan a second time
-        own_stats = host_counts is None
-        if own_stats:
-            host_counts = host_stats(with_host(df)).cache()
-        sm_rows = save_salt_map(spark, out_dir,
-                                salt_map(with_host(df), cfg, host_counts))
-        if own_stats:
-            host_counts.unpersist()
-            host_counts = None
-        sm = spark.createDataFrame(sm_rows, SALT_MAP_DDL)
-    if stored_meta and scheme != "day_hash":
-        num_parts = stored_meta["num_parts"]
+    # the one totals action (rows, bytes, day range) serves partition
+    # count, day layout and salt thresholds; run only if one needs it
+    totals = functools.cache(lambda: plan_totals(df))
     if scheme == "day_hash":
-        fixed = None
+        cfg = dataclasses.replace(
+            cfg, salt_threshold_rows=min(
+                cfg.salt_threshold_rows,
+                max(500, cfg.target_partition_rows // 2)))
+    elif salt is None or stored_meta is None:
+        if num_parts is None:
+            if n_rows is None:
+                n_rows = totals()["n_rows"]
+            num_parts = max(1, -(-n_rows // cfg.target_partition_rows))
+        if n_rows is not None:
+            # straggler control (measured on the 300k-doc bench): the
+            # salt threshold must track the actual partition size — a
+            # threshold far above rows/num_parts lets one salted
+            # heavy-host chunk dominate a task (worst task 12.9s vs 3.6s
+            # avg before). A QUARTER of the average partition size (r6;
+            # was half): on a Zipf host distribution several hosts just
+            # under a half-size threshold can clump into one partition
+            # (measured 54 MB max vs 32 MB median part, a 3× encode-task
+            # straggler); quarter-size chunks all enter the
+            # deterministic bin-packing and the part profile flattens
+            # (46 MB max, worst task 5.6 s → 3.7 s) for +0.15% encoded
+            # bytes (split hosts lose cross-chunk locality)
+            cfg = dataclasses.replace(cfg, salt_threshold_rows=min(
+                cfg.salt_threshold_rows,
+                max(500, n_rows // max(num_parts, 1) // 4)))
+    if salt is None:
+        salt = salt_rows(df, cfg.salt_threshold_rows, totals())
+        save_salt_map(out_dir, salt)
+    day_meta = None
+    loads: dict[int, int] = {}
+    if scheme == "day_hash":
         if stored_meta and stored_meta.get("d0"):
             import datetime as _dt
-            fixed = (_dt.date.fromisoformat(stored_meta["d0"]),
-                     stored_meta["buckets"], stored_meta["num_parts"])
-        planned, num_parts, (d0, buckets, num_parts) = \
-            plan_partitions_day_hash(df, cfg.target_partition_rows, cfg,
-                                     fixed=fixed, salt=sm)
+            layout = (_dt.date.fromisoformat(stored_meta["d0"]),
+                      stored_meta["buckets"], stored_meta["num_parts"])
+        else:
+            t = totals()
+            n_days = (t["d1"] - t["d0"]).days + 1
+            buckets = max(1, -(-int(t["n_rows"]) // n_days
+                               // cfg.target_partition_rows))
+            layout = (t["d0"], buckets, n_days * buckets)
+        d0, buckets, num_parts = layout
+        planned = plan_partitions_day_hash(df, salt, layout)
         day_meta = {"d0": d0.isoformat(), "buckets": buckets}
-        loads: dict[int, int] | None = None
     else:
-        # one packing pass serves both the part-id plan and the
-        # largest-first exchange ordering (salt-map rows are metadata)
-        loads = None
-        packed = None
-        if "chunk_bytes" in sm.columns:
-            if sm_rows is None:
-                sm_rows = sm.collect()
-            packed, loads = _pack_heavy_chunks(
-                sorted(sm_rows, key=lambda r: r.host), num_parts)
-        planned = plan_partitions(df, num_parts, cfg, host_counts,
-                                  salt=sm, packed=packed)
+        if stored_meta:
+            num_parts = stored_meta["num_parts"]
+        planned = plan_partitions(df, num_parts, cfg, salt, loads)
     if stored_meta is None:
         save_plan_meta(out_dir, {
             "scheme": scheme, "num_parts": num_parts,
@@ -1122,8 +1089,6 @@ def encode_documents(spark: SparkSession, df: DataFrame, out_dir: str,
               f"({len(batch_ids)} parts)", file=sys.stderr)
         ran += 1
 
-    if host_counts is not None:
-        host_counts.unpersist()
     lin = read_lineage(spark, out_dir, latest=True)
     assert lin is not None, "encode produced no lineage"
     return lin
@@ -1157,23 +1122,24 @@ def _assert_no_appended_parts(out_dir: str, op: str,
 
 
 def _replan_with_stored(spark: SparkSession, df: DataFrame, out_dir: str,
-                        cfg: EngineConfig) -> tuple[DataFrame, dict]:
+                        cfg: EngineConfig, loads: dict | None = None
+                        ) -> tuple[DataFrame, dict]:
     """Replan `df` with the PERSISTED salt map + scheme parameters so
-    partition membership is identical to the original encode."""
+    partition membership is identical to the original encode; no Spark
+    action runs. `loads` is filled as in plan_partitions."""
     meta = load_plan_meta(out_dir)
     if meta is None:
         raise FileNotFoundError(f"no plan metadata under {out_dir}")
-    sm = load_salt_map(spark, out_dir)
-    if sm is None:
+    salt = load_salt_map(out_dir)
+    if salt is None:
         raise FileNotFoundError(f"no salt map under {out_dir}")
     if meta["scheme"] == "day_hash":
         import datetime as _dt
-        d0 = _dt.date.fromisoformat(meta["d0"])
-        planned, _n, _m = plan_partitions_day_hash(
-            df, meta["target_partition_rows"], cfg,
-            fixed=(d0, meta["buckets"], meta["num_parts"]), salt=sm)
+        planned = plan_partitions_day_hash(
+            df, salt, (_dt.date.fromisoformat(meta["d0"]), meta["buckets"],
+                       meta["num_parts"]))
     else:
-        planned = plan_partitions(df, meta["num_parts"], cfg, salt=sm)
+        planned = plan_partitions(df, meta["num_parts"], cfg, salt, loads)
     return planned, meta
 
 
@@ -1218,11 +1184,13 @@ def reencode_late(spark: SparkSession, full_df: DataFrame,
     print(f"[reencode_late] rolling back {len(affected)} partition(s): "
           f"{sorted(affected)[:20]}", file=sys.stderr)
 
-    planned_full, _ = _replan_with_stored(spark, full_df, out_dir, cfg)
+    loads: dict[int, int] = {}
+    planned_full, _ = _replan_with_stored(spark, full_df, out_dir, cfg,
+                                          loads)
     sub = planned_full.filter(F.col("part_id").isin(affected))
     attempt = "late-" + uuid.uuid4().hex[:8]
     footers = encode_footers(sub, affected, out_dir, cfg, attempt,
-                             _kernel_name_fmt(cfg, attempt, out_dir))
+                             _kernel_name_fmt(cfg, attempt, out_dir), loads)
     append_lineage_rows(footers, out_dir)
     return read_lineage(spark, out_dir, latest=True)
 
@@ -1241,11 +1209,13 @@ def _rewrite_partitions(spark: SparkSession, out_dir: str,
     format writes one empty row group) — so the supersede is uniform
     and readers never resurrect the old rows.
     """
-    planned, _ = _replan_with_stored(spark, corrected, out_dir, cfg)
+    loads: dict[int, int] = {}
+    planned, _ = _replan_with_stored(spark, corrected, out_dir, cfg, loads)
     sub = planned.filter(F.col("part_id").isin(affected))
     attempt = f"{tag}-{uuid.uuid4().hex[:8]}"
     name_fmt = _kernel_name_fmt(cfg, attempt, out_dir)
-    footers = encode_footers(sub, affected, out_dir, cfg, attempt, name_fmt)
+    footers = encode_footers(sub, affected, out_dir, cfg, attempt, name_fmt,
+                             loads)
     # only part_ids that HAVE rows reach a kernel task: partitions
     # emptied by a delete never do, so their zero-row parts are written
     # driver-side (metadata-scale: one small file per emptied pid)

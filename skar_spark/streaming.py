@@ -40,6 +40,8 @@ from skar_spark.engine.encode import (
     encode_footers,
     lineage_dir,
     plan_partitions,
+    plan_totals,
+    salt_rows,
 )
 
 
@@ -186,9 +188,12 @@ def stream_encode(spark: SparkSession, input_dir: str, out_dir: str,
                                str(max_files_per_trigger))
     stream = reader.parquet(input_dir)
 
-    def encode_batch(bdf: DataFrame, epoch_id: int) -> None:
-        if bdf.isEmpty():
-            return
+    def encode_batch(bdf: DataFrame, epoch_id: int) -> int:
+        """Plan, encode and commit one epoch; returns its input bytes
+        (the plan's totals)."""
+        totals = plan_totals(bdf)
+        if totals["n_rows"] == 0:
+            return 0
         # INJECTIVE epoch namespacing (ADVICE r01: the old modular scheme
         # wrapped after ~2146 epochs and silently overwrote part files):
         # part_id = epoch·parts_per_batch + local_pid never collides, and
@@ -201,34 +206,33 @@ def stream_encode(spark: SparkSession, input_dir: str, out_dir: str,
                 f"epoch {epoch_id} exceeds the int32 part-id namespace "
                 f"({parts_per_batch} parts/epoch); rotate out_dir or "
                 "widen partition_id to long")
-        planned = plan_partitions(bdf, parts_per_batch, cfg)
+        loads: dict[int, int] = {}
+        planned = plan_partitions(
+            bdf, parts_per_batch, cfg,
+            salt_rows(bdf, cfg.salt_threshold_rows, totals), loads)
         planned = planned.withColumn(
             "part_id", (F.col("part_id") + F.lit(base)).cast("int"))
         footers = encode_footers(
             planned, list(range(base, base + parts_per_batch)), out_dir,
             cfg, f"epoch-{epoch_id}",
-            f"part-e{int(epoch_id)}-{{pid:09d}}.skar")
+            f"part-e{int(epoch_id)}-{{pid:09d}}.skar",
+            {p + base: b for p, b in loads.items()})
         # sorted append, committed driver-side (metadata rows — see
         # encode.append_lineage_rows): keeps lineage row-group stats
         # usable as a seek index and avoids a per-epoch Spark write job
         from skar_spark.engine.encode import append_lineage_rows
         append_lineage_rows(footers, out_dir)
+        return totals["n_bytes"] or 0
 
     def process_batch(bdf: DataFrame, epoch_id: int) -> None:
         t_batch0 = time.time()
         attempts = 0
         while True:
             try:
-                encode_batch(bdf, epoch_id)
+                admitted = float(encode_batch(bdf, epoch_id))
                 if max_bytes_per_sec:
-                    # token-bucket pacing (see docstring): one columnar
-                    # agg over the in-memory batch; sleep off any rate
-                    # excess before the next trigger is planned
-                    row = bdf.agg(F.sum(sum(
-                        F.coalesce(F.octet_length(F.col(c)), F.lit(0))
-                        for c in ("url", "text", "html", "lang")))
-                        .alias("b")).collect()[0]
-                    admitted = float(row.b or 0)
+                    # token-bucket pacing (see docstring): sleep off any
+                    # rate excess before the next trigger is planned
                     min_elapsed = admitted / float(max_bytes_per_sec)
                     excess = min_elapsed - (time.time() - t_batch0)
                     if excess > 0:

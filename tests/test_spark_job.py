@@ -6,8 +6,13 @@ K of P partition batches commit, restart, assert exactly-once partition
 output identical to an uninterrupted run.
 """
 
+import glob
+import hashlib
+import os
 import shutil
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -100,3 +105,83 @@ def test_partition_pruning_via_lineage(spark, docs, tmp_path):
     # absent host prunes everything (bloom has no false negatives)
     kept_none = prune_partitions(out, host_eq="www.no-such-host.zz")
     assert len(kept_none) <= max(1, len(all_files) // 2)
+
+
+def _rows_sha256(rows) -> str:
+    return hashlib.sha256("\n".join(
+        "\t".join(map(str, r)) for r in sorted(rows)).encode()).hexdigest()
+
+
+def _salt_map_rows(out: str) -> list[tuple]:
+    t = pa.concat_tables([pq.read_table(f) for f in glob.glob(
+        os.path.join(out, "meta", "salt_map", "**", "*.parquet"),
+        recursive=True)])
+    return list(zip(*(t[c].to_pylist() for c in t.column_names)))
+
+
+# the pinned plan of `docs` under CFG: any drift in heavy-host
+# membership, salts or chunk packing changes these hashes
+PLAN_SHA256 = (
+    "7be4aea6c8586e4412cb30da07038b692f39f546dece3f10db97655f6b6b5304")
+SALT_MAP_SHA256 = (
+    "f1252d1fcadab324eda72458c15cca24e2fdf4d762468d30eac183132a245d79")
+
+
+@pytest.fixture(scope="module")
+def encoded(spark, docs, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("encoded") / "out")
+    encode_documents(spark, docs, out, CFG, n_rows=N_DOCS)
+    return out
+
+
+def test_plan_membership_pinned(spark, docs, encoded):
+    planned = plan_partitions(docs, 8, CFG)
+    assert _rows_sha256(tuple(r) for r in planned.select(
+        "url", "salt", "part_id").collect()) == PLAN_SHA256
+    assert _rows_sha256(_salt_map_rows(encoded)) == SALT_MAP_SHA256
+
+
+def test_planning_launches_no_unneeded_job(spark, docs):
+    """An increment with fewer counted rows than the salt threshold has
+    no heavy host, so its heavy-host step runs no Spark job; neither
+    does planning with a given salt table."""
+    from skar_spark.engine.encode import plan_totals, salt_rows
+
+    inc = docs.limit(64)
+    inc_totals = plan_totals(inc)
+    salt = salt_rows(docs, CFG.salt_threshold_rows, plan_totals(docs))
+    assert salt.num_rows  # the Zipf head host is heavy
+    sc = spark.sparkContext
+    group = "plan-no-jobs"
+    sc.setJobGroup(group, "planning only")
+    try:
+        light = salt_rows(inc, CFG.salt_threshold_rows, inc_totals)
+        plan_partitions(docs, 8, CFG, salt)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        spark.range(1).count()  # the check itself sees jobs of this group
+        assert list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert light.num_rows == 0 and light.schema == salt.schema
+
+
+def test_legacy_salt_map_replans_hash_only(spark, docs, encoded, tmp_path):
+    """A salt map written before chunk_bytes existed (host, n_salts)
+    replans with the plain hash rule for every row, salted or not."""
+    from skar_spark.engine.encode import _replan_with_stored, load_plan_meta
+
+    out = str(tmp_path / "legacy")
+    shutil.copytree(encoded, out)
+    sm_dir = os.path.join(out, "meta", "salt_map")
+    shutil.rmtree(sm_dir)
+    os.makedirs(sm_dir)
+    heavy = [h for h, *_ in _salt_map_rows(encoded)]
+    pq.write_table(pa.table({"host": pa.array(heavy, pa.string()),
+                             "n_salts": pa.array([3] * len(heavy),
+                                                 pa.int32())}),
+                   os.path.join(sm_dir, "legacy.parquet"))
+    n = load_plan_meta(out)["num_parts"]
+    planned, _meta = _replan_with_stored(spark, docs, out, CFG)
+    expect = F.pmod(F.xxhash64("host", "salt"), F.lit(n)).cast("int")
+    assert planned.filter(F.col("salt") > 0).count() > 0
+    assert planned.filter(F.col("part_id") != expect).count() == 0
