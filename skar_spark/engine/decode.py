@@ -367,9 +367,8 @@ def scan(spark: SparkSession, out_dir: str,
 
     Predicates are EXACT: partitions and row groups that can't match are
     pruned via zone maps + blooms (host and lang families), and surviving
-    row groups are post-filtered inside the kernel (read_part_file
-    exact=True), so the returned DataFrame contains precisely the
-    matching rows.
+    row groups are post-filtered inside the kernel (read_part_file), so
+    the returned DataFrame contains precisely the matching rows.
 
     `as_of` (unix seconds) time-travels to the snapshot committed at or
     before that instant — meaningful on tables encoded with
@@ -530,13 +529,8 @@ def scan_paged(spark: SparkSession, out_dir: str,
     """
     from pyspark.sql import Row
 
-    files = prune_partitions(out_dir, host_eq, ts_range, lang_eq)
-    # cursor order must follow the numeric part index, not lexicographic
-    # file order: streaming names (part-e{epoch}-{pid}) sort e10 < e2
-    # textually while pids grow with epoch, which would make a resumed
-    # cursor re-read returned partitions and skip unprocessed ones
-    files = sorted((f for f in files if _file_part_index(f) >= cursor),
-                   key=_file_part_index)
+    files = page_slice(prune_partitions(out_dir, host_eq, ts_range,
+                                        lang_eq), cursor)
     if not files:
         return [], None
     from skar_spark.engine.schema_evo import table_schema
@@ -610,6 +604,19 @@ def paged_decode_loop(spark: SparkSession, files: list[str],
     if pos >= len(files):
         return rows, None
     return rows, _file_part_index(files[pos])
+
+
+def page_slice(files: list[str], cursor: int,
+               page_files: int | None = None) -> list[str]:
+    """THE cursor page of a pruned file list: the files at part index
+    ≥ `cursor` in numeric part-index order, at most `page_files` of
+    them. The order must be numeric, not lexicographic: streaming names
+    (part-e{epoch}-{pid}) sort e10 < e2 textually while pids grow with
+    epoch, which would make a resumed cursor re-read returned
+    partitions and skip unprocessed ones."""
+    files = sorted((f for f in files if _file_part_index(f) >= cursor),
+                   key=_file_part_index)
+    return files if page_files is None else files[:page_files]
 
 
 def _file_part_index(path: str) -> int:

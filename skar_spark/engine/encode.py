@@ -76,6 +76,7 @@ def _arrow_schema(ddl: str) -> pa.Schema:
                       (f.split() for f in ddl.split(", "))])
 
 
+FOOTER_SCHEMA = _arrow_schema(FOOTER_DDL)
 LINEAGE_SCHEMA = _arrow_schema(LINEAGE_DDL)
 # rows per lineage parquet row group: each group's min/max_warc_ts
 # stats are one entry of the seek index (lineage_row_groups)
@@ -125,7 +126,14 @@ def append_lineage_rows(footers: "DataFrame", out_dir: str) -> int:
     spool needed on object stores).
 
     Returns the number of rows committed."""
-    t = footers.toArrow()   # metadata rows, never data rows
+    return _commit_footers(footers.toArrow(), out_dir)
+
+
+def _commit_footers(t: pa.Table, out_dir: str) -> int:
+    """Commit footer rows (FOOTER_DDL) as ONE lineage PUT — the commit
+    of every writer (append_lineage_rows; _rewrite_partitions, which
+    adds its emptied partitions' rows to the kernel's). Returns the
+    number of rows committed."""
     if not t.num_rows:
         return 0
     # schema evolution (engine/schema_evo.py): merge this batch's part
@@ -351,75 +359,80 @@ def _bucket_keys(n: int) -> list[int]:
     return keys
 
 
+def encode_part(table: pa.Table, part_id: int, out_dir: str,
+                cfg: EngineConfig, attempt: str, name_fmt: str) -> pa.Table:
+    """THE footer builder: sort one partition's rows, write its part
+    file and return its one footer row (FOOTER_DDL). `table` holds the
+    data columns plus `host` (a planned frame's `part_id` and `salt` are
+    dropped). The encode kernel calls it per part_id; _rewrite_partitions
+    calls it on the driver with a zero-row table for each partition a
+    rewrite emptied. `name_fmt` gives each writer its part-file
+    namespace (streaming: part-e{epoch}-{pid}.skar)."""
+    t0 = time.time()
+    data_cols = [c for c in table.column_names
+                 if c not in ("part_id", "salt", "host")]
+    # lexsort by SORT_KEYS: keep host as _host for zone maps
+    t = table.rename_columns(
+        [("_host" if c == "host" else c) for c in table.column_names])
+    t = t.sort_by([("_host" if k == "host" else k, "ascending")
+                   for k in SORT_KEYS])
+    body = t.select(data_cols + ["_host"])
+
+    t_sorted = time.time()
+    path = os.path.join(out_dir, "parts", name_fmt.format(pid=part_id))
+    stats = write_part_file(path, body, cfg)
+    t_written = time.time()
+
+    ts = t["warc_ts"].combine_chunks()
+    hosts = t["_host"].combine_chunks()
+    n_hosts = len(pc.unique(hosts))
+    return pa.table({
+        "partition_id": pa.array([part_id], pa.int32()),
+        "attempt_id": pa.array([attempt], pa.string()),
+        "status": pa.array(["committed"], pa.string()),
+        "row_count": pa.array([t.num_rows], pa.int64()),
+        "codec_choices": pa.array([stats["codec_choices"]], pa.string()),
+        "bytes_in": pa.array([stats["bytes_in"]], pa.int64()),
+        "bytes_out": pa.array([stats["bytes_out"]], pa.int64()),
+        "min_warc_ts": pa.array(
+            [pc.min(ts).as_py() if t.num_rows else None], ts.type),
+        "max_warc_ts": pa.array(
+            [pc.max(ts).as_py() if t.num_rows else None], ts.type),
+        "n_hosts": pa.array([n_hosts], pa.int32()),
+        "n_row_groups": pa.array([stats["n_row_groups"]], pa.int32()),
+        "host_bloom": pa.array([partition_host_bloom(hosts)], pa.binary()),
+        # second partition-level bloom family (lang): lets a
+        # lang-filtered scan skip whole partitions where the value
+        # never occurs (reference: address AND topic families,
+        # build_parquet_idx.rs:89-171)
+        "lang_bloom": pa.array(
+            [partition_host_bloom(t["lang"].combine_chunks())
+             if "lang" in t.column_names and t.num_rows else None],
+            pa.binary()),
+        "text_checksum": pa.array([partition_checksum(t)], pa.binary()),
+        "sort_sec": pa.array([round(t_sorted - t0, 3)], pa.float64()),
+        "encode_sec": pa.array([round(t_written - t_sorted, 3)],
+                               pa.float64()),
+        "meta_sec": pa.array([round(time.time() - t_written, 3)],
+                             pa.float64()),
+        "file": pa.array([path], pa.string()),
+        "committed_at": pa.array([time.time()], pa.float64()),
+        # merged into meta/schema.json at commit; NOT a lineage
+        # column (_commit_footers strips it) so old lineage
+        # parquet and new coexist schema-stable
+        "schema_json": pa.array([stats["schema_json"]], pa.string()),
+        # numeric zone maps for non-layout columns ({} when none)
+        "col_stats": pa.array([stats["col_stats"]], pa.string()),
+    })
+
+
 def _encode_kernel(out_dir: str, cfg: EngineConfig, attempt: str,
                    name_fmt: str):
     """mapInArrow kernel over a planned exchange (see encode_footers):
-    one footer row out per part_id in the task. All columnar — no
-    per-row Python. The exchange puts each part_id alone in its task; a
-    local split keeps the kernel correct if a task ever holds several.
-    `name_fmt` gives each writer its part-file namespace (streaming:
-    part-e{epoch}-{pid}.skar)."""
-
-    def encode_part(table: pa.Table) -> pa.Table:
-        import time as _time
-        t0 = _time.time()
-        part_id = table["part_id"][0].as_py()
-        data_cols = [c for c in table.column_names
-                     if c not in ("part_id", "salt", "host")]
-        # lexsort by SORT_KEYS: keep host as _host for zone maps
-        t = table.rename_columns(
-            [("_host" if c == "host" else c) for c in table.column_names])
-        t = t.sort_by([("_host" if k == "host" else k, "ascending")
-                       for k in SORT_KEYS])
-        body = t.select(data_cols + ["_host"])
-
-        t_sorted = _time.time()
-        path = os.path.join(out_dir, "parts",
-                            name_fmt.format(pid=part_id))
-        stats = write_part_file(path, body, cfg)
-        t_written = _time.time()
-
-        ts = t["warc_ts"].combine_chunks()
-        hosts = t["_host"].combine_chunks()
-        n_hosts = len(pc.unique(hosts))
-        return pa.table({
-            "partition_id": pa.array([part_id], pa.int32()),
-            "attempt_id": pa.array([attempt], pa.string()),
-            "status": pa.array(["committed"], pa.string()),
-            "row_count": pa.array([t.num_rows], pa.int64()),
-            "codec_choices": pa.array([stats["codec_choices"]], pa.string()),
-            "bytes_in": pa.array([stats["bytes_in"]], pa.int64()),
-            "bytes_out": pa.array([stats["bytes_out"]], pa.int64()),
-            "min_warc_ts": pa.array(
-                [pc.min(ts).as_py() if t.num_rows else None], ts.type),
-            "max_warc_ts": pa.array(
-                [pc.max(ts).as_py() if t.num_rows else None], ts.type),
-            "n_hosts": pa.array([n_hosts], pa.int32()),
-            "n_row_groups": pa.array([stats["n_row_groups"]], pa.int32()),
-            "host_bloom": pa.array(
-                [partition_host_bloom(hosts)],
-                pa.binary()),
-            # second partition-level bloom family (lang): lets a
-            # lang-filtered scan skip whole partitions where the value
-            # never occurs (reference: address AND topic families,
-            # build_parquet_idx.rs:89-171)
-            "lang_bloom": pa.array(
-                [partition_host_bloom(t["lang"].combine_chunks())
-                 if "lang" in t.column_names and t.num_rows else None],
-                pa.binary()),
-            "text_checksum": pa.array([partition_checksum(t)], pa.binary()),
-            "sort_sec": pa.array([round(t_sorted - t0, 3)], pa.float64()),
-            "encode_sec": pa.array([round(t_written - t_sorted, 3)], pa.float64()),
-            "meta_sec": pa.array([round(_time.time() - t_written, 3)], pa.float64()),
-            "file": pa.array([path], pa.string()),
-            "committed_at": pa.array([_time.time()], pa.float64()),
-            # merged into meta/schema.json at commit; NOT a lineage
-            # column (append_lineage_rows strips it) so old lineage
-            # parquet and new coexist schema-stable
-            "schema_json": pa.array([stats["schema_json"]], pa.string()),
-            # numeric zone maps for non-layout columns ({} when none)
-            "col_stats": pa.array([stats["col_stats"]], pa.string()),
-        })
+    one footer row out per part_id in the task (encode_part). All
+    columnar — no per-row Python. The exchange puts each part_id alone
+    in its task; a local split keeps the kernel correct if a task ever
+    holds several."""
 
     def kernel(batches):
         batches = [b for b in batches if b.num_rows]
@@ -430,7 +443,8 @@ def _encode_kernel(out_dir: str, cfg: EngineConfig, attempt: str,
         for pid in pids:
             sub = t.filter(pc.equal(t["part_id"], pid)) \
                 if len(pids) > 1 else t
-            yield from encode_part(sub).to_batches()
+            yield from encode_part(sub, pid.as_py(), out_dir, cfg, attempt,
+                                   name_fmt).to_batches()
 
     return kernel
 
@@ -468,7 +482,8 @@ def encode_footers(planned: DataFrame, part_ids: list[int], out_dir: str,
     append_lineage_rows runs and commits them. `repartition(n, col)`
     is a fixed-count exchange, so AQE never coalesces the CPU-bound
     kernel stage. Parts with no rows never reach a task and write no
-    file (_rewrite_partitions writes those driver-side).
+    file; _rewrite_partitions builds an emptied partition's zero-row part
+    on the driver through the same encode_part.
 
     Exchange format was raced at 1M docs on the 4x8-executor standalone
     cluster (warm workers, same session): row shuffle 43.6s, map-side
@@ -893,8 +908,6 @@ def append_documents(spark: SparkSession, df: DataFrame, out_dir: str,
     more — none when the increment has fewer rows than the threshold.
     At 10^12-doc table sizes the increment must never pay a planning
     pass over history."""
-    import uuid as _uuid
-
     from skar_spark.engine.compact import compaction_high_water
 
     lin = lineage_table(out_dir, ["partition_id"])
@@ -924,16 +937,27 @@ def append_documents(spark: SparkSession, df: DataFrame, out_dir: str,
         raise OverflowError(
             f"append would exceed the int32 part-id namespace at base "
             f"{base}; rotate out_dir or widen partition_id to long")
+    tag = uuid.uuid4().hex[:8]
+    return encode_increment(df, totals, parts, base, out_dir, cfg,
+                            f"append-{tag}", f"part-x{tag}-{{pid:09d}}.skar")
+
+
+def encode_increment(df: DataFrame, totals: dict, parts: int, base: int,
+                     out_dir: str, cfg: EngineConfig, attempt: str,
+                     name_fmt: str) -> int:
+    """THE increment writer of append_documents and streaming epochs:
+    plan `df` alone into `parts` partitions (heavy hosts salted at
+    ``cfg.salt_threshold_rows`` from its plan `totals`), shift the part
+    ids and the packing loads up by `base`, encode, and commit one
+    lineage batch. Returns the number of parts committed."""
     loads: dict[int, int] = {}
     planned = plan_partitions(
         df, parts, cfg, salt_rows(df, cfg.salt_threshold_rows, totals),
         loads)
     planned = planned.withColumn(
         "part_id", (F.col("part_id") + F.lit(base)).cast("int"))
-    tag = _uuid.uuid4().hex[:8]
     footers = encode_footers(planned, list(range(base, base + parts)),
-                             out_dir, cfg, f"append-{tag}",
-                             f"part-x{tag}-{{pid:09d}}.skar",
+                             out_dir, cfg, attempt, name_fmt,
                              {p + base: b for p, b in loads.items()})
     return append_lineage_rows(footers, out_dir)
 
@@ -1143,6 +1167,81 @@ def _replan_with_stored(spark: SparkSession, df: DataFrame, out_dir: str,
     return planned, meta
 
 
+def _locate_partitions(spark: SparkSession, df: DataFrame, out_dir: str,
+                       cfg: EngineConfig, op: str, guard: str,
+                       url_located: str | None = None
+                       ) -> tuple[DataFrame, list[int], dict]:
+    """THE guard-and-locate step of every partition rewrite
+    (merge_updates, delete_rows, reencode_late): refuse compacted
+    tables (`guard` names the op there) and tables with appended parts,
+    replan `df` with the stored plan, and collect the distinct part ids
+    it lands in — the one Spark job of locating. A url-located op
+    (`url_located`: why it needs the hash scheme) also refuses tables
+    without stored plan metadata (streamed: per-epoch plans) and
+    day_hash tables. Returns (the replanned `df`, affected part ids,
+    plan metadata)."""
+    from skar_spark.engine.compact import assert_not_compacted
+
+    assert_not_compacted(out_dir, guard)
+    meta = load_plan_meta(out_dir)
+    if url_located is not None:
+        if meta is None:
+            raise NotImplementedError(
+                f"{op} requires a batch-encoded table with stored plan "
+                "metadata; streamed tables have per-epoch plans — "
+                "compact first, then re-encode, or use reencode_late")
+        if meta.get("scheme") == "day_hash":
+            raise NotImplementedError(
+                f"{op} requires the hash partition scheme{url_located}")
+    _assert_no_appended_parts(out_dir, op, meta)
+    planned, meta = _replan_with_stored(spark, df, out_dir, cfg)
+    affected = [r.part_id for r in
+                planned.select("part_id").distinct().collect()]
+    return planned, affected, meta
+
+
+def _rewrite_partitions(spark: SparkSession, out_dir: str,
+                        cfg: EngineConfig, affected: list[int],
+                        corrected: DataFrame, tag: str) -> DataFrame:
+    """Copy-on-write rewrite of exactly `affected` partitions — the one
+    rewrite of merge_updates, delete_rows and reencode_late.
+
+    `corrected` is replanned with the stored plan; its rows in
+    `affected` are the partitions' full new content. Each affected
+    partition is re-encoded under one fresh attempt id (``{tag}-…``)
+    and its lineage row superseded by `committed_at`. A partition whose
+    new content is EMPTY (all rows deleted) never reaches a kernel
+    task; it gets a zero-row part (the format writes one empty row
+    group) built on the driver by the same encode_part, so the
+    supersede is uniform and readers never resurrect the old rows. The
+    kernel's footers and the emptied partitions' footers commit in ONE
+    lineage PUT: with ``cfg.retain_superseded`` a crash leaves the
+    whole rewrite visible or none of it (the default mode overwrites
+    part files in place before that commit)."""
+    loads: dict[int, int] = {}
+    planned, _ = _replan_with_stored(spark, corrected, out_dir, cfg, loads)
+    sub = planned.filter(F.col("part_id").isin(affected))
+    attempt = f"{tag}-{uuid.uuid4().hex[:8]}"
+    name_fmt = _kernel_name_fmt(cfg, attempt, out_dir)
+    t = encode_footers(sub, affected, out_dir, cfg, attempt, name_fmt,
+                       loads).toArrow()
+    emptied = sorted(set(affected) - set(t["partition_id"].to_pylist()))
+    if emptied:
+        from skar_spark.codecs.framing import type_from_code
+        from skar_spark.engine.schema_evo import table_schema
+
+        tcols, ttypes = table_schema(out_dir)
+        empty = pa.table(
+            {c: pa.nulls(0, type_from_code(ttypes[c])) for c in tcols}
+            | {"host": pa.nulls(0, pa.string())})
+        t = pa.concat_tables(
+            [t.cast(FOOTER_SCHEMA)]
+            + [encode_part(empty, pid, out_dir, cfg, attempt, name_fmt)
+               .cast(FOOTER_SCHEMA) for pid in emptied])
+    _commit_footers(t, out_dir)
+    return read_lineage(spark, out_dir, latest=True)
+
+
 def reencode_late(spark: SparkSession, full_df: DataFrame,
                   late_df: DataFrame, out_dir: str,
                   cfg: EngineConfig = DEFAULT) -> DataFrame:
@@ -1167,94 +1266,19 @@ def reencode_late(spark: SparkSession, full_df: DataFrame,
     """
     import sys
 
-    from skar_spark.engine.compact import assert_not_compacted
-    assert_not_compacted(out_dir, "late-data rollback")
-    _assert_no_appended_parts(out_dir, "reencode_late")
-    planned_late, meta = _replan_with_stored(spark, late_df, out_dir, cfg)
-    if meta["scheme"] == "day_hash":
+    planned_late, affected, meta = _locate_partitions(
+        spark, late_df, out_dir, cfg, "reencode_late", "late-data rollback")
+    if meta["scheme"] == "day_hash" and min(affected, default=0) < 0:
         n_before = planned_late.filter(F.col("part_id") < 0).count()
-        if n_before:
-            raise ValueError(
-                f"{n_before} late row(s) precede the table's day-range "
-                f"start {meta['d0']} — beyond the rollback bound")
-    affected = [r.part_id for r in
-                planned_late.select("part_id").distinct().collect()]
+        raise ValueError(
+            f"{n_before} late row(s) precede the table's day-range "
+            f"start {meta['d0']} — beyond the rollback bound")
     if not affected:
         return read_lineage(spark, out_dir, latest=True)
     print(f"[reencode_late] rolling back {len(affected)} partition(s): "
           f"{sorted(affected)[:20]}", file=sys.stderr)
-
-    loads: dict[int, int] = {}
-    planned_full, _ = _replan_with_stored(spark, full_df, out_dir, cfg,
-                                          loads)
-    sub = planned_full.filter(F.col("part_id").isin(affected))
-    attempt = "late-" + uuid.uuid4().hex[:8]
-    footers = encode_footers(sub, affected, out_dir, cfg, attempt,
-                             _kernel_name_fmt(cfg, attempt, out_dir), loads)
-    append_lineage_rows(footers, out_dir)
-    return read_lineage(spark, out_dir, latest=True)
-
-
-def _rewrite_partitions(spark: SparkSession, out_dir: str,
-                        cfg: EngineConfig, affected: list[int],
-                        corrected: DataFrame, tag: str) -> DataFrame:
-    """Copy-on-write rewrite of exactly `affected` partitions.
-
-    `corrected` must already BE the full corrected content of those
-    partitions (and only those). Each affected partition is re-encoded
-    under a fresh attempt id and its lineage row superseded by
-    `committed_at` — the same per-partition atomic switch as
-    reencode_late. A partition whose corrected content is EMPTY (all
-    rows deleted) still gets a new part file — a zero-row part (the
-    format writes one empty row group) — so the supersede is uniform
-    and readers never resurrect the old rows.
-    """
-    loads: dict[int, int] = {}
-    planned, _ = _replan_with_stored(spark, corrected, out_dir, cfg, loads)
-    sub = planned.filter(F.col("part_id").isin(affected))
-    attempt = f"{tag}-{uuid.uuid4().hex[:8]}"
-    name_fmt = _kernel_name_fmt(cfg, attempt, out_dir)
-    footers = encode_footers(sub, affected, out_dir, cfg, attempt, name_fmt,
-                             loads)
-    # only part_ids that HAVE rows reach a kernel task: partitions
-    # emptied by a delete never do, so their zero-row parts are written
-    # driver-side (metadata-scale: one small file per emptied pid)
-    nonempty = {r.part_id for r in
-                sub.select("part_id").distinct().collect()}
-    emptied = sorted(set(affected) - nonempty)
-    append_lineage_rows(footers, out_dir)
-    if emptied:
-        erows = [_empty_part_footer(out_dir, cfg, attempt, pid, name_fmt)
-                 for pid in emptied]  # per-emptied-partition (metadata)
-        append_lineage_rows(
-            spark.createDataFrame(erows, FOOTER_DDL), out_dir)
-    return read_lineage(spark, out_dir, latest=True)
-
-
-def _empty_part_footer(out_dir: str, cfg: EngineConfig, attempt: str,
-                       pid: int, name_fmt: str) -> tuple:
-    """Write a zero-row part file for an emptied partition and return
-    its FOOTER_DDL-shaped lineage row (driver-side twin of
-    _encode_kernel for the n=0 case)."""
-    import time as _time
-
-    from skar_spark.codecs.framing import type_from_code
-    from skar_spark.engine.schema_evo import table_schema
-
-    t0 = _time.time()
-    tcols, ttypes = table_schema(out_dir)
-    body = pa.table(
-        {c: pa.nulls(0, type_from_code(ttypes[c])) for c in tcols}
-        | {"_host": pa.nulls(0, pa.string())})
-    path = os.path.join(out_dir, "parts", name_fmt.format(pid=pid))
-    stats = write_part_file(path, body, cfg)
-    return (pid, attempt, "committed", 0, stats["codec_choices"],
-            stats["bytes_in"], stats["bytes_out"], None, None, 0,
-            stats["n_row_groups"],
-            partition_host_bloom(pa.chunked_array([[]], pa.string())),
-            None, partition_checksum(body), 0.0, stats["encode_sec"],
-            round(_time.time() - t0, 3), path, _time.time(),
-            stats["schema_json"], stats["col_stats"])
+    return _rewrite_partitions(spark, out_dir, cfg, affected, full_df,
+                               "late")
 
 
 def merge_updates(spark: SparkSession, updates_df: DataFrame,
@@ -1287,37 +1311,21 @@ def merge_updates(spark: SparkSession, updates_df: DataFrame,
     readable via ``scan(as_of=...)`` until ``vacuum`` — time travel
     across a merge.
     """
-    from skar_spark.engine.compact import assert_not_compacted
     from skar_spark.engine.decode import scan
 
-    assert_not_compacted(out_dir, "merge")
     if (updates_df.groupBy("url").count()
             .filter(F.col("count") > 1).limit(1).count()):
         raise ValueError("updates contain duplicate urls — resolve "
                          "latest-wins upstream (one row per url)")
-    meta = load_plan_meta(out_dir)
-    if meta is None:
-        # streamed tables plan per epoch (no stored url→partition
-        # function), so the rewrite set cannot be located from metadata
-        raise NotImplementedError(
-            "merge_updates requires a batch-encoded table with stored "
-            "plan metadata; streamed tables have per-epoch plans — "
-            "compact first, then re-encode, or use reencode_late")
-    if meta.get("scheme") == "day_hash":
-        # day_hash partitions are a function of (day(warc_ts), host):
-        # an update that moves a url's day would leave the OLD version
-        # alive in a partition the update never plans into. Upsert-by-
-        # url needs the hash scheme's url→partition pure function (or a
-        # url→partition index, which the engine does not keep).
-        raise NotImplementedError(
-            "merge_updates requires the hash partition scheme; on a "
-            "day_hash table use reencode_late with the corrected "
-            "full dataset")
-    _assert_no_appended_parts(out_dir, "merge_updates", meta)
-    planned_upd, _meta = _replan_with_stored(spark, updates_df, out_dir,
-                                             cfg)
-    affected = [r.part_id for r in
-                planned_upd.select("part_id").distinct().collect()]
+    # day_hash partitions are a function of (day(warc_ts), host): an
+    # update that moves a url's day would leave the OLD version alive in
+    # a partition the update never plans into. Upsert-by-url needs the
+    # hash scheme's url→partition pure function (or a url→partition
+    # index, which the engine does not keep).
+    _, affected, _ = _locate_partitions(
+        spark, updates_df, out_dir, cfg, "merge_updates", "merge",
+        "; on a day_hash table use reencode_late with the corrected "
+        "full dataset")
     if not affected:
         return read_lineage(spark, out_dir, latest=True)
     existing = scan(spark, out_dir, part_ids=set(affected))
@@ -1337,26 +1345,12 @@ def delete_rows(spark: SparkSession, urls_df: DataFrame, out_dir: str,
     lose ALL rows are superseded by a zero-row part, so readers (scan,
     paged scan, DataSource) see the deletion without special cases.
     """
-    from skar_spark.engine.compact import assert_not_compacted
     from skar_spark.engine.decode import scan
 
-    assert_not_compacted(out_dir, "delete")
-    meta = load_plan_meta(out_dir)
-    if meta is None:
-        raise NotImplementedError(
-            "delete_rows requires a batch-encoded table with stored "
-            "plan metadata; streamed tables have per-epoch plans — "
-            "compact first, then re-encode, or use reencode_late")
-    if meta.get("scheme") == "day_hash":
-        raise NotImplementedError(
-            "delete_rows requires the hash partition scheme (day_hash "
-            "partition membership depends on warc_ts, which a url set "
-            "does not carry)")
-    _assert_no_appended_parts(out_dir, "delete_rows", meta)
-    planned_del, _meta = _replan_with_stored(
-        spark, urls_df.select("url"), out_dir, cfg)
-    affected = [r.part_id for r in
-                planned_del.select("part_id").distinct().collect()]
+    _, affected, _ = _locate_partitions(
+        spark, urls_df.select("url"), out_dir, cfg, "delete_rows", "delete",
+        " (day_hash partition membership depends on warc_ts, which a "
+        "url set does not carry)")
     if not affected:
         return read_lineage(spark, out_dir, latest=True)
     existing = scan(spark, out_dir, part_ids=set(affected))

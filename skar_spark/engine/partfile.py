@@ -68,10 +68,7 @@ def content_bytes(arr) -> int:
 
 
 def write_part_file(path: str, table: pa.Table,
-                    cfg: EngineConfig = DEFAULT,
-                    zone_col: str = "warc_ts",
-                    host_col: str = "host",
-                    lang_col: str = "lang") -> dict:
+                    cfg: EngineConfig = DEFAULT) -> dict:
     """Encode a (pre-sorted) table into a part file; atomic via temp+rename
     (mirror of the temp-dir + rename publish, skar_runner.rs:296-321).
 
@@ -106,13 +103,13 @@ def write_part_file(path: str, table: pa.Table,
                 rg["chunks"][c] = [pos, len(blob), codec]
                 pos += len(blob)
                 codec_counts[c][codec] = codec_counts[c].get(codec, 0) + 1
-            if zone_col in cols and sl.num_rows:
-                zc = sl[zone_col]
+            if "warc_ts" in cols and sl.num_rows:
+                zc = sl["warc_ts"]
                 import pyarrow.compute as pc
                 rg["zmin"] = pc.min(zc).cast(pa.int64()).as_py()
                 rg["zmax"] = pc.max(zc).cast(pa.int64()).as_py()
             hname = "_host" if "_host" in sl.column_names else (
-                host_col if host_col in sl.column_names else None)
+                "host" if "host" in sl.column_names else None)
             if hname and sl.num_rows:
                 # sorted by host → first/last are the row-group's host range
                 hsl = sl[hname]
@@ -128,7 +125,7 @@ def write_part_file(path: str, table: pa.Table,
                     rg["hbloom"] = base64.b64encode(
                         partition_host_bloom(hsl)).decode()
             extra_num = [c for c in cols
-                         if c not in (zone_col, host_col)
+                         if c not in ("warc_ts", "host")
                          and (pa.types.is_integer(table[c].type)
                               or pa.types.is_floating(table[c].type))]
             if extra_num and sl.num_rows:
@@ -145,7 +142,7 @@ def write_part_file(path: str, table: pa.Table,
                         ns[c] = [mn, mx]
                 if ns:
                     rg["nstats"] = ns
-            if lang_col in sl.column_names and sl.num_rows:
+            if "lang" in sl.column_names and sl.num_rows:
                 # second bloom family: lang (skewed low-card column, not
                 # in the sort key so no zone maps — bloom over the row
                 # group's distinct values instead; mirror of the
@@ -153,7 +150,7 @@ def write_part_file(path: str, table: pa.Table,
                 # build_parquet_idx.rs:89-171)
                 import base64
                 rg["lbloom"] = base64.b64encode(
-                    partition_host_bloom(sl[lang_col])).decode()
+                    partition_host_bloom(sl["lang"])).decode()
             rowgroups.append(rg)
             if n == 0:
                 break
@@ -236,19 +233,18 @@ def read_part_file(path: str, columns: list[str] | None = None,
                    host_eq: str | None = None,
                    ts_range: tuple[int, int] | None = None,
                    lang_eq: str | None = None,
-                   exact: bool = True,
                    fill_missing: dict[str, str] | None = None,
                    col_range: tuple[str, float, float] | None = None
                    ) -> pa.Table:
-    """Decode a part file with projection + row-group pruning + (by
-    default) EXACT predicate semantics.
+    """Decode a part file with projection + row-group pruning + EXACT
+    predicate semantics.
 
     ts_range is [lo, hi) in epoch microseconds against the zone column.
     Row groups are skipped via zone maps (min/max warc_ts, host range) and
     per-row-group host blooms; surviving row groups are then post-filtered
     exactly (host derived from url Arrow-side, ts compared as int64), so
     callers get precisely the rows matching the predicate — not a
-    row-group superset. Pass exact=False for prune-only semantics.
+    row-group superset.
 
     `fill_missing` maps column name → typecode for requested columns this
     part may PREDATE (Iceberg-style schema evolution, engine/schema_evo):
@@ -266,11 +262,10 @@ def read_part_file(path: str, columns: list[str] | None = None,
     footer = read_footer(path)
     cols = columns or footer["columns"]
     has_lang = "lang" in footer["columns"]
-    need_host = exact and host_eq is not None
-    need_ts = exact and ts_range is not None
-    need_lang = exact and lang_eq is not None and has_lang
-    need_cr = exact and col_range is not None \
-        and col_range[0] in footer["columns"]
+    need_host = host_eq is not None
+    need_ts = ts_range is not None
+    need_lang = lang_eq is not None and has_lang
+    need_cr = col_range is not None and col_range[0] in footer["columns"]
     read_cols = list(cols)
     if need_host and "url" not in read_cols:
         read_cols.append("url")

@@ -67,8 +67,11 @@ def is_posix(path: str) -> bool:
     return scheme_of(path) is None
 
 
-def _backing(path: str) -> str:
-    """Backing POSIX path of a mock:// object key (internal only)."""
+def _local(path: str) -> str:
+    """The POSIX path behind `path`: itself, or the backing file of a
+    mock:// object key."""
+    if is_posix(path):
+        return path
     s = scheme_of(path)
     if s != "mock":
         raise NotImplementedError(
@@ -80,9 +83,7 @@ def _backing(path: str) -> str:
 
 def open_read(path: str):
     """Readable, seekable byte stream (object stores: ranged GETs)."""
-    if is_posix(path):
-        return open(path, "rb")
-    return open(_backing(path), "rb")
+    return open(_local(path), "rb")
 
 
 def get_bytes(path: str) -> bytes:
@@ -91,38 +92,28 @@ def get_bytes(path: str) -> bytes:
 
 
 def put_bytes(path: str, data: bytes) -> None:
-    """Single atomic object PUT (posix: temp + rename in-directory)."""
-    if is_posix(path):
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "wb") as f:
-            f.write(data)
-        os.replace(tmp, path)
-        return
-    bp = _backing(path)
-    os.makedirs(os.path.dirname(bp), exist_ok=True)
-    tmp = f"{bp}.tmp-{uuid.uuid4().hex[:8]}"
+    """Single atomic object PUT (posix: temp + rename in-directory; the
+    mock store's PUT is atomic the same way, like a real one)."""
+    lp = _local(path)
+    os.makedirs(os.path.dirname(lp), exist_ok=True)
+    tmp = f"{lp}.tmp-{uuid.uuid4().hex[:8]}"
     with open(tmp, "wb") as f:
         f.write(data)
-    os.replace(tmp, bp)  # the fake's PUT is atomic, like the real one
+    os.replace(tmp, lp)
 
 
 def getsize(path: str) -> int:
-    return os.path.getsize(path if is_posix(path) else _backing(path))
+    return os.path.getsize(_local(path))
 
 
 def exists(path: str) -> bool:
-    if is_posix(path):
-        return os.path.exists(path)
-    return os.path.exists(_backing(path))
+    return os.path.exists(_local(path))
 
 
 def dir_exists(path: str) -> bool:
     """Posix: isdir. Object store: any object under the prefix."""
-    if is_posix(path):
-        return os.path.isdir(path)
-    b = _backing(path)
-    return os.path.isdir(b) and bool(os.listdir(b))
+    lp = _local(path)
+    return os.path.isdir(lp) and (is_posix(path) or bool(os.listdir(lp)))
 
 
 def makedirs(path: str) -> None:
@@ -132,30 +123,24 @@ def makedirs(path: str) -> None:
 
 
 def remove(path: str) -> None:
-    os.remove(path if is_posix(path) else _backing(path))
+    os.remove(_local(path))
 
 
 def remove_prefix(path: str) -> None:
     """Delete every object under the prefix (posix: rmtree)."""
-    if is_posix(path):
-        shutil.rmtree(path, ignore_errors=True)
-    else:
-        shutil.rmtree(_backing(path), ignore_errors=True)
+    shutil.rmtree(_local(path), ignore_errors=True)
 
 
 def list_prefix(path: str) -> list[str]:
     """Immediate children of a directory/prefix, as full paths/URIs,
     sorted. Missing prefix → []."""
-    if is_posix(path):
-        try:
-            return sorted(os.path.join(path, n) for n in os.listdir(path))
-        except OSError:
-            return []
-    b = _backing(path)
     try:
-        return sorted(f"{path.rstrip('/')}/{n}" for n in os.listdir(b))
+        names = os.listdir(_local(path))
     except OSError:
         return []
+    if is_posix(path):
+        return sorted(os.path.join(path, n) for n in names)
+    return sorted(f"{path.rstrip('/')}/{n}" for n in names)
 
 
 # localize_dir memo: prefix → (listing fingerprint, cache dir),

@@ -772,8 +772,7 @@ _ANN_TARGET_BUCKET = 32
 _ANN_TABLES = 4
 _ANN_BUCKET_CAP = 512
 # below this base size the lazy double-compute beats the staging write
-# (sf0.1 = 60k rows measured 4.69 s lazy vs 4.96 s staged); force
-# staging in tests / small clusters with SKAR_ANN_STAGE=1
+# (sf0.1 = 60k rows measured 4.69 s lazy vs 4.96 s staged)
 _ANN_STAGE_MIN_ROWS = 200_000
 
 
@@ -943,7 +942,7 @@ def q_ann_lsh(spark, sf):
     w = Window.partitionBy("tbl", "bucket").orderBy("vec_id")
     capped_lazy = (bucketed.withColumn("rn", F.row_number().over(w))
                    .filter(F.col("rn") <= _ANN_BUCKET_CAP).drop("rn"))
-    if n < _ANN_STAGE_MIN_ROWS and not os.environ.get("SKAR_ANN_STAGE"):
+    if n < _ANN_STAGE_MIN_ROWS:
         # small base: the double-compute of the lazy self-join is
         # cheaper than any materialization (re-measured r6 at sf1.0:
         # lazy ~2.9 s vs localCheckpoint ~3.6 s and staged ~5 s — the
@@ -1103,10 +1102,7 @@ WHERE cos >= {_ANN_MIN_COS}
 # BOTH engines (the ann_lsh sign-parity trick): numpy loops the dims
 # sequentially, Spark uses aggregate() (left fold), DuckDB list_sum —
 # bitwise-identical doubles, so knife-edge assignment ties cannot
-# disagree. SKAR_IVF_MATMUL=1 switches the kernels to one BLAS matmul
-# per batch (engine mode, ~d× faster) — same tie rule (first maximum =
-# smallest cid) but pairwise-summed dots, so it is NOT for oracle-parity
-# runs; use it when the consumer is the pipeline, not the driver gate.
+# disagree.
 #
 # At 10^12 rows: n_lists = 10^6 fine centroids is ~0.5 GB of doubles —
 # still driver-feasible but past broadcast-comfort; the two-level split
@@ -1143,10 +1139,6 @@ def _ivf_params(sf: str, spark=None):
     return n, k, max(1, n // k)
 
 
-def _ivf_matmul() -> bool:
-    return bool(os.environ.get("SKAR_IVF_MATMUL"))
-
-
 def _fold_norms(M):
     """Row L2 norms accumulated fold-left over dims (oracle parity)."""
     import numpy as np
@@ -1156,13 +1148,13 @@ def _fold_norms(M):
     return np.sqrt(acc)
 
 
-def _argmax_cos(V, vnorm, C, cids, cnorm, matmul: bool):
+def _argmax_cos(V, vnorm, C, cids, cnorm):
     """argmax_j cos(V[r], C[j]) per row r with the shared tie/degenerate
     rules: ties → smaller cid (`cids` must be ascending), zero-norm rows
     → cids[0] (ADVICE r04: DuckDB's x/0 → NULL sorts last under DESC, so
     its argmax falls through to the smallest cid), zero-norm centroids
     never win. Fold-left dim accumulation for bit-parity with the SQL
-    oracle unless `matmul` (engine mode: one BLAS call, pairwise sums).
+    oracle.
 
     Returns (best_index_into_C, best_cid) arrays."""
     import numpy as np
@@ -1171,16 +1163,6 @@ def _argmax_cos(V, vnorm, C, cids, cnorm, matmul: bool):
     zero = vnorm == 0.0
     vs = np.where(zero, 1.0, vnorm)
     ok = cnorm != 0.0
-    if matmul:
-        if not ok.any():
-            z = np.zeros(nb, np.int64)
-            return z, np.full(nb, cids[0], np.int64)
-        cos = (V @ C[ok].T) / (vs[:, None] * cnorm[ok][None, :])
-        # first maximum = smallest surviving index = smallest cid
-        sel = np.flatnonzero(ok)[np.argmax(cos, axis=1)]
-        besti = np.where(zero, 0, sel)
-        bestc = np.where(zero, cids[0], cids[sel])
-        return besti.astype(np.int64), bestc.astype(np.int64)
     best = np.full(nb, -np.inf)
     besti = np.zeros(nb, np.int64)
     bestc = np.full(nb, cids[0], np.int64)
@@ -1238,8 +1220,7 @@ def _quantizer_from_rows(crows, n, k, m, base):
         # cell indices 0..k1-1 — ascending, so the shared tie rule
         # "smaller id" means "smaller cell index"). Fold-left: this map
         # is part of the deterministic quantizer definition.
-        cells, _ = _argmax_cos(C, cnorm, C1, np.arange(len(sel)),
-                               c1norm, matmul=False)
+        cells, _ = _argmax_cos(C, cnorm, C1, np.arange(len(sel)), c1norm)
         q["coarse"] = (C1, c1norm, cells)
     return q
 
@@ -1256,7 +1237,6 @@ def ivf_assign(spark, sf, quant=None):
     quant = quant or ivf_quantizer(spark, sf)
     C, cids, cnorm = quant["C"], quant["cids"], quant["cnorm"]
     coarse = quant["coarse"]
-    matmul = _ivf_matmul()
 
     def assign_kernel(batches):
         for batch in batches:
@@ -1268,11 +1248,11 @@ def ivf_assign(spark, sf, quant=None):
             V = flat.reshape(nb, _DIM)
             vnorm = _fold_norms(V)
             if coarse is None:
-                _, bestc = _argmax_cos(V, vnorm, C, cids, cnorm, matmul)
+                _, bestc = _argmax_cos(V, vnorm, C, cids, cnorm)
             else:
                 C1, c1norm, cells = coarse
                 cell_of_row, _ = _argmax_cos(
-                    V, vnorm, C1, np.arange(len(C1)), c1norm, matmul)
+                    V, vnorm, C1, np.arange(len(C1)), c1norm)
                 bestc = np.full(nb, cids[0], np.int64)
                 for cell in np.unique(cell_of_row):
                     rows = cell_of_row == cell
@@ -1281,7 +1261,7 @@ def ivf_assign(spark, sf, quant=None):
                         continue   # defensive: empty cell → cids[0]
                     _, bc = _argmax_cos(
                         V[rows], vnorm[rows], C[members], cids[members],
-                        cnorm[members], matmul)
+                        cnorm[members])
                     bestc[rows] = bc
             yield pa.record_batch({
                 "vec_id": batch.column("vec_id"),

@@ -51,6 +51,7 @@ from pyspark.sql import SparkSession
 from skar_spark.engine.decode import (
     _file_part_index,
     list_part_files,
+    page_slice,
     prune_selections,
 )
 
@@ -151,8 +152,7 @@ def run_query(spark: SparkSession, out_dir: str, query: dict) -> dict:
         # the exact residual below still applies
         from skar_spark.engine.decode import hot_tail_files
         members |= set(hot_tail_files(out_dir))
-    files = sorted((f for f in members if _file_part_index(f) >= cursor),
-                   key=_file_part_index)
+    files = page_slice(members, cursor)
 
     empty = {"rows": [], "num_rows": 0, "truncated": False,
              "next_cursor": None, "archive_height": height}

@@ -151,8 +151,8 @@ class SkarReader(DataSourceReader):
     def pushFilters(self, filters):
         """Absorb host equality and warc_ts bounds; everything yielded
         back is still evaluated by Spark. Absorbed filters are applied
-        EXACTLY inside read tasks (read_part_file exact=True), on top of
-        partition + row-group pruning."""
+        EXACTLY inside read tasks (read_part_file), on top of partition +
+        row-group pruning."""
         for f in filters:
             if isinstance(f, EqualTo) and f.attribute == ("host",) \
                     and self.host_eq in (None, f.value):
@@ -197,13 +197,13 @@ class SkarReader(DataSourceReader):
     def partitions(self):
         # planning runs in a Python worker with no SparkSession — the
         # engine's pruner is driver-local, so it runs here as well
-        from skar_spark.engine.decode import prune_partitions
+        from skar_spark.engine.decode import page_slice, prune_partitions
 
         files = prune_partitions(
             self.path, host_eq=self.host_eq, ts_range=self._ts_range(),
             any_hosts=self.prune_hosts or None, lang_eq=self.lang_eq,
             as_of=self.as_of, include_hot=self.include_hot)
-        files = _page_slice(files, self.cursor, self.page_files)
+        files = page_slice(files, self.cursor, self.page_files)
         return [SkarPartition(f) for f in files]
 
     def read(self, partition: SkarPartition):
@@ -313,20 +313,6 @@ class SkarStreamReader(DataSourceStreamReader):
         pass  # progress is tracked by Spark's streaming checkpoint
 
 
-def _page_slice(files: list[str], cursor: int,
-                page_files: int | None) -> list[str]:
-    """Deterministic page of a pruned file list: numeric part-index order
-    (streaming epoch names sort wrong lexicographically), start at
-    `cursor`, at most `page_files` entries."""
-    from skar_spark.engine.decode import _file_part_index
-
-    files = sorted((f for f in files if _file_part_index(f) >= cursor),
-                   key=_file_part_index)
-    if page_files is not None:
-        return files[:page_files]
-    return files
-
-
 def read_paged(spark, path: str, cursor: int = 0, page_files: int = 64,
                **options) -> tuple:
     """Bounded partial read through the skar DataSource with a resume
@@ -339,7 +325,11 @@ def read_paged(spark, path: str, cursor: int = 0, page_files: int = 64,
     DataFrame and the cursor always agree. Wall-clock budgeting
     (time_limit_ms) lives in engine.decode.scan_paged, which collects
     incrementally; a DataFrame-returning API can only bound volume."""
-    from skar_spark.engine.decode import _file_part_index, prune_partitions
+    from skar_spark.engine.decode import (
+        _file_part_index,
+        page_slice,
+        prune_partitions,
+    )
 
     ts_range = None
     if options.get("ts_lo") or options.get("ts_hi"):
@@ -354,7 +344,7 @@ def read_paged(spark, path: str, cursor: int = 0, page_files: int = 64,
         path, host_eq=options.get("host_eq"), ts_range=ts_range,
         lang_eq=options.get("lang_eq"),
         as_of=float(options["as_of"]) if options.get("as_of") else None)
-    remaining = _page_slice(pruned, cursor, None)
+    remaining = page_slice(pruned, cursor)
     page = remaining[:page_files]
     nxt = (_file_part_index(remaining[len(page)])
            if len(remaining) > len(page) else None)

@@ -37,11 +37,9 @@ from pyspark.sql import functions as F
 
 from skar_spark.config import DEFAULT, EngineConfig
 from skar_spark.engine.encode import (
-    encode_footers,
+    encode_increment,
     lineage_dir,
-    plan_partitions,
     plan_totals,
-    salt_rows,
 )
 
 
@@ -206,22 +204,12 @@ def stream_encode(spark: SparkSession, input_dir: str, out_dir: str,
                 f"epoch {epoch_id} exceeds the int32 part-id namespace "
                 f"({parts_per_batch} parts/epoch); rotate out_dir or "
                 "widen partition_id to long")
-        loads: dict[int, int] = {}
-        planned = plan_partitions(
-            bdf, parts_per_batch, cfg,
-            salt_rows(bdf, cfg.salt_threshold_rows, totals), loads)
-        planned = planned.withColumn(
-            "part_id", (F.col("part_id") + F.lit(base)).cast("int"))
-        footers = encode_footers(
-            planned, list(range(base, base + parts_per_batch)), out_dir,
-            cfg, f"epoch-{epoch_id}",
-            f"part-e{int(epoch_id)}-{{pid:09d}}.skar",
-            {p + base: b for p, b in loads.items()})
-        # sorted append, committed driver-side (metadata rows — see
-        # encode.append_lineage_rows): keeps lineage row-group stats
-        # usable as a seek index and avoids a per-epoch Spark write job
-        from skar_spark.engine.encode import append_lineage_rows
-        append_lineage_rows(footers, out_dir)
+        # append_lineage_rows commits driver-side (sorted metadata rows):
+        # lineage row-group stats stay a seek index, and no per-epoch
+        # Spark write job runs
+        encode_increment(bdf, totals, parts_per_batch, base, out_dir, cfg,
+                         f"epoch-{epoch_id}",
+                         f"part-e{int(epoch_id)}-{{pid:09d}}.skar")
         return totals["n_bytes"] or 0
 
     def process_batch(bdf: DataFrame, epoch_id: int) -> None:

@@ -216,13 +216,14 @@ def test_bucket_kernel_matches_expression(spark, planted):
 
 def test_ann_stage_dir_redirect_and_cleanup(spark, monkeypatch, tmp_path):
     """VERDICT r03 item 5 + ADVICE r04: SKAR_STAGE_DIR redirects the
-    staging root, SKAR_ANN_STAGE forces staging below the size
-    threshold, results match the unstaged plan, OLD foreign stage dirs
-    are reclaimed, and a FRESH foreign stage dir (a concurrent job's
-    possibly-live staging) is left alone."""
+    staging root, a zero size threshold forces staging, results match
+    the unstaged plan, OLD foreign stage dirs are reclaimed, and a FRESH
+    foreign stage dir (a concurrent job's possibly-live staging) is
+    left alone."""
     import os
     import time
 
+    import skar_spark.ops.dedup as dedup
     from skar_spark.ops.dedup import _STAGE_MAX_AGE_SEC, q_ann_lsh
 
     sf = "/root/testdata/sf0.001"
@@ -237,7 +238,7 @@ def test_ann_stage_dir_redirect_and_cleanup(spark, monkeypatch, tmp_path):
     live = tmp_path / "skar_ann_stage_app-111_cafecafe00"
     live.mkdir()
     monkeypatch.setenv("SKAR_STAGE_DIR", str(tmp_path))
-    monkeypatch.setenv("SKAR_ANN_STAGE", "1")
+    monkeypatch.setattr(dedup, "_ANN_STAGE_MIN_ROWS", 0)
     staged = {(r.a, r.b, r.cos) for r in q_ann_lsh(spark, sf).collect()}
 
     assert staged == base
@@ -339,28 +340,38 @@ def test_ivf_two_level_engages_above_cap(spark, planted, monkeypatch):
     assert sdf.count() <= bound
 
 
-def test_ivf_matmul_engine_mode_matches_foldleft(spark, planted,
-                                                 monkeypatch):
-    """SKAR_IVF_MATMUL=1 (engine mode: BLAS matmul assignment instead of
-    the fold-left oracle-parity loops) must produce the same lists and
-    top-k on well-separated data, in both flat and two-level modes."""
-    import skar_spark.ops.dedup as D
+def test_ops_reads_only_deployment_env_vars():
+    """skar_spark/ops reads exactly two environment variables: the
+    staging root (SKAR_STAGE_DIR, a deployment path) and the guard on
+    the brute-force reference (SKAR_ALLOW_BRUTE). No engine mode is
+    switched by environment. An access whose key is not a literal
+    counts as an unknown read."""
+    import ast
+    import pathlib
 
-    sf_dir, _, _ = planted
-    base = {(r.qid, r.rk, r.vec_id, r.cos)
-            for r in D.q_ann_ivf(spark, sf_dir).collect()}
-    monkeypatch.setenv("SKAR_IVF_MATMUL", "1")
-    fast = {(r.qid, r.rk, r.vec_id, r.cos)
-            for r in D.q_ann_ivf(spark, sf_dir).collect()}
-    assert fast == base
+    import skar_spark.ops
 
-    monkeypatch.setattr(D, "_IVF_MAX_LISTS", 8)  # two-level
-    two_fast = {(r.qid, r.rk, r.vec_id, r.cos)
-                for r in D.q_ann_ivf(spark, sf_dir).collect()}
-    monkeypatch.delenv("SKAR_IVF_MATMUL")
-    two_base = {(r.qid, r.rk, r.vec_id, r.cos)
-                for r in D.q_ann_ivf(spark, sf_dir).collect()}
-    assert two_fast == two_base
+    reads = set()
+    for f in sorted(pathlib.Path(skar_spark.ops.__file__).parent
+                    .glob("*.py")):
+        tree = ast.parse(f.read_text())
+        parent = {c: p for p in ast.walk(tree)
+                  for c in ast.iter_child_nodes(p)}
+        for node in ast.walk(tree):
+            if not (isinstance(node, ast.Attribute)
+                    and node.attr in ("environ", "getenv")):
+                continue
+            up, key = parent[node], None
+            if isinstance(up, ast.Attribute) and up.attr == "get" \
+                    and isinstance(parent[up], ast.Call):
+                key = parent[up].args[0]
+            elif isinstance(up, ast.Subscript):
+                key = up.slice
+            elif node.attr == "getenv" and isinstance(up, ast.Call):
+                key = up.args[0]
+            reads.add(key.value if isinstance(key, ast.Constant)
+                      else f"{f.name}:{node.lineno}")
+    assert reads == {"SKAR_STAGE_DIR", "SKAR_ALLOW_BRUTE"}
 
 
 def test_ivf_candidates_subquadratic(spark, planted):

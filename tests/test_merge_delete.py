@@ -151,6 +151,31 @@ def test_delete_rows_including_emptied_partition(spark, tmp_path):
     assert scan(spark, out).count() == N_DOCS - n_doomed + n_rev
 
 
+def test_emptying_delete_commits_one_lineage_object(spark, tmp_path):
+    """A delete that empties one partition and thins others publishes
+    ONE lineage object holding both the rewritten and the emptied
+    partitions' rows, so no reader sees half of the delete."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    docs, out = _encode(spark, tmp_path, name="one_put")
+    victim = min(r.partition_id for r in
+                 read_lineage(spark, out, latest=True).collect())
+    doomed = scan(spark, out, part_ids={victim}).select("url").unionByName(
+        docs.filter(F.pmod(F.xxhash64("url"), F.lit(53)) == 1)
+        .select("url")).distinct()
+    ldir = os.path.join(out, "lineage")
+    before = set(os.listdir(ldir))
+    delete_rows(spark, doomed, out, CFG)
+    added = set(os.listdir(ldir)) - before
+    assert len(added) == 1
+    rows = pq.read_table(os.path.join(ldir, added.pop())).to_pylist()
+    assert len({r["attempt_id"] for r in rows}) == 1
+    counts = {r["partition_id"]: r["row_count"] for r in rows}
+    assert counts[victim] == 0 and len(counts) > 1
+
+
 def test_merge_evolves_schema_with_new_column(spark, tmp_path):
     docs, out = _encode(spark, tmp_path)
     updates = (docs.filter(F.pmod(F.xxhash64("url"), F.lit(41)) == 0)

@@ -105,6 +105,7 @@ def test_mock_unknown_scheme_refused():
 def test_ann_stage_on_mock_root(spark, monkeypatch):
     """SKAR_STAGE_DIR=mock://… routes the ann_lsh staging through the
     seam; results must match the unstaged plan exactly."""
+    import skar_spark.ops.dedup as dedup
     from skar_spark.ops.dedup import q_ann_lsh
 
     sf = "/root/testdata/sf0.001"
@@ -112,7 +113,7 @@ def test_ann_stage_on_mock_root(spark, monkeypatch):
 
     name = f"stage-{uuid.uuid4().hex[:8]}"
     monkeypatch.setenv("SKAR_STAGE_DIR", f"mock://{name}")
-    monkeypatch.setenv("SKAR_ANN_STAGE", "1")
+    monkeypatch.setattr(dedup, "_ANN_STAGE_MIN_ROWS", 0)  # force staging
     try:
         staged = {(r.a, r.b, r.cos)
                   for r in q_ann_lsh(spark, sf).collect()}

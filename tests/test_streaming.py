@@ -201,14 +201,14 @@ def test_stream_sessionize_stateful_gap_sessions(spark, tmp_path):
 def test_transient_failure_retried_with_backoff(spark, tmp_path, monkeypatch):
     """A failure that names no unreadable file is retried with backoff
     and succeeds once the fault clears."""
-    import skar_spark.streaming as streaming_mod
+    import skar_spark.engine.encode as encode_mod
 
     d = tmp_path / "landing_transient"
     d.mkdir()
     pq.write_table(synth_batch(np.arange(0, 400)), str(d / "a.parquet"))
     out = str(tmp_path / "transient_out")
 
-    real_plan = streaming_mod.plan_partitions
+    real_plan = encode_mod.plan_partitions
     fails = {"n": 2}
 
     def flaky_plan(*args, **kwargs):
@@ -217,7 +217,8 @@ def test_transient_failure_retried_with_backoff(spark, tmp_path, monkeypatch):
             raise RuntimeError("simulated transient planner fault")
         return real_plan(*args, **kwargs)
 
-    monkeypatch.setattr(streaming_mod, "plan_partitions", flaky_plan)
+    # the epoch plans through encode.encode_increment
+    monkeypatch.setattr(encode_mod, "plan_partitions", flaky_plan)
     q = stream_encode(spark, str(d), out, CFG, parts_per_batch=2,
                       max_retries=3, backoff_base_sec=0.05)
     q.awaitTermination(120)

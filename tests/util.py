@@ -29,8 +29,8 @@ def has_rows(f: str, host_eq=None, any_hosts=None, **pred) -> bool:
     from skar_spark.engine.partfile import read_part_file
 
     hosts = [host_eq] if host_eq is not None else (any_hosts or [None])
-    return any(read_part_file(f, columns=["url"], host_eq=h, exact=True,
-                              **pred).num_rows for h in hosts)
+    return any(read_part_file(f, columns=["url"], host_eq=h, **pred).num_rows
+               for h in hosts)
 
 
 def assert_sound(kept, universe: set, **pred) -> None:
