@@ -218,14 +218,3 @@ def rd_decode(meta: dict, sections: list[bytes], n: int,
     if dt == np.dtype(np.float32):
         return bits.astype(np.uint32).view(np.float32)
     return bits.view(np.float64)
-
-
-def exception_rate(vals: np.ndarray) -> float:
-    """Sampled fraction of values ALP would patch (diagnostic)."""
-    if len(vals) == 0:
-        return 0.0
-    n = len(vals)
-    s = np.ascontiguousarray(vals[:: max(1, n // _SAMPLE)][:_SAMPLE])
-    e, f = choose_exponents(vals)
-    _, exact = _exact_mask(s, s.astype(np.float64), e, f)
-    return 1.0 - float(exact.sum()) / len(s)

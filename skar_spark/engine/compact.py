@@ -138,7 +138,6 @@ def compact_parts(spark: SparkSession, out_dir: str,
     if lin is None:
         raise FileNotFoundError(f"no lineage under {out_dir}")
     lin = latest_lineage(lin)
-    lin = lin.filter(pc.equal(lin["status"], "committed"))
     cand = lin.filter(pc.less(lin["row_count"], small_rows))
     if cand.num_rows < min_parts:
         return {"compacted_parts": 0, "new_parts": 0, "rows": 0}

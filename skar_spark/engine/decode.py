@@ -5,24 +5,27 @@ index (db/mod.rs:217-305) → row-group selection via zone maps + blooms
 (data_provider.rs:185-333) → projected parallel column decode
 (data_provider.rs:112-119). Here:
 
+- one read predicate: a *where*, an OR of conjuncts over hosts, langs,
+  url prefixes, a ts range and a numeric column range (see
+  `partfile.read_part_file`), is the only input of all three steps;
+  the single-value kwargs of `scan`, `scan_paged`, `scan_changes` and
+  `prune_partitions` build one `conjunct`;
 - partition pruning is DRIVER-LOCAL, the reference's single-node index
-  SEEK (db/mod.rs:217-305): `_lineage_survivors` streams lineage
+  SEEK (db/mod.rs:217-305): `prune_selections` streams lineage
   through the one lineage reader (`encode.lineage_row_groups`) and
-  tests zone maps, the host and lang blooms and the numeric col_stats
-  per partition, skipping whole lineage row groups by their
-  min/max_warc_ts stats on ts-filtered reads; membership follows the
-  one latest-attempt rule (`encode.newest_attempts`). No Spark job is
-  launched. Lineage fits on the driver because it holds one row per
+  tests each conjunct per partition with `partfile.may_match` (zone
+  maps, host and lang blooms, numeric col_stats), the prune_query
+  analog (handler.rs:187-250), skipping whole lineage row groups by
+  their min/max_warc_ts stats on ts-bounded reads; membership follows
+  the one latest-attempt rule (`encode.newest_attempts`). No Spark job
+  is launched. Lineage fits on the driver because it holds one row per
   PARTITION, not per document — about 10^6 rows at 10^12 docs — and
   the pass keeps only {partition → file, verdict}, holding the blooms
   of one lineage row group at a time;
-- per-disjunct pruning (`prune_selections`) mirrors prune_query
-  (handler.rs:187-250): each (hosts, langs, ts_range) selection is
-  tested against every partition's zone maps + blooms in the same pass,
-  dropping partitions no disjunct can touch;
-- row-group pruning + projection + EXACT predicate apply happen in
-  `read_part_file` against the part-file footer: in the mapInArrow
-  kernel for scans, on the driver (no Spark job) for bounded reads;
+- row-group pruning (the same `may_match` on footer row groups) +
+  projection + the EXACT predicate happen in `read_part_file`: in the
+  mapInArrow kernel for scans, on the driver (no Spark job) for
+  bounded reads;
 - decode is vectorized (numpy/pyarrow) per column chunk.
 
 Storage: all path IO flows through `engine.storage` (the object-store
@@ -41,7 +44,6 @@ import os
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from skar_spark.engine import storage
 from skar_spark.engine.decode_schema import spark_ddl_for
@@ -59,29 +61,6 @@ def list_part_files(out_dir: str) -> list[str]:
             and p.endswith(".skar")]
 
 
-def lineage_file_sets_local(out_dir: str
-                            ) -> tuple[set[str], set[str]] | None:
-    """(committed, all-recorded) file sets from lineage, read locally
-    (encode.lineage_table, no Spark job — safe in DataSource planning
-    workers). Returns None when the table has no lineage directory at
-    all (a brand-new table or a static hand-built dir, where the listing
-    IS the membership); a lineage that exists but can't be read raises —
-    falling back to the raw listing would expose uncommitted files."""
-    from skar_spark.engine.encode import lineage_table
-
-    lin = lineage_table(out_dir, ["file", "status"])
-    if lin is None:
-        return None
-    files = lin["file"].to_pylist()
-    return ({f for f, st in zip(files, lin["status"].to_pylist())
-             if st == "committed"}, set(files))
-
-
-def committed_files_local(out_dir: str) -> set[str] | None:
-    sets = lineage_file_sets_local(out_dir)
-    return None if sets is None else sets[0]
-
-
 def hot_tail_files(out_dir: str) -> list[str]:
     """The HOT TAIL: part files on disk with no lineage row at all —
     the in-progress (not yet committed) streaming epoch or batch. The
@@ -91,67 +70,70 @@ def hot_tail_files(out_dir: str) -> list[str]:
     compacted tables delete files, so an unrecorded file there is a
     crash orphan, not fresh data — refused."""
     from skar_spark.engine.compact import is_compacted
-    from skar_spark.engine.encode import is_retained
+    from skar_spark.engine.encode import is_retained, lineage_table
 
     if is_retained(out_dir) or is_compacted(out_dir):
         raise ValueError(
             f"include_hot refused on {out_dir}: retained/compacted "
             "tables delete files, so unrecorded on-disk files are crash "
             "orphans — the hot tail exists only on plain tables")
-    sets = lineage_file_sets_local(out_dir)
-    if sets is None:
+    lin = lineage_table(out_dir, ["file"])
+    if lin is None:
         return []
-    _committed, recorded = sets
+    recorded = set(lin["file"].to_pylist())
     return [f for f in list_part_files(out_dir) if f not in recorded]
 
 
-def _lineage_survivors(out_dir: str, disjuncts: list[dict],
+def _lineage_survivors(out_dir: str, where: list[dict],
                        as_of: float | None = None,
                        seek_stats: dict | None = None
                        ) -> dict[str, list[int]] | None:
     """THE pruning pass: one driver-local stream over the lineage
     (encode.lineage_row_groups), the analog of the reference's
     single-node index seek (db/mod.rs:217-305). Returns {file: [indices
-    of the disjuncts the file's partition may satisfy]} for the files at
-    least one disjunct keeps, or None when the table has no lineage
-    directory (the caller applies the listing policy,
+    of the conjuncts of `where` the file's partition may satisfy]} for
+    the files at least one conjunct keeps, or None when the table has
+    no lineage directory (the caller applies the listing policy,
     `_listing_membership`).
 
-    Each disjunct is conjunctive: ``ts_range`` (lo_us, hi_us) against
-    the min/max_warc_ts zone maps; ``blooms``, a list of (lineage bloom
-    column, values) pairs, each passing when the partition's bloom might
-    contain ANY of its values; ``col_range`` (col, lo, hi) against the
-    numeric ``col_stats`` zone maps. Unknown metadata (null zone map,
-    null bloom, missing bloom column, no stats for the column) never
-    prunes.
+    Each conjunct is tested by `partfile.may_match`, the same test
+    read_part_file applies to footer row groups: ``ts_range`` against
+    the min/max_warc_ts zone maps, ``hosts`` (and the host a
+    ``url_prefix`` implies) against ``host_bloom``, ``langs`` against
+    ``lang_bloom``, ``col_range`` against the numeric ``col_stats``.
+    Unknown metadata (null zone map, null bloom, missing bloom column,
+    no stats for the column) never prunes.
 
     Membership is resolved per ``partition_id`` by read_lineage's rule
     (encode.newest_attempts), folded one row group at a time over the
     attempts committed at or before `as_of` when given. Only
-    {partition_id → (order key, file, kept disjuncts)} is kept, so
-    memory stays O(#partitions) strings plus one lineage row group's
-    blooms. ts-filtered passes on live tables also skip whole lineage
-    row groups (the reader's seek)."""
+    {partition_id → (file, kept conjuncts)} is kept, so memory stays
+    O(#partitions) strings plus one lineage row group's blooms.
+    ts-filtered passes on live tables also skip whole lineage row groups
+    (the reader's seek)."""
     import json
 
-    import numpy as np
-
-    from skar_spark.engine.bloom import bloom_might_contain
     from skar_spark.engine.encode import (
         is_retained,
         lineage_row_groups,
         newest_attempts,
     )
+    from skar_spark.engine.partfile import may_match
 
-    bloom_cols = sorted({c for d in disjuncts for c, _v in d["blooms"]})
-    use_stats = any(d.get("col_range") for d in disjuncts)
+    def _uses(*keys):
+        return any(c.get(k) is not None for c in where for k in keys)
+
+    bloom_cols = [c for c, used in (
+        ("host_bloom", _uses("hosts", "url_prefix")),
+        ("lang_bloom", _uses("langs"))) if used]
+    use_stats = _uses("col_range")
     cols = ["partition_id", "file", "min_warc_ts", "max_warc_ts",
             "committed_at", "attempt_id", *bloom_cols,
             *(["col_stats"] if use_stats else [])]
     # ts-filtered planning on a live table SEEKS via the sorted
-    # lineage's row-group stats when every disjunct bounds ts (their
+    # lineage's row-group stats when every conjunct bounds ts (their
     # union's envelope drives the skip — a safe over-approximation: a
-    # skipped row group contains only rows every disjunct's zone-map
+    # skipped row group contains only rows every conjunct's zone-map
     # test rejects). Retained/as_of reads need every attempt row for
     # snapshot bookkeeping → full stream.
     #
@@ -165,30 +147,17 @@ def _lineage_survivors(out_dir: str, disjuncts: list[dict],
     # extended to non-retained tables, this seek must exclude pids whose
     # resolved row is not the true latest (or fall back to the full
     # stream).
-    ranges = [d["ts_range"] for d in disjuncts]
+    ranges = [c.get("ts_range") for c in where]
     seek = None
     if ranges and all(r is not None for r in ranges) and as_of is None \
             and not is_retained(out_dir):
         seek = (min(r[0] for r in ranges), max(r[1] for r in ranges))
 
-    def _ts_us(col):
-        # normalize to microseconds regardless of the stored unit
-        # (sub-µs truncation is exact against integer-µs query bounds)
+    def _us(col):
+        # epoch µs whatever the stored unit (sub-µs truncation is exact
+        # against integer-µs bounds); None for an unknown zone
         return col.cast(pa.timestamp("us"), safe=False).cast(
-            pa.int64()).to_numpy(zero_copy_only=False).astype("float64")
-
-    def _bloom_ok(blob, values):
-        # one probe per PARTITION (metadata row); a null bloom (or a
-        # bloom column older lineage files lack) can't prune
-        return blob is None or any(bloom_might_contain(bytes(blob), v)
-                                   for v in values)
-
-    def _stats_ok(raw, col_range):
-        c, lo, hi = col_range
-        mm = json.loads(raw).get(c) if raw else None
-        if not mm or mm[0] is None or mm[1] is None:
-            return True  # no stats for the column: can't prune
-        return float(mm[1]) >= lo and float(mm[0]) < hi
+            pa.int64()).to_pylist()
 
     rgs = lineage_row_groups(out_dir, cols, seek, seek_stats)
     if rgs is None:
@@ -196,33 +165,21 @@ def _lineage_survivors(out_dir: str, disjuncts: list[dict],
     seen: dict[int, tuple] = {}
     latest: dict[int, tuple[str, list[int]]] = {}
     for batch in rgs:
-        n = batch.num_rows
-        if n == 0:
+        if batch.num_rows == 0:
             continue
-        lo, hi = _ts_us(batch.column("min_warc_ts")), \
-            _ts_us(batch.column("max_warc_ts"))
-        known = ~np.isnan(lo)
-        ts_keep = [
-            np.ones(n, dtype=bool) if d["ts_range"] is None
-            else ~known | ~((lo >= d["ts_range"][1])
-                            | (hi < d["ts_range"][0]))
-            for d in disjuncts]
+        lo, hi = (_us(batch.column(c))
+                  for c in ("min_warc_ts", "max_warc_ts"))
         files = batch.column("file").to_pylist()
+        meta = {c: batch.column(c).to_pylist() for c in bloom_cols}
         stats = batch.column("col_stats").to_pylist() if use_stats else None
         # per PARTITION metadata row, not per data row
         for pid, i in newest_attempts(batch, as_of, seen).items():
-            kept = []
-            for j, d in enumerate(disjuncts):
-                if not ts_keep[j][i]:
-                    continue
-                if not all(_bloom_ok(batch.column(c)[i].as_py(), vals)
-                           for c, vals in d["blooms"]):
-                    continue
-                if d.get("col_range") and not _stats_ok(
-                        stats[i], d["col_range"]):
-                    continue
-                kept.append(j)
-            latest[pid] = (files[i], kept)
+            hb, lb = (meta[c][i] if c in meta else None
+                      for c in ("host_bloom", "lang_bloom"))
+            st = json.loads(stats[i]) if stats and stats[i] else None
+            latest[pid] = (files[i], [
+                j for j, c in enumerate(where) if may_match(
+                    c, (lo[i], hi[i]), None, hb, lb, st)])
     return {f: kept for f, kept in latest.values() if kept}
 
 
@@ -242,6 +199,23 @@ def _listing_membership(out_dir: str) -> list[str]:
     return list_part_files(out_dir)
 
 
+def conjunct(host_eq: str | None = None,
+             ts_range: tuple[int, int] | None = None,
+             lang_eq: str | None = None,
+             col_range: tuple[str, float, float] | None = None,
+             any_hosts: list[str] | None = None) -> dict:
+    """The one read conjunct (see partfile.read_part_file) of the
+    single-value kwargs of prune_partitions and the scans. `host_eq`
+    and `any_hosts` (host IN; empty or None = any) intersect."""
+    hosts = None if host_eq is None else [host_eq]
+    if any_hosts:
+        hosts = [h for h in hosts or any_hosts if h in any_hosts]
+    c = {"hosts": hosts, "ts_range": ts_range,
+         "langs": None if lang_eq is None else [lang_eq],
+         "col_range": col_range}
+    return {k: v for k, v in c.items() if v is not None}
+
+
 def prune_partitions(out_dir: str,
                      host_eq: str | None = None,
                      ts_range: tuple[int, int] | None = None,
@@ -251,107 +225,58 @@ def prune_partitions(out_dir: str,
                      col_range: tuple[str, float, float] | None = None,
                      any_hosts: list[str] | None = None,
                      seek_stats: dict | None = None) -> list[str]:
-    """Partition pruning via lineage zone maps, the host and lang bloom
-    families and the numeric ``col_stats`` zone maps — the mirror of the
-    folder index seek (db/mod.rs:217-305) + prune_query folder skipping
-    (handler.rs:144-158). Runs driver-local (`_lineage_survivors`), so it
-    launches no Spark job and is safe in DataSource planning workers.
+    """The member files (listing order) that may hold rows of the one
+    `conjunct` these kwargs build — prune_selections of that conjunct.
 
-    `host_eq` and `any_hosts` are ANDed: a partition survives when its
-    host bloom might contain `host_eq` AND might contain ANY of
-    `any_hosts` (url-equality and host-IN pruning). `col_range`
-    ``(col, lo, hi)`` keeps partitions whose [min, max] overlaps
-    [lo, hi) or that have no stats for the column.
+    `host_eq` and `any_hosts` are ANDed (url-equality and host-IN
+    pruning). `col_range` ``(col, lo, hi)`` keeps partitions whose
+    [min, max] overlaps [lo, hi) or that have no stats for the column.
+    `as_of`, `include_hot` and `seek_stats` are prune_selections'."""
+    return list(prune_selections(
+        out_dir, [conjunct(host_eq, ts_range, lang_eq, col_range,
+                           any_hosts)],
+        seek_stats, as_of=as_of, include_hot=include_hot))
+
+
+def prune_selections(out_dir: str, where: list[dict],
+                     seek_stats: dict | None = None, *,
+                     as_of: float | None = None,
+                     include_hot: bool = False) -> dict[str, list[int]]:
+    """Partition pruning of a read predicate — the mirror of the folder
+    index seek (db/mod.rs:217-305) and prune_query's per-selection
+    folder skipping (handler.rs:144-158, 187-250).
+
+    `where` is the OR of conjuncts read_part_file takes. Returns
+    {file: [indices of the conjuncts that may match it]} for the member
+    files at least one conjunct may match, in listing order, from one
+    driver-local lineage pass (`_lineage_survivors`): no Spark job, so
+    it is safe in DataSource planning workers. ``[]`` keeps nothing.
+
+    Lineage is the SOURCE OF TRUTH for table membership: a part file
+    with no row in the selected view is either superseded (snapshot
+    retention), outside the as_of snapshot, not yet committed (its
+    writer re-encodes it on resume — atomic rename makes the eventual
+    commit idempotent), or orphaned by a crash between a vacuum/
+    compaction lineage swap and its file deletes; none is returned.
+    A table without a lineage directory (static, hand-built) is its
+    listing.
 
     `as_of` selects the snapshot view (latest attempt committed at or
     before that unix time per partition — Iceberg time travel on tables
-    encoded with ``retain_superseded``). On a snapshot-retaining table
-    the surviving set always comes from lineage: superseded attempt
-    files still on disk are never returned.
-
-    `include_hot` additionally serves the HOT TAIL — part files whose
-    lineage row has not committed yet (the in-progress streaming epoch)
-    — alongside the committed cold set, the reference's hot-tier union
-    (data_provider.rs:56-105). Hot files carry no pruning metadata, so
-    they always survive pruning; exact predicates still apply inside
-    the read kernel. Plain tables only.
-
-    `seek_stats` is filled with the lineage row-group counters
-    (`encode.lineage_row_groups`) whenever lineage is read."""
-    from skar_spark.engine.compact import is_compacted
-    from skar_spark.engine.encode import is_retained
-
-    files = list_part_files(out_dir)
-    hot = set(hot_tail_files(out_dir)) if include_hot else set()
-    blooms = []
-    if host_eq is not None:
-        blooms.append(("host_bloom", [host_eq]))
-    if any_hosts:
-        blooms.append(("host_bloom", list(any_hosts)))
-    if lang_eq is not None:
-        blooms.append(("lang_bloom", [lang_eq]))
-    # fast path: plain full scans resolve membership from the COMMITTED
-    # lineage set read locally — the same set the stream reader tails.
-    # The raw listing alone would over-approximate by uncommitted parts
-    # (a crashed batch/epoch), making rows appear on a full scan that
-    # vanish once a predicate triggers lineage-resolved pruning.
-    # Lineage-less directories (static/hand-built) keep listing-only
-    # membership; retained/compacted tables (file deletion possible)
-    # always take the full lineage pass below.
-    if not blooms and ts_range is None and col_range is None \
-            and as_of is None and not is_retained(out_dir) \
-            and not is_compacted(out_dir):
-        committed = committed_files_local(out_dir)
-        if committed is None:
-            return files
-        return [f for f in files if f in committed or f in hot]
-    survived = _lineage_survivors(
-        out_dir, [{"ts_range": ts_range, "blooms": blooms,
-                   "col_range": col_range}], as_of, seek_stats)
-    if survived is None:
-        return _listing_membership(out_dir)
-    # lineage is the SOURCE OF TRUTH for table membership: a part file
-    # with no row in the selected view is either superseded (snapshot
-    # retention), outside the as_of snapshot, not yet committed (its
-    # writer re-encodes it on resume — atomic rename makes the eventual
-    # commit idempotent), or orphaned by a crash between a vacuum/
-    # compaction lineage swap and its file deletes. All four must not
-    # be read; readers only ever see committed data exactly once.
-    # (`include_hot` deliberately re-admits the not-yet-committed class
-    # on plain tables — unprunable, exact-filtered in the kernel.)
-    return [f for f in files if f in survived or f in hot]
-
-
-def prune_selections(out_dir: str, selections: list[dict],
-                     seek_stats: dict | None = None
-                     ) -> dict[str, list[int]]:
-    """Per-disjunct pruning — the prune_query analog (handler.rs:187-250).
-
-    `selections` is a list of disjuncts, each `{"hosts": [...] | None,
-    "langs": [...] | None, "ts_range": (lo_us, hi_us) | None}`
-    (conjunctive within a disjunct, OR across; langs prune via the
-    second bloom family). Returns {file: [surviving disjunct indices]}
-    containing only files at least one disjunct can touch, evaluated in
-    the same driver-local lineage pass as `prune_partitions` (latest
-    view; superseded, uncommitted and crash-orphaned files are never
-    returned).
-    """
-    if not selections:
-        # no disjuncts → nothing can match any file (the OR of an empty
-        # set is false)
+    encoded with ``retain_superseded``). `include_hot` also serves the
+    HOT TAIL (`hot_tail_files`, plain tables only) — files carry no
+    pruning metadata, so they survive for every conjunct and the exact
+    filter applies in the read. `seek_stats` is filled with the lineage
+    row-group counters (`encode.lineage_row_groups`)."""
+    if not where:
         return {}
-    disjuncts = [{
-        "ts_range": s.get("ts_range"),
-        "blooms": [(c, list(s[k])) for c, k in
-                   (("host_bloom", "hosts"), ("lang_bloom", "langs"))
-                   if s.get(k)],
-    } for s in selections]
-    survived = _lineage_survivors(out_dir, disjuncts, seek_stats=seek_stats)
+    hot = set(hot_tail_files(out_dir)) if include_hot else set()
+    survived = _lineage_survivors(out_dir, where, as_of, seek_stats)
+    every = list(range(len(where)))
     if survived is None:
-        return {f: list(range(len(selections)))
-                for f in _listing_membership(out_dir)}
-    return {f: survived[f] for f in list_part_files(out_dir)
-            if f in survived}
+        survived = dict.fromkeys(_listing_membership(out_dir), every)
+    return {f: survived.get(f, every) for f in list_part_files(out_dir)
+            if f in survived or f in hot}
 
 
 def scan(spark: SparkSession, out_dir: str,
@@ -395,8 +320,9 @@ def scan(spark: SparkSession, out_dir: str,
     cols = columns or tcols
     # parts written before a column existed null-fill it kernel-side
     return decode_paths(spark, files, spark_ddl_for(ttypes, cols),
-                        columns=cols, host_eq=host_eq, ts_range=ts_range,
-                        lang_eq=lang_eq, col_range=col_range,
+                        columns=cols,
+                        where=[conjunct(host_eq, ts_range, lang_eq,
+                                        col_range)],
                         fill_missing={c: ttypes[c] for c in cols})
 
 
@@ -404,7 +330,7 @@ def decode_paths(spark: SparkSession, files: list[str], ddl: str,
                  **read_kw) -> DataFrame:
     """THE decode dispatch: one task per part file, each running
     read_part_file(path, **read_kw) in a mapInArrow kernel (row-group
-    pruning, projection, exact predicates, null-fill all happen there).
+    pruning, projection, the exact `where`, null-fill all happen there).
     Shared by scan and compaction."""
     paths_df = spark.createDataFrame(
         [(f,) for f in files], "path string").repartition(
@@ -433,8 +359,7 @@ def validate_output(spark: SparkSession, out_dir: str) -> DataFrame:
     lin = read_lineage(spark, out_dir, latest=True)
     if lin is None:
         raise FileNotFoundError(f"no lineage under {out_dir}")
-    meta = (lin.filter(F.col("status") == "committed")
-            .select("partition_id", "file", "text_checksum"))
+    meta = lin.select("partition_id", "file", "text_checksum")
 
     def check_fn(batches):
         from skar_spark.engine.partfile import partition_checksum
@@ -491,15 +416,15 @@ def scan_changes(spark: SparkSession, out_dir: str,
     with the normal exact pruning inside the changed set."""
     from skar_spark.engine.encode import latest_lineage, lineage_table
 
-    lin = lineage_table(out_dir, ["partition_id", "status",
-                                  "committed_at", "attempt_id"])
+    lin = lineage_table(out_dir, ["partition_id", "committed_at",
+                                  "attempt_id"])
     if lin is None:
         raise FileNotFoundError(f"no lineage under {out_dir}; the "
                                 "change feed requires a committed table")
     # driver-local, metadata-scale
     pids = {r["partition_id"] for r in latest_lineage(lin, until).to_pylist()
-            if r["status"] == "committed" and (since is None or (
-                r["committed_at"] is not None and r["committed_at"] > since))}
+            if since is None or (r["committed_at"] is not None
+                                 and r["committed_at"] > since)}
     if _stats is not None:
         _stats["n_changed_parts"] = len(pids)
     return scan(spark, out_dir, columns=columns, host_eq=host_eq,
@@ -536,45 +461,26 @@ def scan_paged(spark: SparkSession, out_dir: str,
     from skar_spark.engine.schema_evo import table_schema
     tcols, ttypes = table_schema(out_dir, files)
     rows, nxt = paged_decode_loop(
-        spark, files, columns or tcols, host_eq=host_eq, ts_range=ts_range,
-        lang_eq=lang_eq, time_limit_ms=time_limit_ms,
-        page_files=page_files, fill=ttypes)
+        spark, files, columns or tcols,
+        where=[conjunct(host_eq, ts_range, lang_eq)],
+        time_limit_ms=time_limit_ms, page_files=page_files, fill=ttypes)
     return [Row(**d) for d in rows], nxt
-
-
-def read_part_table(path: str, columns: list[str] | None = None,
-                    **read_kw) -> pa.Table:
-    """read_part_file(path, **read_kw) projected to `columns` (default:
-    every stored column + `host`), `host` derived from `url` Arrow-side —
-    the per-file read of the DataSource tasks and paged_decode_loop."""
-    from skar_spark.engine.partfile import _derive_host, read_footer
-
-    want = columns or read_footer(path)["columns"] + ["host"]
-    inner = [c for c in want if c != "host"]
-    if "host" in want and "url" not in inner:
-        inner.append("url")
-    t = read_part_file(path, columns=inner, **read_kw)
-    if "host" in want:
-        t = t.append_column("host", _derive_host(t["url"]))
-    return t.select(want)
 
 
 def paged_decode_loop(spark: SparkSession, files: list[str],
                       columns: list[str], *,
-                      host_eq: str | None = None,
-                      ts_range: tuple[int, int] | None = None,
-                      lang_eq: str | None = None,
+                      where: list[dict] | None = None,
                       time_limit_ms: int | None = None,
                       page_files: int = 64,
                       row_limit: int | None = None,
-                      post=None,
                       fill: dict[str, str] | None = None
                       ) -> tuple[list[dict], int | None]:
     """THE page/cursor/budget loop — shared by scan_paged and the JSON
     query handler so the folder-granular truncation semantics exist in
     exactly one place. Decodes `files` (already pruned + part-index
-    sorted) on the driver, page by page (no Spark job), optionally
-    pipes each page's table through `post` (filter/projection), and
+    sorted) on the driver, page by page (no Spark job): one
+    read_part_file per file with the projection `columns` (``host``
+    derived), the exact `where` and the null-fill types `fill`, and
     stops when the wall-clock budget or row bound is reached — always
     at a page boundary, so the returned next_cursor never skips or
     re-reads rows. Returns (row dicts, next_cursor); timestamps are
@@ -587,11 +493,8 @@ def paged_decode_loop(spark: SparkSession, files: list[str],
     pos = 0
     while pos < len(files):
         page = files[pos:pos + page_files]
-        t = pa.concat_tables([read_part_table(
-            f, columns, host_eq=host_eq, ts_range=ts_range,
-            lang_eq=lang_eq, fill_missing=fill) for f in page])
-        if post is not None:
-            t = post(t)
+        t = pa.concat_tables([read_part_file(f, columns, where, fill)
+                              for f in page])
         rows.extend(t.cast(pa.schema(
             [(f.name, pa.timestamp("us")) if pa.types.is_timestamp(f.type)
              else f for f in t.schema]), safe=False).to_pylist())

@@ -880,12 +880,8 @@ def vacuum(spark: SparkSession, out_dir: str) -> list[str]:
 
 
 def completed_part_ids(spark: SparkSession, out_dir: str) -> set[int]:
-    lin = lineage_table(out_dir, ["partition_id", "status"])
-    if lin is None:
-        return set()
-    return {p for p, st in zip(lin["partition_id"].to_pylist(),
-                               lin["status"].to_pylist())
-            if st == "committed"}
+    lin = lineage_table(out_dir, ["partition_id"])
+    return set() if lin is None else set(lin["partition_id"].to_pylist())
 
 
 def append_documents(spark: SparkSession, df: DataFrame, out_dir: str,
@@ -1037,32 +1033,30 @@ def encode_documents(spark: SparkSession, df: DataFrame, out_dir: str,
     if salt is None:
         salt = salt_rows(df, cfg.salt_threshold_rows, totals())
         save_salt_map(out_dir, salt)
-    day_meta = None
     loads: dict[int, int] = {}
-    if scheme == "day_hash":
-        if stored_meta and stored_meta.get("d0"):
-            import datetime as _dt
-            layout = (_dt.date.fromisoformat(stored_meta["d0"]),
-                      stored_meta["buckets"], stored_meta["num_parts"])
-        else:
+    if stored_meta is not None:
+        # resume: the stored plan, as every partition rewrite replans
+        planned, _ = _replan_with_stored(spark, df, out_dir, cfg, loads,
+                                         (stored_meta, salt))
+        num_parts = stored_meta["num_parts"]
+    else:
+        day_meta = {}
+        if scheme == "day_hash":
             t = totals()
             n_days = (t["d1"] - t["d0"]).days + 1
             buckets = max(1, -(-int(t["n_rows"]) // n_days
                                // cfg.target_partition_rows))
-            layout = (t["d0"], buckets, n_days * buckets)
-        d0, buckets, num_parts = layout
-        planned = plan_partitions_day_hash(df, salt, layout)
-        day_meta = {"d0": d0.isoformat(), "buckets": buckets}
-    else:
-        if stored_meta:
-            num_parts = stored_meta["num_parts"]
-        planned = plan_partitions(df, num_parts, cfg, salt, loads)
-    if stored_meta is None:
+            num_parts = n_days * buckets
+            planned = plan_partitions_day_hash(
+                df, salt, (t["d0"], buckets, num_parts))
+            day_meta = {"d0": t["d0"].isoformat(), "buckets": buckets}
+        else:
+            planned = plan_partitions(df, num_parts, cfg, salt, loads)
         save_plan_meta(out_dir, {
             "scheme": scheme, "num_parts": num_parts,
             "salt_threshold_rows": cfg.salt_threshold_rows,
             "target_partition_rows": cfg.target_partition_rows,
-            **(day_meta or {})})
+            **day_meta})
     if resume:
         done = completed_part_ids(spark, out_dir)
         if verify and done:
@@ -1146,15 +1140,18 @@ def _assert_no_appended_parts(out_dir: str, op: str,
 
 
 def _replan_with_stored(spark: SparkSession, df: DataFrame, out_dir: str,
-                        cfg: EngineConfig, loads: dict | None = None
-                        ) -> tuple[DataFrame, dict]:
+                        cfg: EngineConfig, loads: dict | None = None,
+                        stored: tuple[dict | None, pa.Table | None]
+                        | None = None) -> tuple[DataFrame, dict]:
     """Replan `df` with the PERSISTED salt map + scheme parameters so
     partition membership is identical to the original encode; no Spark
-    action runs. `loads` is filled as in plan_partitions."""
-    meta = load_plan_meta(out_dir)
+    action runs. `loads` is filled as in plan_partitions. `stored` is
+    the (plan metadata, salt map) pair a caller already loaded; only
+    without it are they read here."""
+    meta, salt = stored if stored is not None else (
+        load_plan_meta(out_dir), load_salt_map(out_dir))
     if meta is None:
         raise FileNotFoundError(f"no plan metadata under {out_dir}")
-    salt = load_salt_map(out_dir)
     if salt is None:
         raise FileNotFoundError(f"no salt map under {out_dir}")
     if meta["scheme"] == "day_hash":
@@ -1170,7 +1167,7 @@ def _replan_with_stored(spark: SparkSession, df: DataFrame, out_dir: str,
 def _locate_partitions(spark: SparkSession, df: DataFrame, out_dir: str,
                        cfg: EngineConfig, op: str, guard: str,
                        url_located: str | None = None
-                       ) -> tuple[DataFrame, list[int], dict]:
+                       ) -> tuple[DataFrame, list[int], tuple]:
     """THE guard-and-locate step of every partition rewrite
     (merge_updates, delete_rows, reencode_late): refuse compacted
     tables (`guard` names the op there) and tables with appended parts,
@@ -1179,7 +1176,8 @@ def _locate_partitions(spark: SparkSession, df: DataFrame, out_dir: str,
     (`url_located`: why it needs the hash scheme) also refuses tables
     without stored plan metadata (streamed: per-epoch plans) and
     day_hash tables. Returns (the replanned `df`, affected part ids,
-    plan metadata)."""
+    the stored (plan metadata, salt map) — read once here and handed
+    to `_rewrite_partitions`)."""
     from skar_spark.engine.compact import assert_not_compacted
 
     assert_not_compacted(out_dir, guard)
@@ -1194,19 +1192,23 @@ def _locate_partitions(spark: SparkSession, df: DataFrame, out_dir: str,
             raise NotImplementedError(
                 f"{op} requires the hash partition scheme{url_located}")
     _assert_no_appended_parts(out_dir, op, meta)
-    planned, meta = _replan_with_stored(spark, df, out_dir, cfg)
+    stored = (meta, load_salt_map(out_dir))
+    planned, _ = _replan_with_stored(spark, df, out_dir, cfg,
+                                     stored=stored)
     affected = [r.part_id for r in
                 planned.select("part_id").distinct().collect()]
-    return planned, affected, meta
+    return planned, affected, stored
 
 
 def _rewrite_partitions(spark: SparkSession, out_dir: str,
                         cfg: EngineConfig, affected: list[int],
-                        corrected: DataFrame, tag: str) -> DataFrame:
+                        corrected: DataFrame, tag: str,
+                        stored: tuple) -> DataFrame:
     """Copy-on-write rewrite of exactly `affected` partitions — the one
     rewrite of merge_updates, delete_rows and reencode_late.
 
-    `corrected` is replanned with the stored plan; its rows in
+    `corrected` is replanned with the `stored` plan (the
+    `_locate_partitions` pair); its rows in
     `affected` are the partitions' full new content. Each affected
     partition is re-encoded under one fresh attempt id (``{tag}-…``)
     and its lineage row superseded by `committed_at`. A partition whose
@@ -1219,7 +1221,8 @@ def _rewrite_partitions(spark: SparkSession, out_dir: str,
     whole rewrite visible or none of it (the default mode overwrites
     part files in place before that commit)."""
     loads: dict[int, int] = {}
-    planned, _ = _replan_with_stored(spark, corrected, out_dir, cfg, loads)
+    planned, _ = _replan_with_stored(spark, corrected, out_dir, cfg, loads,
+                                     stored)
     sub = planned.filter(F.col("part_id").isin(affected))
     attempt = f"{tag}-{uuid.uuid4().hex[:8]}"
     name_fmt = _kernel_name_fmt(cfg, attempt, out_dir)
@@ -1266,8 +1269,9 @@ def reencode_late(spark: SparkSession, full_df: DataFrame,
     """
     import sys
 
-    planned_late, affected, meta = _locate_partitions(
+    planned_late, affected, stored = _locate_partitions(
         spark, late_df, out_dir, cfg, "reencode_late", "late-data rollback")
+    meta = stored[0]
     if meta["scheme"] == "day_hash" and min(affected, default=0) < 0:
         n_before = planned_late.filter(F.col("part_id") < 0).count()
         raise ValueError(
@@ -1278,7 +1282,7 @@ def reencode_late(spark: SparkSession, full_df: DataFrame,
     print(f"[reencode_late] rolling back {len(affected)} partition(s): "
           f"{sorted(affected)[:20]}", file=sys.stderr)
     return _rewrite_partitions(spark, out_dir, cfg, affected, full_df,
-                               "late")
+                               "late", stored)
 
 
 def merge_updates(spark: SparkSession, updates_df: DataFrame,
@@ -1322,7 +1326,7 @@ def merge_updates(spark: SparkSession, updates_df: DataFrame,
     # a partition the update never plans into. Upsert-by-url needs the
     # hash scheme's url→partition pure function (or a url→partition
     # index, which the engine does not keep).
-    _, affected, _ = _locate_partitions(
+    _, affected, stored = _locate_partitions(
         spark, updates_df, out_dir, cfg, "merge_updates", "merge",
         "; on a day_hash table use reencode_late with the corrected "
         "full dataset")
@@ -1333,7 +1337,7 @@ def merge_updates(spark: SparkSession, updates_df: DataFrame,
                          "url", "left_anti")
     corrected = keep.unionByName(updates_df, allowMissingColumns=True)
     return _rewrite_partitions(spark, out_dir, cfg, affected, corrected,
-                               "merge")
+                               "merge", stored)
 
 
 def delete_rows(spark: SparkSession, urls_df: DataFrame, out_dir: str,
@@ -1347,7 +1351,7 @@ def delete_rows(spark: SparkSession, urls_df: DataFrame, out_dir: str,
     """
     from skar_spark.engine.decode import scan
 
-    _, affected, _ = _locate_partitions(
+    _, affected, stored = _locate_partitions(
         spark, urls_df.select("url"), out_dir, cfg, "delete_rows", "delete",
         " (day_hash partition membership depends on warc_ts, which a "
         "url set does not carry)")
@@ -1357,7 +1361,7 @@ def delete_rows(spark: SparkSession, urls_df: DataFrame, out_dir: str,
     keep = existing.join(urls_df.select("url").distinct(),
                          "url", "left_anti")
     return _rewrite_partitions(spark, out_dir, cfg, affected, keep,
-                               "delete")
+                               "delete", stored)
 
 
 def rollback(spark: SparkSession, out_dir: str, as_of: float,

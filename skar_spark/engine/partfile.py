@@ -229,93 +229,180 @@ def _derive_host(urls: pa.ChunkedArray | pa.Array) -> pa.Array:
     return pc.fill_null(comb.field("host"), "")
 
 
+def _host_of_prefix(prefix: str) -> str | None:
+    """The host a url prefix implies, or None when the prefix stops
+    inside the authority (then the host is only partly known)."""
+    import re
+    m = re.match(r"^[a-z][a-z0-9+.-]*://([^/?#]+)/", prefix)
+    return m.group(1) if m else None
+
+
+def _keys_may_match(keys, key_range, bloom) -> bool:
+    """Whether ANY of `keys` (a null key matches nothing) may occur in a
+    unit whose keys lie in `key_range` (first, last) and in `bloom`;
+    None = unknown."""
+    from skar_spark.engine.bloom import bloom_might_contain
+
+    return any((key_range is None or key_range[0] <= k <= key_range[1])
+               and (bloom is None or bloom_might_contain(bloom, k))
+               for k in keys if k is not None)
+
+
+def _overlaps(zone, lo, hi) -> bool:
+    """Whether the closed zone [min, max] meets [lo, hi); an unknown
+    zone (None or a None end) always may."""
+    return zone is None or None in zone or (zone[1] >= lo and zone[0] < hi)
+
+
+def may_match(conj: dict, zone=None, host_range=None, host_bloom=None,
+              lang_bloom=None, stats=None) -> bool:
+    """THE per-term metadata test of a read predicate, shared by the
+    lineage pass (one partition) and read_part_file (one row group).
+
+    `conj` is one conjunct of a *where* (see read_part_file). The unit is
+    described by its warc_ts `zone` (min, max) in epoch µs, its
+    `host_range` (first, last host), its host and lang blooms and its
+    numeric `stats` {col: [min, max]}. Unknown metadata (None) never
+    prunes. A url prefix prunes by its host when every prefix of the
+    conjunct extends past the authority. Numeric stats compare as
+    float64, the cast of the exact filter."""
+    ts = conj.get("ts_range")
+    if ts is not None and not _overlaps(zone, *ts):
+        return False
+    prefixes = conj.get("url_prefix")
+    implied = None if prefixes is None else [
+        _host_of_prefix(p) for p in prefixes]
+    if None in (implied or []):
+        implied = None  # a prefix inside the authority: host unknown
+    for keys, key_range, bloom in (
+            (conj.get("hosts"), host_range, host_bloom),
+            (implied, host_range, host_bloom),
+            (conj.get("langs"), None, lang_bloom)):
+        if keys is not None and not _keys_may_match(keys, key_range, bloom):
+            return False
+    cr = conj.get("col_range")
+    mm = None if cr is None or stats is None else stats.get(cr[0])
+    return not mm or None in mm or _overlaps(
+        (float(mm[0]), float(mm[1])), cr[1], cr[2])
+
+
+def _pred_columns(conj: dict) -> list[str]:
+    """The stored columns the exact filter of `conj` reads."""
+    cols = []
+    if conj.get("hosts") is not None or conj.get("url_prefix") is not None:
+        cols.append("url")
+    if conj.get("langs") is not None:
+        cols.append("lang")
+    if conj.get("ts_range") is not None:
+        cols.append("warc_ts")
+    if conj.get("col_range") is not None:
+        cols.append(conj["col_range"][0])
+    return cols
+
+
+def _where_mask(t: pa.Table, where: list[dict], host):
+    """The exact Kleene OR of ANDs of `where` over the decoded rows `t`
+    and their derived `host` array (None when some conjunct is
+    unconstrained: every row matches)."""
+    import functools
+
+    import pyarrow.compute as pc
+
+    def _in(col, values):
+        return pc.is_in(col, value_set=pa.array(values, col.type),
+                        skip_nulls=True)
+
+    keep = pa.scalar(False)
+    for c in where:
+        terms = []
+        if c.get("hosts") is not None:
+            terms.append(_in(host, c["hosts"]))
+        if c.get("langs") is not None:
+            terms.append(_in(t["lang"], c["langs"]))
+        if c.get("url_prefix") is not None:
+            terms.append(functools.reduce(pc.or_kleene, [
+                pc.starts_with(t["url"], pattern=p)
+                for p in c["url_prefix"]], pa.scalar(False)))
+        if c.get("ts_range") is not None:
+            lo, hi = c["ts_range"]
+            ts = t["warc_ts"].cast(pa.int64())
+            terms += [pc.greater_equal(ts, pa.scalar(lo, pa.int64())),
+                      pc.less(ts, pa.scalar(hi, pa.int64()))]
+        if c.get("col_range") is not None:
+            col, lo, hi = c["col_range"]
+            v = pc.cast(t[col], pa.float64())
+            terms += [pc.greater_equal(v, pa.scalar(lo, pa.float64())),
+                      pc.less(v, pa.scalar(hi, pa.float64()))]
+        if not terms:
+            return None
+        keep = pc.or_kleene(keep, functools.reduce(pc.and_kleene, terms))
+    return keep
+
+
 def read_part_file(path: str, columns: list[str] | None = None,
-                   host_eq: str | None = None,
-                   ts_range: tuple[int, int] | None = None,
-                   lang_eq: str | None = None,
-                   fill_missing: dict[str, str] | None = None,
-                   col_range: tuple[str, float, float] | None = None
+                   where: list[dict] | None = None,
+                   fill_missing: dict[str, str] | None = None
                    ) -> pa.Table:
-    """Decode a part file with projection + row-group pruning + EXACT
-    predicate semantics.
+    """Decode a part file with projection, row-group pruning and an EXACT
+    predicate.
 
-    ts_range is [lo, hi) in epoch microseconds against the zone column.
-    Row groups are skipped via zone maps (min/max warc_ts, host range) and
-    per-row-group host blooms; surviving row groups are then post-filtered
-    exactly (host derived from url Arrow-side, ts compared as int64), so
-    callers get precisely the rows matching the predicate — not a
-    row-group superset.
+    `where` is a list of conjuncts, ORed; a conjunct is a dict with the
+    optional keys ``hosts`` (host IN), ``langs`` (lang IN),
+    ``url_prefix`` (url starts with any), ``ts_range`` ((lo, hi) epoch
+    µs, half-open) and ``col_range`` ((col, lo, hi), half-open, compared
+    as float64), ANDed. A missing key or None is unconstrained; an empty
+    list matches nothing, so ``[]`` matches no row and ``[{}]`` (or
+    None) every row. The logic is Kleene: a null value is unknown, so
+    a row another conjunct matches is kept.
 
-    `fill_missing` maps column name → typecode for requested columns this
-    part may PREDATE (Iceberg-style schema evolution, engine/schema_evo):
-    such columns come back as all-null arrays of the mapped type instead
-    of a KeyError, so readers see the table's merged schema uniformly.
-    Mirror of the reference's projected, row-group-selective parquet scan
+    A row group is read only when some conjunct `may_match` its footer
+    zone maps (warc_ts, host range, numeric nstats) and blooms (host,
+    lang); a conjunct on a column the row group lacks cannot match it.
+    The surviving rows are then filtered exactly, so callers get
+    precisely the matching rows, not a row-group superset. The extra
+    columns the predicate needs are read and dropped again.
+
+    `columns` may name ``host``, derived from ``url`` Arrow-side (at
+    most once per file) unless the part stores such a column.
+    `fill_missing` maps column name → typecode for requested columns
+    this part may PREDATE (Iceberg-style schema evolution,
+    engine/schema_evo): such columns come back as all-null arrays of the
+    mapped type instead of a KeyError, and columns stored at a narrower
+    type are cast to the mapped one. Mirror of the reference's
+    projected, row-group-selective parquet scan
     (data_provider.rs:121-183, skip logic :250-333).
     """
     import base64
 
-    import pyarrow.compute as pc
-
-    from skar_spark.engine.bloom import bloom_might_contain
-
     footer = read_footer(path)
-    cols = columns or footer["columns"]
-    has_lang = "lang" in footer["columns"]
-    need_host = host_eq is not None
-    need_ts = ts_range is not None
-    need_lang = lang_eq is not None and has_lang
-    need_cr = col_range is not None and col_range[0] in footer["columns"]
-    read_cols = list(cols)
-    if need_host and "url" not in read_cols:
-        read_cols.append("url")
-    if need_ts and "warc_ts" not in read_cols:
-        read_cols.append("warc_ts")
-    if need_lang and "lang" not in read_cols:
-        read_cols.append("lang")
-    if need_cr and col_range[0] not in read_cols:
-        read_cols.append(col_range[0])
+    stored = footer["columns"]
+    cols = columns or stored
+    where = [{}] if where is None else where
+    derive = "host" in cols and "host" not in stored
+    read_cols = list(dict.fromkeys(
+        [c for c in cols if not (derive and c == "host")]
+        + (["url"] if derive else [])
+        + [c for w in where for c in _pred_columns(w)]))
+    probes = any(w.get(k) is not None for w in where
+                 for k in ("hosts", "url_prefix", "langs"))
     tables = []
     with storage.open_read(path) as f:
         for rg in footer["rowgroups"]:
-            if ts_range is not None and "zmin" in rg:
-                if rg["zmin"] >= ts_range[1] or rg["zmax"] < ts_range[0]:
-                    continue
-            if host_eq is not None and "hmin" in rg:
-                if not (rg["hmin"] <= host_eq <= rg["hmax"]):
-                    continue
-                if "hbloom" in rg and not bloom_might_contain(
-                        base64.b64decode(rg["hbloom"]), host_eq):
-                    continue
-            if lang_eq is not None and "lbloom" in rg and \
-                    not bloom_might_contain(
-                        base64.b64decode(rg["lbloom"]), lang_eq):
+            hb, lb = (base64.b64decode(rg[k]) if probes and k in rg
+                      else None for k in ("hbloom", "lbloom"))
+            hr = (rg["hmin"], rg["hmax"]) if "hmin" in rg else None
+            if not any(all(c in rg["chunks"] for c in _pred_columns(w))
+                       and may_match(w, (rg.get("zmin"), rg.get("zmax")),
+                                     hr, hb, lb, rg.get("nstats", {}))
+                       for w in where):
                 continue
-            if col_range is not None:
-                # numeric zone maps (nstats) for non-layout columns: a
-                # row group whose [min,max] cannot overlap [lo,hi) is
-                # skipped; a part/row group that PREDATES the column
-                # holds only nulls, which a range predicate never
-                # matches — skip it outright (keeps the EXACT contract
-                # for pre-evolution parts, where the post-filter below
-                # cannot run). Stats compare as float64 (same cast the
-                # kernel filter applies) so int64 columns beyond 2^53
-                # stay consistent with the row-level comparison.
-                _c, _lo, _hi = col_range
-                if _c not in footer["columns"] or _c not in rg["chunks"]:
-                    continue
-                ns = rg.get("nstats", {}).get(_c)
-                if ns is not None and (float(ns[0]) >= _hi
-                                       or float(ns[1]) < _lo):
-                    continue
-            arrays, names = [], []
+            arrays = []
             for c in read_cols:
                 if c not in rg["chunks"] and fill_missing and \
                         c in fill_missing:
                     # column added after this part was written: null-fill
                     arrays.append(pa.nulls(
                         rg["rows"], type_from_code(fill_missing[c])))
-                    names.append(c)
                     continue
                 off, ln, _codec = rg["chunks"][c]
                 f.seek(off)
@@ -331,40 +418,28 @@ def read_part_file(path: str, columns: list[str] | None = None,
                     # merge_schema permits: i32→i64, f32→f64)
                     arr = arr.cast(type_from_code(want))
                 arrays.append(arr)
-                names.append(c)
-            tables.append(pa.table(dict(zip(names, arrays))))
+            tables.append(pa.table(dict(zip(read_cols, arrays))))
     if not tables:
-        def _code(c):
+        def _type(c):
             # prefer the caller's merged-schema type (fill_missing) so
             # widened columns come back widened even from an all-pruned
             # part; fall back to the stored footer type
-            if fill_missing and c in fill_missing:
-                return fill_missing[c]
-            return footer["schema"][c]
-        schema = pa.schema([(c, type_from_code(_code(c))) for c in cols])
-        return pa.table({c: pa.array([], schema.field(c).type) for c in cols})
+            if derive and c == "host":
+                return pa.string()
+            return type_from_code((fill_missing or {}).get(c)
+                                  or footer["schema"][c])
+        return pa.table({c: pa.array([], _type(c)) for c in cols})
     t = pa.concat_tables(tables)
-    mask = None
-    if need_host:
-        mask = pc.equal(_derive_host(t["url"]), pa.scalar(host_eq))
-    if need_ts:
-        ts = t["warc_ts"].cast(pa.int64())
-        m2 = pc.and_(
-            pc.greater_equal(ts, pa.scalar(ts_range[0], pa.int64())),
-            pc.less(ts, pa.scalar(ts_range[1], pa.int64())))
-        mask = m2 if mask is None else pc.and_(mask, m2)
-    if need_lang:
-        m3 = pc.equal(t["lang"], pa.scalar(lang_eq))
-        mask = m3 if mask is None else pc.and_(mask, m3)
-    if need_cr:
-        _c, _lo, _hi = col_range
-        cv = pc.cast(t[_c], pa.float64())
-        m4 = pc.and_(pc.greater_equal(cv, pa.scalar(_lo, pa.float64())),
-                     pc.less(cv, pa.scalar(_hi, pa.float64())))
-        # null values (pre-evolution rows) never match a range
-        mask = m4 if mask is None else pc.and_(mask, m4)
+    host = _derive_host(t["url"]) if derive or any(
+        w.get("hosts") is not None for w in where) else None
+    mask = _where_mask(t, where, host)
     if mask is not None:
+        import pyarrow.compute as pc
+
         t = t.filter(mask)
+        host = None if host is None else pc.filter(host, mask)
+    if derive:
+        t = t.append_column("host", host)
     return t.select(cols)
 
 

@@ -14,12 +14,13 @@ Endpoints:
                     → 400 {"error": ...} on a malformed query
     GET  /height    → 200 {"archive_height": N}   (archive_height poll)
 
-Queries decode on the driver itself, with no Spark job, one at a time
-(the handler is intentionally single-threaded: one driver, one query
-at a time — the reference's query concurrency also bounds on a
-semaphore, server.rs). `serve(...)` returns the live HTTPServer;
-call `.shutdown()` to stop it. For production-scale concurrency run
-several servers over the same table directory — all state is on disk.
+Queries decode on the driver itself, with no Spark job. The server is
+a plain (not threading) `HTTPServer`, so its one serving thread handles
+requests one at a time — one driver, one query at a time; the
+reference's query concurrency also bounds on a semaphore (server.rs).
+`serve(...)` returns the live HTTPServer; call `.shutdown()` to stop
+it. For production-scale concurrency run several servers over the same
+table directory — all state is on disk.
 """
 
 from __future__ import annotations
@@ -33,7 +34,7 @@ from pyspark.sql import SparkSession
 from skar_spark.query import run_query
 
 
-def _make_handler(spark: SparkSession, out_dir: str, lock: threading.Lock):
+def _make_handler(spark: SparkSession, out_dir: str):
 
     class Handler(BaseHTTPRequestHandler):
         def _send(self, code: int, payload: dict) -> None:
@@ -69,8 +70,7 @@ def _make_handler(spark: SparkSession, out_dir: str, lock: threading.Lock):
                 self._send(400, {"error": f"bad query: {e}"})
                 return
             try:
-                with lock:  # one query at a time on this driver
-                    res = run_query(spark, out_dir, query)
+                res = run_query(spark, out_dir, query)
             except (ValueError, KeyError, TypeError) as e:
                 # query-shape errors (bad timestamp, wrong types) are
                 # the CLIENT's fault → 400; anything else is a server-
@@ -94,8 +94,7 @@ def serve(spark: SparkSession, out_dir: str, host: str = "127.0.0.1",
     """Start the query server on a daemon thread; returns the
     HTTPServer (its bound port is `server.server_address[1]` — port 0
     picks a free one). Call `.shutdown()` to stop."""
-    srv = HTTPServer((host, port),
-                     _make_handler(spark, out_dir, threading.Lock()))
+    srv = HTTPServer((host, port), _make_handler(spark, out_dir))
     t = threading.Thread(target=srv.serve_forever, daemon=True)
     t.start()
     return srv

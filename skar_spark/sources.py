@@ -14,17 +14,19 @@ format:
 
 Filter pushdown is automatic (`pushFilters`): equality on the derived
 `host` column, equality on `lang`, and range bounds on `warc_ts` are
-absorbed by the engine — partition pruning via the lineage index (zone
-maps + the host AND lang bloom families, probed driver-side), row-group
-pruning + EXACT residual filtering inside each read task. Equality on
-`url` additionally prunes via the host bloom (the filter itself is left
-for Spark to evaluate). This is the mirror of the reference's automatic
+absorbed by the engine into the reader's one conjunct (the read
+predicate of engine.decode / partfile.read_part_file) — partition
+pruning via the lineage index (zone maps + the host AND lang bloom
+families, probed driver-side), row-group pruning + the EXACT filter
+inside each read task. `host IN (...)` and equality on `url` narrow the
+conjunct's hosts too (url via its host), but are also left for Spark to
+evaluate. This is the mirror of the reference's automatic
 constant pushdown through folder + row-group pruning with its address
 and topic bloom families (skar/src/query/handler.rs:144-158,
 data_provider.rs:185-333, build_parquet_idx.rs:89-171).
 
 Explicit `.option("host_eq"/"lang_eq"/"ts_lo"/"ts_hi"/"columns", ...)`
-remain as manual overrides with the same exact semantics. Bounded
+seed that conjunct, with the same exact semantics. Bounded
 pagination (the reference's `next_block` cursor, handler.rs:252-258):
 `.option("cursor", k).option("page_files", m)`, or `read_paged(...)`
 which also returns the resume cursor. Snapshot time travel on tables
@@ -114,15 +116,22 @@ class SkarDataSource(DataSource):
         return SkarStreamReader(self.options, self._cols())
 
 
+def _options_conjunct(options) -> dict:
+    """The read conjunct of the explicit `host_eq`/`lang_eq`/`ts_lo`/
+    `ts_hi` options (the reader and read_paged share it)."""
+    from skar_spark.engine.decode import conjunct
+
+    lo, hi = options.get("ts_lo"), options.get("ts_hi")
+    return conjunct(options.get("host_eq"),
+                    (int(lo or TS_MIN), int(hi or TS_MAX))
+                    if lo or hi else None, options.get("lang_eq"))
+
+
 class SkarReader(DataSourceReader):
     def __init__(self, options, cols):
         self.path = options["path"]
         self.cols = cols
-        self.host_eq = options.get("host_eq")
-        self.lang_eq = options.get("lang_eq")
-        lo, hi = options.get("ts_lo"), options.get("ts_hi")
-        self.ts_lo = int(lo) if lo else None
-        self.ts_hi = int(hi) if hi else None
+        self.conj = _options_conjunct(options)
         # paged read (the reference's next_block cursor analog,
         # query/handler.rs:252-258): cursor = numeric part index to start
         # at, page_files = max partitions this read returns. Use
@@ -139,7 +148,6 @@ class SkarReader(DataSourceReader):
         # in-progress uncommitted epoch alongside committed parts
         self.include_hot = str(options.get("include_hot", "")).lower() \
             in ("1", "true")
-        self.prune_hosts: list[str] = []  # prune-only (url equality)
         # evolved-table support: resolve the merged schema ONCE at plan
         # time; read tasks null-fill columns a part predates
         from skar_spark.engine.schema_evo import load_table_schema
@@ -148,61 +156,58 @@ class SkarReader(DataSourceReader):
         self.fill = ts[1] if ts else None
 
     # -- filter pushdown (planning time, driver side) ------------------
+    def _narrow_hosts(self, values) -> None:
+        hosts = self.conj.get("hosts")
+        self.conj["hosts"] = list(values) if hosts is None else [
+            h for h in hosts if h in values]
+
+    def _narrow_ts(self, lo: int, hi: int) -> None:
+        cur = self.conj.get("ts_range", (TS_MIN, TS_MAX))
+        self.conj["ts_range"] = (max(cur[0], lo), min(cur[1], hi))
+
     def pushFilters(self, filters):
-        """Absorb host equality and warc_ts bounds; everything yielded
-        back is still evaluated by Spark. Absorbed filters are applied
-        EXACTLY inside read tasks (read_part_file), on top of partition +
-        row-group pruning."""
+        """Absorb host and lang equality and warc_ts bounds into the one
+        conjunct; everything yielded back is still evaluated by Spark.
+        The conjunct prunes partitions and row groups and is applied
+        EXACTLY inside read tasks (read_part_file)."""
         for f in filters:
             if isinstance(f, EqualTo) and f.attribute == ("host",) \
-                    and self.host_eq in (None, f.value):
-                self.host_eq = f.value
+                    and f.value in self.conj.get("hosts", [f.value]):
+                self._narrow_hosts([f.value])
             elif isinstance(f, EqualTo) and f.attribute == ("lang",) \
                     and isinstance(f.value, str) \
-                    and self.lang_eq in (None, f.value):
+                    and self.conj.get("langs") in (None, [f.value]):
                 # absorbed: partition pruning via the lang bloom family +
-                # row-group lbloom skip + exact residual in the read task
-                self.lang_eq = f.value
+                # row-group lbloom skip + exact filter in the read task
+                self.conj["langs"] = [f.value]
             elif isinstance(f, In) and f.attribute == ("host",):
-                self.prune_hosts.extend(
-                    v for v in f.value if isinstance(v, str))
-                yield f  # prune-only: Spark applies the IN itself
+                if all(isinstance(v, str) for v in f.value):
+                    self._narrow_hosts(f.value)
+                yield f  # Spark applies the IN itself too
             elif isinstance(f, EqualTo) and f.attribute == ("url",) \
                     and isinstance(f.value, str):
                 h = _host_of_url(f.value)
                 if h:
-                    self.prune_hosts.append(h)
-                yield f  # prune-only: Spark still applies the url match
+                    self._narrow_hosts([h])
+                yield f  # Spark still applies the url match
             elif isinstance(f, (GreaterThan, GreaterThanOrEqual)) \
                     and f.attribute == ("warc_ts",):
-                us = _to_us(f.value) + (1 if isinstance(f, GreaterThan)
-                                        else 0)
-                self.ts_lo = us if self.ts_lo is None \
-                    else max(self.ts_lo, us)
+                self._narrow_ts(_to_us(f.value) + (
+                    1 if isinstance(f, GreaterThan) else 0), TS_MAX)
             elif isinstance(f, (LessThan, LessThanOrEqual)) \
                     and f.attribute == ("warc_ts",):
-                us = _to_us(f.value) + (1 if isinstance(f, LessThanOrEqual)
-                                        else 0)
-                self.ts_hi = us if self.ts_hi is None \
-                    else min(self.ts_hi, us)
+                self._narrow_ts(TS_MIN, _to_us(f.value) + (
+                    1 if isinstance(f, LessThanOrEqual) else 0))
             else:
                 yield f
-
-    def _ts_range(self):
-        if self.ts_lo is None and self.ts_hi is None:
-            return None
-        return (self.ts_lo if self.ts_lo is not None else TS_MIN,
-                self.ts_hi if self.ts_hi is not None else TS_MAX)
 
     def partitions(self):
         # planning runs in a Python worker with no SparkSession — the
         # engine's pruner is driver-local, so it runs here as well
-        from skar_spark.engine.decode import page_slice, prune_partitions
+        from skar_spark.engine.decode import page_slice, prune_selections
 
-        files = prune_partitions(
-            self.path, host_eq=self.host_eq, ts_range=self._ts_range(),
-            any_hosts=self.prune_hosts or None, lang_eq=self.lang_eq,
-            as_of=self.as_of, include_hot=self.include_hot)
+        files = prune_selections(self.path, [self.conj], as_of=self.as_of,
+                                 include_hot=self.include_hot)
         files = page_slice(files, self.cursor, self.page_files)
         return [SkarPartition(f) for f in files]
 
@@ -210,21 +215,21 @@ class SkarReader(DataSourceReader):
         if partition is None:  # Spark's placeholder when no partitions
             return
         yield from _read_part_batches(
-            partition.path, self.cols, host_eq=self.host_eq,
-            ts_range=self._ts_range(), lang_eq=self.lang_eq,
+            partition.path, self.cols, where=[self.conj],
             table_cols=self.table_cols, fill_missing=self.fill)
 
 
 def _read_part_batches(path: str, cols, table_cols=None, **read_kw):
-    """One part file as Arrow batches with the derived `host` column
-    (engine.decode.read_part_table) — the shared read-task body of the
-    batch and stream readers. `table_cols`/`fill_missing` carry the
-    merged schema of an evolved table so columns a part predates come
-    back null-filled."""
-    from skar_spark.engine.decode import read_part_table
+    """One part file as Arrow batches, by default every stored column
+    plus the derived `host` (partfile.read_part_file) — the shared
+    read-task body of the batch and stream readers. `table_cols`/
+    `fill_missing` carry the merged schema of an evolved table so
+    columns a part predates come back null-filled."""
+    from skar_spark.engine.partfile import read_footer, read_part_file
 
-    yield from read_part_table(path, cols or table_cols,
-                               **read_kw).to_batches(max_chunksize=16384)
+    cols = cols or table_cols or read_footer(path)["columns"] + ["host"]
+    yield from read_part_file(path, cols, **read_kw).to_batches(
+        max_chunksize=16384)
 
 
 class SkarStreamReader(DataSourceStreamReader):
@@ -275,22 +280,15 @@ class SkarStreamReader(DataSourceStreamReader):
     def _files(self):
         from skar_spark.engine.decode import (
             _file_part_index,
-            committed_files_local,
-            list_part_files,
+            prune_partitions,
         )
 
-        on_disk = set(list_part_files(self.path))
-        # committed_files_local: None = no lineage at all (a brand-new
-        # empty table or a static hand-built directory — membership is
-        # the listing; no writer races a lineage-less dir). When lineage
-        # EXISTS it is the only valid offset source, and a transient
-        # read error propagates (falling back to the raw listing would
-        # reintroduce the intra-epoch publish-order race).
-        committed = committed_files_local(self.path)
-        if committed is None:
-            return sorted(on_disk, key=_file_part_index)
-        return sorted((f for f in committed if f in on_disk),
-                      key=_file_part_index)
+        # the table's members: lineage when it exists (the only valid
+        # offset source — a transient read error propagates, since the
+        # raw listing would reintroduce the intra-epoch publish-order
+        # race), else the listing (a brand-new empty table or a static
+        # hand-built directory; no writer races a lineage-less dir)
+        return sorted(prune_partitions(self.path), key=_file_part_index)
 
     def initialOffset(self) -> dict:
         return {"index": 0}
@@ -328,21 +326,16 @@ def read_paged(spark, path: str, cursor: int = 0, page_files: int = 64,
     from skar_spark.engine.decode import (
         _file_part_index,
         page_slice,
-        prune_partitions,
+        prune_selections,
     )
 
-    ts_range = None
-    if options.get("ts_lo") or options.get("ts_hi"):
-        ts_range = (int(options.get("ts_lo") or TS_MIN),
-                    int(options.get("ts_hi") or TS_MAX))
     # every reader-honored pruning option must reach this call too: the
     # cursor arithmetic and the DataFrame must be derived from the SAME
     # file list (e.g. an as_of snapshot read on a retain_superseded
     # table — pruning the latest view here while the reader resolves the
     # snapshot view would make resumed pagination skip/repeat partitions)
-    pruned = prune_partitions(
-        path, host_eq=options.get("host_eq"), ts_range=ts_range,
-        lang_eq=options.get("lang_eq"),
+    pruned = prune_selections(
+        path, [_options_conjunct(options)],
         as_of=float(options["as_of"]) if options.get("as_of") else None)
     remaining = page_slice(pruned, cursor)
     page = remaining[:page_files]

@@ -215,14 +215,6 @@ def synth_batch(ids: np.ndarray, seed: int = SEED) -> pa.Table:
     })
 
 
-DOCS_SCHEMA = pa.schema([
-    ("url", pa.string()),
-    ("warc_ts", pa.timestamp("us")),
-    ("html", pa.binary()),
-    ("text", pa.string()),
-    ("lang", pa.string()),
-])
-
 DOCS_DDL = "url string, warc_ts timestamp, html binary, text string, lang string"
 
 

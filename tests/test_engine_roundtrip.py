@@ -77,7 +77,7 @@ def test_projection_and_pruning(encoded):
     ts = sorted_docs["warc_ts"].cast(pa.int64()).to_numpy()
     lo, hi = int(np.quantile(ts, 0.4)), int(np.quantile(ts, 0.42))
     pruned = read_part_file(path, columns=["url", "warc_ts"],
-                            ts_range=(lo, hi))
+                            where=[{"ts_range": (lo, hi)}])
     full = read_part_file(path, columns=["url", "warc_ts"])
     want = {u.as_py() for u, t_ in zip(full["url"], full["warc_ts"])
             if lo <= t_.cast(pa.int64()).as_py() < hi}
@@ -97,7 +97,7 @@ def test_ts_zone_pruning_on_ts_sorted_layout(tmp_path, docs):
     ts = t["warc_ts"].cast(pa.int64()).to_numpy()
     lo, hi = int(np.quantile(ts, 0.50)), int(np.quantile(ts, 0.52))
     pruned = read_part_file(path, columns=["url", "warc_ts"],
-                            ts_range=(lo, hi))
+                            where=[{"ts_range": (lo, hi)}])
     want = int(((ts >= lo) & (ts < hi)).sum())
     got = pruned.num_rows
     assert got >= want                      # never under-returns
@@ -111,7 +111,7 @@ def test_host_zone_pruning(encoded):
     from skar_spark.engine.golden import host_of_url
     hosts = host_of_url(sorted_docs["url"]).to_pylist()
     target = hosts[len(hosts) // 2]
-    t = read_part_file(path, host_eq=target)
+    t = read_part_file(path, where=[{"hosts": [target]}])
     got = set(host_of_url(t["url"].combine_chunks()).to_pylist())
     assert target in got
     assert t.num_rows < sorted_docs.num_rows

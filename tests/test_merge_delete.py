@@ -176,6 +176,27 @@ def test_emptying_delete_commits_one_lineage_object(spark, tmp_path):
     assert counts[victim] == 0 and len(counts) > 1
 
 
+def test_delete_reads_stored_plan_once(spark, tmp_path, monkeypatch):
+    """One delete_rows reads its stored plan once: one GET of
+    meta/plan.json, one listing and one GET of the salt map (metadata
+    reads are a round trip each on an object store)."""
+    from skar_spark.engine import storage
+
+    docs, out = _encode(spark, tmp_path, name="plan_reads")
+    doomed = docs.filter(
+        F.pmod(F.xxhash64("url"), F.lit(53)) == 1).select("url")
+    gets, lists = [], []
+    real_get, real_list = storage.get_bytes, storage.list_prefix
+    monkeypatch.setattr(storage, "get_bytes",
+                        lambda p: gets.append(p) or real_get(p))
+    monkeypatch.setattr(storage, "list_prefix",
+                        lambda p: lists.append(p) or real_list(p))
+    delete_rows(spark, doomed, out, CFG)
+    assert sum(p.endswith("plan.json") for p in gets) == 1
+    assert sum("salt_map" in p for p in lists) == 1
+    assert sum("salt_map" in p for p in gets) == 1
+
+
 def test_merge_evolves_schema_with_new_column(spark, tmp_path):
     docs, out = _encode(spark, tmp_path)
     updates = (docs.filter(F.pmod(F.xxhash64("url"), F.lit(41)) == 0)

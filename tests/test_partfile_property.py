@@ -68,7 +68,7 @@ def test_partfile_roundtrip_and_exact_predicates(tmp_path_factory, rows,
 
     # 3. exact host equality (host derived from url on read)
     h = data.draw(st.sampled_from(HOSTS))
-    got = read_part_file(path, host_eq=h)
+    got = read_part_file(path, where=[{"hosts": [h]}])
     want = body.filter(pc.equal(t["_host"], h))
     assert got.equals(want)
 
@@ -76,18 +76,19 @@ def test_partfile_roundtrip_and_exact_predicates(tmp_path_factory, rows,
     ts = t["warc_ts"].cast(pa.int64())
     lo = data.draw(st.integers(T0 - 1, T0 + 10 ** 13 + 1))
     hi = data.draw(st.integers(lo, T0 + 10 ** 13 + 2))
-    got = read_part_file(path, ts_range=(lo, hi))
+    got = read_part_file(path, where=[{"ts_range": (lo, hi)}])
     want = body.filter(pc.and_(pc.greater_equal(ts, lo), pc.less(ts, hi)))
     assert got.equals(want)
 
     # 5. exact lang equality (second bloom family path)
     lang = data.draw(st.sampled_from(LANGS))
-    got = read_part_file(path, lang_eq=lang)
+    got = read_part_file(path, where=[{"langs": [lang]}])
     want = body.filter(pc.equal(t["lang"], lang))
     assert got.equals(want)
 
     # 6. conjunction of all three predicates
-    got = read_part_file(path, host_eq=h, ts_range=(lo, hi), lang_eq=lang)
+    got = read_part_file(path, where=[{"hosts": [h], "ts_range": (lo, hi),
+                                       "langs": [lang]}])
     want = body.filter(pc.and_(pc.and_(pc.equal(t["_host"], h),
                                        pc.equal(t["lang"], lang)),
                                pc.and_(pc.greater_equal(ts, lo),
@@ -108,3 +109,107 @@ def test_bad_trailing_magic_raises_value_error(tmp_path):
         f.write(b"\0")
     with pytest.raises(ValueError, match="bad trailing magic"):
         read_footer(path)
+
+
+def _matches(conj, row):
+    """Per-row oracle of one conjunct (a null never matches a term)."""
+    checks = []
+    if conj.get("hosts") is not None:
+        checks.append(row["_host"] in conj["hosts"])
+    if conj.get("langs") is not None:
+        checks.append(row["lang"] is not None
+                      and row["lang"] in conj["langs"])
+    if conj.get("url_prefix") is not None:
+        checks.append(any(row["url"].startswith(p)
+                          for p in conj["url_prefix"]))
+    if conj.get("ts_range") is not None:
+        lo, hi = conj["ts_range"]
+        checks.append(lo <= row["ts_us"] < hi)
+    if conj.get("col_range") is not None:
+        col, lo, hi = conj["col_range"]
+        checks.append(row[col] is not None and lo <= row[col] < hi)
+    return all(checks)
+
+
+def test_or_of_conjuncts_matches_oracle(tmp_path, monkeypatch):
+    """read_part_file's one predicate, an OR of conjuncts, skips row
+    groups and filters exactly: every `where` of the grid returns the
+    rows a per-row oracle keeps, over a part with many row groups, a
+    null `lang` and an evolved numeric column; a selective host
+    conjunct decodes fewer chunks than the unfiltered read."""
+    from skar_spark.engine import partfile
+
+    hosts = ["a.com", "b.org", "c.net"]
+    rows = sorted(
+        ((hosts[i % 3], T0 + (i * 7919 % 97) * 1_000_000,
+          f"https://{hosts[i % 3]}/{i:04d}",
+          None if i == 4 else ["en", "de"][i % 5 == 0],
+          None if i % 11 == 0 else (i % 10) / 10)
+         for i in range(60)),
+        key=lambda r: (r[0], r[1], r[2]))
+    t = pa.table({
+        "url": pa.array([r[2] for r in rows], pa.string()),
+        "warc_ts": pa.array([r[1] for r in rows], pa.timestamp("us")),
+        "lang": pa.array([r[3] for r in rows], pa.string()),
+        "quality": pa.array([r[4] for r in rows], pa.float64()),
+        "_host": pa.array([r[0] for r in rows], pa.string()),
+    })
+    path = str(tmp_path / "part-000000.skar")
+    write_part_file(path, t, CFG)
+    assert len(partfile.read_footer(path)["rowgroups"]) > 5
+    body = t.drop_columns(["_host"])
+    oracle_rows = [dict(r, ts_us=r["warc_ts"]) for r in t.cast(pa.schema(
+        [(f.name, pa.int64()) if f.name == "warc_ts" else f
+         for f in t.schema])).to_pylist()]
+    ts = sorted({r["ts_us"] for r in oracle_rows})
+    at = (ts[5], ts[20])  # bounds exactly at row values
+    grid = [
+        [{"hosts": ["a.com"]}, {"langs": ["de"]}],
+        [{"hosts": ["b.org"], "langs": ["en"]}, {"ts_range": at}],
+        [{"langs": ["de"], "ts_range": at}, {"hosts": ["c.net", "x.io"]}],
+        [{"ts_range": at}],
+        [{"ts_range": (ts[5], ts[5])}, {"ts_range": (ts[-1], ts[-1] + 1)}],
+        [{"url_prefix": ["https://b.org/00"]}],
+        [{"url_prefix": ["https://b.", "https://c.net/"]}],
+        [{"url_prefix": ["https://a.com/"], "hosts": ["b.org"]}],
+        [{"col_range": ("quality", 0.2, 0.6)}],
+        [{"col_range": ("quality", 0.2, 0.6), "langs": ["en"]},
+         {"hosts": ["a.com"], "ts_range": at}],
+        [{"hosts": []}],
+        [{"hosts": []}, {"langs": ["de"]}],
+        [{"langs": [None, "en"]}],
+        [],
+        [{}],
+        [{"hosts": ["a.com"]}, {}],
+    ]
+    for where in grid:
+        keep = [any(_matches(c, r) for c in where) for r in oracle_rows]
+        want = body.filter(pa.array(keep, pa.bool_()))
+        got = read_part_file(path, where=where)
+        assert got.equals(want), where
+        cols = ["url", "host"]
+        got = read_part_file(path, columns=cols, where=where)
+        assert got["url"].equals(want["url"]), where
+        assert got["host"].to_pylist() == [
+            u.split("/")[2] for u in want["url"].to_pylist()], where
+
+    # a part that predates the evolved column: null-filled, never in range
+    old = str(tmp_path / "part-000001.skar")
+    write_part_file(old, t.drop_columns(["quality"]), CFG)
+    fill = {"quality": "f64"}
+    assert read_part_file(old, where=[{"col_range": ("quality", 0, 1)}],
+                          fill_missing=fill).num_rows == 0
+    got = read_part_file(old, ["url", "quality"],
+                         [{"col_range": ("quality", 0, 1)},
+                          {"hosts": ["a.com"]}], fill)
+    assert got.num_rows == 20 and got["quality"].null_count == 20
+
+    calls = []
+    real = partfile.decode_array
+    monkeypatch.setattr(partfile, "decode_array",
+                        lambda b: calls.append(1) or real(b))
+    read_part_file(path)
+    full = len(calls)
+    calls.clear()
+    assert read_part_file(path, where=[{"hosts": ["c.net"]}]).num_rows == 20
+    assert 0 < len(calls) < full

@@ -334,9 +334,9 @@ def test_rowgroup_host_bloom_prunes(spark, tmp_path):
     assert rg["hmin"] == "a.com" and rg["hmax"] == "z.com"
     assert "hbloom" in rg
     # "b.com" is inside [a.com, z.com] but absent → bloom prunes the rg
-    miss = read_part_file(path, columns=["url"], host_eq="b.com")
+    miss = read_part_file(path, columns=["url"], where=[{"hosts": ["b.com"]}])
     assert miss.num_rows == 0
-    hit = read_part_file(path, columns=["url"], host_eq="m.com")
+    hit = read_part_file(path, columns=["url"], where=[{"hosts": ["m.com"]}])
     assert hit.num_rows == 30
 
 
@@ -394,10 +394,11 @@ def test_rowgroup_lang_bloom_prunes(spark, tmp_path):
     assert bloom_might_contain(base64.b64decode(rg0["lbloom"]), "en")
     assert not bloom_might_contain(base64.b64decode(rg0["lbloom"]), "de")
     assert not bloom_might_contain(base64.b64decode(rg1["lbloom"]), "en")
-    de = read_part_file(path, columns=["url", "lang"], lang_eq="de")
+    de = read_part_file(path, columns=["url", "lang"],
+                        where=[{"langs": ["de"]}])
     assert de.num_rows == 50
     assert set(de["lang"].to_pylist()) == {"de"}
-    none = read_part_file(path, columns=["url"], lang_eq="fr")
+    none = read_part_file(path, columns=["url"], where=[{"langs": ["fr"]}])
     assert none.num_rows == 0
 
 

@@ -26,10 +26,12 @@ def has_rows(f: str, host_eq=None, any_hosts=None, **pred) -> bool:
     exactly? `any_hosts` is host-IN; with `host_eq` too, both hold."""
     if host_eq is not None and any_hosts and host_eq not in any_hosts:
         return False
+    from skar_spark.engine.decode import conjunct
     from skar_spark.engine.partfile import read_part_file
 
     hosts = [host_eq] if host_eq is not None else (any_hosts or [None])
-    return any(read_part_file(f, columns=["url"], host_eq=h, **pred).num_rows
+    return any(read_part_file(f, columns=["url"],
+                              where=[conjunct(h, **pred)]).num_rows
                for h in hosts)
 
 
