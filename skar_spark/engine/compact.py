@@ -13,10 +13,12 @@ Semantics:
 
 - parts whose committed `row_count` is below `small_rows` are decoded
   (vectorized, one task per part), re-partitioned to full-size NEW
-  part ids allocated ABOVE the table's high-water index (names keep
-  sorting after every existing file), and re-encoded through the same
-  codec-auto-selected kernel — blooms, zone maps, and checksums are
-  rebuilt per compacted part;
+  part ids and re-encoded through the same codec-auto-selected kernel
+  — blooms, zone maps, and checksums are rebuilt per compacted part.
+  The new ids start at the lineage high-water (encode.allocate_part_ids
+  over the lineage compaction reads anyway): one past the larger of
+  lineage's largest ``partition_id`` and the previous marker's
+  ``pid_high_water``. The marker records one past the last new id;
 - the lineage table is read driver-side (encode.lineage_table) and
   rewritten in one atomic swap (encode._swap_lineage, the vacuum
   protocol with its own suffix pair) to {untouched latest rows} ∪
@@ -25,12 +27,12 @@ Semantics:
   is written: the marker flips every reader to lineage-resolved
   membership (no directory-listing fast path), making the whole
   operation crash-safe — at any interruption point lineage still
-  describes a consistent table and orphaned files are ignored. Resume,
-  late-data rollback, and streaming append refuse the marker,
-  because partition membership no longer matches the persisted
-  salt-map/plan (a replanned pid could collide with a compacted id and
-  silently supersede it). STOP in-flight writers before compacting —
-  the marker blocks new writers, not ones already running, and a
+  describes a consistent table and orphaned files are ignored. Resume
+  and late-data rollback refuse the marker, because partition
+  membership no longer matches the persisted salt-map/plan (a
+  replanned pid could collide with a compacted id and silently
+  supersede it); appends and stream epochs continue above the
+  high-water. STOP in-flight writers before compacting — a
   concurrent lineage append between the snapshot read and the swap
   below would be lost.
 - snapshot-retaining tables are rejected: pid-level supersede of a
@@ -54,6 +56,7 @@ from skar_spark.engine.encode import (
     _conform,
     _meta_dir,
     _swap_lineage,
+    allocate_part_ids,
     encode_footers,
     is_retained,
     latest_lineage,
@@ -74,9 +77,8 @@ def is_compacted(out_dir: str) -> bool:
 def compaction_high_water(out_dir: str) -> int | None:
     """First part id ABOVE every id a compaction may have allocated, or
     None when the table isn't compacted / the marker predates high-water
-    recording. A streaming append that namespaces its new pids at or
-    above this value can never collide with (and thus supersede) a
-    compacted partition — see streaming.stream_encode."""
+    recording (its compacted ids are then covered by lineage's largest
+    ``partition_id``). One input of encode.allocate_part_ids."""
     import json
 
     from skar_spark.engine import storage
@@ -119,11 +121,7 @@ def compact_parts(spark: SparkSession, out_dir: str,
     (skar_runner.rs:285-353, write_parquet.rs:232-244). Pass
     ``profile=cfg`` to keep the ingest codec unchanged."""
     from skar_spark.engine import storage
-    from skar_spark.engine.decode import (
-        _file_part_index,
-        decode_paths,
-        list_part_files,
-    )
+    from skar_spark.engine.decode import decode_paths
     from skar_spark.engine.decode_schema import spark_ddl_for
     from skar_spark.engine.partfile import read_footer
 
@@ -134,18 +132,17 @@ def compact_parts(spark: SparkSession, out_dir: str,
     small_rows = small_rows or cfg.target_partition_rows // 2
     # the lineage read casts every row to LINEAGE_SCHEMA, so a lineage
     # of an incompatible older layout fails here, before the marker
-    lin = lineage_table(out_dir)
-    if lin is None:
+    every = lineage_table(out_dir)
+    if every is None:
         raise FileNotFoundError(f"no lineage under {out_dir}")
-    lin = latest_lineage(lin)
+    lin = latest_lineage(every)
     cand = lin.filter(pc.less(lin["row_count"], small_rows))
     if cand.num_rows < min_parts:
         return {"compacted_parts": 0, "new_parts": 0, "rows": 0}
     files = cand["file"].to_pylist()
     total_rows = pc.sum(cand["row_count"]).as_py()
     n_new = max(1, -(-total_rows // cfg.target_partition_rows))
-    hw = max((_file_part_index(f) for f in list_part_files(out_dir)),
-             default=-1) + 1
+    hw = allocate_part_ids(out_dir, every, n_new)
     attempt = "compact-" + uuid.uuid4().hex[:8]
 
     # build the ENTIRE lazy plan BEFORE the irreversible archival marker
@@ -184,19 +181,19 @@ def compact_parts(spark: SparkSession, out_dir: str,
     # archival marker BEFORE any new part file exists (part files are
     # written only when `new_footers` is collected below): from this
     # point every reader resolves membership through lineage (the
-    # directory-listing fast path is disabled), so in-progress compacted
-    # files and
+    # hot tail is refused), so in-progress compacted files and
     # not-yet-deleted small files can never be double-read — including
     # after a mid-compaction crash, where lineage still describes the
     # pre-compaction table exactly and a re-run allocates fresh pids
-    # above the orphans. New writers are refused from here on; writers
-    # ALREADY in flight are the caller's responsibility (their lineage
-    # appends after the swap below would be lost) — stop ingest first.
+    # above the recorded high-water. Resume and rollback are refused
+    # from here on; writers ALREADY in flight are the caller's
+    # responsibility (their lineage appends after the swap below would
+    # be lost) — stop ingest first.
     os.makedirs(_meta_dir(out_dir), exist_ok=True)
     import json
     with open(_compact_marker(out_dir), "w") as fh:
         # pid_high_water = first id above everything this compaction may
-        # allocate — recorded so streaming appends can continue above it
+        # allocate — recorded so later writers allocate above it
         fh.write(json.dumps({"attempt": attempt,
                              "pid_high_water": hw + n_new}) + "\n")
     # one atomic lineage swap: untouched latest rows + compacted rows.

@@ -61,14 +61,16 @@ def list_part_files(out_dir: str) -> list[str]:
             and p.endswith(".skar")]
 
 
-def hot_tail_files(out_dir: str) -> list[str]:
+def hot_tail_files(out_dir: str,
+                   listing: list[str] | None = None) -> list[str]:
     """The HOT TAIL: part files on disk with no lineage row at all —
     the in-progress (not yet committed) streaming epoch or batch. The
     mirror of the reference serving its uncommitted in-memory tail
     alongside cold folders (query/data_provider.rs:56-105,
     state.rs:82-107). Only meaningful on plain tables: retained /
     compacted tables delete files, so an unrecorded file there is a
-    crash orphan, not fresh data — refused."""
+    crash orphan, not fresh data — refused. `listing` is the caller's
+    list_part_files, when it has one."""
     from skar_spark.engine.compact import is_compacted
     from skar_spark.engine.encode import is_retained, lineage_table
 
@@ -81,7 +83,8 @@ def hot_tail_files(out_dir: str) -> list[str]:
     if lin is None:
         return []
     recorded = set(lin["file"].to_pylist())
-    return [f for f in list_part_files(out_dir) if f not in recorded]
+    return [f for f in (list_part_files(out_dir) if listing is None
+                        else listing) if f not in recorded]
 
 
 def _lineage_survivors(out_dir: str, where: list[dict],
@@ -183,8 +186,8 @@ def _lineage_survivors(out_dir: str, where: list[dict],
     return {f: kept for f, kept in latest.values() if kept}
 
 
-def _listing_membership(out_dir: str) -> list[str]:
-    """Membership of a table without a lineage directory: the listing —
+def _listing_membership(out_dir: str, listing: list[str]) -> list[str]:
+    """Membership of a table without a lineage directory: `listing` —
     except on a table where files may have been deleted (snapshot
     retention / compaction), which MUST resolve membership through
     lineage; a missing lineage there would otherwise over-approximate to every attempt of every
@@ -196,7 +199,7 @@ def _listing_membership(out_dir: str) -> list[str]:
         raise FileNotFoundError(
             f"lineage unreadable under {out_dir} but the table is "
             "retained/compacted — membership requires lineage")
-    return list_part_files(out_dir)
+    return listing
 
 
 def conjunct(host_eq: str | None = None,
@@ -241,7 +244,9 @@ def prune_partitions(out_dir: str,
 def prune_selections(out_dir: str, where: list[dict],
                      seek_stats: dict | None = None, *,
                      as_of: float | None = None,
-                     include_hot: bool = False) -> dict[str, list[int]]:
+                     include_hot: bool = False,
+                     listing: list[str] | None = None
+                     ) -> dict[str, list[int]]:
     """Partition pruning of a read predicate — the mirror of the folder
     index seek (db/mod.rs:217-305) and prune_query's per-selection
     folder skipping (handler.rs:144-158, 187-250).
@@ -267,15 +272,23 @@ def prune_selections(out_dir: str, where: list[dict],
     HOT TAIL (`hot_tail_files`, plain tables only) — files carry no
     pruning metadata, so they survive for every conjunct and the exact
     filter applies in the read. `seek_stats` is filled with the lineage
-    row-group counters (`encode.lineage_row_groups`)."""
+    row-group counters (`encode.lineage_row_groups`). `listing` is the
+    caller's list_part_files, so one query lists the table once."""
     if not where:
         return {}
-    hot = set(hot_tail_files(out_dir)) if include_hot else set()
+    if listing is None:
+        listing = list_part_files(out_dir)
+    hot = set(hot_tail_files(out_dir, listing)) if include_hot else set()
     survived = _lineage_survivors(out_dir, where, as_of, seek_stats)
     every = list(range(len(where)))
+    if survived is not None and not survived.keys() <= set(listing):
+        # a commit landed after the caller listed: re-list, so no
+        # committed increment is served partially
+        listing = list_part_files(out_dir)
     if survived is None:
-        survived = dict.fromkeys(_listing_membership(out_dir), every)
-    return {f: survived.get(f, every) for f in list_part_files(out_dir)
+        survived = dict.fromkeys(_listing_membership(out_dir, listing),
+                                 every)
+    return {f: survived.get(f, every) for f in listing
             if f in survived or f in hot}
 
 

@@ -888,11 +888,8 @@ def append_documents(spark: SparkSession, df: DataFrame, out_dir: str,
                      cfg: EngineConfig = DEFAULT,
                      parts: int | None = None) -> int:
     """One-shot COMMITTED append of new rows to an existing table — the
-    batch mirror of one streaming epoch (same plan → encode kernel →
-    driver-side lineage commit path): the new rows are planned alone,
-    encoded above the table's part-id high-water (including the
-    compaction marker's, so appends after hot→cold consolidation never
-    collide), and their lineage lands in one sorted parquet PUT.
+    batch mirror of one streaming epoch (both run encode_increment, so
+    they take new part ids from the one lineage high-water allocator).
     Existing parts and lineage rows are untouched, so each append is a
     clean change-feed increment for ``decode.scan_changes``. Returns
     the number of parts appended.
@@ -904,10 +901,7 @@ def append_documents(spark: SparkSession, df: DataFrame, out_dir: str,
     more — none when the increment has fewer rows than the threshold.
     At 10^12-doc table sizes the increment must never pay a planning
     pass over history."""
-    from skar_spark.engine.compact import compaction_high_water
-
-    lin = lineage_table(out_dir, ["partition_id"])
-    if lin is None:
+    if lineage_row_groups(out_dir) is None:
         raise FileNotFoundError(
             f"{out_dir} has no lineage; append_documents requires an "
             "existing committed table (encode_documents does the first "
@@ -922,30 +916,49 @@ def append_documents(spark: SparkSession, df: DataFrame, out_dir: str,
         raise ValueError(
             "append_documents supports hash-scheme tables only; "
             "day_hash tables take late data via reencode_late")
-    mx = pc.max(lin["partition_id"]).as_py() or 0
-    base = max(mx, int(compaction_high_water(out_dir) or 0)) + 1
     totals = plan_totals(df)
     if parts is None:
         if totals["n_rows"] == 0:
             return 0  # empty increment: no parts, no lineage batch
         parts = max(1, -(-totals["n_rows"] // cfg.target_partition_rows))
-    if base + parts >= 2 ** 31:
-        raise OverflowError(
-            f"append would exceed the int32 part-id namespace at base "
-            f"{base}; rotate out_dir or widen partition_id to long")
     tag = uuid.uuid4().hex[:8]
-    return encode_increment(df, totals, parts, base, out_dir, cfg,
+    return encode_increment(df, totals, parts, out_dir, cfg,
                             f"append-{tag}", f"part-x{tag}-{{pid:09d}}.skar")
 
 
-def encode_increment(df: DataFrame, totals: dict, parts: int, base: int,
+def allocate_part_ids(out_dir: str, lin: pa.Table | None, n: int) -> int:
+    """THE part-id allocator of appends, stream epochs and compaction:
+    the first of `n` new ids, one past the larger of the largest
+    ``partition_id`` in the caller's lineage read `lin` and the
+    compaction marker's ``pid_high_water``; 0 without lineage. Raises
+    OverflowError past the int32 ``partition_id``."""
+    from skar_spark.engine.compact import compaction_high_water
+
+    base = 0 if lin is None else max(
+        pc.max(lin["partition_id"]).as_py() or 0,
+        compaction_high_water(out_dir) or 0) + 1
+    if base + n >= 2 ** 31:
+        raise OverflowError(
+            f"{n} new parts would exceed the int32 part-id namespace at "
+            f"base {base}; rotate out_dir or widen partition_id to long")
+    return base
+
+
+def encode_increment(df: DataFrame, totals: dict, parts: int,
                      out_dir: str, cfg: EngineConfig, attempt: str,
                      name_fmt: str) -> int:
     """THE increment writer of append_documents and streaming epochs:
     plan `df` alone into `parts` partitions (heavy hosts salted at
     ``cfg.salt_threshold_rows`` from its plan `totals`), shift the part
-    ids and the packing loads up by `base`, encode, and commit one
-    lineage batch. Returns the number of parts committed."""
+    ids and the packing loads up to the base one lineage read allocates
+    (allocate_part_ids), encode, and commit one lineage batch. Returns
+    the number of parts committed: 0, writing nothing, when lineage
+    already holds `attempt` (a replayed stream epoch)."""
+    lin = lineage_table(out_dir, ["partition_id", "attempt_id"])
+    if lin is not None and pc.any(pc.equal(lin["attempt_id"],
+                                           attempt)).as_py():
+        return 0
+    base = allocate_part_ids(out_dir, lin, parts)
     loads: dict[int, int] = {}
     planned = plan_partitions(
         df, parts, cfg, salt_rows(df, cfg.salt_threshold_rows, totals),
@@ -1382,7 +1395,7 @@ def rollback(spark: SparkSession, out_dir: str, as_of: float,
     Safety: refused unless every kept lineage row's part file is
     untouched by the undone attempts — true for ``retain_superseded``
     tables (each attempt writes its own file names) and for streamed
-    epochs (injective per-epoch namespace), but NOT for default batch
+    epochs (each takes fresh part ids), but NOT for default batch
     tables, where a later attempt overwrites the canonical per-pid file
     in place. The guard is exact (file-set intersection), not a flag
     check. Compacted tables are refused (the pid high-water marker can't

@@ -98,15 +98,35 @@ def _schema_lock(out_dir: str):
         os.close(fd)
 
 
+def _load_doc(out_dir: str) -> dict | None:
+    """``meta/schema.json`` from one GET, or None when it is missing."""
+    try:
+        return json.loads(storage.get_bytes(_schema_path(out_dir)))
+    except FileNotFoundError:
+        return None
+
+
+def _put_next(out_dir: str, doc: dict | None, cols: list[str],
+              types: dict[str, str], **extra) -> None:
+    """PUT the schema document that replaces `doc` (None: the first),
+    moving `doc` into the version history."""
+    version, history = (1, []) if doc is None else (
+        doc.get("version", 1) + 1, doc.get("history", []) + [
+            {"version": doc.get("version", 1), "cols": doc["cols"],
+             "types": doc["types"]}])
+    storage.makedirs(os.path.join(out_dir, "meta"))
+    storage.put_bytes(_schema_path(out_dir), json.dumps({
+        "version": version, "cols": list(cols), "types": dict(types),
+        "history": history, "committed_at": time.time(), **extra,
+    }).encode())
+
+
 def load_table_schema(out_dir: str) -> tuple[list[str], dict[str, str]] | None:
     """Authoritative merged schema, or None for pre-evolution tables
     (callers fall back to the first part footer, the fixed-schema
     behavior)."""
-    p = _schema_path(out_dir)
-    if not storage.exists(p):
-        return None
-    doc = json.loads(storage.get_bytes(p))
-    return doc["cols"], doc["types"]
+    doc = _load_doc(out_dir)
+    return None if doc is None else (doc["cols"], doc["types"])
 
 
 def table_schema(out_dir: str, files: list[str] | None = None
@@ -156,25 +176,15 @@ def _update_locked(out_dir: str, cols: list[str],
                    types: dict[str, str]) -> tuple[list[str],
                                                    dict[str, str]]:
     for _ in range(8):
-        cur = load_table_schema(out_dir)
-        if cur is None:
+        doc = _load_doc(out_dir)
+        if doc is None:
             merged_cols, merged_types = list(cols), dict(types)
-            version, history = 1, []
         else:
-            merged_cols, merged_types = merge_schema(cur[0], cur[1],
-                                                     cols, types)
+            cur = doc["cols"], doc["types"]
+            merged_cols, merged_types = merge_schema(*cur, cols, types)
             if (merged_cols, merged_types) == cur:
                 return cur
-            doc = json.loads(storage.get_bytes(_schema_path(out_dir)))
-            version = doc.get("version", 1) + 1
-            history = doc.get("history", []) + [
-                {"version": doc.get("version", 1), "cols": doc["cols"],
-                 "types": doc["types"]}]
-        storage.makedirs(os.path.join(out_dir, "meta"))
-        storage.put_bytes(_schema_path(out_dir), json.dumps({
-            "version": version, "cols": merged_cols, "types": merged_types,
-            "history": history, "committed_at": time.time(),
-        }).encode())
+        _put_next(out_dir, doc, merged_cols, merged_types)
         # convergence check: our columns must all be present in what is
         # now on disk (ours, or a later writer's merge that includes us)
         after = load_table_schema(out_dir)
@@ -195,21 +205,8 @@ def replace_table_schema(out_dir: str, cols: list[str],
     Versioned like updates: the replaced schema lands in the history, so
     `describe`-style tooling still shows the full evolution."""
     with _schema_lock(out_dir):
-        cur = load_table_schema(out_dir)
-        if cur == (list(cols), dict(types)):
+        doc = _load_doc(out_dir)
+        if doc is not None and (doc["cols"], doc["types"]) == (
+                list(cols), dict(types)):
             return
-        p = _schema_path(out_dir)
-        if cur is None:
-            version, history = 1, []
-        else:
-            doc = json.loads(storage.get_bytes(p))
-            version = doc.get("version", 1) + 1
-            history = doc.get("history", []) + [
-                {"version": doc.get("version", 1), "cols": doc["cols"],
-                 "types": doc["types"]}]
-        storage.makedirs(os.path.join(out_dir, "meta"))
-        storage.put_bytes(p, json.dumps({
-            "version": version, "cols": list(cols), "types": dict(types),
-            "history": history, "committed_at": time.time(),
-            "note": "rollback",
-        }).encode())
+        _put_next(out_dir, doc, cols, types, note="rollback")

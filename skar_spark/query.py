@@ -76,6 +76,12 @@ def _json_safe(v):
     return v
 
 
+def archive_height(files: list[str]) -> int:
+    """The table's high-water part index + 1 over its part listing
+    `files` (0 for an empty table) — the reference's archive height."""
+    return max((_file_part_index(f) for f in files), default=-1) + 1
+
+
 def run_query(spark: SparkSession, out_dir: str, query: dict) -> dict:
     """Execute a reference-shaped JSON query against an encoded table.
 
@@ -101,15 +107,16 @@ def run_query(spark: SparkSession, out_dir: str, query: dict) -> dict:
     time_limit_ms = query.get("time_limit_ms", DEFAULT_TIME_LIMIT_MS)
     cursor = int(query.get("cursor", 0))
 
-    all_files = list_part_files(out_dir)
-    height = (max(_file_part_index(f) for f in all_files) + 1
-              if all_files else 0)
+    # one listing per query: it gives the height, and pruning filters it
+    listing = list_part_files(out_dir)
+    height = archive_height(listing)
 
     # per-selection partition pruning (prune_query analog), plus the
     # hot tier's in-progress files on request (reference
     # data_provider.rs:56-105 / state.rs:82-107)
     files = page_slice(prune_selections(
-        out_dir, where, include_hot=bool(query.get("include_hot"))), cursor)
+        out_dir, where, include_hot=bool(query.get("include_hot")),
+        listing=listing), cursor)
     if not files:  # short-circuit: everything pruned (handler.rs:150-158)
         return {"rows": [], "num_rows": 0, "truncated": False,
                 "next_cursor": None, "archive_height": height}

@@ -31,7 +31,8 @@ from http.server import BaseHTTPRequestHandler, HTTPServer
 
 from pyspark.sql import SparkSession
 
-from skar_spark.query import run_query
+from skar_spark.engine.decode import list_part_files
+from skar_spark.query import archive_height, run_query
 
 
 def _make_handler(spark: SparkSession, out_dir: str):
@@ -49,13 +50,8 @@ def _make_handler(spark: SparkSession, out_dir: str):
             if self.path.rstrip("/") != "/height":
                 self._send(404, {"error": "unknown endpoint"})
                 return
-            from skar_spark.engine.decode import (
-                _file_part_index,
-                list_part_files,
-            )
-            files = list_part_files(out_dir)
-            h = max((_file_part_index(f) for f in files), default=-1) + 1
-            self._send(200, {"archive_height": h})
+            self._send(200, {"archive_height": archive_height(
+                list_part_files(out_dir))})
 
         def do_POST(self):  # noqa: N802 (stdlib API)
             if self.path.rstrip("/") != "/query":

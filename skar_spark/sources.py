@@ -245,10 +245,13 @@ class SkarStreamReader(DataSourceStreamReader):
     concurrent ingest: an epoch's part files are renamed into place in
     task-completion order (a raw directory listing could surface pid
     102 before 100 and a count-based offset would skip 100 forever),
-    but the epoch's lineage rows are appended in ONE job AFTER every
-    part landed — so the committed list only ever grows by whole
-    epochs, whose pids all exceed every prior epoch's (injective
-    namespace). A COMPLETED batch table trivially satisfies this too.
+    but the epoch's lineage rows land in ONE PUT AFTER every part
+    landed — so the committed list only ever grows by whole
+    increments, whose pids all exceed every id committed before: every
+    writer that adds partitions (stream epochs of any checkpoint,
+    appends, compaction) allocates above the lineage high-water
+    (encode.allocate_part_ids). A COMPLETED batch table trivially
+    satisfies this too.
     Not supported: snapshot-retaining tables (a superseding attempt
     inserts a new file at an existing pid) and compacted tables (files
     below the high-water mark were removed) — both rejected at stream

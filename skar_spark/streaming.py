@@ -12,10 +12,11 @@ flush), with
 
 - exactly-once at the sink via Spark's streaming checkpoint (epoch ids)
   *plus* our per-partition lineage — double bookkeeping exactly like the
-  reference's mdbx txn + folder rename;
-- per-epoch part-id namespacing so partitions from different micro-
-  batches never collide (the analog of skar's disjoint block-range
-  folder names);
+  reference's mdbx txn + folder rename (a replayed epoch is recognized
+  by its attempt id and writes nothing);
+- part ids from the lineage high-water allocator shared with appends
+  and compaction (`encode.allocate_part_ids`; the analog of skar's
+  next block-range folder starting where its index says the last ended);
 - a windowed watermark aggregation helper for late-data monitoring
   (the closest analog of the reference's rollback-depth bound on
   late/contradictory data, config.rs:8-9);
@@ -27,6 +28,7 @@ flush), with
 
 from __future__ import annotations
 
+import json
 import os
 import re
 import sys
@@ -36,11 +38,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from skar_spark.config import DEFAULT, EngineConfig
-from skar_spark.engine.encode import (
-    encode_increment,
-    lineage_dir,
-    plan_totals,
-)
+from skar_spark.engine import storage
+from skar_spark.engine.encode import encode_increment, plan_totals
 
 
 def _quarantine_poison(exc: Exception, input_dir: str,
@@ -109,6 +108,11 @@ def stream_encode(spark: SparkSession, input_dir: str, out_dir: str,
     one-batch burst). Use it to keep a backfill from starving the
     upstream source or saturating the cluster's ingest share.
 
+    Exactly-once: an epoch commits under the attempt id
+    ``epoch-{stream id}-{epoch}`` (the stream id is Spark's persistent
+    query id in ``{checkpoint}/metadata``, fresh per checkpoint), so an
+    epoch Spark replays after its lineage commit writes nothing.
+
     `auto_compact_every=K` turns the stream into a self-maintaining
     table (continuous hot→cold tiering — the reference's flush-to-cold,
     skar_runner.rs:285-353, run as part of ingest instead of as an
@@ -118,43 +122,14 @@ def stream_encode(spark: SparkSession, input_dir: str, out_dir: str,
     their count stays bounded by K instead of growing with stream
     lifetime — at 10^12 docs an uncompacted epoch-per-file table is
     unreadable. Compaction runs between micro-batches on the driver's
-    foreachBatch thread (no concurrent writer by construction) and the
-    epoch pid namespace re-bases above each compaction's high-water
-    mark, so appended pids can never collide with compacted ones.
-    Compaction failures are NOT retried into a re-encode (re-running a
-    batch whose parts were already consolidated would duplicate rows);
-    compact_parts is crash-safe and the next stream start resumes
-    above the recorded high-water.
+    foreachBatch thread (no concurrent writer by construction); later
+    epochs allocate their ids above its high-water mark like any other
+    writer. Compaction failures are NOT retried into a re-encode
+    (re-running a batch whose parts were already consolidated would
+    duplicate rows); compact_parts is crash-safe.
     """
-    from skar_spark.engine.compact import (
-        compaction_high_water,
-        is_compacted,
-    )
     from skar_spark.synth import DOCS_DDL
 
-    # streaming may continue onto a compacted table: every appended pid
-    # is namespaced AT OR ABOVE the compaction high-water mark, so a new
-    # epoch can never collide with (= silently supersede via latest-view)
-    # a compacted partition id. Batch resume / rollback still refuse —
-    # their replanned pids live below the mark.
-    pid_floor = 0
-    if is_compacted(out_dir):
-        hw = compaction_high_water(out_dir)
-        if hw is None:
-            raise ValueError(
-                f"streaming append refused: {out_dir} was compacted by an "
-                "engine version that did not record the pid high-water "
-                "mark — appended part ids could collide with compacted "
-                "ones")
-        pid_floor = hw
-    # mutable floor era: auto-compaction mid-stream raises the floor to
-    # the new high-water and re-bases the epoch offset, so pids stay
-    # injective AND grow linearly with epochs (not floor+epoch·ppb from
-    # zero, which would compound quadratically across compactions). On
-    # restart the floor re-reads the marker and epoch0 resets to 0 —
-    # every new base then exceeds every processed epoch's pids because
-    # checkpointed epoch ids only move forward.
-    pids = {"floor": pid_floor, "epoch0": 0}
     os.makedirs(os.path.join(out_dir, "parts"), exist_ok=True)
     checkpoint = checkpoint_dir or os.path.join(out_dir, "_checkpoint")
 
@@ -192,23 +167,11 @@ def stream_encode(spark: SparkSession, input_dir: str, out_dir: str,
         totals = plan_totals(bdf)
         if totals["n_rows"] == 0:
             return 0
-        # INJECTIVE epoch namespacing (ADVICE r01: the old modular scheme
-        # wrapped after ~2146 epochs and silently overwrote part files):
-        # part_id = epoch·parts_per_batch + local_pid never collides, and
-        # the file name embeds the epoch so even an id bug could not
-        # overwrite another epoch's file. Fail loudly at the int32 bound.
-        base = (pids["floor"]
-                + (int(epoch_id) - pids["epoch0"]) * parts_per_batch)
-        if base + parts_per_batch >= 2 ** 31:
-            raise OverflowError(
-                f"epoch {epoch_id} exceeds the int32 part-id namespace "
-                f"({parts_per_batch} parts/epoch); rotate out_dir or "
-                "widen partition_id to long")
-        # append_lineage_rows commits driver-side (sorted metadata rows):
-        # lineage row-group stats stay a seek index, and no per-epoch
-        # Spark write job runs
-        encode_increment(bdf, totals, parts_per_batch, base, out_dir, cfg,
-                         f"epoch-{epoch_id}",
+        # Spark writes the query's persistent id when the query starts
+        stream_id = json.loads(storage.get_bytes(
+            os.path.join(checkpoint, "metadata")))["id"]
+        encode_increment(bdf, totals, parts_per_batch, out_dir, cfg,
+                         f"epoch-{stream_id}-{epoch_id}",
                          f"part-e{int(epoch_id)}-{{pid:09d}}.skar")
         return totals["n_bytes"] or 0
 
@@ -259,14 +222,9 @@ def stream_encode(spark: SparkSession, input_dir: str, out_dir: str,
             res = compact_parts(spark, out_dir, cfg,
                                 profile=compact_profile)
             if res["new_parts"]:
-                new_floor = compaction_high_water(out_dir)
-                if new_floor is not None and new_floor > pids["floor"]:
-                    pids["floor"] = new_floor
-                    pids["epoch0"] = int(epoch_id) + 1
                 print(f"[stream_encode] epoch {epoch_id}: auto-compacted "
                       f"{res['compacted_parts']} parts → "
-                      f"{res['new_parts']} (pid floor {pids['floor']})",
-                      file=sys.stderr)
+                      f"{res['new_parts']}", file=sys.stderr)
 
     return (stream.writeStream
             .foreachBatch(process_batch)

@@ -118,6 +118,47 @@ def test_empty_short_circuit_and_archive_height(spark, table):
     assert res["next_cursor"] is None
 
 
+def test_one_part_listing_per_query(spark, table, monkeypatch):
+    """A query lists parts/ once, with and without include_hot: the
+    listing that gives archive_height is the one pruning filters (each
+    listing is a LIST round trip on an object store)."""
+    import glob
+
+    out, _docs = table
+    real, listed = glob.glob, []
+
+    def counting(pattern, *a, **kw):
+        if pattern.endswith("part-*.skar"):
+            listed.append(pattern)
+        return real(pattern, *a, **kw)
+
+    monkeypatch.setattr(glob, "glob", counting)
+    for hot in (False, True):
+        listed.clear()
+        res = run_query(spark, out, {"selections": [{"langs": ["de"]}],
+                                     "field_selection": ["url"],
+                                     "include_hot": hot})
+        assert res["num_rows"] > 0 and res["archive_height"] > 0
+        assert len(listed) == 1, (hot, listed)
+
+
+def test_stale_listing_serves_no_partial_commit(spark, tmp_path):
+    """Pruning filters the caller's listing; one taken before a commit
+    landed is re-taken, so no committed increment is served partially."""
+    from skar_spark.engine.decode import list_part_files, prune_selections
+    from skar_spark.engine.encode import append_documents
+
+    out = str(tmp_path / "out")
+    encode_documents(spark, synth_documents(spark, 400, partitions=2), out,
+                     CFG, n_rows=400)
+    stale = list_part_files(out)
+    append_documents(spark, synth_documents(spark, 200, partitions=1,
+                                            seed=7), out, CFG)
+    fresh = list_part_files(out)
+    assert set(fresh) > set(stale)
+    assert list(prune_selections(out, [{}], listing=stale)) == fresh
+
+
 def test_lang_selection_prunes_partitions(spark, table):
     """A langs-only selection must consult the lang bloom family: a
     never-present lang prunes every partition (short-circuit), while a

@@ -259,3 +259,33 @@ def test_concurrent_schema_updates_lose_no_columns(tmp_path):
     cols, types = load_table_schema(out)
     assert {f"q{i}" for i in range(8)} <= set(types)
     assert cols[0] == "url" and len(cols) == 9
+
+
+def test_no_change_append_reads_schema_once(spark, tmp_path, monkeypatch):
+    """Every lineage commit merges its schema into meta/schema.json; a
+    commit that changes nothing costs exactly one GET of it (a missing
+    object reads as None), never an exists probe plus a GET."""
+    from skar_spark.engine import storage
+    from skar_spark.engine.encode import append_documents, encode_documents
+
+    land = tmp_path / "land"
+    land.mkdir()
+    pq.write_table(synth_batch(np.arange(0, 200)), str(land / "a.parquet"))
+    pq.write_table(synth_batch(np.arange(200, 250)), str(land / "b.parquet"))
+    out = str(tmp_path / "tbl")
+    docs = spark.read.schema(DOCS_DDL).parquet
+    encode_documents(spark, docs(str(land / "a.parquet")), out, CFG,
+                     n_rows=200)
+    calls = []
+    for name in ("get_bytes", "exists"):
+        real = getattr(storage, name)
+
+        def counting(path, *a, _name=name, _real=real, **kw):
+            if path.endswith("schema.json"):
+                calls.append(_name)
+            return _real(path, *a, **kw)
+
+        monkeypatch.setattr(storage, name, counting)
+    assert append_documents(spark, docs(str(land / "b.parquet")), out,
+                            CFG) > 0
+    assert calls == ["get_bytes"]
