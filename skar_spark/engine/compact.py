@@ -61,7 +61,6 @@ from skar_spark.engine.encode import (
     is_retained,
     latest_lineage,
     lineage_table,
-    with_host,
 )
 
 
@@ -121,8 +120,7 @@ def compact_parts(spark: SparkSession, out_dir: str,
     (skar_runner.rs:285-353, write_parquet.rs:232-244). Pass
     ``profile=cfg`` to keep the ingest codec unchanged."""
     from skar_spark.engine import storage
-    from skar_spark.engine.decode import decode_paths
-    from skar_spark.engine.decode_schema import spark_ddl_for
+    from skar_spark.engine.decode import scan
     from skar_spark.engine.partfile import read_footer
 
     storage.require_posix(out_dir, "compact_parts")
@@ -151,18 +149,20 @@ def compact_parts(spark: SparkSession, out_dir: str,
     # the marker is durable (older lineage merely lacking a column, e.g.
     # lang_bloom, reads null-backfilled)
     # merged table schema: an evolved table (engine/schema_evo.py) has
-    # parts written before a column existed — decode them null-filled so
+    # parts written before a column existed — the read null-fills them so
     # the compacted parts all carry the CURRENT schema (Iceberg rewrite
     # materializes evolution, same here)
     from skar_spark.engine.schema_evo import table_schema
-    # the footer read doubles as the pre-flight storage probe: it must
-    # run (and be allowed to fail) BEFORE the irreversible archival
-    # marker even when the merged schema comes from meta/schema.json
+    # the footer read is the pre-flight storage probe: it must run (and
+    # be allowed to fail) BEFORE the irreversible archival marker, since
+    # the DataSource read below opens part files only when it runs
     read_footer(files[0])
-    tcols, ttypes = table_schema(out_dir, files)
-    df = with_host(decode_paths(
-        spark, files, spark_ddl_for(ttypes, tcols), columns=tcols,
-        fill_missing={c: ttypes[c] for c in tcols}))
+    tcols = table_schema(out_dir, files)[0]
+    # the candidates' partitions through the one distributed read; it
+    # resolves them from lineage when the encode below runs, which is
+    # still the pre-compaction lineage (the swap comes after)
+    df = scan(spark, out_dir, columns=tcols + ["host"],
+              part_ids=set(cand["partition_id"].to_pylist()))
     planned = df.withColumn(
         "part_id",
         (F.pmod(F.xxhash64("url"), F.lit(n_new)) + F.lit(hw)).cast("int"))
@@ -198,8 +198,8 @@ def compact_parts(spark: SparkSession, out_dir: str,
                              "pid_high_water": hw + n_new}) + "\n")
     # one atomic lineage swap: untouched latest rows + compacted rows.
     # schema_json is NOT a lineage column (ADVICE r05): the compacted
-    # parts re-encode the table's already-merged schema (tcols/ttypes
-    # above), so _conform drops it and the lineage schema stays
+    # parts re-encode the table's already-merged schema (tcols above),
+    # so _conform drops it and the lineage schema stays
     # identical across write paths
     new = _conform(new_footers.toArrow(), LINEAGE_SCHEMA.names)
     _swap_lineage(out_dir, pa.concat_tables([keep, new]),

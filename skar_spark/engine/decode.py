@@ -24,8 +24,9 @@ index (db/mod.rs:217-305) → row-group selection via zone maps + blooms
   of one lineage row group at a time;
 - row-group pruning (the same `may_match` on footer row groups) +
   projection + the EXACT predicate happen in `read_part_file`: in the
-  mapInArrow kernel for scans, on the driver (no Spark job) for
-  bounded reads;
+  skar DataSource's read tasks for scans (`scan` returns
+  `spark.read.format("skar")`, whose planner prunes when the DataFrame
+  runs), on the driver (no Spark job) for bounded reads;
 - decode is vectorized (numpy/pyarrow) per column chunk.
 
 Storage: all path IO flows through `engine.storage` (the object-store
@@ -46,7 +47,6 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from skar_spark.engine import storage
-from skar_spark.engine.decode_schema import spark_ddl_for
 from skar_spark.engine.encode import read_lineage
 from skar_spark.engine.partfile import read_part_file
 
@@ -61,6 +61,19 @@ def list_part_files(out_dir: str) -> list[str]:
             and p.endswith(".skar")]
 
 
+def refuse_hot_tail(out_dir: str) -> None:
+    """Raise ValueError unless `out_dir` is a plain table, the only kind
+    with a hot tail (see hot_tail_files)."""
+    from skar_spark.engine.compact import is_compacted
+    from skar_spark.engine.encode import is_retained
+
+    if is_retained(out_dir) or is_compacted(out_dir):
+        raise ValueError(
+            f"include_hot refused on {out_dir}: retained/compacted "
+            "tables delete files, so unrecorded on-disk files are crash "
+            "orphans — the hot tail exists only on plain tables")
+
+
 def hot_tail_files(out_dir: str,
                    listing: list[str] | None = None) -> list[str]:
     """The HOT TAIL: part files on disk with no lineage row at all —
@@ -71,14 +84,9 @@ def hot_tail_files(out_dir: str,
     compacted tables delete files, so an unrecorded file there is a
     crash orphan, not fresh data — refused. `listing` is the caller's
     list_part_files, when it has one."""
-    from skar_spark.engine.compact import is_compacted
-    from skar_spark.engine.encode import is_retained, lineage_table
+    from skar_spark.engine.encode import lineage_table
 
-    if is_retained(out_dir) or is_compacted(out_dir):
-        raise ValueError(
-            f"include_hot refused on {out_dir}: retained/compacted "
-            "tables delete files, so unrecorded on-disk files are crash "
-            "orphans — the hot tail exists only on plain tables")
+    refuse_hot_tail(out_dir)
     lin = lineage_table(out_dir, ["file"])
     if lin is None:
         return []
@@ -301,12 +309,16 @@ def scan(spark: SparkSession, out_dir: str,
          include_hot: bool = False,
          part_ids: set[int] | None = None,
          col_range: tuple[str, float, float] | None = None) -> DataFrame:
-    """Distributed decode: one task per part file, Arrow batches out.
+    """Distributed decode: the skar DataSource (`sources`), one read task
+    per part file, Arrow batches out. `columns` defaults to the table
+    columns (no derived ``host``).
 
-    Predicates are EXACT: partitions and row groups that can't match are
-    pruned via zone maps + blooms (host and lang families), and surviving
-    row groups are post-filtered inside the kernel (read_part_file), so
-    the returned DataFrame contains precisely the matching rows.
+    Predicates are EXACT: the kwargs build one `conjunct`; partitions and
+    row groups that can't match are pruned via zone maps + blooms (host
+    and lang families), and surviving row groups are post-filtered inside
+    the read task (read_part_file), so the returned DataFrame contains
+    precisely the matching rows. The file set resolves when the
+    DataFrame runs (the DataSource planner), not when scan is called.
 
     `as_of` (unix seconds) time-travels to the snapshot committed at or
     before that instant — meaningful on tables encoded with
@@ -314,48 +326,33 @@ def scan(spark: SparkSession, out_dir: str,
     kept until ``vacuum``); before the first commit the scan is empty.
 
     ``include_hot=True`` unions the hot tail (uncommitted in-progress
-    epoch) with the committed cold set — see prune_partitions.
+    epoch) with the committed cold set — see prune_selections.
 
     ``part_ids`` restricts the scan to those partition ids (after the
-    predicate pruning above) — the partition-targeted read used by
-    merge_updates/delete_rows to decode only the partitions they will
-    rewrite."""
-    files = prune_partitions(out_dir, host_eq, ts_range, lang_eq,
-                             as_of=as_of, include_hot=include_hot,
-                             col_range=col_range)
+    predicate pruning above; an empty set reads nothing) — the
+    partition-targeted read of merge_updates/delete_rows and
+    compaction."""
+    import json
+
+    from skar_spark.sources import register
+
+    if include_hot:
+        # here, not only in the planner worker, so the caller gets the
+        # ValueError rather than Spark's wrapping AnalysisException
+        refuse_hot_tail(out_dir)
+    if columns is None:
+        from skar_spark.engine.schema_evo import table_schema
+        columns = table_schema(out_dir)[0]
+    opts = {"columns": ",".join(columns),
+            "where": json.dumps([conjunct(host_eq, ts_range, lang_eq,
+                                          col_range)]),
+            "include_hot": str(include_hot).lower()}
+    if as_of is not None:
+        opts["as_of"] = str(as_of)
     if part_ids is not None:
-        files = [f for f in files if _file_part_index(f) in part_ids]
-    # merged table schema (meta/schema.json — one driver-side GET, kept
-    # current at every lineage commit; Iceberg add-column semantics).
-    # Pre-evolution tables fall back to the first footer (fixed schema).
-    from skar_spark.engine.schema_evo import table_schema
-    tcols, ttypes = table_schema(out_dir, files)
-    cols = columns or tcols
-    # parts written before a column existed null-fill it kernel-side
-    return decode_paths(spark, files, spark_ddl_for(ttypes, cols),
-                        columns=cols,
-                        where=[conjunct(host_eq, ts_range, lang_eq,
-                                        col_range)],
-                        fill_missing={c: ttypes[c] for c in cols})
-
-
-def decode_paths(spark: SparkSession, files: list[str], ddl: str,
-                 **read_kw) -> DataFrame:
-    """THE decode dispatch: one task per part file, each running
-    read_part_file(path, **read_kw) in a mapInArrow kernel (row-group
-    pruning, projection, the exact `where`, null-fill all happen there).
-    Shared by scan and compaction."""
-    paths_df = spark.createDataFrame(
-        [(f,) for f in files], "path string").repartition(
-        max(1, len(files)))
-
-    def decode_fn(batches):
-        for batch in batches:
-            for p in batch.column("path").to_pylist():
-                yield from read_part_file(p, **read_kw).to_batches(
-                    max_chunksize=16384)
-
-    return paths_df.mapInArrow(decode_fn, schema=ddl)
+        opts["part_ids"] = ",".join(map(str, sorted(part_ids)))
+    register(spark)
+    return spark.read.format("skar").options(**opts).load(out_dir)
 
 
 def validate_output(spark: SparkSession, out_dir: str) -> DataFrame:

@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 from skar_spark.config import DEFAULT, EngineConfig
 from skar_spark.engine import storage
 from skar_spark.engine.partfile import (
+    HOST_RE,
     SORT_KEYS,
     partition_checksum,
     partition_host_bloom,
@@ -81,9 +82,6 @@ LINEAGE_SCHEMA = _arrow_schema(LINEAGE_DDL)
 # rows per lineage parquet row group: each group's min/max_warc_ts
 # stats are one entry of the seek index (lineage_row_groups)
 LINEAGE_ROW_GROUP_ROWS = 1024
-
-HOST_RE = r"^[a-z][a-z0-9+.-]*://([^/?#]*).*$"
-
 
 def _conform(t: pa.Table, cols: list[str]) -> pa.Table:
     """`t` as the lineage columns `cols` with their declared types.
@@ -156,7 +154,8 @@ def _commit_footers(t: pa.Table, out_dir: str) -> int:
 
 
 def with_host(df: DataFrame) -> DataFrame:
-    """Derive the host column from url (JVM-side regexp, codegen'd)."""
+    """Derive the host column from url: partfile.HOST_RE as a JVM-side
+    regexp (codegen'd)."""
     return df.withColumn("host", F.regexp_extract("url", HOST_RE, 1))
 
 

@@ -214,19 +214,24 @@ def read_footer(path: str) -> dict:
         return json.loads(f.read(flen))
 
 
-HOST_RE_ARROW = r"^[a-z][a-z0-9+.-]*://(?P<host>[^/?#]*)"
+# THE host rule: the authority of a url with a lowercase scheme, ''
+# for any other url, null for a null url. encode.with_host applies it
+# in the JVM, _derive_host in Arrow. No `.*$` tail: Java's `.` stops at
+# a line terminator, so a tail would fail a url with a newline past
+# its authority.
+HOST_RE = r"^[a-z][a-z0-9+.-]*://([^/?#]*)"
 
 
 def _derive_host(urls: pa.ChunkedArray | pa.Array) -> pa.Array:
-    """Vectorized host extraction from url (Arrow kernel, no per-row
-    Python) — the read-side twin of encode.with_host."""
+    """HOST_RE per url, vectorized in Arrow (no per-row Python); equal
+    to encode.with_host row for row."""
     import pyarrow.compute as pc
-    st = pc.extract_regex(urls, HOST_RE_ARROW)
-    comb = st.combine_chunks() if isinstance(st, pa.ChunkedArray) else st
-    # non-matching urls: Spark's regexp_extract (encode.with_host) yields
-    # '' while extract_regex yields NULL — coalesce so host semantics are
-    # identical between DataSource reads and encode-side derivation
-    return pc.fill_null(comb.field("host"), "")
+    if isinstance(urls, pa.ChunkedArray):
+        urls = urls.combine_chunks()
+    host = pc.struct_field(pc.extract_regex(
+        urls, HOST_RE.replace("(", "(?P<host>", 1)), "host")
+    return pc.if_else(pc.is_valid(urls), pc.fill_null(host, ""),
+                      pa.scalar(None, host.type))
 
 
 def _host_of_prefix(prefix: str) -> str | None:

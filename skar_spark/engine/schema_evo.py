@@ -14,15 +14,17 @@ widening, without rewriting any committed part:
   at lineage-commit time by ``encode.append_lineage_rows`` — schema
   changes become visible exactly when the data that introduced them
   commits, never earlier;
-- readers (``decode.scan``) resolve the merged schema once driver-side
-  (one small GET — NOT one footer read per part, which would be 10^6
-  driver reads at corpus scale) and have each kernel null-fill the
-  columns a given part predates (``read_part_file(fill_missing=...)``).
+- readers (the skar DataSource behind ``decode.scan``) resolve the
+  merged schema once at planning (one small GET — NOT one footer read
+  per part, which would be 10^6 reads at corpus scale) and have each
+  read task null-fill the columns a given part predates
+  (``read_part_file(fill_missing=...)``).
 
 Widening follows Iceberg's promotion rules: int32 -> int64,
 float32 -> float64; the small/large Arrow string & binary encodings are
-the same logical type. Anything else is a loud TypeError — silent
-coercion on a petabyte table is how you corrupt it.
+the same logical type, as are a naive and a UTC timestamp of one unit.
+Anything else is a loud TypeError — silent coercion on a petabyte table
+is how you corrupt it.
 """
 
 from __future__ import annotations
@@ -46,7 +48,10 @@ _FAMILY = {
 
 def _widen(a: str, b: str) -> str:
     """Merged typecode for two observed codes of one column name."""
-    if a == b:
+    if a.removesuffix("UTC") == b.removesuffix("UTC"):
+        # equal, or a naive and a UTC timestamp of one unit: one logical
+        # type (sessions run in UTC). Keep the table's code; read_part_file
+        # casts a part stored at the other
         return a
     fa, fb = _FAMILY.get(a), _FAMILY.get(b)
     if fa and fb and fa[1] == fb[1]:

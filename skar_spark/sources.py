@@ -2,7 +2,8 @@
 
 PySpark 4's Python Data Source API wraps the engine's decode path as a
 first-class reader, so the encoded output is queryable like any other
-format:
+format. It is the engine's one distributed read: `decode.scan` and
+compaction return it too.
 
     from skar_spark.sources import register
     register(spark)
@@ -12,37 +13,50 @@ format:
     df.filter(F.col("warc_ts") >= "2024-03-01")          # pushed down
     df.filter(F.col("url") == "https://a.com/x")         # prunes via host
 
+Options (all strings):
+
+- ``columns``: comma list of the columns to read (default: every table
+  column plus the derived ``host``);
+- ``where``: the read predicate as JSON, the OR of conjuncts
+  `partfile.read_part_file` takes (default ``[{}]``, every row). It
+  drives partition pruning via the lineage index (zone maps + the host
+  AND lang bloom families, probed at planning), row-group pruning and
+  the EXACT filter inside each read task;
+- ``part_ids``: comma list of partition ids; the pruned files are
+  restricted to them (an empty list reads nothing);
+- ``cursor`` / ``page_files``: bounded pagination, the reference's
+  `next_block` cursor (handler.rs:252-258) — start at part index
+  ``cursor``, read at most ``page_files`` partitions; `read_paged(...)`
+  also returns the resume cursor;
+- ``as_of``: unix seconds; snapshot time travel on tables encoded with
+  ``EngineConfig.retain_superseded`` resolves the file set to the
+  snapshot committed at or before that instant (Iceberg time-travel
+  semantics, native on the lineage table — see
+  engine.encode.snapshots/vacuum);
+- ``include_hot``: ``true`` also serves the uncommitted hot tail.
+
 Filter pushdown is automatic (`pushFilters`): equality on the derived
 `host` column, equality on `lang`, and range bounds on `warc_ts` are
-absorbed by the engine into the reader's one conjunct (the read
-predicate of engine.decode / partfile.read_part_file) — partition
-pruning via the lineage index (zone maps + the host AND lang bloom
-families, probed driver-side), row-group pruning + the EXACT filter
-inside each read task. `host IN (...)` and equality on `url` narrow the
-conjunct's hosts too (url via its host), but are also left for Spark to
-evaluate. This is the mirror of the reference's automatic
-constant pushdown through folder + row-group pruning with its address
-and topic bloom families (skar/src/query/handler.rs:144-158,
-data_provider.rs:185-333, build_parquet_idx.rs:89-171).
+ANDed into every conjunct of `where` and left to the engine. `host IN
+(...)` and equality on `url` narrow the conjuncts' hosts too (url via
+its host), but are also left for Spark to evaluate. This is the mirror
+of the reference's automatic constant pushdown through folder +
+row-group pruning with its address and topic bloom families
+(skar/src/query/handler.rs:144-158, data_provider.rs:185-333,
+build_parquet_idx.rs:89-171).
 
-Explicit `.option("host_eq"/"lang_eq"/"ts_lo"/"ts_hi"/"columns", ...)`
-seed that conjunct, with the same exact semantics. Bounded
-pagination (the reference's `next_block` cursor, handler.rs:252-258):
-`.option("cursor", k).option("page_files", m)`, or `read_paged(...)`
-which also returns the resume cursor. Snapshot time travel on tables
-encoded with ``EngineConfig.retain_superseded``:
-`.option("as_of", unix_seconds)` resolves the file set to the snapshot
-committed at or before that instant (Iceberg time-travel semantics,
-native on the lineage table — see engine.encode.snapshots/vacuum).
 Continuous tailing: `spark.readStream.format("skar").load(out)` emits
 newly committed part files per micro-batch (`SkarStreamReader` — the
-follow-mode pairing for tables written by `streaming.stream_encode`).
+follow-mode pairing for tables written by `streaming.stream_encode`);
+of the options it honors ``columns`` only.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
+import json
 
+import pyarrow as pa
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -59,6 +73,30 @@ from pyspark.sql.datasource import (
 TS_MIN = -(1 << 62)
 TS_MAX = 1 << 62
 
+_SPARK = {
+    "i8": "byte", "i16": "short", "i32": "int", "i64": "long",
+    "u8": "short", "u16": "int", "u32": "long", "u64": "long",
+    "f32": "float", "f64": "double", "bool": "boolean",
+    "date32": "date",
+    "str": "string", "lstr": "string", "bin": "binary", "lbin": "binary",
+}
+
+
+def spark_type_for(code: str) -> str:
+    if code in _SPARK:
+        return _SPARK[code]
+    if code.startswith("ts:"):
+        return "timestamp"
+    raise TypeError(f"no spark type for {code}")
+
+
+def spark_ddl_for(types: dict[str, str], columns: list[str]) -> str:
+    """Spark DDL of `columns` under the typecodes `types`; the derived
+    ``host`` is a string."""
+    return ", ".join(
+        f"{c} {'string' if c == 'host' else spark_type_for(types[c])}"
+        for c in columns)
+
 
 def _to_us(v) -> int:
     """Literal timestamp → epoch microseconds (session tz is UTC)."""
@@ -73,10 +111,29 @@ def _to_us(v) -> int:
     return int(v)
 
 
-def _host_of_url(url: str) -> str | None:
-    import re
-    m = re.match(r"^[a-z][a-z0-9+.-]*://([^/?#]*)", url)
-    return m.group(1) if m else None
+def _where(options) -> list[dict]:
+    """The read predicate of the `where` option (absent: every row)."""
+    w = options.get("where")
+    return [{}] if w is None else json.loads(w)
+
+
+def _member_files(path: str, where: list[dict], options) -> list[str]:
+    """The files a read of `where` under `options` may touch: the pruned
+    members (``as_of``, ``include_hot``) restricted to ``part_ids``,
+    before the cursor page. The reader's planner and read_paged's
+    cursor both take it, so they always agree."""
+    from skar_spark.engine.decode import _file_part_index, prune_selections
+
+    ao = options.get("as_of")
+    files = prune_selections(
+        path, where, as_of=float(ao) if ao else None,
+        include_hot=str(options.get("include_hot", "")).lower()
+        in ("1", "true"))
+    ids = options.get("part_ids")
+    if ids is not None:
+        keep = {int(p) for p in ids.split(",") if p.strip()}
+        return [f for f in files if _file_part_index(f) in keep]
+    return list(files)
 
 
 class SkarPartition(InputPartition):
@@ -89,106 +146,84 @@ class SkarDataSource(DataSource):
     def name(cls) -> str:
         return "skar"
 
-    def _cols(self):
+    def _columns(self) -> list[str]:
         cols = self.options.get("columns")
-        return [c.strip() for c in cols.split(",")] if cols else None
+        return ([c.strip() for c in cols.split(",")] if cols
+                else self._table_schema()[0] + ["host"])
+
+    def _table_schema(self) -> tuple[list[str], dict[str, str]]:
+        """The merged table schema (meta/schema.json, else the first
+        footer; schema_evo.table_schema), loaded once: schema() keeps it
+        on the instance, which PySpark pickles to reader(). Only a
+        user-supplied schema skips schema() and loads it there."""
+        if not hasattr(self, "_table"):
+            from skar_spark.engine.schema_evo import table_schema
+            self._table = table_schema(self.options["path"])
+        return self._table
 
     def schema(self) -> str:
-        from skar_spark.engine.decode_schema import spark_ddl_for
-        from skar_spark.engine.schema_evo import table_schema
-
-        # merged table schema if the table has evolved (Iceberg
-        # add-column, engine/schema_evo.py); first footer otherwise
-        tcols, ttypes = table_schema(self.options["path"])
-        cols = self._cols() or tcols + ["host"]
-        stored = [c for c in cols if c != "host"]
-        ddl = spark_ddl_for(ttypes, stored)
-        if "host" in cols:
-            parts = ([p.strip() for p in ddl.split(",")] if ddl else [])
-            parts.insert(cols.index("host"), "host string")
-            ddl = ", ".join(parts)
-        return ddl
+        return spark_ddl_for(self._table_schema()[1], self._columns())
 
     def reader(self, schema) -> "SkarReader":
-        return SkarReader(self.options, self._cols())
+        return SkarReader(self.options, self._columns(),
+                          self._table_schema()[1])
 
     def streamReader(self, schema) -> "SkarStreamReader":
-        return SkarStreamReader(self.options, self._cols())
+        return SkarStreamReader(self.options, self._columns(),
+                                self._table_schema()[1])
 
 
-def _options_conjunct(options) -> dict:
-    """The read conjunct of the explicit `host_eq`/`lang_eq`/`ts_lo`/
-    `ts_hi` options (the reader and read_paged share it)."""
-    from skar_spark.engine.decode import conjunct
+def _read_part_batches(path: str, cols: list[str], types: dict[str, str],
+                       where: list[dict] | None = None):
+    """One part file as Arrow batches — the read-task body of the batch
+    and stream readers. `types` is the merged table schema, so columns
+    a part predates come back null-filled (schema_evo)."""
+    from skar_spark.engine.partfile import read_part_file
 
-    lo, hi = options.get("ts_lo"), options.get("ts_hi")
-    return conjunct(options.get("host_eq"),
-                    (int(lo or TS_MIN), int(hi or TS_MAX))
-                    if lo or hi else None, options.get("lang_eq"))
+    yield from read_part_file(path, cols, where, types).to_batches(
+        max_chunksize=16384)
 
 
 class SkarReader(DataSourceReader):
-    def __init__(self, options, cols):
+    def __init__(self, options, cols: list[str], types: dict[str, str]):
         self.path = options["path"]
+        self.options = options
         self.cols = cols
-        self.conj = _options_conjunct(options)
-        # paged read (the reference's next_block cursor analog,
-        # query/handler.rs:252-258): cursor = numeric part index to start
-        # at, page_files = max partitions this read returns. Use
-        # read_paged() to also get the resume cursor.
-        self.cursor = int(options.get("cursor", 0))
-        pf = options.get("page_files")
-        self.page_files = int(pf) if pf else None
-        # snapshot time travel (unix seconds) — tables encoded with
-        # EngineConfig.retain_superseded keep superseded attempt files,
-        # so the planner can resolve any past snapshot from lineage
-        ao = options.get("as_of")
-        self.as_of = float(ao) if ao else None
-        # hot-tier union (reference data_provider.rs:56-105): serve the
-        # in-progress uncommitted epoch alongside committed parts
-        self.include_hot = str(options.get("include_hot", "")).lower() \
-            in ("1", "true")
-        # evolved-table support: resolve the merged schema ONCE at plan
-        # time; read tasks null-fill columns a part predates
-        from skar_spark.engine.schema_evo import load_table_schema
-        ts = load_table_schema(self.path)
-        self.table_cols = (ts[0] + ["host"]) if ts else None
-        self.fill = ts[1] if ts else None
+        self.types = types
+        self.where = _where(options)
 
-    # -- filter pushdown (planning time, driver side) ------------------
-    def _narrow_hosts(self, values) -> None:
-        hosts = self.conj.get("hosts")
-        self.conj["hosts"] = list(values) if hosts is None else [
-            h for h in hosts if h in values]
+    # -- filter pushdown (planning time, in the planner worker) --------
+    def _narrow(self, key: str, values) -> None:
+        """AND `key IN values` into every conjunct."""
+        for c in self.where:
+            c[key] = list(values) if c.get(key) is None else [
+                v for v in c[key] if v in values]
 
     def _narrow_ts(self, lo: int, hi: int) -> None:
-        cur = self.conj.get("ts_range", (TS_MIN, TS_MAX))
-        self.conj["ts_range"] = (max(cur[0], lo), min(cur[1], hi))
+        for c in self.where:
+            cur = c.get("ts_range") or (TS_MIN, TS_MAX)
+            c["ts_range"] = (max(cur[0], lo), min(cur[1], hi))
 
     def pushFilters(self, filters):
-        """Absorb host and lang equality and warc_ts bounds into the one
-        conjunct; everything yielded back is still evaluated by Spark.
-        The conjunct prunes partitions and row groups and is applied
-        EXACTLY inside read tasks (read_part_file)."""
+        """AND host and lang equality and warc_ts bounds into every
+        conjunct of `where`; everything yielded back is still evaluated
+        by Spark. `where` prunes partitions and row groups and is
+        applied EXACTLY inside read tasks (read_part_file)."""
         for f in filters:
-            if isinstance(f, EqualTo) and f.attribute == ("host",) \
-                    and f.value in self.conj.get("hosts", [f.value]):
-                self._narrow_hosts([f.value])
-            elif isinstance(f, EqualTo) and f.attribute == ("lang",) \
-                    and isinstance(f.value, str) \
-                    and self.conj.get("langs") in (None, [f.value]):
-                # absorbed: partition pruning via the lang bloom family +
-                # row-group lbloom skip + exact filter in the read task
-                self.conj["langs"] = [f.value]
+            if isinstance(f, EqualTo) and isinstance(f.value, str) \
+                    and f.attribute in (("host",), ("lang",)):
+                self._narrow(f.attribute[0] + "s", [f.value])
             elif isinstance(f, In) and f.attribute == ("host",):
                 if all(isinstance(v, str) for v in f.value):
-                    self._narrow_hosts(f.value)
+                    self._narrow("hosts", f.value)
                 yield f  # Spark applies the IN itself too
             elif isinstance(f, EqualTo) and f.attribute == ("url",) \
                     and isinstance(f.value, str):
-                h = _host_of_url(f.value)
+                from skar_spark.engine.partfile import _derive_host
+
+                h = _derive_host(pa.array([f.value]))[0].as_py()
                 if h:
-                    self._narrow_hosts([h])
+                    self._narrow("hosts", [h])
                 yield f  # Spark still applies the url match
             elif isinstance(f, (GreaterThan, GreaterThanOrEqual)) \
                     and f.attribute == ("warc_ts",):
@@ -204,32 +239,19 @@ class SkarReader(DataSourceReader):
     def partitions(self):
         # planning runs in a Python worker with no SparkSession — the
         # engine's pruner is driver-local, so it runs here as well
-        from skar_spark.engine.decode import page_slice, prune_selections
+        from skar_spark.engine.decode import page_slice
 
-        files = prune_selections(self.path, [self.conj], as_of=self.as_of,
-                                 include_hot=self.include_hot)
-        files = page_slice(files, self.cursor, self.page_files)
+        pf = self.options.get("page_files")
+        files = page_slice(_member_files(self.path, self.where, self.options),
+                           int(self.options.get("cursor", 0)),
+                           int(pf) if pf else None)
         return [SkarPartition(f) for f in files]
 
     def read(self, partition: SkarPartition):
         if partition is None:  # Spark's placeholder when no partitions
             return
-        yield from _read_part_batches(
-            partition.path, self.cols, where=[self.conj],
-            table_cols=self.table_cols, fill_missing=self.fill)
-
-
-def _read_part_batches(path: str, cols, table_cols=None, **read_kw):
-    """One part file as Arrow batches, by default every stored column
-    plus the derived `host` (partfile.read_part_file) — the shared
-    read-task body of the batch and stream readers. `table_cols`/
-    `fill_missing` carry the merged schema of an evolved table so
-    columns a part predates come back null-filled."""
-    from skar_spark.engine.partfile import read_footer, read_part_file
-
-    cols = cols or table_cols or read_footer(path)["columns"] + ["host"]
-    yield from read_part_file(path, cols, **read_kw).to_batches(
-        max_chunksize=16384)
+        yield from _read_part_batches(partition.path, self.cols,
+                                      self.types, self.where)
 
 
 class SkarStreamReader(DataSourceStreamReader):
@@ -259,13 +281,10 @@ class SkarStreamReader(DataSourceStreamReader):
     insert below the high-water mark) is likewise out of scope.
     """
 
-    def __init__(self, options, cols):
+    def __init__(self, options, cols: list[str], types: dict[str, str]):
         self.path = options["path"]
         self.cols = cols
-        from skar_spark.engine.schema_evo import load_table_schema
-        ts = load_table_schema(self.path)
-        self.table_cols = (ts[0] + ["host"]) if ts else None
-        self.fill = ts[1] if ts else None
+        self.types = types
         from skar_spark.engine.compact import is_compacted
         from skar_spark.engine.encode import is_retained
         if is_retained(self.path):
@@ -307,8 +326,7 @@ class SkarStreamReader(DataSourceStreamReader):
         if partition is None:
             return
         yield from _read_part_batches(partition.path, self.cols,
-                                      table_cols=self.table_cols,
-                                      fill_missing=self.fill)
+                                      self.types)
 
     def commit(self, end: dict) -> None:
         pass  # progress is tracked by Spark's streaming checkpoint
@@ -318,40 +336,31 @@ def read_paged(spark, path: str, cursor: int = 0, page_files: int = 64,
                **options) -> tuple:
     """Bounded partial read through the skar DataSource with a resume
     cursor — the `next_block` pagination analog
-    (/root/reference/skar/src/query/handler.rs:252-258) for batch
-    callers. Returns (DataFrame over at most `page_files` partitions,
+    (skar/src/query/handler.rs:252-258) for batch callers. Returns (DataFrame over at most `page_files` partitions,
     next_cursor); next_cursor is None when this page completes the scan,
     else pass it back to continue. The page membership is derived with
     the SAME pruning + ordering the reader's planner uses, so the
     DataFrame and the cursor always agree. Wall-clock budgeting
     (time_limit_ms) lives in engine.decode.scan_paged, which collects
-    incrementally; a DataFrame-returning API can only bound volume."""
-    from skar_spark.engine.decode import (
-        _file_part_index,
-        page_slice,
-        prune_selections,
-    )
+    incrementally; a DataFrame-returning API can only bound volume.
+    `options` are the reader's other options (`where`, `part_ids`,
+    `as_of`, ...)."""
+    from skar_spark.engine.decode import _file_part_index, page_slice
 
-    # every reader-honored pruning option must reach this call too: the
-    # cursor arithmetic and the DataFrame must be derived from the SAME
-    # file list (e.g. an as_of snapshot read on a retain_superseded
-    # table — pruning the latest view here while the reader resolves the
-    # snapshot view would make resumed pagination skip/repeat partitions)
-    pruned = prune_selections(
-        path, [_options_conjunct(options)],
-        as_of=float(options["as_of"]) if options.get("as_of") else None)
-    remaining = page_slice(pruned, cursor)
+    opts = {k: str(v) for k, v in options.items()}
+    remaining = page_slice(_member_files(path, _where(opts), opts), cursor)
     page = remaining[:page_files]
     nxt = (_file_part_index(remaining[len(page)])
            if len(remaining) > len(page) else None)
-    reader = spark.read.format("skar").option("cursor", str(cursor)) \
-        .option("page_files", str(page_files))
-    for k, v in options.items():
-        reader = reader.option(k, str(v))
-    return reader.load(path), nxt
+    return spark.read.format("skar").options(
+        cursor=str(cursor), page_files=str(page_files), **opts
+    ).load(path), nxt
 
 
 def register(spark) -> None:
+    """Register the skar source on `spark`, once per session."""
     # pushFilters() requires the (default-off) Python-source pushdown flag
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(SkarDataSource)
+    if not spark._jsparkSession.sessionState().dataSourceManager() \
+            .dataSourceExists(SkarDataSource.name()):
+        spark.dataSource.register(SkarDataSource)

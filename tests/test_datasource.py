@@ -85,17 +85,20 @@ def test_projection(spark, encoded):
 
 
 def test_ts_window_pruned_read(spark, encoded):
+    """A `where` option seeds the read predicate; the seeded read is
+    exactly the Spark-filtered full read."""
+    import json
+
     lo, hi = T0_US + 500 * 1_000_000, T0_US + 1_500 * 1_000_000
     df = (spark.read.format("skar")
-          .option("ts_lo", str(lo)).option("ts_hi", str(hi)).load(encoded))
-    exact = df.filter((F.unix_micros("warc_ts") >= lo)
-                      & (F.unix_micros("warc_ts") < hi))
-    # zone-map reads may over-return, never under-return
-    want = 4_000  # upper bound sanity; exact value checked vs full read
+          .option("where", json.dumps([{"ts_range": [lo, hi]}]))
+          .load(encoded).select("url", "warc_ts", "text"))
     full = spark.read.format("skar").load(encoded).filter(
-        (F.unix_micros("warc_ts") >= lo) & (F.unix_micros("warc_ts") < hi))
-    assert exact.count() == full.count() > 0
-    assert df.count() <= want
+        (F.unix_micros("warc_ts") >= lo) & (F.unix_micros("warc_ts") < hi)
+    ).select("url", "warc_ts", "text")
+    assert df.count() == full.count() > 0
+    assert df.exceptAll(full).count() == 0
+    assert full.exceptAll(df).count() == 0
 
 
 def test_content_matches_source(spark, encoded):
@@ -221,3 +224,76 @@ def test_stream_read_rejects_retained_table(spark, tmp_path):
          .writeStream.format("memory").queryName("skar_tail_rej")
          .option("checkpointLocation", str(tmp_path / "rej_ckpt"))
          .trigger(availableNow=True).start().awaitTermination(60))
+
+
+def test_datasource_reads_table_schema_once(encoded, monkeypatch):
+    """schema() keeps the table schema on the DataSource instance, which
+    PySpark pickles to reader()/streamReader(): one GET of
+    meta/schema.json per read. Driven in-process, as PySpark's planner
+    workers drive it."""
+    import pickle
+
+    from skar_spark.engine import storage
+    from skar_spark.sources import SkarDataSource
+
+    gets = []
+    get_bytes = storage.get_bytes
+    monkeypatch.setattr(storage, "get_bytes",
+                        lambda p: gets.append(p) or get_bytes(p))
+    ds = SkarDataSource({"path": encoded})
+    ddl = ds.schema()
+    planner = pickle.loads(pickle.dumps(ds))
+    assert planner.reader(ddl).partitions()
+    planner.streamReader(ddl)
+    assert [p for p in gets if p.endswith("schema.json")] == [
+        f"{encoded}/meta/schema.json"]
+
+
+def test_scan_is_one_spark_job(spark, encoded):
+    """scan is the DataSource read: pruning runs in its planner, so a
+    full scan into a noop sink is exactly one Spark job."""
+    from skar_spark.engine.decode import scan
+
+    sc = spark.sparkContext
+    group = "scan-one-job"
+    sc.setJobGroup(group, "scan into noop")
+    try:
+        scan(spark, encoded).write.format("noop").mode("overwrite").save()
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_scan_changes_without_changes_is_empty(spark, encoded):
+    """No partition changed in the window → an empty part_ids set, which
+    reads nothing (not the whole table)."""
+    import time
+
+    from skar_spark.engine.decode import scan_changes
+
+    stats = {}
+    df = scan_changes(spark, encoded, since=time.time() + 3600,
+                      _stats=stats)
+    assert stats["n_changed_parts"] == 0
+    assert df.count() == 0
+
+
+def test_push_filters_and_into_every_conjunct():
+    """pushFilters ANDs host/lang equality and warc_ts bounds into every
+    conjunct of the `where` option and hands the rest back to Spark."""
+    import json
+
+    from pyspark.sql.datasource import EqualTo, GreaterThanOrEqual
+
+    from skar_spark.sources import TS_MAX, SkarReader
+
+    where = [{"hosts": ["a.com", "b.com"]}, {"langs": ["de"]}]
+    r = SkarReader({"path": "unused", "where": json.dumps(where)},
+                   ["url"], {"url": "str"})
+    left = list(r.pushFilters([EqualTo(("host",), "b.com"),
+                               GreaterThanOrEqual(("warc_ts",), 5),
+                               EqualTo(("text",), "x")]))
+    assert left == [EqualTo(("text",), "x")]
+    assert r.where == [
+        {"hosts": ["b.com"], "ts_range": (5, TS_MAX)},
+        {"langs": ["de"], "hosts": ["b.com"], "ts_range": (5, TS_MAX)}]

@@ -45,6 +45,18 @@ def test_merge_schema_rejects_incompatible_change():
         merge_schema(["x"], {"x": "i64"}, ["x"], {"x": "str"})
 
 
+def test_naive_and_utc_timestamps_are_one_type():
+    """A naive and a UTC timestamp of one unit merge to the table's
+    existing code; other time zones and units still conflict."""
+    assert merge_schema(["ts"], {"ts": "ts:us:"}, ["ts"],
+                        {"ts": "ts:us:UTC"})[1] == {"ts": "ts:us:"}
+    assert merge_schema(["ts"], {"ts": "ts:us:UTC"}, ["ts"],
+                        {"ts": "ts:us:"})[1] == {"ts": "ts:us:UTC"}
+    for other in ("ts:ns:", "ts:us:Europe/Berlin"):
+        with pytest.raises(TypeError):
+            merge_schema(["ts"], {"ts": "ts:us:"}, ["ts"], {"ts": other})
+
+
 def test_table_schema_versions(tmp_path):
     out = str(tmp_path / "tbl")
     update_table_schema(out, ["a"], {"a": "i64"})
@@ -289,3 +301,35 @@ def test_no_change_append_reads_schema_once(spark, tmp_path, monkeypatch):
     assert append_documents(spark, docs(str(land / "b.parquet")), out,
                             CFG) > 0
     assert calls == ["get_bytes"]
+
+
+def test_stream_onto_tz_naive_table(spark, tmp_path):
+    """A table encoded from a parquet file whose warc_ts has no time zone
+    (its parts record `ts:us:`) takes stream epochs, which read the
+    landing data as UTC (`ts:us:UTC`): the epoch commits, the table keeps
+    its code, and scan returns every row at its instant."""
+    from skar_spark.engine.encode import encode_documents
+
+    first = synth_batch(np.arange(0, 600))
+    assert first.schema.field("warc_ts").type == pa.timestamp("us")
+    naive = str(tmp_path / "naive.parquet")
+    pq.write_table(first, naive)
+    out = str(tmp_path / "out")
+    encode_documents(spark, spark.read.parquet(naive), out, CFG,
+                     n_rows=600)
+    assert load_table_schema(out)[1]["warc_ts"] == "ts:us:"
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    epoch = synth_batch(np.arange(600, 1000))
+    pq.write_table(epoch, str(landing / "e.parquet"))
+    stream_encode(spark, str(landing), out, CFG,
+                  parts_per_batch=2).awaitTermination(120)
+    assert load_table_schema(out)[1]["warc_ts"] == "ts:us:"
+
+    got = scan(spark, out).select(
+        "url", F.unix_micros("warc_ts").alias("us")).toArrow()
+    want = pa.concat_tables([first, epoch])
+    assert sorted(zip(got["url"].to_pylist(), got["us"].to_pylist())) \
+        == sorted(zip(want["url"].to_pylist(),
+                      want["warc_ts"].cast(pa.int64()).to_pylist()))
