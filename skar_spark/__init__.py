@@ -22,9 +22,13 @@ engine `omahs/skar` (Rust, arrow2/Parquet archive indexer — see
 
 __version__ = "0.1.0"
 
+from skar_spark import zipcache
 from skar_spark.config import EngineConfig  # noqa: F401
 
 __all__ = ["EngineConfig"]
+
+# every process that unpickles engine code imports this package first
+zipcache.install()
 
 # Public API map (import from the submodules; they lazy-import Spark):
 #   engine.encode:  encode_documents, reencode_late, read_lineage,
