@@ -22,6 +22,9 @@ skar/src/skar_runner.rs:285-353 + write_parquet.rs + build_parquet_idx.rs):
           emit footer row (zone maps, bloom, checksum, codec choices)
       → append footer rows to the lineage table [db/mod.rs:88-215 analog]
 
+A one-part append or stream epoch skips salting and the shuffle: it is
+collected once and encoded on the driver (encode_increment).
+
 Resume: completed part_ids from the lineage table are anti-joined away
 before the shuffle (mirror of db.next_block_num(), db/mod.rs:68-86).
 Scale notes: the only global state is the lineage table (tiny — one row
@@ -48,6 +51,7 @@ from skar_spark.engine import storage
 from skar_spark.engine.partfile import (
     HOST_RE,
     SORT_KEYS,
+    _derive_host,
     partition_checksum,
     partition_host_bloom,
     write_part_file,
@@ -109,7 +113,10 @@ def _put_lineage(path: str, t: pa.Table) -> None:
 
 
 def append_lineage_rows(footers: "DataFrame", out_dir: str) -> int:
-    """Commit one batch/epoch's lineage rows.
+    """Commit the lineage rows of one encode_footers dispatch: an encode
+    batch, or an append or stream epoch that did not take the driver
+    route (encode_increment: a one-part increment encodes on the driver
+    and commits its footer row through _commit_footers).
 
     The footers are METADATA — one row per encoded partition, at most
     ``cfg.batch_partitions`` of them — so a second Spark job with a
@@ -129,9 +136,9 @@ def append_lineage_rows(footers: "DataFrame", out_dir: str) -> int:
 
 def _commit_footers(t: pa.Table, out_dir: str) -> int:
     """Commit footer rows (FOOTER_DDL) as ONE lineage PUT — the commit
-    of every writer (append_lineage_rows; _rewrite_partitions, which
-    adds its emptied partitions' rows to the kernel's). Returns the
-    number of rows committed."""
+    of every writer (append_lineage_rows; encode_increment's driver
+    route; _rewrite_partitions, which adds its emptied partitions' rows
+    to the kernel's). Returns the number of rows committed."""
     if not t.num_rows:
         return 0
     # schema evolution (engine/schema_evo.py): merge this batch's part
@@ -363,8 +370,9 @@ def encode_part(table: pa.Table, part_id: int, out_dir: str,
     """THE footer builder: sort one partition's rows, write its part
     file and return its one footer row (FOOTER_DDL). `table` holds the
     data columns plus `host` (a planned frame's `part_id` and `salt` are
-    dropped). The encode kernel calls it per part_id; _rewrite_partitions
-    calls it on the driver with a zero-row table for each partition a
+    dropped). The encode kernel calls it per part_id; on the driver,
+    encode_increment calls it for a one-part increment and
+    _rewrite_partitions with a zero-row table for each partition a
     rewrite emptied. `name_fmt` gives each writer its part-file
     namespace (streaming: part-e{epoch}-{pid}.skar)."""
     t0 = time.time()
@@ -475,9 +483,11 @@ def planned_exchange(sub: DataFrame, part_ids: list[int],
 def encode_footers(planned: DataFrame, part_ids: list[int], out_dir: str,
                    cfg: EngineConfig, attempt: str, name_fmt: str,
                    loads: dict[int, int] | None = None) -> DataFrame:
-    """THE encode dispatch every writer uses: one row shuffle that puts
-    each of `part_ids` alone in its task (planned_exchange), then the
-    encode kernel per task. Returns the lazy footer rows (FOOTER_DDL);
+    """THE distributed encode dispatch: one row shuffle that puts each
+    of `part_ids` alone in its task (planned_exchange), then the encode
+    kernel per task. Every writer uses it but a one-part increment
+    under the collect bound, which encode_increment encodes on the
+    driver. Returns the lazy footer rows (FOOTER_DDL);
     append_lineage_rows runs and commits them. `repartition(n, col)`
     is a fixed-count exchange, so AQE never coalesces the CPU-bound
     kernel stage. Parts with no rows never reach a task and write no
@@ -889,6 +899,9 @@ def append_documents(spark: SparkSession, df: DataFrame, out_dir: str,
     """One-shot COMMITTED append of new rows to an existing table — the
     batch mirror of one streaming epoch (both run encode_increment, so
     they take new part ids from the one lineage high-water allocator).
+    An increment of at most ``cfg.target_partition_rows`` rows plans to
+    one part and, under the collect bound, is encoded on the driver:
+    two Spark jobs (the totals and one Arrow collect) and no exchange.
     Existing parts and lineage rows are untouched, so each append is a
     clean change-feed increment for ``decode.scan_changes``. Returns
     the number of parts appended.
@@ -899,7 +912,7 @@ def append_documents(spark: SparkSession, df: DataFrame, out_dir: str,
     hosts (salted at ``cfg.salt_threshold_rows``) come from at most one
     more — none when the increment has fewer rows than the threshold.
     At 10^12-doc table sizes the increment must never pay a planning
-    pass over history."""
+    pass over history. An empty increment commits nothing."""
     if lineage_row_groups(out_dir) is None:
         raise FileNotFoundError(
             f"{out_dir} has no lineage; append_documents requires an "
@@ -917,8 +930,6 @@ def append_documents(spark: SparkSession, df: DataFrame, out_dir: str,
             "day_hash tables take late data via reencode_late")
     totals = plan_totals(df)
     if parts is None:
-        if totals["n_rows"] == 0:
-            return 0  # empty increment: no parts, no lineage batch
         parts = max(1, -(-totals["n_rows"] // cfg.target_partition_rows))
     tag = uuid.uuid4().hex[:8]
     return encode_increment(df, totals, parts, out_dir, cfg,
@@ -943,21 +954,47 @@ def allocate_part_ids(out_dir: str, lin: pa.Table | None, n: int) -> int:
     return base
 
 
+def max_result_bytes(spark: SparkSession) -> float:
+    """The bytes one collect may bring to the driver: the session's
+    ``spark.driver.maxResultSize``, the bound Spark enforces on every
+    collect (0 = unbounded)."""
+    size = spark.sparkContext._jvm.org.apache.spark.network.util \
+        .JavaUtils.byteStringAsBytes(
+            spark.conf.get("spark.driver.maxResultSize", "1g"))
+    return size or float("inf")
+
+
 def encode_increment(df: DataFrame, totals: dict, parts: int,
                      out_dir: str, cfg: EngineConfig, attempt: str,
                      name_fmt: str) -> int:
     """THE increment writer of append_documents and streaming epochs:
-    plan `df` alone into `parts` partitions (heavy hosts salted at
-    ``cfg.salt_threshold_rows`` from its plan `totals`), shift the part
-    ids and the packing loads up to the base one lineage read allocates
-    (allocate_part_ids), encode, and commit one lineage batch. Returns
-    the number of parts committed: 0, writing nothing, when lineage
-    already holds `attempt` (a replayed stream epoch)."""
+    encode `df` into `parts` new part ids from the base one lineage
+    read allocates (allocate_part_ids) and commit one lineage batch.
+    Returns the parts committed: 0, writing nothing, for an empty `df`
+    (its plan `totals`) or a replayed `attempt` (lineage holds it).
+
+    One part whose Arrow size (payload bytes plus 8 per row and column,
+    for offsets and fixed-width values) fits the session's collect
+    bound (max_result_bytes) is encoded on the driver from one Arrow
+    collect: no salt map, no exchange, no kernel task (the reference
+    writes each block range in-process, write_parquet.rs:160-221).
+    Otherwise `df` is planned alone into `parts` partitions, heavy
+    hosts salted at ``cfg.salt_threshold_rows``, and encode_footers
+    runs."""
+    if not totals["n_rows"]:
+        return 0
     lin = lineage_table(out_dir, ["partition_id", "attempt_id"])
     if lin is not None and pc.any(pc.equal(lin["attempt_id"],
                                            attempt)).as_py():
         return 0
     base = allocate_part_ids(out_dir, lin, parts)
+    arrow_bytes = (totals["n_bytes"] or 0) \
+        + 8 * totals["n_rows"] * len(df.columns)
+    if parts == 1 and arrow_bytes <= max_result_bytes(df.sparkSession):
+        t = df.toArrow()
+        t = t.append_column("host", _derive_host(t["url"]))
+        return _commit_footers(
+            encode_part(t, base, out_dir, cfg, attempt, name_fmt), out_dir)
     loads: dict[int, int] = {}
     planned = plan_partitions(
         df, parts, cfg, salt_rows(df, cfg.salt_threshold_rows, totals),

@@ -6,8 +6,8 @@ flushes to parquet + index, and checkpoint-resume
 (skar/src/skar_runner.rs:107-158, 285-353; T1-T5 in SURVEY §2.7).
 
 Spark realization: `readStream` over the landing directory →
-`foreachBatch` running the same encode dispatch as the batch writers
-(`encode.encode_footers`) per micro-batch (the analog of the hot→cold
+`foreachBatch` running the increment writer of batch appends
+(`encode.encode_increment`) per micro-batch (the analog of the hot→cold
 flush), with
 
 - exactly-once at the sink via Spark's streaming checkpoint (epoch ids)
