@@ -61,6 +61,7 @@ from skar_spark.engine.encode import (
     is_retained,
     latest_lineage,
     lineage_table,
+    parts_for,
 )
 
 
@@ -139,7 +140,7 @@ def compact_parts(spark: SparkSession, out_dir: str,
         return {"compacted_parts": 0, "new_parts": 0, "rows": 0}
     files = cand["file"].to_pylist()
     total_rows = pc.sum(cand["row_count"]).as_py()
-    n_new = max(1, -(-total_rows // cfg.target_partition_rows))
+    n_new = parts_for(total_rows, cfg)
     hw = allocate_part_ids(out_dir, every, n_new)
     attempt = "compact-" + uuid.uuid4().hex[:8]
 

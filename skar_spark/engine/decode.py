@@ -519,17 +519,15 @@ def paged_decode_loop(spark: SparkSession, files: list[str],
     return rows, _file_part_index(files[pos])
 
 
-def page_slice(files: list[str], cursor: int,
-               page_files: int | None = None) -> list[str]:
-    """THE cursor page of a pruned file list: the files at part index
-    ≥ `cursor` in numeric part-index order, at most `page_files` of
-    them. The order must be numeric, not lexicographic: streaming names
+def page_slice(files: list[str], cursor: int) -> list[str]:
+    """THE cursor slice of a pruned file list: the files at part index
+    ≥ `cursor` in numeric part-index order; callers page from its head.
+    The order must be numeric, not lexicographic: streaming names
     (part-e{epoch}-{pid}) sort e10 < e2 textually while pids grow with
     epoch, which would make a resumed cursor re-read returned
     partitions and skip unprocessed ones."""
-    files = sorted((f for f in files if _file_part_index(f) >= cursor),
-                   key=_file_part_index)
-    return files if page_files is None else files[:page_files]
+    return sorted((f for f in files if _file_part_index(f) >= cursor),
+                  key=_file_part_index)
 
 
 def _file_part_index(path: str) -> int:

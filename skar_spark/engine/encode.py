@@ -193,6 +193,15 @@ def plan_totals(df: DataFrame) -> dict:
                   ).collect()[0].asDict()
 
 
+def parts_for(n_rows: int, cfg: EngineConfig) -> int:
+    """THE partition count of `n_rows` rows: one part per
+    ``cfg.target_partition_rows`` (rounded up), at least one — the
+    reference's one flush threshold (max_file_size,
+    skar_runner.rs:285-353). Encodes, increments and compaction size
+    their output by it."""
+    return max(1, -(-n_rows // cfg.target_partition_rows))
+
+
 def salt_rows(df: DataFrame, threshold_rows: int, totals: dict) -> pa.Table:
     """The heavy-host map (SALT_MAP_DDL, sorted by host): hosts above
     `threshold_rows` in ROWS or in BYTES (the threshold times the
@@ -894,45 +903,27 @@ def completed_part_ids(spark: SparkSession, out_dir: str) -> set[int]:
 
 
 def append_documents(spark: SparkSession, df: DataFrame, out_dir: str,
-                     cfg: EngineConfig = DEFAULT,
-                     parts: int | None = None) -> int:
+                     cfg: EngineConfig = DEFAULT) -> int:
     """One-shot COMMITTED append of new rows to an existing table — the
-    batch mirror of one streaming epoch (both run encode_increment, so
-    they take new part ids from the one lineage high-water allocator).
-    An increment of at most ``cfg.target_partition_rows`` rows plans to
-    one part and, under the collect bound, is encoded on the driver:
-    two Spark jobs (the totals and one Arrow collect) and no exchange.
-    Existing parts and lineage rows are untouched, so each append is a
-    clean change-feed increment for ``decode.scan_changes``. Returns
-    the number of parts appended.
+    batch mirror of one streaming epoch: both run encode_increment,
+    which sizes the increment by ``cfg.target_partition_rows``, refuses
+    day_hash tables and takes new part ids from the one lineage
+    high-water allocator. Existing parts and lineage rows are
+    untouched, so each append is a clean change-feed increment for
+    ``decode.scan_changes``. Returns the number of parts appended.
 
     Unlike ``encode_documents(resume=True)`` (which FINISHES a planned
     table), append re-plans from the increment's own stats: one totals
-    action over the new rows gives the partition count, and the heavy
-    hosts (salted at ``cfg.salt_threshold_rows``) come from at most one
-    more — none when the increment has fewer rows than the threshold.
-    At 10^12-doc table sizes the increment must never pay a planning
-    pass over history. An empty increment commits nothing."""
+    action over the new rows. At 10^12-doc table sizes the increment
+    must never pay a planning pass over history. An empty increment
+    commits nothing."""
     if lineage_row_groups(out_dir) is None:
         raise FileNotFoundError(
             f"{out_dir} has no lineage; append_documents requires an "
             "existing committed table (encode_documents does the first "
             "load)")
-    meta = load_plan_meta(out_dir)
-    if meta and meta.get("scheme") == "day_hash":
-        # a day_hash table's partition ids are a pure function of
-        # (day(warc_ts), host bucket) — delete_rows/reencode_late locate
-        # partitions by recomputing it. Hash-planned appended parts
-        # would break that invariant silently; late data on day_hash
-        # tables goes through reencode_late instead.
-        raise ValueError(
-            "append_documents supports hash-scheme tables only; "
-            "day_hash tables take late data via reencode_late")
-    totals = plan_totals(df)
-    if parts is None:
-        parts = max(1, -(-totals["n_rows"] // cfg.target_partition_rows))
     tag = uuid.uuid4().hex[:8]
-    return encode_increment(df, totals, parts, out_dir, cfg,
+    return encode_increment(df, plan_totals(df), out_dir, cfg,
                             f"append-{tag}", f"part-x{tag}-{{pid:09d}}.skar")
 
 
@@ -964,29 +955,38 @@ def max_result_bytes(spark: SparkSession) -> float:
     return size or float("inf")
 
 
-def encode_increment(df: DataFrame, totals: dict, parts: int,
-                     out_dir: str, cfg: EngineConfig, attempt: str,
-                     name_fmt: str) -> int:
+def encode_increment(df: DataFrame, totals: dict, out_dir: str,
+                     cfg: EngineConfig, attempt: str, name_fmt: str) -> int:
     """THE increment writer of append_documents and streaming epochs:
-    encode `df` into `parts` new part ids from the base one lineage
-    read allocates (allocate_part_ids) and commit one lineage batch.
-    Returns the parts committed: 0, writing nothing, for an empty `df`
-    (its plan `totals`) or a replayed `attempt` (lineage holds it).
+    encode `df` into parts_for(its rows) new part ids from the base one
+    lineage read allocates (allocate_part_ids) and commit one lineage
+    batch. Returns the parts committed: 0, writing nothing, for an
+    empty `df` (its plan `totals`) or a replayed `attempt` (lineage
+    holds it). Refuses a day_hash table before anything is written: its
+    partition ids are a pure function of (day(warc_ts), host bucket),
+    which delete_rows/reencode_late recompute to locate partitions, and
+    hash-planned increments would break that silently (late data on
+    day_hash tables goes through reencode_late).
 
     One part whose Arrow size (payload bytes plus 8 per row and column,
     for offsets and fixed-width values) fits the session's collect
     bound (max_result_bytes) is encoded on the driver from one Arrow
     collect: no salt map, no exchange, no kernel task (the reference
     writes each block range in-process, write_parquet.rs:160-221).
-    Otherwise `df` is planned alone into `parts` partitions, heavy
-    hosts salted at ``cfg.salt_threshold_rows``, and encode_footers
-    runs."""
+    Otherwise `df` is planned alone, heavy hosts salted at
+    ``cfg.salt_threshold_rows``, and encode_footers runs."""
+    meta = load_plan_meta(out_dir)
+    if meta and meta.get("scheme") == "day_hash":
+        raise ValueError(
+            "appends and stream epochs support hash-scheme tables only; "
+            "day_hash tables take late data via reencode_late")
     if not totals["n_rows"]:
         return 0
     lin = lineage_table(out_dir, ["partition_id", "attempt_id"])
     if lin is not None and pc.any(pc.equal(lin["attempt_id"],
                                            attempt)).as_py():
         return 0
+    parts = parts_for(totals["n_rows"], cfg)
     base = allocate_part_ids(out_dir, lin, parts)
     arrow_bytes = (totals["n_bytes"] or 0) \
         + 8 * totals["n_rows"] * len(df.columns)
@@ -1062,7 +1062,7 @@ def encode_documents(spark: SparkSession, df: DataFrame, out_dir: str,
         if num_parts is None:
             if n_rows is None:
                 n_rows = totals()["n_rows"]
-            num_parts = max(1, -(-n_rows // cfg.target_partition_rows))
+            num_parts = parts_for(n_rows, cfg)
         if n_rows is not None:
             # straggler control (measured on the 300k-doc bench): the
             # salt threshold must track the actual partition size — a
@@ -1093,8 +1093,7 @@ def encode_documents(spark: SparkSession, df: DataFrame, out_dir: str,
         if scheme == "day_hash":
             t = totals()
             n_days = (t["d1"] - t["d0"]).days + 1
-            buckets = max(1, -(-int(t["n_rows"]) // n_days
-                               // cfg.target_partition_rows))
+            buckets = parts_for(-(-int(t["n_rows"]) // n_days), cfg)
             num_parts = n_days * buckets
             planned = plan_partitions_day_hash(
                 df, salt, (t["d0"], buckets, num_parts))

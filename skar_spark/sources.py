@@ -23,11 +23,9 @@ Options (all strings):
   AND lang bloom families, probed at planning), row-group pruning and
   the EXACT filter inside each read task;
 - ``part_ids``: comma list of partition ids; the pruned files are
-  restricted to them (an empty list reads nothing);
-- ``cursor`` / ``page_files``: bounded pagination, the reference's
-  `next_block` cursor (handler.rs:252-258) — start at part index
-  ``cursor``, read at most ``page_files`` partitions; `read_paged(...)`
-  also returns the resume cursor;
+  restricted to them (an empty list reads nothing). `read_paged(...)`
+  pins a cursor page with it (the reference's `next_block` cursor,
+  handler.rs:252-258) and returns the resume cursor;
 - ``as_of``: unix seconds; snapshot time travel on tables encoded with
   ``EngineConfig.retain_superseded`` resolves the file set to the
   snapshot committed at or before that instant (Iceberg time-travel
@@ -119,9 +117,9 @@ def _where(options) -> list[dict]:
 
 def _member_files(path: str, where: list[dict], options) -> list[str]:
     """The files a read of `where` under `options` may touch: the pruned
-    members (``as_of``, ``include_hot``) restricted to ``part_ids``,
-    before the cursor page. The reader's planner and read_paged's
-    cursor both take it, so they always agree."""
+    members (``as_of``, ``include_hot``) restricted to ``part_ids``.
+    The reader's planner and read_paged's page both take it, so they
+    always agree."""
     from skar_spark.engine.decode import _file_part_index, prune_selections
 
     ao = options.get("as_of")
@@ -239,13 +237,8 @@ class SkarReader(DataSourceReader):
     def partitions(self):
         # planning runs in a Python worker with no SparkSession — the
         # engine's pruner is driver-local, so it runs here as well
-        from skar_spark.engine.decode import page_slice
-
-        pf = self.options.get("page_files")
-        files = page_slice(_member_files(self.path, self.where, self.options),
-                           int(self.options.get("cursor", 0)),
-                           int(pf) if pf else None)
-        return [SkarPartition(f) for f in files]
+        return [SkarPartition(f) for f in
+                _member_files(self.path, self.where, self.options)]
 
     def read(self, partition: SkarPartition):
         if partition is None:  # Spark's placeholder when no partitions
@@ -336,15 +329,16 @@ def read_paged(spark, path: str, cursor: int = 0, page_files: int = 64,
                **options) -> tuple:
     """Bounded partial read through the skar DataSource with a resume
     cursor — the `next_block` pagination analog
-    (skar/src/query/handler.rs:252-258) for batch callers. Returns (DataFrame over at most `page_files` partitions,
-    next_cursor); next_cursor is None when this page completes the scan,
-    else pass it back to continue. The page membership is derived with
-    the SAME pruning + ordering the reader's planner uses, so the
-    DataFrame and the cursor always agree. Wall-clock budgeting
-    (time_limit_ms) lives in engine.decode.scan_paged, which collects
-    incrementally; a DataFrame-returning API can only bound volume.
-    `options` are the reader's other options (`where`, `part_ids`,
-    `as_of`, ...)."""
+    (skar/src/query/handler.rs:252-258) for batch callers. Returns
+    (DataFrame over at most `page_files` partitions, next_cursor);
+    next_cursor is None when this page completes the scan, else pass it
+    back to continue. The page is computed here with the reader's own
+    pruning and pinned by its ``part_ids``, so every action on the
+    DataFrame reads the same partitions; a part committed later joins
+    a later page. Wall-clock budgeting (time_limit_ms) lives in
+    engine.decode.scan_paged, which collects incrementally; a
+    DataFrame-returning API can only bound volume. `options` are the
+    reader's other options (`where`, `part_ids`, `as_of`, ...)."""
     from skar_spark.engine.decode import _file_part_index, page_slice
 
     opts = {k: str(v) for k, v in options.items()}
@@ -352,9 +346,8 @@ def read_paged(spark, path: str, cursor: int = 0, page_files: int = 64,
     page = remaining[:page_files]
     nxt = (_file_part_index(remaining[len(page)])
            if len(remaining) > len(page) else None)
-    return spark.read.format("skar").options(
-        cursor=str(cursor), page_files=str(page_files), **opts
-    ).load(path), nxt
+    opts["part_ids"] = ",".join(str(_file_part_index(f)) for f in page)
+    return spark.read.format("skar").options(**opts).load(path), nxt
 
 
 def register(spark) -> None:

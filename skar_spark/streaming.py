@@ -8,7 +8,8 @@ flushes to parquet + index, and checkpoint-resume
 Spark realization: `readStream` over the landing directory →
 `foreachBatch` running the increment writer of batch appends
 (`encode.encode_increment`) per micro-batch (the analog of the hot→cold
-flush), with
+flush), so an epoch is sized like an append (one part per
+``target_partition_rows`` rows, the reference's max_file_size), with
 
 - exactly-once at the sink via Spark's streaming checkpoint (epoch ids)
   *plus* our per-partition lineage — double bookkeeping exactly like the
@@ -75,7 +76,6 @@ def _quarantine_poison(exc: Exception, input_dir: str,
 
 def stream_encode(spark: SparkSession, input_dir: str, out_dir: str,
                   cfg: EngineConfig = DEFAULT,
-                  parts_per_batch: int = 8,
                   checkpoint_dir: str | None = None,
                   max_files_per_trigger: int = 16,
                   max_bytes_per_trigger: int | None = None,
@@ -89,7 +89,9 @@ def stream_encode(spark: SparkSession, input_dir: str, out_dir: str,
 
     Returns the StreamingQuery. Use `.trigger(availableNow)` semantics:
     the query drains what is present and stops (good for tests/cron);
-    a long-running deployment would drop availableNow.
+    a long-running deployment would drop availableNow. Each epoch is
+    one encode_increment: an epoch below ``cfg.target_partition_rows``
+    is one part encoded on the driver, and a day_hash table refuses it.
 
     Resilience (mirror of the reference source's exponential-backoff
     retry + endpoint rate limiting, rpc-client/src/rpc_client.rs:66-84,
@@ -170,7 +172,7 @@ def stream_encode(spark: SparkSession, input_dir: str, out_dir: str,
         # Spark writes the query's persistent id when the query starts
         stream_id = json.loads(storage.get_bytes(
             os.path.join(checkpoint, "metadata")))["id"]
-        encode_increment(bdf, totals, parts_per_batch, out_dir, cfg,
+        encode_increment(bdf, totals, out_dir, cfg,
                          f"epoch-{stream_id}-{epoch_id}",
                          f"part-e{int(epoch_id)}-{{pid:09d}}.skar")
         return totals["n_bytes"] or 0

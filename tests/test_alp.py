@@ -173,7 +173,6 @@ def test_engine_evolved_float_column_picks_alp(spark, tmp_path):
 
     q = stream_encode(spark, str(land), out,
                       EngineConfig(max_row_group_size=2000),
-                      parts_per_batch=1,
                       schema_ddl=DOCS_DDL + ", quality double")
     q.awaitTermination(120)
 

@@ -119,6 +119,36 @@ def test_append_rejects_day_hash_tables(spark, tmp_path):
         append_documents(spark, docs, out, CFG)
 
 
+def test_stream_rejects_day_hash_tables(spark, tmp_path):
+    """A stream epoch is refused like an append, before it writes a
+    part file or a lineage row."""
+    import os
+
+    import numpy as np
+    import pyarrow.parquet as pq
+    from pyspark.errors import StreamingQueryException
+
+    from skar_spark.engine.encode import lineage_table
+    from skar_spark.streaming import stream_encode
+    from skar_spark.synth import synth_batch
+
+    out = str(tmp_path / "dh")
+    docs = synth_documents(spark, 300, partitions=2)
+    encode_documents(spark, docs, out, CFG, n_rows=300, scheme="day_hash")
+    files, lin = sorted(os.listdir(os.path.join(out, "parts"))), \
+        lineage_table(out)
+    land = tmp_path / "land"
+    land.mkdir()
+    pq.write_table(synth_batch(np.arange(300, 400)),
+                   str(land / "f.parquet"))
+    q = stream_encode(spark, str(land), out, CFG, max_retries=0,
+                      checkpoint_dir=str(tmp_path / "ckpt"))
+    with pytest.raises(StreamingQueryException, match="day_hash"):
+        q.awaitTermination(120)
+    assert sorted(os.listdir(os.path.join(out, "parts"))) == files
+    assert lineage_table(out).equals(lin)
+
+
 def test_append_empty_increment_is_noop(spark, table):
     out, _t1, _n, _docs = table
     before = scan(spark, out).count()

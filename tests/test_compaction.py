@@ -27,15 +27,18 @@ PER_FILE = 400
 
 @pytest.fixture(scope="module")
 def streamed(spark, tmp_path_factory):
-    """12 small parts from 3 streaming epochs (4 parts/epoch)."""
+    """12 small parts from 3 streaming epochs (4 parts/epoch: a
+    100-row target over 400-row epochs)."""
     d = tmp_path_factory.mktemp("cmp_landing")
     out = str(tmp_path_factory.mktemp("cmp") / "out")
     for i in range(3):
         pq.write_table(
             synth_batch(np.arange(i * PER_FILE, (i + 1) * PER_FILE)),
             str(d / f"f{i}.parquet"))
-        stream_encode(spark, str(d), out, CFG,
-                      parts_per_batch=4).awaitTermination(120)
+        stream_encode(spark, str(d), out,
+                      EngineConfig(max_row_group_size=500,
+                                   target_partition_rows=100)
+                      ).awaitTermination(120)
     return out
 
 
@@ -183,7 +186,7 @@ def test_stream_append_after_compaction(spark, streamed, tmp_path):
     pq.write_table(new, str(d / "late.parquet"))
     # fresh checkpoint: a new landing source restarts epoch numbering;
     # the high-water floor keeps its pids disjoint from everything prior
-    stream_encode(spark, str(d), out, CFG, parts_per_batch=2,
+    stream_encode(spark, str(d), out, CFG,
                   checkpoint_dir=str(tmp_path / "ckpt_append")
                   ).awaitTermination(120)
 

@@ -150,6 +150,31 @@ def test_paged_read_cursor_resumes_to_completion(spark, encoded):
     assert len(urls) == total
 
 
+def test_read_paged_page_is_pinned(spark, tmp_path):
+    """The page read_paged returns is the page it computed: a part
+    appended after the call (its id is above every existing one) joins
+    no earlier page, even the last one, whose cursor is None."""
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    from skar_spark.engine.encode import append_documents
+    from skar_spark.sources import read_paged
+    from skar_spark.synth import DOCS_DDL, synth_batch
+
+    out = str(tmp_path / "out")
+    encode_documents(spark, synth_documents(spark, 2_000, partitions=4),
+                     out, CFG, n_rows=2_000)
+    df, cursor = read_paged(spark, out, page_files=64)
+    assert cursor is None
+    inc = str(tmp_path / "inc.parquet")
+    pq.write_table(synth_batch(np.arange(2_000, 2_100)), inc)
+    assert append_documents(spark, spark.read.schema(DOCS_DDL).parquet(inc),
+                            out, CFG) == 1
+    assert df.count() == 2_000
+    assert df.count() == 2_000
+    assert spark.read.format("skar").load(out).count() == 2_100
+
+
 def test_stream_read_drains_completed_table(spark, encoded, tmp_path):
     """readStream.format("skar") over a completed batch table drains it
     exactly once (availableNow) and matches the batch read."""
@@ -179,10 +204,10 @@ def test_stream_read_tails_new_commits(spark, tmp_path):
     landing = tmp_path / "landing"
     landing.mkdir()
     out = str(tmp_path / "tail_out")
-    scfg = EngineConfig(max_row_group_size=500)
+    # several parts per epoch: 1,000 rows → 4, then 600 → 3
+    scfg = EngineConfig(max_row_group_size=500, target_partition_rows=250)
     pq.write_table(synth_batch(np.arange(0, 1000)), str(landing / "f0.parquet"))
-    stream_encode(spark, str(landing), out, scfg,
-                  parts_per_batch=4).awaitTermination(120)
+    stream_encode(spark, str(landing), out, scfg).awaitTermination(120)
 
     ckpt = str(tmp_path / "tail_ckpt")
     sink = str(tmp_path / "tail_sink")
@@ -204,8 +229,7 @@ def test_stream_read_tails_new_commits(spark, tmp_path):
     # new landing data → new epoch with strictly higher part indices
     pq.write_table(synth_batch(np.arange(1000, 1600)),
                    str(landing / "f1.parquet"))
-    stream_encode(spark, str(landing), out, scfg,
-                  parts_per_batch=4).awaitTermination(120)
+    stream_encode(spark, str(landing), out, scfg).awaitTermination(120)
 
     got = drain()
     assert got.count() == 1600             # sink accumulates old + new

@@ -4,8 +4,11 @@ other increment goes through the encode_footers exchange. The driver
 route must write the same part bytes and footer row as the exchange
 would, and run at most two Spark jobs."""
 
+import dataclasses
 import hashlib
 
+import numpy as np
+import pyarrow.parquet as pq
 import pytest
 
 from skar_spark.config import EngineConfig
@@ -13,6 +16,7 @@ from skar_spark.engine import encode
 from skar_spark.engine.decode import scan
 from skar_spark.engine.encode import (append_documents, encode_documents,
                                       lineage_table)
+from skar_spark.streaming import stream_encode
 from skar_spark.synth import DOCS_DDL, synth_batch
 
 pytestmark = pytest.mark.spark
@@ -114,14 +118,35 @@ def test_other_increments_take_the_exchange(spark, tmp_path, monkeypatch):
     out = str(tmp_path / "t")
     _table(spark, out)
     calls = _footers_spy(monkeypatch)
-    assert append_documents(spark, _docs(spark, 400, 1_000, 3), out, CFG,
-                            parts=2) == 2
+    two_parts = dataclasses.replace(CFG, target_partition_rows=300)
+    assert append_documents(spark, _docs(spark, 400, 1_000, 3), out,
+                            two_parts) == 2
     assert calls == [[2, 3]]
     monkeypatch.setattr(encode, "max_result_bytes", lambda _s: 1 << 10)
     assert append_documents(spark, _docs(spark, 1_000, 1_100, 1), out,
                             CFG) == 1
     assert calls == [[2, 3], [4]]
     assert scan(spark, out).count() == 1_100
+
+
+@pytest.mark.parametrize("target,routes", [(1_000, []), (250, [[0, 1, 2]])])
+def test_stream_epoch_is_sized_by_the_target(spark, tmp_path, monkeypatch,
+                                             target, routes):
+    """A 600-row epoch commits ceil(600 / target) parts: one, on the
+    driver route, under a 1,000-row target; three through
+    encode_footers under a 250-row target."""
+    land = tmp_path / "land"
+    land.mkdir()
+    pq.write_table(synth_batch(np.arange(0, 600)), str(land / "f.parquet"))
+    out = str(tmp_path / "out")
+    calls = _footers_spy(monkeypatch)
+    stream_encode(spark, str(land), out,
+                  dataclasses.replace(CFG, target_partition_rows=target)
+                  ).awaitTermination(120)
+    assert calls == routes
+    assert sorted(lineage_table(out)["partition_id"].to_pylist()) == \
+        list(range(-(-600 // target)))
+    assert scan(spark, out).count() == 600
 
 
 def test_collect_bound_is_the_sessions_max_result_size(spark):

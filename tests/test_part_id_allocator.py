@@ -51,7 +51,7 @@ def _df(spark, tmp_path, name: str, t: pa.Table):
 def _stream(spark, tmp_path, name: str, t: pa.Table, out: str,
             checkpoint: str | None = None) -> None:
     d = _landed(tmp_path, name, t)
-    stream_encode(spark, d, out, CFG, parts_per_batch=4,
+    stream_encode(spark, d, out, CFG,
                   checkpoint_dir=checkpoint).awaitTermination(120)
 
 
@@ -100,6 +100,5 @@ def test_replayed_epoch_writes_nothing(spark, tmp_path):
     os.remove(os.path.join(commits, str(last)))
     os.remove(os.path.join(commits, f".{last}.crc"))
     stream_encode(spark, str(tmp_path / "land"), out, CFG,
-                  parts_per_batch=4,
                   checkpoint_dir=ckpt).awaitTermination(120)
     _assert_exactly_once(spark, out, t)

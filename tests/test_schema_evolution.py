@@ -106,7 +106,7 @@ def test_stream_append_new_column_end_to_end(spark, tmp_path):
     pq.write_table(synth_batch(np.arange(0, 800)), str(land / "a.parquet"))
     out = str(tmp_path / "tbl")
 
-    q = stream_encode(spark, str(land), out, CFG, parts_per_batch=2)
+    q = stream_encode(spark, str(land), out, CFG)
     q.awaitTermination(120)
     cols, types = load_table_schema(out)
     assert "quality" not in cols
@@ -118,7 +118,7 @@ def test_stream_append_new_column_end_to_end(spark, tmp_path):
         "quality",
         pa.array((np.arange(800, 1600) % 100) / 100.0, pa.float64()))
     pq.write_table(t2, str(land / "b.parquet"))
-    q2 = stream_encode(spark, str(land), out, CFG, parts_per_batch=2,
+    q2 = stream_encode(spark, str(land), out, CFG,
                        schema_ddl=DOCS_DDL + ", quality double")
     q2.awaitTermination(120)
 
@@ -153,13 +153,13 @@ def test_datasource_reads_evolved_table(spark, tmp_path):
     land.mkdir()
     pq.write_table(synth_batch(np.arange(0, 600)), str(land / "a.parquet"))
     out = str(tmp_path / "tbl")
-    q = stream_encode(spark, str(land), out, CFG, parts_per_batch=2)
+    q = stream_encode(spark, str(land), out, CFG)
     q.awaitTermination(120)
 
     t2 = synth_batch(np.arange(600, 900)).append_column(
         "quality", pa.array(np.full(300, 0.5), pa.float64()))
     pq.write_table(t2, str(land / "b.parquet"))
-    q2 = stream_encode(spark, str(land), out, CFG, parts_per_batch=2,
+    q2 = stream_encode(spark, str(land), out, CFG,
                        schema_ddl=DOCS_DDL + ", quality double")
     q2.awaitTermination(120)
 
@@ -181,13 +181,15 @@ def test_compaction_materializes_evolution(spark, tmp_path):
     land.mkdir()
     pq.write_table(synth_batch(np.arange(0, 600)), str(land / "a.parquet"))
     out = str(tmp_path / "tbl")
-    q = stream_encode(spark, str(land), out, CFG, parts_per_batch=3)
+    # 3 parts per 600-row epoch, each below compaction's small_rows
+    scfg = EngineConfig(max_row_group_size=500, target_partition_rows=200)
+    q = stream_encode(spark, str(land), out, scfg)
     q.awaitTermination(120)
 
     t2 = synth_batch(np.arange(600, 1200)).append_column(
         "quality", pa.array(np.full(600, 0.25), pa.float64()))
     pq.write_table(t2, str(land / "b.parquet"))
-    q2 = stream_encode(spark, str(land), out, CFG, parts_per_batch=3,
+    q2 = stream_encode(spark, str(land), out, scfg,
                        schema_ddl=DOCS_DDL + ", quality double")
     q2.awaitTermination(120)
 
@@ -219,12 +221,12 @@ def test_query_handler_and_scan_paged_on_evolved_table(spark, tmp_path):
     land.mkdir()
     pq.write_table(synth_batch(np.arange(0, 400)), str(land / "a.parquet"))
     out = str(tmp_path / "tbl")
-    q = stream_encode(spark, str(land), out, CFG, parts_per_batch=2)
+    q = stream_encode(spark, str(land), out, CFG)
     q.awaitTermination(120)
     t2 = synth_batch(np.arange(400, 600)).append_column(
         "quality", pa.array(np.full(200, 0.75), pa.float64()))
     pq.write_table(t2, str(land / "b.parquet"))
-    q2 = stream_encode(spark, str(land), out, CFG, parts_per_batch=2,
+    q2 = stream_encode(spark, str(land), out, CFG,
                        schema_ddl=DOCS_DDL + ", quality double")
     q2.awaitTermination(120)
 
@@ -323,8 +325,7 @@ def test_stream_onto_tz_naive_table(spark, tmp_path):
     landing.mkdir()
     epoch = synth_batch(np.arange(600, 1000))
     pq.write_table(epoch, str(landing / "e.parquet"))
-    stream_encode(spark, str(landing), out, CFG,
-                  parts_per_batch=2).awaitTermination(120)
+    stream_encode(spark, str(landing), out, CFG).awaitTermination(120)
     assert load_table_schema(out)[1]["warc_ts"] == "ts:us:"
 
     got = scan(spark, out).select(

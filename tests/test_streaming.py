@@ -27,7 +27,7 @@ def landing(tmp_path_factory):
 
 def test_stream_encode_drains_and_roundtrips(spark, landing, tmp_path):
     out = str(tmp_path / "stream_out")
-    q = stream_encode(spark, landing, out, CFG, parts_per_batch=4)
+    q = stream_encode(spark, landing, out, CFG)
     q.awaitTermination(120)
 
     dec = scan(spark, out)
@@ -39,7 +39,7 @@ def test_stream_encode_drains_and_roundtrips(spark, landing, tmp_path):
     assert back.exceptAll(src).count() == 0
 
     # restart with nothing new: checkpoint makes it a no-op (exactly-once)
-    q2 = stream_encode(spark, landing, out, CFG, parts_per_batch=4)
+    q2 = stream_encode(spark, landing, out, CFG)
     q2.awaitTermination(60)
     assert scan(spark, out).count() == 2500
 
@@ -72,7 +72,7 @@ def test_backpressure_bounds_microbatch_volume(spark, tmp_path):
             synth_batch(np.arange(i * per_file, (i + 1) * per_file)),
             str(d / f"f{i:02d}.parquet"))
     out = str(tmp_path / "bp_out")
-    q = stream_encode(spark, str(d), out, CFG, parts_per_batch=2,
+    q = stream_encode(spark, str(d), out, CFG,
                       max_files_per_trigger=4)
     q.awaitTermination(180)
 
@@ -107,7 +107,7 @@ def test_poison_file_quarantined_stream_survives(spark, tmp_path):
     poison.write_bytes(b"PAR1 this is not really a parquet file \xff\x00" * 40)
 
     out = str(tmp_path / "poison_out")
-    q = stream_encode(spark, str(d), out, CFG, parts_per_batch=2)
+    q = stream_encode(spark, str(d), out, CFG)
     q.awaitTermination(180)
 
     # the poison file was moved aside, visibly — never silently dropped
@@ -208,18 +208,18 @@ def test_transient_failure_retried_with_backoff(spark, tmp_path, monkeypatch):
     pq.write_table(synth_batch(np.arange(0, 400)), str(d / "a.parquet"))
     out = str(tmp_path / "transient_out")
 
-    real_plan = encode_mod.plan_partitions
+    real_alloc = encode_mod.allocate_part_ids
     fails = {"n": 2}
 
-    def flaky_plan(*args, **kwargs):
+    def flaky_alloc(*args, **kwargs):
         if fails["n"] > 0:
             fails["n"] -= 1
             raise RuntimeError("simulated transient planner fault")
-        return real_plan(*args, **kwargs)
+        return real_alloc(*args, **kwargs)
 
-    # the epoch plans through encode.encode_increment
-    monkeypatch.setattr(encode_mod, "plan_partitions", flaky_plan)
-    q = stream_encode(spark, str(d), out, CFG, parts_per_batch=2,
+    # every epoch allocates its part ids in encode.encode_increment
+    monkeypatch.setattr(encode_mod, "allocate_part_ids", flaky_alloc)
+    q = stream_encode(spark, str(d), out, CFG,
                       max_retries=3, backoff_base_sec=0.05)
     q.awaitTermination(120)
     assert fails["n"] == 0  # both injected faults were consumed by retries
@@ -246,7 +246,7 @@ def test_max_bytes_per_trigger_bounds_epoch_bytes(spark, tmp_path):
             str(d / f"f{i}.parquet"))
     fsize = os.path.getsize(str(d / "f0.parquet"))
     out = str(tmp_path / "bytes_out")
-    q = stream_encode(spark, str(d), out, CFG, parts_per_batch=2,
+    q = stream_encode(spark, str(d), out, CFG,
                       max_files_per_trigger=100,   # files don't bound
                       max_bytes_per_trigger=int(fsize * 1.5))
     q.awaitTermination(180)
@@ -291,7 +291,7 @@ def test_max_bytes_per_sec_paces_intake(spark, tmp_path):
     rate = total / 4.0               # → ≥ 4 s of pacing across epochs
     out = str(tmp_path / "rate_out")
     t0 = _time.time()
-    q = stream_encode(spark, str(d), out, CFG, parts_per_batch=2,
+    q = stream_encode(spark, str(d), out, CFG,
                       max_files_per_trigger=1,
                       max_bytes_per_sec=rate)
     q.awaitTermination(240)
@@ -338,7 +338,7 @@ def test_stream_auto_compaction_bounds_parts(spark, tmp_path):
                         str(d / f"f{i}.parquet"))
     out = str(tmp_path / "ac_out")
     cfg = EngineConfig(max_row_group_size=500, target_partition_rows=5000)
-    q = stream_encode(spark, str(d), out, cfg, parts_per_batch=4,
+    q = stream_encode(spark, str(d), out, cfg,
                       max_files_per_trigger=1, auto_compact_every=2)
     q.awaitTermination(240)
 
@@ -351,14 +351,16 @@ def test_stream_auto_compaction_bounds_parts(spark, tmp_path):
     back = dec.select("url", "text")
     assert src.exceptAll(back).count() == 0
     assert back.exceptAll(src).count() == 0
-    # 4 epochs × 4 parts/epoch = 16 raw parts; compaction ran at epochs
-    # 1 and 3, so the live set must be well below the raw count
+    # 4 epochs × 1 part/epoch (600 rows under the 5,000-row target; a
+    # smaller target would make the parts too big to be compaction
+    # candidates); compaction ran at epochs 1 and 3, so the live set
+    # must be well below the raw count
     n_live = read_lineage(spark, out, latest=True) \
         .filter(F.col("status") == "committed").count()
     assert n_live < 8, n_live
 
     # restart with nothing new: exactly-once via checkpoint
-    q2 = stream_encode(spark, str(d), out, cfg, parts_per_batch=4,
+    q2 = stream_encode(spark, str(d), out, cfg,
                        max_files_per_trigger=1, auto_compact_every=2)
     q2.awaitTermination(120)
     assert scan(spark, out).count() == 2400

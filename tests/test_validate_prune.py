@@ -463,14 +463,14 @@ def test_col_range_exact_on_pre_evolution_parts(spark, tmp_path):
     pq_.write_table(synth_batch(np.arange(0, 400)), str(land / "a.parquet"))
     out = str(tmp_path / "tbl")
     cfg = EngineConfig(max_row_group_size=200)
-    q = stream_encode(spark, str(land), out, cfg, parts_per_batch=1)
+    q = stream_encode(spark, str(land), out, cfg)
     q.awaitTermination(120)
 
     t2 = synth_batch(np.arange(400, 800)).append_column(
         "quality", pa.array((np.arange(400, 800) % 10) / 1.0,
                             pa.float64()))
     pq_.write_table(t2, str(land / "b.parquet"))
-    q2 = stream_encode(spark, str(land), out, cfg, parts_per_batch=1,
+    q2 = stream_encode(spark, str(land), out, cfg,
                        schema_ddl=DOCS_DDL + ", quality double")
     q2.awaitTermination(120)
 
