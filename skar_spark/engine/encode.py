@@ -194,11 +194,10 @@ def plan_totals(df: DataFrame) -> dict:
 
 
 def parts_for(n_rows: int, cfg: EngineConfig) -> int:
-    """THE partition count of `n_rows` rows: one part per
-    ``cfg.target_partition_rows`` (rounded up), at least one — the
-    reference's one flush threshold (max_file_size,
-    skar_runner.rs:285-353). Encodes, increments and compaction size
-    their output by it."""
+    """THE partition count of `n_rows` rows, for encodes, increments
+    and compaction: one part per ``cfg.target_partition_rows`` (rounded
+    up), at least one — the reference's one flush threshold
+    (max_file_size, skar_runner.rs:285-353)."""
     return max(1, -(-n_rows // cfg.target_partition_rows))
 
 
@@ -962,11 +961,9 @@ def encode_increment(df: DataFrame, totals: dict, out_dir: str,
     lineage read allocates (allocate_part_ids) and commit one lineage
     batch. Returns the parts committed: 0, writing nothing, for an
     empty `df` (its plan `totals`) or a replayed `attempt` (lineage
-    holds it). Refuses a day_hash table before anything is written: its
-    partition ids are a pure function of (day(warc_ts), host bucket),
-    which delete_rows/reencode_late recompute to locate partitions, and
-    hash-planned increments would break that silently (late data on
-    day_hash tables goes through reencode_late).
+    holds it). Refuses a day_hash table before anything is written:
+    delete_rows and reencode_late locate its partitions by (day(warc_ts),
+    host bucket), which hash-planned increments would break.
 
     One part whose Arrow size (payload bytes plus 8 per row and column,
     for offsets and fixed-width values) fits the session's collect

@@ -23,9 +23,10 @@ Options (all strings):
   AND lang bloom families, probed at planning), row-group pruning and
   the EXACT filter inside each read task;
 - ``part_ids``: comma list of partition ids; the pruned files are
-  restricted to them (an empty list reads nothing). `read_paged(...)`
-  pins a cursor page with it (the reference's `next_block` cursor,
-  handler.rs:252-258) and returns the resume cursor;
+  restricted to them (an empty list reads nothing; an id compaction
+  retired raises). `read_paged(...)` pins a cursor page with it (the
+  reference's `next_block` cursor, handler.rs:252-258) and returns the
+  resume cursor;
 - ``as_of``: unix seconds; snapshot time travel on tables encoded with
   ``EngineConfig.retain_superseded`` resolves the file set to the
   snapshot committed at or before that instant (Iceberg time-travel
@@ -117,21 +118,30 @@ def _where(options) -> list[dict]:
 
 def _member_files(path: str, where: list[dict], options) -> list[str]:
     """The files a read of `where` under `options` may touch: the pruned
-    members (``as_of``, ``include_hot``) restricted to ``part_ids``.
-    The reader's planner and read_paged's page both take it, so they
-    always agree."""
+    members (``as_of``, ``include_hot``) restricted to ``part_ids`` (an
+    id compaction retired raises: its rows moved to new ids). The
+    reader's planner and read_paged's page both take it, so they agree."""
+    from skar_spark.engine.compact import is_compacted
     from skar_spark.engine.decode import _file_part_index, prune_selections
 
     ao = options.get("as_of")
-    files = prune_selections(
-        path, where, as_of=float(ao) if ao else None,
-        include_hot=str(options.get("include_hot", "")).lower()
-        in ("1", "true"))
+    view = {"as_of": float(ao) if ao else None,
+            "include_hot": str(options.get("include_hot", "")).lower()
+            in ("1", "true")}
+    files = prune_selections(path, where, **view)
     ids = options.get("part_ids")
-    if ids is not None:
-        keep = {int(p) for p in ids.split(",") if p.strip()}
-        return [f for f in files if _file_part_index(f) in keep]
-    return list(files)
+    if ids is None:
+        return list(files)
+    keep = {int(p) for p in ids.split(",") if p.strip()}
+    gone = keep - {_file_part_index(f) for f in files}
+    if gone and is_compacted(path):
+        gone -= {_file_part_index(f)
+                 for f in prune_selections(path, [{}], **view)}
+        if gone:
+            raise LookupError(
+                f"partitions {sorted(gone)} of {path} were compacted "
+                "after this read was planned; restart the read")
+    return [f for f in files if _file_part_index(f) in keep]
 
 
 class SkarPartition(InputPartition):
@@ -335,12 +345,14 @@ def read_paged(spark, path: str, cursor: int = 0, page_files: int = 64,
     back to continue. The page is computed here with the reader's own
     pruning and pinned by its ``part_ids``, so every action on the
     DataFrame reads the same partitions; a part committed later joins
-    a later page. Wall-clock budgeting (time_limit_ms) lives in
+    a later page, and compacting a page's partitions makes its actions
+    raise. Wall-clock budgeting (time_limit_ms) lives in
     engine.decode.scan_paged, which collects incrementally; a
     DataFrame-returning API can only bound volume. `options` are the
     reader's other options (`where`, `part_ids`, `as_of`, ...)."""
     from skar_spark.engine.decode import _file_part_index, page_slice
 
+    register(spark)
     opts = {k: str(v) for k, v in options.items()}
     remaining = page_slice(_member_files(path, _where(opts), opts), cursor)
     page = remaining[:page_files]

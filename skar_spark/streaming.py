@@ -91,16 +91,19 @@ def stream_encode(spark: SparkSession, input_dir: str, out_dir: str,
     the query drains what is present and stops (good for tests/cron);
     a long-running deployment would drop availableNow. Each epoch is
     one encode_increment: an epoch below ``cfg.target_partition_rows``
-    is one part encoded on the driver, and a day_hash table refuses it.
+    is one part encoded on the driver, in one thread (a smaller target
+    spreads a large epoch over parallel parts), and a day_hash table
+    refuses it.
 
     Resilience (mirror of the reference source's exponential-backoff
     retry + endpoint rate limiting, rpc-client/src/rpc_client.rs:66-84,
     endpoint.rs:191-245): a failed micro-batch is retried in-place with
-    exponential backoff; an unreadable landing file (poison) is moved to
-    `out_dir/quarantine/` with a loud log and the batch re-runs without
-    it (`ignoreMissingFiles` lets the fixed file list skip the moved
-    file) — quarantining is not counted against the retry budget, and
-    every quarantined file is visible on disk, never silently dropped.
+    exponential backoff (a refusal, ValueError, is not); an unreadable
+    landing file (poison) is moved to `out_dir/quarantine/` with a loud
+    log and the batch re-runs without it (`ignoreMissingFiles` lets the
+    fixed file list skip the moved file) — quarantining is not counted
+    against the retry budget, and every quarantined file is visible on
+    disk, never silently dropped.
 
     `max_bytes_per_sec` is the RATE-limit analog of the reference's
     per-endpoint req/s governor (endpoint.rs:191-245): where
@@ -163,26 +166,19 @@ def stream_encode(spark: SparkSession, input_dir: str, out_dir: str,
                                str(max_files_per_trigger))
     stream = reader.parquet(input_dir)
 
-    def encode_batch(bdf: DataFrame, epoch_id: int) -> int:
-        """Plan, encode and commit one epoch; returns its input bytes
-        (the plan's totals)."""
-        totals = plan_totals(bdf)
-        if totals["n_rows"] == 0:
-            return 0
-        # Spark writes the query's persistent id when the query starts
-        stream_id = json.loads(storage.get_bytes(
-            os.path.join(checkpoint, "metadata")))["id"]
-        encode_increment(bdf, totals, out_dir, cfg,
-                         f"epoch-{stream_id}-{epoch_id}",
-                         f"part-e{int(epoch_id)}-{{pid:09d}}.skar")
-        return totals["n_bytes"] or 0
-
     def process_batch(bdf: DataFrame, epoch_id: int) -> None:
         t_batch0 = time.time()
         attempts = 0
         while True:
             try:
-                admitted = float(encode_batch(bdf, epoch_id))
+                totals = plan_totals(bdf)
+                # Spark writes the query's persistent id at its start
+                stream_id = json.loads(storage.get_bytes(
+                    os.path.join(checkpoint, "metadata")))["id"]
+                encode_increment(bdf, totals, out_dir, cfg,
+                                 f"epoch-{stream_id}-{epoch_id}",
+                                 f"part-e{int(epoch_id)}-{{pid:09d}}.skar")
+                admitted = float(totals["n_bytes"] or 0)
                 if max_bytes_per_sec:
                     # token-bucket pacing (see docstring): sleep off any
                     # rate excess before the next trigger is planned
@@ -207,7 +203,8 @@ def stream_encode(spark: SparkSession, input_dir: str, out_dir: str,
                           f"poison file → {poison}", file=sys.stderr)
                     continue
                 attempts += 1
-                if attempts > max_retries:
+                # a ValueError is a refusal no retry can change
+                if attempts > max_retries or isinstance(e, ValueError):
                     raise
                 delay = backoff_base_sec * 2 ** (attempts - 1)
                 print(f"[stream_encode] epoch {epoch_id}: transient "

@@ -119,15 +119,16 @@ def test_append_rejects_day_hash_tables(spark, tmp_path):
         append_documents(spark, docs, out, CFG)
 
 
-def test_stream_rejects_day_hash_tables(spark, tmp_path):
+def test_stream_rejects_day_hash_tables(spark, tmp_path, monkeypatch):
     """A stream epoch is refused like an append, before it writes a
-    part file or a lineage row."""
+    part file or a lineage row, and the refusal is not retried."""
     import os
 
     import numpy as np
     import pyarrow.parquet as pq
     from pyspark.errors import StreamingQueryException
 
+    from skar_spark import streaming
     from skar_spark.engine.encode import lineage_table
     from skar_spark.streaming import stream_encode
     from skar_spark.synth import synth_batch
@@ -146,6 +147,23 @@ def test_stream_rejects_day_hash_tables(spark, tmp_path):
     with pytest.raises(StreamingQueryException, match="day_hash"):
         q.awaitTermination(120)
     assert sorted(os.listdir(os.path.join(out, "parts"))) == files
+    assert lineage_table(out).equals(lin)
+
+    # the refusal is not retried: a retry budget runs the epoch once
+    calls = []
+    real = streaming.encode_increment
+
+    def spy(*a, **kw):
+        calls.append(1)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(streaming, "encode_increment", spy)
+    q = stream_encode(spark, str(land), out, CFG, max_retries=3,
+                      backoff_base_sec=0.05,
+                      checkpoint_dir=str(tmp_path / "ckpt2"))
+    with pytest.raises(StreamingQueryException, match="day_hash"):
+        q.awaitTermination(120)
+    assert len(calls) == 1
     assert lineage_table(out).equals(lin)
 
 

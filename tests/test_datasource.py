@@ -175,6 +175,25 @@ def test_read_paged_page_is_pinned(spark, tmp_path):
     assert spark.read.format("skar").load(out).count() == 2_100
 
 
+def test_read_paged_page_fails_after_compaction(spark, tmp_path):
+    """A compaction between read_paged and the page's first action
+    retires the page's partitions: the action raises instead of
+    reading fewer rows."""
+    from skar_spark.engine.compact import compact_parts
+    from skar_spark.sources import read_paged
+
+    out = str(tmp_path / "out")
+    encode_documents(spark, synth_documents(spark, 2_000, partitions=4),
+                     out, CFG, n_rows=2_000)
+    df, cursor = read_paged(spark, out, page_files=64)
+    assert cursor is None
+    assert compact_parts(spark, out, CFG, small_rows=10_000)["new_parts"]
+    with pytest.raises(Exception, match="compacted"):
+        df.count()
+    again, _ = read_paged(spark, out, page_files=64)
+    assert again.count() == 2_000
+
+
 def test_stream_read_drains_completed_table(spark, encoded, tmp_path):
     """readStream.format("skar") over a completed batch table drains it
     exactly once (availableNow) and matches the batch read."""
