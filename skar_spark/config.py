@@ -62,8 +62,9 @@ class EngineConfig:
 DEFAULT = EngineConfig()
 
 # size-optimized profile for cold/archival tiers: a deeper symbol table
-# (the leveled vectorized encoder's cost scales with merge DEPTH, not
-# symbol count, so 56 learned symbols cost ~4 level passes) + zstd6 →
+# (the encoder makes one compiled greedy pass per merge level, so its
+# cost scales with merge DEPTH, not symbol count: 56 learned symbols cost
+# ~4-5 level passes) + zstd6 →
 # 0.775× the plain+zstd9 golden size at ~15 MB/s/core (r3's default
 # speed). Use for write-once data where bytes/doc dominates $ at 100 TB.
 ARCHIVE = EngineConfig(fsst_max_symbols=64, zstd_level=6)

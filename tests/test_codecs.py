@@ -128,16 +128,19 @@ def _level_replace_chain(data, table):
     return data
 
 
-def test_fsst_both_level_steps_roundtrip_and_chain_matches_reference(
+def test_fsst_kernel_matches_numpy_pass_and_decodes_chain_blobs(
         monkeypatch):
-    """Every level through numpy (crossover 0) and every level through
-    the Arrow chain (crossover 10**9) must round-trip exactly on learned
-    tables of both profiles and on a hand-built table with one level of
-    40 symbols; the chain-only output must equal the sequential
-    ``bytes.replace`` chain byte for byte."""
+    """On learned tables of both profiles and a hand-built table with one
+    level of 40 symbols: the compiled level pass and the numpy pass give
+    the same bytes, shorter than the input, which decode exactly; a blob
+    of the earlier sequential ``bytes.replace`` encoder (parts already on
+    disk) decodes exactly too."""
     import skar_spark.codecs.fsst as FS
+    from skar_spark.codecs import native
     from skar_spark.config import ARCHIVE, DEFAULT
 
+    if native.kernel() is None:
+        pytest.skip("no C compiler: the numpy pass is the only encoder")
     rng = np.random.default_rng(5)
     words = [bytes(rng.integers(97, 110, rng.integers(3, 9)).astype("u1"))
              for _ in range(40)]
@@ -159,13 +162,15 @@ def test_fsst_both_level_steps_roundtrip_and_chain_matches_reference(
     tables.append(wide)
     for tbl in tables:
         assert tbl
-        for crossover in (FS.NUMPY_LEVEL_MIN, 0, 10**9):
-            monkeypatch.setattr(FS, "NUMPY_LEVEL_MIN", crossover)
-            comp = FS.fsst_compress(data, tbl)
-            assert len(comp) < len(data)
-            assert FS.fsst_decompress(comp, tbl) == data
-            if crossover == 10**9:
-                assert comp == _level_replace_chain(data, tbl)
+        comp = FS.fsst_compress(data, tbl)
+        assert len(comp) < len(data)
+        assert FS.fsst_decompress(comp, tbl, len(data)) == data
+        chain = _level_replace_chain(data, tbl)
+        assert FS.fsst_decompress(chain, tbl, len(data)) == data
+        with monkeypatch.context() as m:
+            m.setattr(native, "_loaded", [None])
+            assert FS.fsst_compress(data, tbl) == comp
+            assert FS.fsst_decompress(chain, tbl, len(data)) == data
 
 
 def test_bad_leading_magic_raises_value_error():
@@ -177,6 +182,38 @@ def test_bad_leading_magic_raises_value_error():
         parse_blob(b"X" + blob[1:])
     with pytest.raises(ValueError, match="bad magic"):
         decode_array(b"X" + blob[1:])
+
+
+def test_corrupt_fsst_section_raises_value_error(monkeypatch):
+    """A truncated or corrupt FSST table or code section raises
+    ValueError on the compiled decode and the fallback alike: the
+    expansion never writes past its ``raw``-byte output."""
+    from skar_spark.codecs import fsst as FS
+    from skar_spark.codecs import native
+    from skar_spark.config import DEFAULT
+    data = b"".join(b"alpha beta gamma %d " % (i % 97) for i in range(3000))
+    offs = np.zeros(2, np.int64)
+    offs[1] = len(data)
+    meta, secs = FS.encode(offs, data, DEFAULT)
+    assert secs[0][0] > 0
+    bad = [
+        [secs[0], secs[1][:-1], secs[2]],            # codes cut short
+        [secs[0], secs[1] + secs[1][:5], secs[2]],   # codes run long
+        [secs[0][:-1], secs[1], secs[2]],            # table cut short
+        # a chain of self-doubling symbols far longer than the section
+        [bytes([40]) + b"".join(bytes([c, c - 1 if c > 1 else 65,
+                                       c - 1 if c > 1 else 65])
+                                for c in range(1, 41)),
+         secs[1], secs[2]],
+    ]
+    for loaded in ([None], None):
+        with monkeypatch.context() as m:
+            if loaded is not None:
+                m.setattr(native, "_loaded", loaded)
+            assert FS.decode(meta, secs, 1)[1] == data
+            for sections in bad:
+                with pytest.raises(ValueError, match="corrupt FSST"):
+                    FS.decode(meta, sections, 1)
 
 
 def test_list_float_null_elements_refused():
