@@ -57,6 +57,7 @@ from skar_spark.engine.encode import (
     _meta_dir,
     _swap_lineage,
     allocate_part_ids,
+    collect_footers,
     encode_footers,
     is_retained,
     latest_lineage,
@@ -202,7 +203,7 @@ def compact_parts(spark: SparkSession, out_dir: str,
     # parts re-encode the table's already-merged schema (tcols above),
     # so _conform drops it and the lineage schema stays
     # identical across write paths
-    new = _conform(new_footers.toArrow(), LINEAGE_SCHEMA.names)
+    new = _conform(collect_footers(new_footers), LINEAGE_SCHEMA.names)
     _swap_lineage(out_dir, pa.concat_tables([keep, new]),
                   _SWAP_SUFFIXES[1])
 

@@ -7,8 +7,12 @@ skar/src/skar_runner.rs:285-353 + write_parquet.rs + build_parquet_idx.rs):
     documents df
       → derive host (substring of url; the skew key — analog of skar's
         address/topic0 skew, SURVEY §1.3)
-      → salt heavy hosts (count>threshold → split into ceil(n/threshold)
-        salts; broadcast the small heavy-host map)
+      → plan: ONE action (plan_salt) — rollup("host") of rows, bytes
+        and day range, its grand total and at most 2K+1 heavy-host
+        candidates collected (K = rows // threshold + 1); gives the
+        totals (part count, day layout) and the exact heavy-host map
+      → salt heavy hosts (rows or bytes over the threshold → split into
+        enough salts that each chunk fits; broadcast the small map)
       → deterministic part_id = xxhash64(host, salt) mod P
         (deterministic partition membership is what makes resume exact —
         the analog of skar's block-range folder naming)
@@ -29,14 +33,16 @@ Resume: completed part_ids from the lineage table are anti-joined away
 before the shuffle (mirror of db.next_block_num(), db/mod.rs:68-86).
 Scale notes: the only global state is the lineage table (tiny — one row
 per partition); everything else is per-partition. At 10^12 docs the same
-plan holds: the heavy-host count is a map-side-combined agg over a
-low-cardinality key, the salt map broadcast is KBs, and the single
-shuffle is on a uniform hashed key (salting bounds any partition's size).
+plan holds: the planning rollup is a map-side-combined agg over a
+low-cardinality key, its collect is bounded by rows / threshold (not by
+the host count), the salt map broadcast is KBs, and the single shuffle
+is on a uniform hashed key (salting bounds any partition's size).
 """
 
 from __future__ import annotations
 
-import functools
+import contextlib
+import math
 import os
 import time
 import uuid
@@ -131,7 +137,16 @@ def append_lineage_rows(footers: "DataFrame", out_dir: str) -> int:
     spool needed on object stores).
 
     Returns the number of rows committed."""
-    return _commit_footers(footers.toArrow(), out_dir)
+    return _commit_footers(collect_footers(footers), out_dir)
+
+
+def collect_footers(footers: "DataFrame") -> pa.Table:
+    """Run an encode_footers dispatch and collect its footer rows: the
+    exchange's map job and the kernel job, described as the encode
+    phase (job_description)."""
+    with job_description(footers.sparkSession,
+                         "skar encode: exchange + kernel, footer collect"):
+        return footers.toArrow()
 
 
 def _commit_footers(t: pa.Table, out_dir: str) -> int:
@@ -172,25 +187,42 @@ def _row_bytes():
                for c in ("url", "text", "html", "lang"))
 
 
-def host_stats(df: DataFrame) -> DataFrame:
-    """Per-host (count, bytes) in one map-side-combinable pass — the
-    planning statistic for salting. Bytes matter as much as rows: web
-    hosts skew in DOCUMENT SIZE too (a host of 10× average-length pages
-    makes a 10×-CPU encode chunk at equal row count), and the straggler
-    tail is CPU ∝ bytes, not rows."""
-    return df.groupBy("host").agg(F.count("*").alias("count"),
-                                  F.sum(_row_bytes()).alias("bytes"))
+@contextlib.contextmanager
+def job_description(spark: SparkSession, phase: str):
+    """Name the Spark jobs launched inside the block after their
+    `phase` (the UI's and status API's job description), then restore
+    the caller's description. Job groups are left alone: callers
+    (tests, tracers) group jobs by them."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(phase)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
+
+
+_TOTALS = ("n_rows", "n_bytes", "d0", "d1")
+
+
+def _totals_aggs() -> list:
+    """The plan totals as aggregates, named _TOTALS: rows, payload
+    bytes (_row_bytes) and the day range of ``warc_ts``."""
+    return [F.count("*").alias("n_rows"),
+            F.sum(_row_bytes()).alias("n_bytes"),
+            F.min(F.to_date("warc_ts")).alias("d0"),
+            F.max(F.to_date("warc_ts")).alias("d1")]
 
 
 def plan_totals(df: DataFrame) -> dict:
-    """THE totals action of every plan: one ``df.agg`` giving
-    ``n_rows``, ``n_bytes`` (the host_stats byte measure, summed) and
-    the day range ``d0``/``d1`` of ``warc_ts``."""
-    return df.agg(F.count("*").alias("n_rows"),
-                  F.sum(_row_bytes()).alias("n_bytes"),
-                  F.min(F.to_date("warc_ts")).alias("d0"),
-                  F.max(F.to_date("warc_ts")).alias("d1")
-                  ).collect()[0].asDict()
+    """The totals of `df` (``n_rows``, ``n_bytes``, and the day range
+    ``d0``/``d1`` of ``warc_ts``) as one ``df.agg``: the plan of a
+    writer that needs the row count before it can pick its salt
+    threshold (encode_documents without `n_rows`), and of appends and
+    stream epochs, which route on it (encode_increment). Every other
+    plan takes its totals from plan_salt's one action."""
+    with job_description(df.sparkSession, "skar plan: totals"):
+        return df.agg(*_totals_aggs()).collect()[0].asDict()
 
 
 def parts_for(n_rows: int, cfg: EngineConfig) -> int:
@@ -201,30 +233,66 @@ def parts_for(n_rows: int, cfg: EngineConfig) -> int:
     return max(1, -(-n_rows // cfg.target_partition_rows))
 
 
-def salt_rows(df: DataFrame, threshold_rows: int, totals: dict) -> pa.Table:
-    """The heavy-host map (SALT_MAP_DDL, sorted by host): hosts above
-    `threshold_rows` in ROWS or in BYTES (the threshold times the
-    average row size from `totals`) are split into enough salts that
-    every chunk fits both bounds; `chunk_bytes` (estimated bytes per
-    salted chunk) drives the bin-packing of heavy chunks
-    (plan_partitions). One action, and only heavy candidates reach the
-    driver. None can exist when the COUNTED rows are below the
-    threshold (no host has more rows than the input, and the byte
-    bound then exceeds the input's bytes), so that case runs no job."""
+def _host_rollup(df: DataFrame, threshold_rows: int, k: int) -> list:
+    """The rows of plan_salt's one action: ``rollup("host")`` of
+    `df`'s _TOTALS (rows, payload bytes, day range), grand-total row
+    first, then hosts above `threshold_rows` rows, then by bytes
+    descending — at most 2k + 1 of them. Bytes matter as much as rows:
+    web hosts skew in DOCUMENT SIZE too (a host of 10× average-length
+    pages makes a 10×-CPU encode chunk at equal row count)."""
+    roll = with_host(df).rollup("host").agg(
+        *_totals_aggs(), F.grouping_id().alias("grand"))
+    with job_description(df.sparkSession,
+                         "skar plan: totals + heavy hosts"):
+        return (roll.orderBy(F.col("grand").desc(),
+                             (F.col("n_rows") > threshold_rows).desc(),
+                             F.col("n_bytes").desc())
+                .limit(2 * k + 1).collect())
+
+
+def plan_salt(df: DataFrame, threshold_rows: int, n_rows: int | None = None,
+              totals: dict | None = None) -> tuple[dict, pa.Table]:
+    """THE planning action: `df`'s plan totals (the plan_totals dict)
+    and its heavy-host map (SALT_MAP_DDL, sorted by host), from one
+    Spark action.
+
+    A host is heavy above `threshold_rows` T in ROWS or in BYTES (T
+    times the average row size); it is split into enough salts that
+    every chunk fits both bounds, and `chunk_bytes` (estimated bytes
+    per salted chunk) drives the bin-packing of heavy chunks
+    (plan_partitions). Fewer than N/T hosts can exceed either bound,
+    so with K = N // T + 1 the 2K + 1 rows _host_rollup collects (the
+    grand total, then heavy candidates first) hold every heavy host;
+    the driver applies the bounds. N is the caller's row count: `n_rows`
+    (a hint; stale or None is allowed) or the counted `totals`. When
+    the action's own count needs a larger K, it runs once more with
+    that count, so the map is always exact. Counted `totals` below T
+    admit no heavy host (no host has more rows than the input, and the
+    byte bound then exceeds the input's bytes): that case runs no job."""
     schema = _arrow_schema(SALT_MAP_DDL)
-    if totals["n_rows"] < threshold_rows:
-        return schema.empty_table()
+    if totals is not None:
+        if totals["n_rows"] < threshold_rows:
+            return totals, schema.empty_table()
+        n_rows = totals["n_rows"]
+    k = (n_rows or 0) // threshold_rows + 1
+    rows = _host_rollup(df, threshold_rows, k)
+    if rows and (need := rows[0]["n_rows"] // threshold_rows + 1) > k:
+        rows = _host_rollup(df, threshold_rows, need)
+    if not rows:  # an empty input has no groups, not even the grand total
+        return dict.fromkeys(_TOTALS) | {"n_rows": 0}, schema.empty_table()
+    totals = {c: rows[0][c] for c in _TOTALS}
+    # the bounds in double arithmetic, as Spark SQL would evaluate them
     avg_row = (totals["n_bytes"] or 1) / max(totals["n_rows"] or 1, 1)
     thr_bytes = float(threshold_rows) * avg_row
-    n_salts = F.ceil(F.greatest(F.col("count") / threshold_rows,
-                                F.col("bytes") / thr_bytes))
-    hc = host_stats(with_host(df))
-    return (hc.filter((F.col("count") > threshold_rows)
-                      | (F.col("bytes") > thr_bytes))
-            .select("host", n_salts.cast("int").alias("n_salts"),
-                    (F.col("bytes") / n_salts).cast("long")
-                    .alias("chunk_bytes"))
-            .toArrow().cast(schema).sort_by("host"))
+    heavy = []
+    for r in rows[1:]:
+        count, size = r["n_rows"], float(r["n_bytes"])
+        if count > threshold_rows or size > thr_bytes:
+            n_salts = math.ceil(max(count / threshold_rows,
+                                    size / thr_bytes))
+            heavy.append({"host": r["host"], "n_salts": n_salts,
+                          "chunk_bytes": int(size / n_salts)})
+    return totals, pa.Table.from_pylist(heavy, schema).sort_by("host")
 
 
 def _apply_salt(df: DataFrame, salt: pa.Table) -> DataFrame:
@@ -299,9 +367,10 @@ def plan_partitions(df: DataFrame, num_parts: int,
                     loads: dict | None = None) -> DataFrame:
     """Attach deterministic `part_id` with heavy-host salting.
 
-    `salt` is the heavy-host table (salt_rows, or a persisted map);
-    None derives it from `df` at ``cfg.salt_threshold_rows`` (the
-    totals action plus at most one heavy-host action). Given a table,
+    `salt` is the heavy-host table (plan_salt, or a persisted map);
+    None derives it from `df` at ``cfg.salt_threshold_rows`` (plan_salt
+    without a row count: its action, and a rerun when `df` holds T or
+    more rows). Given a table,
     no Spark action runs: the KNOWN heavy chunks get bin-packed part ids
     on the driver (largest-first into least-loaded — the only chunks
     big enough to matter are exactly the ones the salt map enumerates),
@@ -314,7 +383,7 @@ def plan_partitions(df: DataFrame, num_parts: int,
     chunk_bytes is hash-only.
     """
     if salt is None:
-        salt = salt_rows(df, cfg.salt_threshold_rows, plan_totals(df))
+        _, salt = plan_salt(df, cfg.salt_threshold_rows)
     if "chunk_bytes" in salt.column_names and salt.num_rows:
         parts, chunk_loads = _pack_heavy_chunks(salt, num_parts)
         if loads is not None:
@@ -627,7 +696,7 @@ def _salt_map_dir(out_dir: str) -> str:
 
 
 def save_salt_map(out_dir: str, salt: pa.Table) -> None:
-    """Persist the heavy-host table (salt_rows) as one parquet object
+    """Persist the heavy-host table (plan_salt) as one parquet object
     through the storage seam — metadata, one row per heavy host, so no
     Spark job."""
     import io
@@ -993,9 +1062,8 @@ def encode_increment(df: DataFrame, totals: dict, out_dir: str,
         return _commit_footers(
             encode_part(t, base, out_dir, cfg, attempt, name_fmt), out_dir)
     loads: dict[int, int] = {}
-    planned = plan_partitions(
-        df, parts, cfg, salt_rows(df, cfg.salt_threshold_rows, totals),
-        loads)
+    _, salt = plan_salt(df, cfg.salt_threshold_rows, totals=totals)
+    planned = plan_partitions(df, parts, cfg, salt, loads)
     planned = planned.withColumn(
         "part_id", (F.col("part_id") + F.lit(base)).cast("int"))
     footers = encode_footers(planned, list(range(base, base + parts)),
@@ -1020,6 +1088,16 @@ def encode_documents(spark: SparkSession, df: DataFrame, out_dir: str,
     (mirror of the reference's per-folder flush+index commit,
     skar_runner.rs:285-353). `max_batches` lets tests kill the job
     mid-way to exercise resume.
+
+    Planning is one Spark action (plan_salt: totals and heavy hosts)
+    when `n_rows` is given — a hint: a stale one costs one rerun, never
+    a wrong map. The day_hash layout comes from the same totals.
+    Without `n_rows`, the hash scheme counts first (plan_totals) unless
+    `num_parts` is given, since its salt threshold tracks the average
+    part size; otherwise plan_salt runs without a count and reruns once
+    when its own count holds the threshold or more rows. A resume
+    replans from the persisted salt map and plan metadata with no
+    planning action.
 
     `verify=True` with resume re-reads every previously-committed part
     file and checks its content checksum against lineage before trusting
@@ -1047,9 +1125,11 @@ def encode_documents(spark: SparkSession, df: DataFrame, out_dir: str,
     # both plans with no Spark job
     salt = load_salt_map(out_dir) if resume else None
     stored_meta = load_plan_meta(out_dir) if resume else None
-    # the one totals action (rows, bytes, day range) serves partition
-    # count, day layout and salt thresholds; run only if one needs it
-    totals = functools.cache(lambda: plan_totals(df))
+    # the totals (rows, bytes, day range) serve partition count, day
+    # layout and salt thresholds: counted first by plan_totals only when
+    # the salt threshold needs a row count nobody gave, else taken from
+    # plan_salt's one action
+    totals = None
     if scheme == "day_hash":
         cfg = dataclasses.replace(
             cfg, salt_threshold_rows=min(
@@ -1058,7 +1138,8 @@ def encode_documents(spark: SparkSession, df: DataFrame, out_dir: str,
     elif salt is None or stored_meta is None:
         if num_parts is None:
             if n_rows is None:
-                n_rows = totals()["n_rows"]
+                totals = plan_totals(df)
+                n_rows = totals["n_rows"]
             num_parts = parts_for(n_rows, cfg)
         if n_rows is not None:
             # straggler control (measured on the 300k-doc bench): the
@@ -1077,7 +1158,7 @@ def encode_documents(spark: SparkSession, df: DataFrame, out_dir: str,
                 cfg.salt_threshold_rows,
                 max(500, n_rows // max(num_parts, 1) // 4)))
     if salt is None:
-        salt = salt_rows(df, cfg.salt_threshold_rows, totals())
+        totals, salt = plan_salt(df, cfg.salt_threshold_rows, n_rows, totals)
         save_salt_map(out_dir, salt)
     loads: dict[int, int] = {}
     if stored_meta is not None:
@@ -1088,7 +1169,7 @@ def encode_documents(spark: SparkSession, df: DataFrame, out_dir: str,
     else:
         day_meta = {}
         if scheme == "day_hash":
-            t = totals()
+            t = totals or plan_totals(df)
             n_days = (t["d1"] - t["d0"]).days + 1
             buckets = parts_for(-(-int(t["n_rows"]) // n_days), cfg)
             num_parts = n_days * buckets
@@ -1271,8 +1352,8 @@ def _rewrite_partitions(spark: SparkSession, out_dir: str,
     sub = planned.filter(F.col("part_id").isin(affected))
     attempt = f"{tag}-{uuid.uuid4().hex[:8]}"
     name_fmt = _kernel_name_fmt(cfg, attempt, out_dir)
-    t = encode_footers(sub, affected, out_dir, cfg, attempt, name_fmt,
-                       loads).toArrow()
+    t = collect_footers(encode_footers(sub, affected, out_dir, cfg, attempt,
+                                       name_fmt, loads))
     emptied = sorted(set(affected) - set(t["partition_id"].to_pylist()))
     if emptied:
         from skar_spark.codecs.framing import type_from_code

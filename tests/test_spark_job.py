@@ -145,17 +145,18 @@ def test_planning_launches_no_unneeded_job(spark, docs):
     """An increment with fewer counted rows than the salt threshold has
     no heavy host, so its heavy-host step runs no Spark job; neither
     does planning with a given salt table."""
-    from skar_spark.engine.encode import plan_totals, salt_rows
+    from skar_spark.engine.encode import plan_salt, plan_totals
 
     inc = docs.limit(64)
     inc_totals = plan_totals(inc)
-    salt = salt_rows(docs, CFG.salt_threshold_rows, plan_totals(docs))
+    _, salt = plan_salt(docs, CFG.salt_threshold_rows,
+                        totals=plan_totals(docs))
     assert salt.num_rows  # the Zipf head host is heavy
     sc = spark.sparkContext
     group = "plan-no-jobs"
     sc.setJobGroup(group, "planning only")
     try:
-        light = salt_rows(inc, CFG.salt_threshold_rows, inc_totals)
+        _, light = plan_salt(inc, CFG.salt_threshold_rows, totals=inc_totals)
         plan_partitions(docs, 8, CFG, salt)
         assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
         spark.range(1).count()  # the check itself sees jobs of this group
