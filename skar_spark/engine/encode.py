@@ -226,10 +226,11 @@ def plan_totals(df: DataFrame) -> dict:
 
 
 def parts_for(n_rows: int, cfg: EngineConfig) -> int:
-    """THE partition count of `n_rows` rows, for encodes, increments
-    and compaction: one part per ``cfg.target_partition_rows`` (rounded
+    """THE partition count of `n_rows` new rows, for encodes and
+    increments: one part per ``cfg.target_partition_rows`` (rounded
     up), at least one — the reference's one flush threshold
-    (max_file_size, skar_runner.rs:285-353)."""
+    (max_file_size, skar_runner.rs:285-353). Compaction, which merges
+    rows already written, rounds down instead (compact_parts)."""
     return max(1, -(-n_rows // cfg.target_partition_rows))
 
 
@@ -264,11 +265,16 @@ def plan_salt(df: DataFrame, threshold_rows: int, n_rows: int | None = None,
     so with K = N // T + 1 the 2K + 1 rows _host_rollup collects (the
     grand total, then heavy candidates first) hold every heavy host;
     the driver applies the bounds. N is the caller's row count: `n_rows`
-    (a hint; stale or None is allowed) or the counted `totals`. When
-    the action's own count needs a larger K, it runs once more with
-    that count, so the map is always exact. Counted `totals` below T
-    admit no heavy host (no host has more rows than the input, and the
-    byte bound then exceeds the input's bytes): that case runs no job."""
+    (a hint; stale or None is allowed) or the counted `totals`.
+
+    With a stale or missing N the collect is still exact unless it came
+    back full (2K + 1 rows) with a heavy last row: rows are ordered by
+    ``n_rows > T`` and then by bytes, so behind a light last row every
+    uncollected host is light too. Only then does the action run once
+    more, at the K of its own count, which is exact (at most 2K − 2
+    hosts are heavy). Counted `totals` below T admit no heavy host (no
+    host has more rows than the input, and the byte bound then exceeds
+    the input's bytes): that case runs no job."""
     schema = _arrow_schema(SALT_MAP_DDL)
     if totals is not None:
         if totals["n_rows"] < threshold_rows:
@@ -276,22 +282,25 @@ def plan_salt(df: DataFrame, threshold_rows: int, n_rows: int | None = None,
         n_rows = totals["n_rows"]
     k = (n_rows or 0) // threshold_rows + 1
     rows = _host_rollup(df, threshold_rows, k)
-    if rows and (need := rows[0]["n_rows"] // threshold_rows + 1) > k:
-        rows = _host_rollup(df, threshold_rows, need)
     if not rows:  # an empty input has no groups, not even the grand total
         return dict.fromkeys(_TOTALS) | {"n_rows": 0}, schema.empty_table()
     totals = {c: rows[0][c] for c in _TOTALS}
     # the bounds in double arithmetic, as Spark SQL would evaluate them
     avg_row = (totals["n_bytes"] or 1) / max(totals["n_rows"] or 1, 1)
     thr_bytes = float(threshold_rows) * avg_row
+
+    def is_heavy(r) -> bool:
+        return r["n_rows"] > threshold_rows or float(r["n_bytes"]) > thr_bytes
+
+    if len(rows) == 2 * k + 1 and is_heavy(rows[-1]):
+        rows = _host_rollup(df, threshold_rows,
+                            totals["n_rows"] // threshold_rows + 1)
     heavy = []
-    for r in rows[1:]:
+    for r in filter(is_heavy, rows[1:]):
         count, size = r["n_rows"], float(r["n_bytes"])
-        if count > threshold_rows or size > thr_bytes:
-            n_salts = math.ceil(max(count / threshold_rows,
-                                    size / thr_bytes))
-            heavy.append({"host": r["host"], "n_salts": n_salts,
-                          "chunk_bytes": int(size / n_salts)})
+        n_salts = math.ceil(max(count / threshold_rows, size / thr_bytes))
+        heavy.append({"host": r["host"], "n_salts": n_salts,
+                      "chunk_bytes": int(size / n_salts)})
     return totals, pa.Table.from_pylist(heavy, schema).sort_by("host")
 
 
@@ -361,17 +370,12 @@ def _pack_heavy_chunks(salt: pa.Table, num_parts: int
     return parts, loads
 
 
-def plan_partitions(df: DataFrame, num_parts: int,
-                    cfg: EngineConfig = DEFAULT,
-                    salt: pa.Table | None = None,
+def plan_partitions(df: DataFrame, num_parts: int, salt: pa.Table,
                     loads: dict | None = None) -> DataFrame:
     """Attach deterministic `part_id` with heavy-host salting.
 
-    `salt` is the heavy-host table (plan_salt, or a persisted map);
-    None derives it from `df` at ``cfg.salt_threshold_rows`` (plan_salt
-    without a row count: its action, and a rerun when `df` holds T or
-    more rows). Given a table,
-    no Spark action runs: the KNOWN heavy chunks get bin-packed part ids
+    `salt` is the heavy-host table (plan_salt, or a persisted map). No
+    Spark action runs: the KNOWN heavy chunks get bin-packed part ids
     on the driver (largest-first into least-loaded — the only chunks
     big enough to matter are exactly the ones the salt map enumerates),
     one broadcast attaches salt and packed parts, and light hosts hash
@@ -382,8 +386,6 @@ def plan_partitions(df: DataFrame, num_parts: int,
     {part_id: packed bytes} for encode_footers. A legacy map without
     chunk_bytes is hash-only.
     """
-    if salt is None:
-        _, salt = plan_salt(df, cfg.salt_threshold_rows)
     if "chunk_bytes" in salt.column_names and salt.num_rows:
         parts, chunk_loads = _pack_heavy_chunks(salt, num_parts)
         if loads is not None:
@@ -1023,6 +1025,26 @@ def max_result_bytes(spark: SparkSession) -> float:
     return size or float("inf")
 
 
+def plan_increment(df: DataFrame, totals: dict, base: int, parts: int,
+                   cfg: EngineConfig
+                   ) -> tuple[DataFrame, list[int], dict[int, int]]:
+    """THE placement of new rows, for the exchange route of appends and
+    stream epochs and for compaction: `df` planned into `parts` parts
+    numbered from `base`, each host in one part unless plan_salt splits
+    it at ``cfg.salt_threshold_rows``. `totals` are counted plan totals
+    (only their exact ``n_rows`` is read). Returns the planned frame,
+    its part ids and the packed loads for encode_footers' largest-first
+    bucket order. Fewer rows than the threshold run no Spark job;
+    otherwise plan_salt's one action does."""
+    loads: dict[int, int] = {}
+    _, salt = plan_salt(df, cfg.salt_threshold_rows, totals=totals)
+    planned = plan_partitions(df, parts, salt, loads)
+    planned = planned.withColumn(
+        "part_id", (F.col("part_id") + F.lit(base)).cast("int"))
+    return (planned, list(range(base, base + parts)),
+            {p + base: b for p, b in loads.items()})
+
+
 def encode_increment(df: DataFrame, totals: dict, out_dir: str,
                      cfg: EngineConfig, attempt: str, name_fmt: str) -> int:
     """THE increment writer of append_documents and streaming epochs:
@@ -1039,8 +1061,8 @@ def encode_increment(df: DataFrame, totals: dict, out_dir: str,
     bound (max_result_bytes) is encoded on the driver from one Arrow
     collect: no salt map, no exchange, no kernel task (the reference
     writes each block range in-process, write_parquet.rs:160-221).
-    Otherwise `df` is planned alone, heavy hosts salted at
-    ``cfg.salt_threshold_rows``, and encode_footers runs."""
+    Otherwise `df` is planned alone by plan_increment, the placement
+    compaction uses too, and encode_footers runs."""
     meta = load_plan_meta(out_dir)
     if meta and meta.get("scheme") == "day_hash":
         raise ValueError(
@@ -1061,15 +1083,10 @@ def encode_increment(df: DataFrame, totals: dict, out_dir: str,
         t = t.append_column("host", _derive_host(t["url"]))
         return _commit_footers(
             encode_part(t, base, out_dir, cfg, attempt, name_fmt), out_dir)
-    loads: dict[int, int] = {}
-    _, salt = plan_salt(df, cfg.salt_threshold_rows, totals=totals)
-    planned = plan_partitions(df, parts, cfg, salt, loads)
-    planned = planned.withColumn(
-        "part_id", (F.col("part_id") + F.lit(base)).cast("int"))
-    footers = encode_footers(planned, list(range(base, base + parts)),
-                             out_dir, cfg, attempt, name_fmt,
-                             {p + base: b for p, b in loads.items()})
-    return append_lineage_rows(footers, out_dir)
+    planned, part_ids, loads = plan_increment(df, totals, base, parts, cfg)
+    return append_lineage_rows(
+        encode_footers(planned, part_ids, out_dir, cfg, attempt, name_fmt,
+                       loads), out_dir)
 
 
 def encode_documents(spark: SparkSession, df: DataFrame, out_dir: str,
@@ -1095,7 +1112,7 @@ def encode_documents(spark: SparkSession, df: DataFrame, out_dir: str,
     Without `n_rows`, the hash scheme counts first (plan_totals) unless
     `num_parts` is given, since its salt threshold tracks the average
     part size; otherwise plan_salt runs without a count and reruns once
-    when its own count holds the threshold or more rows. A resume
+    only when its bounded collect may have missed a heavy host. A resume
     replans from the persisted salt map and plan metadata with no
     planning action.
 
@@ -1163,7 +1180,7 @@ def encode_documents(spark: SparkSession, df: DataFrame, out_dir: str,
     loads: dict[int, int] = {}
     if stored_meta is not None:
         # resume: the stored plan, as every partition rewrite replans
-        planned, _ = _replan_with_stored(spark, df, out_dir, cfg, loads,
+        planned, _ = _replan_with_stored(df, out_dir, loads,
                                          (stored_meta, salt))
         num_parts = stored_meta["num_parts"]
     else:
@@ -1177,7 +1194,7 @@ def encode_documents(spark: SparkSession, df: DataFrame, out_dir: str,
                 df, salt, (t["d0"], buckets, num_parts))
             day_meta = {"d0": t["d0"].isoformat(), "buckets": buckets}
         else:
-            planned = plan_partitions(df, num_parts, cfg, salt, loads)
+            planned = plan_partitions(df, num_parts, salt, loads)
         save_plan_meta(out_dir, {
             "scheme": scheme, "num_parts": num_parts,
             "salt_threshold_rows": cfg.salt_threshold_rows,
@@ -1265,8 +1282,8 @@ def _assert_no_appended_parts(out_dir: str, op: str,
             "re-encode first (or apply corrections before appending).")
 
 
-def _replan_with_stored(spark: SparkSession, df: DataFrame, out_dir: str,
-                        cfg: EngineConfig, loads: dict | None = None,
+def _replan_with_stored(df: DataFrame, out_dir: str,
+                        loads: dict | None = None,
                         stored: tuple[dict | None, pa.Table | None]
                         | None = None) -> tuple[DataFrame, dict]:
     """Replan `df` with the PERSISTED salt map + scheme parameters so
@@ -1286,12 +1303,11 @@ def _replan_with_stored(spark: SparkSession, df: DataFrame, out_dir: str,
             df, salt, (_dt.date.fromisoformat(meta["d0"]), meta["buckets"],
                        meta["num_parts"]))
     else:
-        planned = plan_partitions(df, meta["num_parts"], cfg, salt, loads)
+        planned = plan_partitions(df, meta["num_parts"], salt, loads)
     return planned, meta
 
 
-def _locate_partitions(spark: SparkSession, df: DataFrame, out_dir: str,
-                       cfg: EngineConfig, op: str, guard: str,
+def _locate_partitions(df: DataFrame, out_dir: str, op: str, guard: str,
                        url_located: str | None = None
                        ) -> tuple[DataFrame, list[int], tuple]:
     """THE guard-and-locate step of every partition rewrite
@@ -1319,8 +1335,7 @@ def _locate_partitions(spark: SparkSession, df: DataFrame, out_dir: str,
                 f"{op} requires the hash partition scheme{url_located}")
     _assert_no_appended_parts(out_dir, op, meta)
     stored = (meta, load_salt_map(out_dir))
-    planned, _ = _replan_with_stored(spark, df, out_dir, cfg,
-                                     stored=stored)
+    planned, _ = _replan_with_stored(df, out_dir, stored=stored)
     affected = [r.part_id for r in
                 planned.select("part_id").distinct().collect()]
     return planned, affected, stored
@@ -1347,8 +1362,7 @@ def _rewrite_partitions(spark: SparkSession, out_dir: str,
     whole rewrite visible or none of it (the default mode overwrites
     part files in place before that commit)."""
     loads: dict[int, int] = {}
-    planned, _ = _replan_with_stored(spark, corrected, out_dir, cfg, loads,
-                                     stored)
+    planned, _ = _replan_with_stored(corrected, out_dir, loads, stored)
     sub = planned.filter(F.col("part_id").isin(affected))
     attempt = f"{tag}-{uuid.uuid4().hex[:8]}"
     name_fmt = _kernel_name_fmt(cfg, attempt, out_dir)
@@ -1396,7 +1410,7 @@ def reencode_late(spark: SparkSession, full_df: DataFrame,
     import sys
 
     planned_late, affected, stored = _locate_partitions(
-        spark, late_df, out_dir, cfg, "reencode_late", "late-data rollback")
+        late_df, out_dir, "reencode_late", "late-data rollback")
     meta = stored[0]
     if meta["scheme"] == "day_hash" and min(affected, default=0) < 0:
         n_before = planned_late.filter(F.col("part_id") < 0).count()
@@ -1453,7 +1467,7 @@ def merge_updates(spark: SparkSession, updates_df: DataFrame,
     # hash scheme's url→partition pure function (or a url→partition
     # index, which the engine does not keep).
     _, affected, stored = _locate_partitions(
-        spark, updates_df, out_dir, cfg, "merge_updates", "merge",
+        updates_df, out_dir, "merge_updates", "merge",
         "; on a day_hash table use reencode_late with the corrected "
         "full dataset")
     if not affected:
@@ -1478,7 +1492,7 @@ def delete_rows(spark: SparkSession, urls_df: DataFrame, out_dir: str,
     from skar_spark.engine.decode import scan
 
     _, affected, stored = _locate_partitions(
-        spark, urls_df.select("url"), out_dir, cfg, "delete_rows", "delete",
+        urls_df.select("url"), out_dir, "delete_rows", "delete",
         " (day_hash partition membership depends on warc_ts, which a "
         "url set does not carry)")
     if not affected:

@@ -3,14 +3,10 @@
 A large-scale training pipeline treats image/audio/video as opaque
 `binary` columns with schema'd metadata, processed by Arrow-batched
 kernels. The actual media libraries (PIL/ffmpeg/torchaudio) are NOT in
-this container, so the decode step is STUBBED two ways:
-
-- ``decode_image_meta``: a deterministic fake decoder (parses a synthetic
-  header derived from the payload bytes) — keeps the Spark-side plumbing
-  (schema, batching, mapInArrow signature, partition behavior) fully real
-  and testable;
-- ``decode_image_real``: the real-library path, gated behind an
-  import-try that raises ``NotImplementedError`` here.
+this container, so the decode step is STUBBED: ``decode_image_meta`` is a
+deterministic fake decoder (parses a synthetic header derived from the
+payload bytes) that keeps the Spark-side plumbing (schema, batching,
+mapInArrow signature, partition behavior) fully real and testable.
 
 Everything crosses the executor boundary as Arrow batches (mapInArrow);
 the per-batch kernel is vectorized numpy over the binary buffers.
@@ -117,18 +113,6 @@ def decode_image_meta(df: DataFrame, id_col: str = "doc_id",
     return df.mapInArrow(kernel, schema=META_DDL)
 
 
-def decode_image_real(df: DataFrame) -> DataFrame:
-    """Real media decode path — requires PIL/ffmpeg, absent in this image."""
-    try:
-        import PIL.Image  # noqa: F401
-    except ImportError as e:
-        raise NotImplementedError(
-            "real image decode requires PIL; this container ships without "
-            "media libraries — use decode_image_meta (deterministic stub) "
-            "for plumbing tests") from e
-    raise NotImplementedError("wire PIL decode here when available")
-
-
 def q_multimodal_decode(spark, sf_dir: str) -> DataFrame:
     """Driver query: text lifted to an opaque media payload and run
     through the Arrow-batched metadata decoder. Hash-verified against
@@ -192,61 +176,6 @@ ORDER BY doc_id
 """
 
 
-RESIZE_DDL = ("doc_id long, out_w int, out_h int, out_c int, "
-              "pixels binary")
-
-
-def resize_image_stub(df: DataFrame, out_w: int = 32, out_h: int = 32,
-                      id_col: str = "doc_id",
-                      payload_col: str = "payload") -> DataFrame:
-    """Image-resize plumbing: Arrow-batched kernel producing fixed-size
-    'pixel' buffers. The DECODE is the deterministic stub (payload bytes
-    stand in for decoded pixels — no media libs in this container); the
-    Spark-side shape (schema, batching, per-row output buffers built by
-    one vectorized gather) is exactly what a PIL/libvips kernel plugs
-    into (swap `_fake_resize_gather` for the real decode+resize).
-    """
-    npix = out_w * out_h
-
-    def kernel(batches):
-        for batch in batches:
-            ids = batch.column(id_col)
-            pay = batch.column(payload_col)
-            n = len(pay)
-            buf = pay.combine_chunks() if isinstance(pay, pa.ChunkedArray) \
-                else pay
-            width = 8 if pa.types.is_large_binary(buf.type) else 4
-            odt = np.int64 if width == 8 else np.int32
-            offs = np.frombuffer(buf.buffers()[1], odt, count=n + 1,
-                                 offset=buf.offset * width).astype(np.int64)
-            data = np.frombuffer(buf.buffers()[2], np.uint8)
-            lens = offs[1:] - offs[:-1]
-            # vectorized 'resize': nearest-neighbor sample of npix bytes
-            # per row from the payload (one 2-D gather for the batch)
-            grid = np.arange(npix, dtype=np.int64)[None, :]
-            safe_lens = np.maximum(lens, 1)[:, None]
-            idx = offs[:-1, None] + (grid * safe_lens) // npix
-            if len(data):
-                pixels = data[np.clip(idx, 0, len(data) - 1)]
-            else:
-                pixels = np.zeros(idx.shape, np.uint8)
-            pixels[lens == 0] = 0
-            flat = pixels.reshape(-1)
-            out_offs = np.arange(0, (n + 1) * npix, npix, dtype=np.int32)
-            arr = pa.BinaryArray.from_buffers(
-                pa.binary(), n, [None, pa.py_buffer(out_offs.tobytes()),
-                                 pa.py_buffer(flat.tobytes())])
-            yield pa.record_batch({
-                "doc_id": ids.cast(pa.int64()),
-                "out_w": pa.array(np.full(n, out_w, np.int32)),
-                "out_h": pa.array(np.full(n, out_h, np.int32)),
-                "out_c": pa.array(np.ones(n, np.int32)),
-                "pixels": arr,
-            })
-
-    return df.mapInArrow(kernel, schema=RESIZE_DDL)
-
-
 FRAMES_DDL = ("doc_id long, frame_idx int, frame_off long, "
               "frame_len int, frame_fp long")
 _FRAME_BYTES = 4096
@@ -306,53 +235,6 @@ def sample_frames_stub(df: DataFrame, every_n: int = 4,
             })
 
     return df.mapInArrow(kernel, schema=FRAMES_DDL)
-
-
-AUDIO_DDL = "doc_id long, n_samples long, rms double, peak int"
-
-
-def audio_features_stub(df: DataFrame, id_col: str = "doc_id",
-                        payload_col: str = "payload") -> DataFrame:
-    """Audio feature extraction plumbing: payload bytes are treated as
-    signed 8-bit PCM samples; RMS + peak are computed per row with
-    cumsum/maximum.reduceat — real vectorized DSP over the stub decode
-    (swap the byte view for a torchaudio/ffmpeg decode on real infra)."""
-
-    def kernel(batches):
-        for batch in batches:
-            ids = batch.column(id_col)
-            pay = batch.column(payload_col)
-            n = len(pay)
-            buf = pay.combine_chunks() if isinstance(pay, pa.ChunkedArray) \
-                else pay
-            width = 8 if pa.types.is_large_binary(buf.type) else 4
-            odt = np.int64 if width == 8 else np.int32
-            offs = np.frombuffer(buf.buffers()[1], odt, count=n + 1,
-                                 offset=buf.offset * width).astype(np.int64)
-            data = np.frombuffer(buf.buffers()[2], np.uint8)
-            samples = data.view(np.int8).astype(np.float64)
-            lens = offs[1:] - offs[:-1]
-            sq = np.zeros(len(data) + 1)
-            np.cumsum(samples * samples, out=sq[1:])
-            sums = sq[offs[1:]] - sq[offs[:-1]]
-            rms = np.sqrt(sums / np.maximum(lens, 1))
-            rms[lens == 0] = 0.0
-            if len(data):
-                absmax = np.abs(samples).astype(np.int16)
-                peak = np.maximum.reduceat(
-                    np.concatenate([absmax, [0]]),
-                    np.minimum(offs[:-1], len(data) - 1))
-                peak = np.where(lens > 0, peak, 0)
-            else:
-                peak = np.zeros(n, np.int16)
-            yield pa.record_batch({
-                "doc_id": ids.cast(pa.int64()),
-                "n_samples": pa.array(lens, pa.int64()),
-                "rms": pa.array(np.round(rms, 6), pa.float64()),
-                "peak": pa.array(peak.astype(np.int32), pa.int32()),
-            })
-
-    return df.mapInArrow(kernel, schema=AUDIO_DDL)
 
 
 def q_multimodal_frames(spark, sf_dir: str) -> DataFrame:

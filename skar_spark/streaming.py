@@ -339,25 +339,3 @@ def windowed_rate(spark: SparkSession, input_dir: str,
             .groupBy(F.window("warc_ts", window), F.col("lang"))
             .agg(F.count("*").alias("n_docs"),
                  F.sum(F.octet_length("html")).alias("html_bytes")))
-
-
-def stream_dedup(spark: SparkSession, input_dir: str,
-                 watermark: str = "1 hour") -> DataFrame:
-    """Streaming exact dedup ahead of the encoder: drop re-crawled
-    duplicate documents ACROSS micro-batches with watermark-bounded
-    state.
-
-    `dropDuplicatesWithinWatermark` keeps one state row per content
-    hash and expires it once the event-time watermark passes its
-    timestamp + delay — so state size tracks the crawl's re-visit
-    horizon (the watermark), NOT corpus size. That is the only shape
-    that survives a 10^12-doc continuous ingest; an unbounded
-    `dropDuplicates` would accrete a corpus-sized state store. First
-    arrival wins (emitted immediately in append mode), matching the
-    batch `q_dedup_exact` min-id survivor rule under arrival order.
-    """
-    from skar_spark.synth import DOCS_DDL
-    stream = spark.readStream.schema(DOCS_DDL).parquet(input_dir)
-    keyed = stream.withColumn("text_sha", F.sha2(F.col("text"), 256))
-    return (keyed.withWatermark("warc_ts", watermark)
-            .dropDuplicatesWithinWatermark(["text_sha"]))

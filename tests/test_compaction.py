@@ -6,7 +6,6 @@ atomic lineage swap, archival guard on every writer."""
 import numpy as np
 import pyarrow.parquet as pq
 import pytest
-from pyspark.sql import functions as F
 
 from skar_spark.config import EngineConfig
 from skar_spark.engine.compact import compact_parts, is_compacted
@@ -25,8 +24,7 @@ CFG = EngineConfig(max_row_group_size=500)
 PER_FILE = 400
 
 
-@pytest.fixture(scope="module")
-def streamed(spark, tmp_path_factory):
+def _stream_small_parts(spark, tmp_path_factory) -> str:
     """12 small parts from 3 streaming epochs (4 parts/epoch: a
     100-row target over 400-row epochs)."""
     d = tmp_path_factory.mktemp("cmp_landing")
@@ -40,6 +38,103 @@ def streamed(spark, tmp_path_factory):
                                    target_partition_rows=100)
                       ).awaitTermination(120)
     return out
+
+
+@pytest.fixture(scope="module")
+def streamed(spark, tmp_path_factory):
+    return _stream_small_parts(spark, tmp_path_factory)
+
+
+def _described_jobs(spark, group: str, prefix: str) -> list[int]:
+    """The ids of job group `group`'s jobs whose description starts
+    with `prefix`, from the application status store."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)
+    found = []
+    for j in (jobs.apply(i) for i in range(jobs.size())):
+        desc = j.description()
+        if (j.jobGroup().isDefined() and j.jobGroup().get() == group
+                and desc.isDefined() and desc.get().startswith(prefix)):
+            found.append(j.jobId())
+    return found
+
+
+@pytest.mark.parametrize("salt_threshold_rows", [CFG.salt_threshold_rows,
+                                                 100])
+def test_compaction_places_hosts_like_an_increment(
+        spark, tmp_path_factory, monkeypatch, salt_threshold_rows):
+    """Compacted to 2 parts, the 12 streamed parts keep every host in
+    one part but the hosts the planner salted, so the lineage host bloom
+    prunes as after an encode. Candidates below the salt threshold (the
+    default config) launch no planning job; at or above it, the
+    heavy-host action runs once, before the archival marker."""
+    from skar_spark.engine import encode
+    from skar_spark.engine.partfile import read_part_file
+
+    out = _stream_small_parts(spark, tmp_path_factory)
+    salted, marked = set(), []
+    plan_salt = encode.plan_salt
+
+    def spy(*a, **k):
+        marked.append(is_compacted(out))
+        totals, salt = plan_salt(*a, **k)
+        salted.update(salt["host"].to_pylist())
+        return totals, salt
+
+    monkeypatch.setattr(encode, "plan_salt", spy)
+    sc = spark.sparkContext
+    group = f"compact-salt-{salt_threshold_rows}"
+    sc.setJobGroup(group, "compaction")
+    try:
+        res = compact_parts(
+            spark, out, EngineConfig(max_row_group_size=500,
+                                     target_partition_rows=600,
+                                     salt_threshold_rows=salt_threshold_rows))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert res["rows"] == 3 * PER_FILE
+    files = list_part_files(out)
+    assert len(files) == res["new_parts"] == 2
+    hosts = [set(read_part_file(f, columns=["host"])["host"].to_pylist())
+             for f in files]
+    assert hosts[0] and hosts[1] and hosts[0] & hosts[1] <= salted
+    assert marked == [False]  # planned once, before the marker
+    plan_jobs = _described_jobs(spark, group, "skar plan:")
+    if salt_threshold_rows > res["rows"]:
+        assert plan_jobs == [] and not salted
+    else:
+        assert plan_jobs and salted  # the Zipf head host is heavy
+
+
+def test_only_the_planner_assigns_part_ids():
+    """engine/encode.py is the one module that assigns a ``part_id``
+    column (plan_partitions, plan_partitions_day_hash, the increment's
+    base shift): every writer places rows through its planners. A call
+    counts when the column name it sets is the literal ``part_id``."""
+    import ast
+    import pathlib
+
+    import skar_spark
+
+    # the position of the name argument of each column-setting call
+    name_arg = {"withColumn": 0, "withColumns": 0, "withColumnRenamed": 1,
+                "alias": 0, "append_column": 0, "add_column": 1,
+                "set_column": 1}
+    root = pathlib.Path(skar_spark.__file__).parent
+    found = set()
+    for f in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(f.read_text())):
+            if not (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and len(node.args) > name_arg.get(node.func.attr, 99)):
+                continue
+            name = node.args[name_arg[node.func.attr]]
+            names = name.keys if isinstance(name, ast.Dict) else [name]
+            if any(isinstance(n, ast.Constant) and n.value == "part_id"
+                   for n in names):
+                found.add(f.relative_to(root).as_posix())
+    assert found == {"engine/encode.py"}
 
 
 def test_compact_consolidates_exactly_once(spark, streamed):

@@ -1,4 +1,4 @@
-"""Multimodal plumbing kernels: resize / frame-sample / audio features.
+"""Multimodal plumbing kernels: metadata decode / frame-sample.
 
 All stubs with REAL Spark-side plumbing (schema, Arrow batching,
 vectorized kernels) — the decode byte-view stands in for media libs
@@ -7,13 +7,10 @@ absent from this container.
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from skar_spark.ops.multimodal import (
     _FRAME_BYTES,
-    audio_features_stub,
     decode_image_meta,
-    resize_image_stub,
     sample_frames_stub,
 )
 
@@ -45,17 +42,6 @@ def test_decode_image_meta_lengths_and_determinism(spark, payloads):
     assert {k: v.payload_crc for k, v in out.items()} == again
 
 
-def test_resize_stub_shapes(spark, payloads):
-    out = {r.doc_id: r for r in
-           resize_image_stub(payloads, out_w=16, out_h=8).collect()}
-    assert set(out) == {0, 1, 2, 3, 4}
-    for r in out.values():
-        assert (r.out_w, r.out_h, r.out_c) == (16, 8, 1)
-        assert len(r.pixels) == 16 * 8
-    assert bytes(out[1].pixels) == b"\x00" * 128  # empty → zeros
-    assert bytes(out[0].pixels) == b"x" * 128     # constant stays constant
-
-
 def test_sample_frames_stub(spark, payloads):
     out = sample_frames_stub(payloads, every_n=2).collect()
     by_doc = {}
@@ -71,16 +57,6 @@ def test_sample_frames_stub(spark, payloads):
     assert 1 not in by_doc
     # 1-byte payload → one frame of length 1
     assert [(r.frame_idx, r.frame_len) for r in by_doc[3]] == [(0, 1)]
-
-
-def test_audio_features_stub(spark, payloads):
-    out = {r.doc_id: r for r in audio_features_stub(payloads).collect()}
-    assert out[1].n_samples == 0 and out[1].rms == 0.0 and out[1].peak == 0
-    # constant 'x' (=120): rms == peak == 120
-    assert abs(out[0].rms - 120.0) < 1e-9
-    assert out[0].peak == 120
-    # int8 view: byte 0xFF = -1 → abs 1; max |int8| = 128
-    assert out[2].peak == 128
 
 
 def test_no_row_loops_in_multimodal():

@@ -102,10 +102,20 @@ def test_synth_corpus_matches_reference(docs, rollups, threshold_rows):
 @pytest.mark.parametrize("hint,runs", [(10, 2), (None, 2), (10**6, 1)])
 def test_any_hint_gives_the_exact_map(docs, rollups, hint, runs):
     """A stale or missing count reruns the action once with its own
-    count; a count far above the rows collects more candidates."""
+    count when its full collect ends on a heavy host; a count far above
+    the rows collects more candidates."""
     _assert_matches(docs, 100, n_rows=hint)
     assert len(rollups) == runs
     assert rollups[-1] >= N_DOCS // 100 + 1
+
+
+def test_countless_light_collect_takes_one_action(docs, rollups):
+    """Without a count K is 1, and the 3-row collect (grand total and
+    two hosts) ends on a light host at T = 1,000: every uncollected host
+    is lighter still, so the one action is exact and does not rerun."""
+    salt = _assert_matches(docs, 1_000)
+    assert salt.num_rows == 0
+    assert rollups == [1]
 
 
 def test_counted_totals_take_one_action(docs, rollups):

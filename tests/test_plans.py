@@ -89,12 +89,13 @@ def test_encode_plan_single_exchange(spark):
     """The encode pipeline's only shuffle is the clustering exchange on
     part_id (the salt map joins via broadcast)."""
     from skar_spark.config import EngineConfig
-    from skar_spark.engine.encode import plan_partitions
+    from skar_spark.engine.encode import plan_partitions, plan_salt
     from skar_spark.synth import synth_documents
 
     docs = synth_documents(spark, 2_000, partitions=4)
-    planned = plan_partitions(docs, 4, EngineConfig(
-        target_partition_rows=500, salt_threshold_rows=400))
+    cfg = EngineConfig(target_partition_rows=500, salt_threshold_rows=400)
+    planned = plan_partitions(
+        docs, 4, plan_salt(docs, cfg.salt_threshold_rows)[1])
     grouped = planned.groupBy("part_id").agg(F.count("*").alias("n"))
     plan = _plan(grouped)
     # one shuffle for the groupBy; the heavy-host salt join broadcasts

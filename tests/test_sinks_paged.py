@@ -1,19 +1,14 @@
-"""Response sinks (S8 JSON / S9 Arrow IPC) + time-limited paged scan (O4).
+"""Time-limited paged scan (O4).
 
-Mirrors: response row limits + truncation (reference README.md:130-135,
-config.rs:31-44) and the query time budget + next_block cursor
-(handler.rs:104-129, config.rs:22-29).
+Mirrors the query time budget + next_block cursor (reference
+handler.rs:104-129, config.rs:22-29).
 """
 
-import json
-
-import pyarrow as pa
 import pytest
 
 from skar_spark.config import EngineConfig
-from skar_spark.engine.decode import list_part_files, scan, scan_paged
+from skar_spark.engine.decode import list_part_files, scan_paged
 from skar_spark.engine.encode import encode_documents
-from skar_spark.sinks import arrow_ipc_response, json_response
 from skar_spark.synth import synth_documents
 
 pytestmark = pytest.mark.spark
@@ -28,27 +23,6 @@ def encoded(spark, tmp_path_factory):
     docs = synth_documents(spark, N_DOCS, partitions=8)
     encode_documents(spark, docs, out, CFG, n_rows=N_DOCS)
     return out
-
-
-def test_json_response_limit_and_truncation(spark, encoded):
-    df = scan(spark, encoded, columns=["url", "lang"])
-    payload = json.loads(json_response(df, limit_rows=100))
-    assert payload["num_rows"] == 100
-    assert payload["truncated"] is True
-    assert len(payload["rows"]) == 100
-    assert set(payload["rows"][0]) == {"url", "lang"}
-    full = json.loads(json_response(df, limit_rows=N_DOCS + 10))
-    assert full["num_rows"] == N_DOCS
-    assert full["truncated"] is False
-
-
-def test_arrow_ipc_response_roundtrips(spark, encoded):
-    df = scan(spark, encoded, columns=["url", "warc_ts"])
-    blob, truncated = arrow_ipc_response(df, limit_rows=200)
-    assert truncated
-    back = pa.ipc.open_stream(blob).read_all()
-    assert back.num_rows == 200
-    assert back.column_names == ["url", "warc_ts"]
 
 
 def test_scan_paged_cursor_resumes_to_completion(spark, encoded):

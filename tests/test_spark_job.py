@@ -22,6 +22,7 @@ from skar_spark.engine.encode import (
     completed_part_ids,
     encode_documents,
     plan_partitions,
+    plan_salt,
 )
 from skar_spark.synth import synth_documents
 
@@ -38,7 +39,8 @@ def docs(spark):
 
 
 def test_salting_bounds_partition_size(spark, docs):
-    planned = plan_partitions(docs, 8, CFG)
+    planned = plan_partitions(
+        docs, 8, plan_salt(docs, CFG.salt_threshold_rows)[1])
     sizes = planned.groupBy("part_id").count().collect()
     # zipf head host has ~20% of docs; without salting one partition would
     # hold >1200 rows from that host alone. With salting, each (host,salt)
@@ -96,8 +98,9 @@ def test_partition_pruning_via_lineage(spark, docs, tmp_path):
     encode_documents(spark, docs, out, CFG, n_rows=N_DOCS)
     all_files = list_part_files(out)
     # a host that exists
-    some_host = (plan_partitions(docs, 8, CFG)
-                 .select("host").limit(1).collect()[0].host)
+    some_host = (plan_partitions(
+        docs, 8, plan_salt(docs, CFG.salt_threshold_rows)[1])
+        .select("host").limit(1).collect()[0].host)
     kept = prune_partitions(out, host_eq=some_host)
     assert 0 < len(kept) <= len(all_files)
     rows = scan(spark, out, columns=["url"], host_eq=some_host).count()
@@ -135,7 +138,8 @@ def encoded(spark, docs, tmp_path_factory):
 
 
 def test_plan_membership_pinned(spark, docs, encoded):
-    planned = plan_partitions(docs, 8, CFG)
+    planned = plan_partitions(
+        docs, 8, plan_salt(docs, CFG.salt_threshold_rows)[1])
     assert _rows_sha256(tuple(r) for r in planned.select(
         "url", "salt", "part_id").collect()) == PLAN_SHA256
     assert _rows_sha256(_salt_map_rows(encoded)) == SALT_MAP_SHA256
@@ -144,8 +148,9 @@ def test_plan_membership_pinned(spark, docs, encoded):
 def test_planning_launches_no_unneeded_job(spark, docs):
     """An increment with fewer counted rows than the salt threshold has
     no heavy host, so its heavy-host step runs no Spark job; neither
-    does planning with a given salt table."""
-    from skar_spark.engine.encode import plan_salt, plan_totals
+    does plan_partitions, which takes the salt table and never derives
+    one."""
+    from skar_spark.engine.encode import plan_totals
 
     inc = docs.limit(64)
     inc_totals = plan_totals(inc)
@@ -157,7 +162,9 @@ def test_planning_launches_no_unneeded_job(spark, docs):
     sc.setJobGroup(group, "planning only")
     try:
         _, light = plan_salt(inc, CFG.salt_threshold_rows, totals=inc_totals)
-        plan_partitions(docs, 8, CFG, salt)
+        with pytest.raises(TypeError):
+            plan_partitions(docs, 8)  # no hidden heavy-host action
+        plan_partitions(docs, 8, salt)
         assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
         spark.range(1).count()  # the check itself sees jobs of this group
         assert list(sc.statusTracker().getJobIdsForGroup(group))
@@ -182,7 +189,7 @@ def test_legacy_salt_map_replans_hash_only(spark, docs, encoded, tmp_path):
                                                  pa.int32())}),
                    os.path.join(sm_dir, "legacy.parquet"))
     n = load_plan_meta(out)["num_parts"]
-    planned, _meta = _replan_with_stored(spark, docs, out, CFG)
+    planned, _meta = _replan_with_stored(docs, out)
     expect = F.pmod(F.xxhash64("host", "salt"), F.lit(n)).cast("int")
     assert planned.filter(F.col("salt") > 0).count() > 0
     assert planned.filter(F.col("part_id") != expect).count() == 0

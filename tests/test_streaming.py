@@ -300,26 +300,6 @@ def test_max_bytes_per_sec_paces_intake(spark, tmp_path):
     assert scan(spark, out).count() == 3 * per_file  # exactly once
 
 
-def test_stream_dedup_drops_duplicates_watermark_bounded(spark, tmp_path):
-    """Re-crawled duplicates (overlapping id ranges → identical texts)
-    are dropped with watermark-bounded state; first arrival wins."""
-    from skar_spark.streaming import stream_dedup
-    land = tmp_path / "dedup_land"
-    land.mkdir()
-    pq.write_table(synth_batch(np.arange(0, 120)), str(land / "a.parquet"))
-    # 70 re-crawls of ids 50-119 + 30 new docs
-    pq.write_table(synth_batch(np.arange(50, 150)), str(land / "b.parquet"))
-    out = stream_dedup(spark, str(land))
-    q = (out.writeStream.outputMode("append").format("memory")
-         .queryName("dedup_out")
-         .option("checkpointLocation", str(tmp_path / "ckpt_dd"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    rows = spark.sql("SELECT url, text FROM dedup_out").collect()
-    assert len(rows) == 150  # 240 arrivals, 150 distinct texts
-    assert len({r.text for r in rows}) == 150
-
-
 def test_stream_auto_compaction_bounds_parts(spark, tmp_path):
     """auto_compact_every=K keeps the part count bounded while the
     stream runs (continuous hot→cold tiering): content stays exactly
