@@ -12,8 +12,8 @@ rewrite_data_files.
 Semantics:
 
 - parts whose committed `row_count` is below `small_rows` are decoded
-  (vectorized, one task per part), host-planned into full-size NEW
-  part ids with heavy-host salting exactly like an append
+  (vectorized, one task per part), host-planned into parts_for(their
+  rows) NEW part ids with heavy-host salting exactly like an append
   (encode.plan_increment: each host in one part unless salted, so the
   lineage host bloom keeps pruning) and re-encoded through the same
   codec-auto-selected kernel — blooms, zone maps, and checksums are
@@ -64,6 +64,7 @@ from skar_spark.engine.encode import (
     is_retained,
     latest_lineage,
     lineage_table,
+    parts_for,
     plan_increment,
 )
 
@@ -109,17 +110,18 @@ def compact_parts(spark: SparkSession, out_dir: str,
                   min_parts: int = 2,
                   profile: EngineConfig | None = None) -> dict:
     """Compact all committed parts smaller than `small_rows` (default:
-    cfg.target_partition_rows // 2) into parts of at least
-    target_partition_rows rows on average.
+    cfg.target_partition_rows // 2) into ~target_partition_rows parts.
     Returns {"compacted_parts", "new_parts", "rows"}; no-op (and no
     archival marker) when fewer than `min_parts` parts qualify.
 
     The candidates are placed as an append places its rows
     (encode.plan_increment: each host in one new part unless salted),
-    into one part per whole ``cfg.target_partition_rows`` of their
-    lineage ``row_count`` total. Below ``cfg.salt_threshold_rows`` rows
-    that runs no Spark job; at or above it, one heavy-host rollup over
-    the candidates, before the archival marker. The one-part driver
+    into parts_for(their lineage ``row_count`` total) parts. Host
+    placement does not even out part sizes, so a compacted part can
+    land under `small_rows` and be a candidate of the next compaction.
+    One new part, or fewer than ``cfg.salt_threshold_rows`` rows, run
+    no planning job; otherwise one heavy-host rollup over the
+    candidates runs, before the archival marker. The one-part driver
     route of appends is not taken: it writes its part file while
     planning, before the marker could.
 
@@ -153,12 +155,7 @@ def compact_parts(spark: SparkSession, out_dir: str,
         return {"compacted_parts": 0, "new_parts": 0, "rows": 0}
     files = cand["file"].to_pylist()
     total_rows = pc.sum(cand["row_count"]).as_py()
-    # whole targets, not encode.parts_for's ceiling: host placement
-    # leaves parts uneven (unsalted, 1,200 streamed docs split 774/426
-    # over 2 parts), and a part under `small_rows` (half a target by
-    # default) would be a candidate again; at least one target per part
-    # on average keeps an uneven part above it
-    n_new = max(1, total_rows // cfg.target_partition_rows)
+    n_new = parts_for(total_rows, cfg)
     hw = allocate_part_ids(out_dir, every, n_new)
     attempt = "compact-" + uuid.uuid4().hex[:8]
 

@@ -226,11 +226,10 @@ def plan_totals(df: DataFrame) -> dict:
 
 
 def parts_for(n_rows: int, cfg: EngineConfig) -> int:
-    """THE partition count of `n_rows` new rows, for encodes and
-    increments: one part per ``cfg.target_partition_rows`` (rounded
+    """THE partition count of `n_rows` rows, for encodes, increments
+    and compaction: one part per ``cfg.target_partition_rows`` (rounded
     up), at least one — the reference's one flush threshold
-    (max_file_size, skar_runner.rs:285-353). Compaction, which merges
-    rows already written, rounds down instead (compact_parts)."""
+    (max_file_size, skar_runner.rs:285-353)."""
     return max(1, -(-n_rows // cfg.target_partition_rows))
 
 
@@ -1034,10 +1033,14 @@ def plan_increment(df: DataFrame, totals: dict, base: int, parts: int,
     it at ``cfg.salt_threshold_rows``. `totals` are counted plan totals
     (only their exact ``n_rows`` is read). Returns the planned frame,
     its part ids and the packed loads for encode_footers' largest-first
-    bucket order. Fewer rows than the threshold run no Spark job;
-    otherwise plan_salt's one action does."""
+    bucket order. One part, or fewer rows than the threshold, run no
+    Spark job (salting cannot move a row when there is one part, and a
+    part's bytes are sorted by SORT_KEYS, not by salt); otherwise
+    plan_salt's one action does."""
     loads: dict[int, int] = {}
-    _, salt = plan_salt(df, cfg.salt_threshold_rows, totals=totals)
+    salt = _arrow_schema(SALT_MAP_DDL).empty_table()
+    if parts > 1:
+        _, salt = plan_salt(df, cfg.salt_threshold_rows, totals=totals)
     planned = plan_partitions(df, parts, salt, loads)
     planned = planned.withColumn(
         "part_id", (F.col("part_id") + F.lit(base)).cast("int"))

@@ -14,7 +14,7 @@ from skar_spark.engine.decode import (
     scan,
     validate_output,
 )
-from skar_spark.engine.encode import read_lineage
+from skar_spark.engine.encode import parts_for, read_lineage
 from skar_spark.streaming import stream_encode
 from skar_spark.synth import synth_batch
 
@@ -60,15 +60,18 @@ def _described_jobs(spark, group: str, prefix: str) -> list[int]:
     return found
 
 
-@pytest.mark.parametrize("salt_threshold_rows", [CFG.salt_threshold_rows,
-                                                 100])
+@pytest.mark.parametrize("salt_threshold_rows,target", [
+    (CFG.salt_threshold_rows, 600), (100, 600), (100, 2_000)])
 def test_compaction_places_hosts_like_an_increment(
-        spark, tmp_path_factory, monkeypatch, salt_threshold_rows):
-    """Compacted to 2 parts, the 12 streamed parts keep every host in
-    one part but the hosts the planner salted, so the lineage host bloom
-    prunes as after an encode. Candidates below the salt threshold (the
-    default config) launch no planning job; at or above it, the
+        spark, tmp_path_factory, monkeypatch, salt_threshold_rows, target):
+    """Compacted to parts_for(1,200) parts, the 12 streamed parts keep
+    every host in one part but the hosts the planner salted, so the
+    lineage host bloom prunes as after an encode. Candidates below the
+    salt threshold (1,200 rows against the default 100,000), or
+    compacted into one part, launch no planning job; otherwise the
     heavy-host action runs once, before the archival marker."""
+    from collections import Counter
+
     from skar_spark.engine import encode
     from skar_spark.engine.partfile import read_part_file
 
@@ -83,25 +86,27 @@ def test_compaction_places_hosts_like_an_increment(
         return totals, salt
 
     monkeypatch.setattr(encode, "plan_salt", spy)
+    cfg = EngineConfig(max_row_group_size=500, target_partition_rows=target,
+                       salt_threshold_rows=salt_threshold_rows)
     sc = spark.sparkContext
-    group = f"compact-salt-{salt_threshold_rows}"
+    group = f"compact-salt-{salt_threshold_rows}-{target}"
     sc.setJobGroup(group, "compaction")
     try:
-        res = compact_parts(
-            spark, out, EngineConfig(max_row_group_size=500,
-                                     target_partition_rows=600,
-                                     salt_threshold_rows=salt_threshold_rows))
+        res = compact_parts(spark, out, cfg)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert res["rows"] == 3 * PER_FILE
     files = list_part_files(out)
-    assert len(files) == res["new_parts"] == 2
+    assert len(files) == res["new_parts"] == parts_for(res["rows"], cfg)
     hosts = [set(read_part_file(f, columns=["host"])["host"].to_pylist())
              for f in files]
-    assert hosts[0] and hosts[1] and hosts[0] & hosts[1] <= salted
-    assert marked == [False]  # planned once, before the marker
+    assert all(hosts)
+    spread = Counter(h for part in hosts for h in part)
+    assert {h for h, n in spread.items() if n > 1} <= salted
+    multi = res["new_parts"] > 1
+    assert marked == ([False] if multi else [])  # before the marker
     plan_jobs = _described_jobs(spark, group, "skar plan:")
-    if salt_threshold_rows > res["rows"]:
+    if not multi or salt_threshold_rows > res["rows"]:
         assert plan_jobs == [] and not salted
     else:
         assert plan_jobs and salted  # the Zipf head host is heavy
@@ -144,9 +149,8 @@ def test_compact_consolidates_exactly_once(spark, streamed):
     src_rows = {(r.url, r.text) for r in src.collect()}
     assert n_files_before >= 8  # the stream really made small parts
 
-    res = compact_parts(
-        spark, out, EngineConfig(max_row_group_size=500,
-                                 target_partition_rows=1_000))
+    cfg = EngineConfig(max_row_group_size=500, target_partition_rows=1_000)
+    res = compact_parts(spark, out, cfg)
     assert res["compacted_parts"] == n_files_before
     assert res["rows"] == 3 * PER_FILE
     files_after = list_part_files(out)
@@ -161,8 +165,11 @@ def test_compact_consolidates_exactly_once(spark, streamed):
     assert {r.file for r in lin.collect()} == set(files_after)
     # pruning metadata was rebuilt: checksums validate per new part
     assert all(r.ok for r in validate_output(spark, out).collect())
-    # compacted parts are actually full-size
-    assert all(r.row_count >= 500 for r in lin.collect())
+    # sized by the one partition-count rule (host placement does not
+    # even the parts out, so one may hold fewer than small_rows rows)
+    counts = [r.row_count for r in lin.collect()]
+    assert len(counts) == parts_for(3 * PER_FILE, cfg)
+    assert sum(counts) == 3 * PER_FILE
 
 
 def test_compact_pruned_point_read_still_exact(spark, streamed):

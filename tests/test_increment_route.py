@@ -22,7 +22,7 @@ from skar_spark.synth import DOCS_DDL, synth_batch
 pytestmark = pytest.mark.spark
 
 # the 600-doc increment plans to one part; its Zipf head host is above
-# the salt threshold, so the exchange route salts it
+# the salt threshold, which one part needs no heavy-host job for
 CFG = EngineConfig(target_partition_rows=1_000, max_row_group_size=200,
                    salt_threshold_rows=100)
 # footer fields that name the attempt, the file or the clock
@@ -68,9 +68,13 @@ def test_driver_route_writes_the_exchange_bytes(spark, tmp_path,
                                                 monkeypatch):
     """One increment appended twice onto equal tables: through the
     driver route, and (collect bound 0) through encode_footers planned
-    to one part. Small Arrow batches give the kernel and the collect
-    differently chunked input."""
+    to one part, with no heavy-host action. Small Arrow batches give
+    the kernel and the collect differently chunked input."""
     calls = _footers_spy(monkeypatch)
+    salts = []
+    real_salt = encode.plan_salt
+    monkeypatch.setattr(encode, "plan_salt",
+                        lambda *a, **k: salts.append(1) or real_salt(*a, **k))
     conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old = spark.conf.get(conf)
     spark.conf.set(conf, "128")
@@ -82,9 +86,11 @@ def test_driver_route_writes_the_exchange_bytes(spark, tmp_path,
             monkeypatch.setattr(encode, "max_result_bytes",
                                 lambda _s, _b=bound: _b)
             calls.clear()
+            salts.clear()
             assert append_documents(spark, _docs(spark, 400, 1_000, 3),
                                     out, CFG) == 1
             assert calls == ([] if route == "driver" else [[2]])
+            assert salts == []
             routes[route] = _appended(out)
     finally:
         spark.conf.set(conf, old)
